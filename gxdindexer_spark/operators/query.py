@@ -1,4 +1,4 @@
-"""Distributed top-k BM25 retrieval over the persisted index.
+"""Top-k BM25 retrieval over the persisted index.
 
 Lifecycle (SURVEY.md §3.4):
 
@@ -6,17 +6,42 @@ Lifecycle (SURVEY.md §3.4):
     -> dictionary lookup (term -> global df)        [driver; tiny scan]
     -> postings scan filtered to query terms        [parquet predicate
        pushdown on `term`/`field`; shard partition dirs prune I/O]
-    -> applyInPandas per shard: block-max WAND (or exact TAAT)
-       local top-k  [scatter — segments are self-contained: doc
-       lengths travel inside the posting blocks, so NOTHING but the
-       query terms' postings moves]
+    -> per shard: block-max WAND (or exact TAAT) local top-k
+       [scatter — segments are self-contained: doc lengths travel
+       inside the posting blocks, so NOTHING but the query terms'
+       postings moves]
     -> global orderBy(score desc, doc_id asc).limit(k)   [gather —
        TakeOrdered over <= shards*k tiny rows]
 
+Every operator scatters through ``IndexQueryEngine._scatter``: one
+shard-function signature ``fn(shard, pg, payload)``, two backends,
+picked per call from the estimated postings (the sum of dictionary df
+over every key the scan reads):
+
+* **local** (estimate <= ``LOCAL_MAX_POSTINGS``): the driver reads the
+  pruned postings with the ``pyarrow.dataset`` opened with the engine
+  (the same files the Spark relation lists), groups by shard in pandas,
+  runs the shard function in-process and hands the rows to the gather
+  as an Arrow-built local relation. A serving query then costs one
+  small gather job instead of a Python-UDF stage plus its dispatch.
+  This backend is eager: the scan and shard functions run when the
+  operator method is called (errors surface there), not at the
+  DataFrame action.
+* **Spark** (``groupBy("shard").applyInPandas``, payload broadcast):
+  the only path for scans above the guard, where one driver thread
+  decoding every posting (and, for match-set callers, holding every
+  matched row) loses to the executors, and for indexes on a
+  filesystem pyarrow cannot open (decided once, at open).
+
+Both backends hand the shard function the same rows in the same
+(field, term_id) order, so they return bit-identical results. Each
+caller's gather (orderBy/limit, groupBy.agg, windows) is a DataFrame
+plan either way.
+
 The driver-side dictionary lookup is the analog of the reference's
 broadcast HashMap caches (GxdResultIndexer.java:91-272): the per-term
-stats are tiny (|query terms| rows) and close over the Arrow workers
-as a broadcast QuerySpec.
+stats are tiny (|query terms| rows) and travel as the QuerySpec
+payload.
 """
 
 from __future__ import annotations
@@ -24,9 +49,13 @@ from __future__ import annotations
 import json
 import os
 import re
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -169,6 +198,74 @@ def _empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
     )
 
 
+def _local_df(
+    spark: SparkSession, pdf: pd.DataFrame, schema: T.StructType
+) -> DataFrame:
+    """Driver rows -> Arrow-built local relation (LocalTableScan),
+    columns matched to ``schema`` by name as ``applyInPandas`` does.
+    A python-LIST ``createDataFrame`` is a parallelized python RDD
+    whose every action spawns Python workers: a one-row frame's
+    collect takes 0.28-0.40 s that way and 0.02-0.04 s this way
+    (local[4], 4-vCPU VM)."""
+    return spark.createDataFrame(pdf[schema.fieldNames()], schema)
+
+
+def _in_term_order(pg: pd.DataFrame) -> pd.DataFrame:
+    """One shard's posting rows in (field, term_id) order: the kernels
+    sum per-term contributions in row order, so both scatter backends
+    (and every Spark run) must hand them the same order to get
+    bit-identical floats."""
+    return pg.sort_values(
+        ["field", "term_id"], kind="mergesort", ignore_index=True
+    )
+
+
+def _present_keys(pg: pd.DataFrame) -> set:
+    return set(
+        pg[["field", "term_id"]]
+        .drop_duplicates()
+        .itertuples(index=False, name=None)
+    )
+
+
+def _wand_pays(present: set, spec) -> bool:
+    """Per-shard form of ``IndexQueryEngine.choose_mode``: prune iff
+    the heaviest query term PRESENT in this shard outweighs the sum of
+    the other present ones."""
+    ws = sorted(
+        (w for kk, w in spec.term_weights.items() if kk in present),
+        reverse=True,
+    )
+    return bool(ws) and ws[0] > sum(ws[1:])
+
+
+def _store_rows(
+    idx_dir: str, shard: int, ids, columns: list[str], filters=None
+) -> pd.DataFrame:
+    """Rows of one shard's doc-store partition whose doc_id is in
+    ``ids`` — a direct pyarrow read, column-pruned, ``filters`` pushed
+    as parquet row-group filters. ``columns`` must include doc_id."""
+    import pyarrow.parquet as pq
+
+    store = pq.read_table(
+        f"{idx_dir}/docs/shard={shard}", columns=columns, filters=filters
+    ).to_pandas()
+    return store[np.isin(store["doc_id"].to_numpy(), ids)]
+
+
+#: Scatter-backend guard (see module docstring): a scan whose estimated
+#: postings — the sum of dictionary df over every key it reads — is at
+#: most this runs on the driver-local backend, a larger one on Spark.
+#: Set by the caller with the lowest measured crossover (local[4],
+#: median of 5): ``matching_docs`` on a 200k-doc index whose matched
+#: rows equal the estimate wins locally at 129k postings (0.53 s vs
+#: 0.61 s) and loses from 154k (0.62 s vs 0.58 s); ``export_matches``
+#: crosses at 154k-184k. Row-bounded callers (topk, facets) win up to
+#: 1.0M-2.0M depending on shard count (8-257 shards). The estimate also
+#: bounds the rows a local call holds in the driver.
+LOCAL_MAX_POSTINGS = 125_000
+
+
 class IndexQueryEngine:
     def __init__(
         self,
@@ -207,6 +304,23 @@ class IndexQueryEngine:
         # once per engine instead of once per query — at 10^6 shard
         # dirs the per-query listing would dominate latency.
         self._postings = spark.read.parquet(f"{index_dir}/postings")
+        # the driver-local scatter backend's view: the relation's own
+        # file list (no second listing), so both backends read the
+        # same snapshot; files pyarrow cannot open (a non-local
+        # scheme) leave the engine on the Spark backend only
+        files = [urlparse(u) for u in self._postings.inputFiles()]
+        self._postings_ds = None
+        if all(u.scheme == "file" for u in files):
+            try:
+                self._postings_ds = ds.dataset(
+                    [unquote(u.path) for u in files], format="parquet",
+                    partitioning="hive",
+                    partition_base_dir=os.path.abspath(
+                        f"{index_dir}/postings"
+                    ),
+                )
+            except (OSError, pa.ArrowInvalid):
+                pass
         # the three dictionary relations are LAZY (cached properties
         # below): creating a parquet relation is a driver-blocking
         # footer/schema read, and most queries never touch them — the
@@ -899,13 +1013,17 @@ class IndexQueryEngine:
                 scoring_pairs += group
                 if kind == "must":
                     must_groups.append(group)
-        dfs = self._lookup_stats(scoring_pairs)
+        # must_not dfs weigh nothing but size the scan (_scatter's
+        # backend estimate covers every posting list it reads)
+        dfs = self._lookup_stats(scoring_pairs + must_not_pairs)
+        scoring = set(scoring_pairs)
         # plan keys are (field, term_id): the hash is computed HERE with
         # the same md5 mapping the build used (functions/hashing.py)
         term_weights = {
             (f, self._tid(t)): self.weights[f]
             * float(bm25.idf(self.n_docs[f], df))
             for (f, t), df in dfs.items()
+            if (f, t) in scoring
         }
         spec = wand_mod.QuerySpec(
             term_weights=term_weights,
@@ -920,8 +1038,9 @@ class IndexQueryEngine:
                 (f, self._tid(t)) for f, t in must_not_pairs
             ),
         )
-        # debug metadata riding on the plan (Solr debugQuery /
-        # explain_score): term_id -> surface term and its df
+        # metadata riding on the plan: term_id -> surface term and its
+        # df (Solr debugQuery / explain_score; the df also sizes the
+        # scan for _scatter's backend choice)
         spec.term_names = {
             (f, self._tid(t)): t
             for f, t in set(scoring_pairs) | set(must_not_pairs)
@@ -986,8 +1105,6 @@ class IndexQueryEngine:
         built spec — the federation hook: FederatedQueryEngine builds
         ONE spec with globally merged stats and scatter-gathers each
         member index through this method."""
-        postings = self._postings_for(spec)
-        b_spec = self.spark.sparkContext.broadcast(spec)
         # boolean clauses need the full candidate doc sets -> exact
         # TAAT; so does a spec whose corpus stats are not THIS index's
         # (a federated merged-stats spec): the stored block-max bounds
@@ -997,11 +1114,11 @@ class IndexQueryEngine:
             abs(spec.avgdl[f] - v) < 1e-12 for f, v in self.avgdl.items()
         )
         prunable = self.blockmax_safe and not spec.is_boolean and stats_native
-        # "auto" defers the TAAT/WAND choice to EACH shard worker: the
-        # global plan (choose_mode) can only reason from corpus-wide
-        # idfs, but whether pruning pays is a per-shard question — a
-        # shard missing the dominant rare term has nothing to prune
-        # and should run straight TAAT. The worker applies the same
+        # "auto" defers the TAAT/WAND choice to EACH shard: the global
+        # plan (choose_mode) can only reason from corpus-wide idfs, but
+        # whether pruning pays is a per-shard question — a shard
+        # missing the dominant rare term has nothing to prune and
+        # should run straight TAAT. The shard function applies the same
         # dominance heuristic restricted to the terms actually present
         # in its postings group (zero extra storage or I/O: the
         # group's term set is already in hand). All choices are
@@ -1009,36 +1126,28 @@ class IndexQueryEngine:
         shard_auto = mode == "auto" and prunable
         use_wand = mode == "wand" and prunable
 
-        def shard_topk(pg: pd.DataFrame) -> pd.DataFrame:
-            if not len(pg):
-                return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                    {"doc_id": "int64", "score": "float64"}
-                )
-            sp = b_spec.value
-            if shard_auto:
-                present = set(
-                    pg[["field", "term_id"]]
-                    .drop_duplicates()
-                    .itertuples(index=False, name=None)
-                )
-                ws = sorted(
-                    (w for kk, w in sp.term_weights.items() if kk in present),
-                    reverse=True,
-                )
-                use = bool(ws) and ws[0] > sum(ws[1:])
-            else:
-                use = use_wand
+        def shard_topk(_shard: int, pg: pd.DataFrame, sp) -> pd.DataFrame:
+            use = _wand_pays(_present_keys(pg), sp) if shard_auto else use_wand
             fn = wand_mod.wand if use else wand_mod.taat
             ids, scores = fn(pg, sp, k)
             return pd.DataFrame({"doc_id": ids, "score": scores})
 
-        local = postings.groupBy("shard").applyInPandas(
-            shard_topk, schema=_HITS_SCHEMA
-        )
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        keys = self._scan_keys(spec)
+        if not stats_native:
+            # a merged-stats spec carries federation-wide df sums: size
+            # this member's scan by its own dictionary instead
+            own = self._lookup_stats(
+                [(f, spec.term_names[(f, t)]) for f, t in keys]
+            )
+            keys = {
+                (f, t): own.get((f, spec.term_names[(f, t)]), 0)
+                for f, t in keys
+            }
+        hits = self._scatter(keys, shard_topk, _HITS_SCHEMA, spec)
+        return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _topk_filtered(self, spec, k: int, where) -> DataFrame:
-        """Filtered-retrieval worker plan (see ``topk(where=)``).
+        """Filtered-retrieval plan (see ``topk(where=)``).
         ``where`` is either the predicate string (parsed here) or a
         ready list of pyarrow filter tuples (the join qparser passes
         its computed IN-set directly)."""
@@ -1050,39 +1159,25 @@ class IndexQueryEngine:
                     f"where column {col!r} is not in the doc store "
                     f"(has: {sorted(store_cols)})"
                 )
-        b_spec = self.spark.sparkContext.broadcast(spec)
         idx_dir = self.index_dir
 
-        def shard_topk_filtered(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-            ids, scores = wand_mod.match_scores(pg, b_spec.value)
+        def shard_topk_filtered(shard: int, pg: pd.DataFrame, sp):
+            ids, scores = wand_mod.match_scores(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
+                return None
             # parquet filters -> row-group stats pruning; only the
             # doc_id column of surviving rows materializes
-            allowed = (
-                pq.read_table(
-                    f"{idx_dir}/docs/shard={shard}",
-                    columns=["doc_id"],
-                    filters=flt,
-                )["doc_id"].to_numpy()
+            allowed = _store_rows(idx_dir, shard, ids, ["doc_id"], flt)
+            keep = np.isin(ids, allowed["doc_id"].to_numpy())
+            ids, scores = wand_mod._topk_from_scores(
+                ids[keep], scores[keep], k
             )
-            keep = np.isin(ids, allowed)
-            ids, scores = ids[keep], scores[keep]
-            if not ids.size:
-                return empty
-            ids, scores = wand_mod._topk_from_scores(ids, scores, k)
             return pd.DataFrame({"doc_id": ids, "score": scores})
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_topk_filtered, schema=_HITS_SCHEMA
+        hits = self._scatter(
+            self._scan_keys(spec), shard_topk_filtered, _HITS_SCHEMA, spec
         )
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     #: boost transforms for ``topk_boosted`` — tiny on purpose: each
     #: must be a numpy ufunc-ish the worker can apply vectorized
@@ -1116,14 +1211,14 @@ class IndexQueryEngine:
         — they keep their bare BM25 score. ``fn`` in ``_BOOST_FNS``.
 
         Plan shape: same one scatter-gather as ``topk`` — each shard
-        worker scores its matches (exact TAAT), attaches the boost
-        column from a pyarrow read of ITS doc-store partition
-        (column-pruned: doc_id + field), combines, and emits its
-        local top-k; <= shards x k tiny rows gather. Boosting forces
-        the exact path: WAND's block-max upper bounds don't cover the
-        boost term (a boost-aware WAND would need per-block max-boost
-        bounds in the index — not worth it while the doc store read
-        is already shard-local).
+        scores its matches (exact TAAT), attaches the boost column
+        from a pyarrow read of ITS doc-store partition (column-pruned:
+        doc_id + field), combines, and emits its local top-k;
+        <= shards x k tiny rows gather. Boosting forces the exact
+        path: WAND's block-max upper bounds don't cover the boost term
+        (a boost-aware WAND would need per-block max-boost bounds in
+        the index — not worth it while the doc store read is already
+        shard-local).
 
         -> (doc_id, score) of the boosted global top-k."""
         if fn not in self._BOOST_FNS:
@@ -1141,24 +1236,17 @@ class IndexQueryEngine:
             )
         if not spec.term_weights:
             return _empty_df(self.spark, _HITS_SCHEMA)
-        b_spec = self.spark.sparkContext.broadcast(spec)
         idx_dir = self.index_dir
         boost_fn = self._BOOST_FNS[fn]
 
-        def shard_topk_boosted(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-            ids, scores = wand_mod.match_scores(pg, b_spec.value)
+        def shard_topk_boosted(shard: int, pg: pd.DataFrame, sp):
+            ids, scores = wand_mod.match_scores(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", field]
-            ).to_pandas().set_index("doc_id")
-            v = store[field].reindex(ids).to_numpy("float64")
+                return None
+            store = _store_rows(idx_dir, shard, ids, ["doc_id", field])
+            v = store.set_index("doc_id")[field].reindex(ids).to_numpy(
+                "float64"
+            )
             with np.errstate(invalid="ignore"):
                 b = weight * boost_fn(v)
             if combine == "add":
@@ -1168,23 +1256,84 @@ class IndexQueryEngine:
             ids, scores = wand_mod._topk_from_scores(ids, scores, k)
             return pd.DataFrame({"doc_id": ids, "score": scores})
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_topk_boosted, schema=_HITS_SCHEMA
+        hits = self._scatter(
+            self._scan_keys(spec), shard_topk_boosted, _HITS_SCHEMA, spec
         )
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    def _postings_for(self, spec):
-        """Pruned postings scan covering scoring + boolean clause terms."""
+    @staticmethod
+    def _scan_keys(spec) -> dict[tuple[str, int], int]:
+        """(field, term_id) -> dictionary df of every posting list a
+        spec's scan reads: scoring, +must and -must_not keys (0 for a
+        key the dictionary does not hold)."""
         keys = (
             set(spec.term_weights)
             | {m for g in spec.must_groups for m in g}
             | set(spec.must_not)
         )
+        return {key: spec.term_dfs.get(key, 0) for key in keys}
+
+    def _scatter(
+        self,
+        keys: dict[tuple[str, int], int],
+        shard_fn,
+        schema: T.StructType,
+        payload,
+        shard: int | None = None,
+    ) -> DataFrame:
+        """The one scatter executor: ``shard_fn(shard, pg, payload)``
+        runs once per shard over ``pg``, that shard's rows of the
+        pruned postings scan (term_id IN keys' ids AND field IN keys'
+        fields, only partition ``shard`` if given), in (field,
+        term_id) order. It returns a frame of ``schema``'s columns, or
+        None for no rows; the union of those frames comes back as a
+        DataFrame for the caller's gather.
+
+        Backend per call (module docstring): driver-local when the
+        engine opened the postings with pyarrow and the estimated
+        postings ``sum(keys.values())`` are at most
+        ``LOCAL_MAX_POSTINGS``; else Spark, with ``payload``
+        broadcast to the Python workers. ``shard_fn`` must not close
+        over the engine (it is pickled to those workers).
+
+        The local backend runs eagerly: the scan and every shard
+        function execute inside this call, errors surface here, and
+        the returned DataFrame is a materialized result (only the
+        caller's gather stays lazy). The Spark backend returns a lazy
+        plan that runs at the caller's action."""
         tids = sorted({t for _f, t in keys})
         flds = sorted({f for f, _t in keys})
-        return self._postings.filter(
+        if (
+            self._postings_ds is not None
+            and sum(keys.values()) <= LOCAL_MAX_POSTINGS
+        ):
+            flt = pc.field("term_id").isin(tids)
+            flt &= pc.field("field").isin(flds)
+            if shard is not None:
+                flt &= pc.field("shard") == shard
+            pg = self._postings_ds.to_table(filter=flt).to_pandas()
+            parts = [
+                shard_fn(int(s), _in_term_order(g), payload)
+                for s, g in pg.groupby("shard", sort=True)
+            ]
+            parts = [p for p in parts if p is not None and len(p)]
+            if not parts:
+                return _empty_df(self.spark, schema)
+            return _local_df(
+                self.spark, pd.concat(parts, ignore_index=True), schema
+            )
+        postings = self._postings.filter(
             F.col("term_id").isin(tids) & F.col("field").isin(flds)
         )
+        if shard is not None:
+            postings = postings.filter(F.col("shard") == shard)
+        b_payload = self.spark.sparkContext.broadcast(payload)
+
+        def run(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
+            out = shard_fn(int(key[0]), _in_term_order(pg), b_payload.value)
+            return pd.DataFrame() if out is None else out
+
+        return postings.groupBy("shard").applyInPandas(run, schema=schema)
 
     def phrase_topk(
         self, phrase: str, k: int = 10, field: str = "content",
@@ -1210,23 +1359,18 @@ class IndexQueryEngine:
             sum(bm25.idf(self.n_docs[field], df) for df in dfs.values())
         )
         tids = [self._tid(t) for t in terms]
-        postings = self._postings.filter(
-            F.col("term_id").isin(sorted(set(tids)))
-            & (F.col("field") == field)
-        )
         avgdl = self.avgdl[field]
         k1, b = float(self.manifest["k1"]), float(self.manifest["b"])
 
-        def shard_phrase(pg: pd.DataFrame) -> pd.DataFrame:
+        def shard_phrase(_shard: int, pg: pd.DataFrame, _payload):
             ids, scores = wand_mod.phrase_topk_shard(
                 pg, tids, field, idf_sum, avgdl, k, k1, b, slop=slop
             )
             return pd.DataFrame({"doc_id": ids, "score": scores})
 
-        local = postings.groupBy("shard").applyInPandas(
-            shard_phrase, schema=_HITS_SCHEMA
-        )
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        keys = {(field, self._tid(t)): df for (_f, t), df in dfs.items()}
+        hits = self._scatter(keys, shard_phrase, _HITS_SCHEMA, None)
+        return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_many(
         self,
@@ -1247,8 +1391,6 @@ class IndexQueryEngine:
         scoring passes — the reference's batched Solr query loop
         (GxdResultIndexer.java:900-1268 chunk loop) turned sideways.
         """
-        from pyspark.sql.window import Window
-
         specs = {
             qid: self.make_spec(q, fields) for qid, q in queries.items()
         }
@@ -1262,51 +1404,27 @@ class IndexQueryEngine:
         )
         if not specs:
             return _empty_df(self.spark, out_schema)
-        keys = set()
+        keys: dict[tuple[str, int], int] = {}
         for s in specs.values():
-            keys |= (
-                set(s.term_weights)
-                | {m for g in s.must_groups for m in g}
-                | set(s.must_not)
-            )
-        tids = sorted({t for _f, t in keys})
-        flds = sorted({f for f, _t in keys})
-        postings = self._postings.filter(
-            F.col("term_id").isin(tids) & F.col("field").isin(flds)
-        )
-        b_specs = self.spark.sparkContext.broadcast(specs)
+            keys.update(self._scan_keys(s))
         safe = self.blockmax_safe
 
-        def shard_topk(pg: pd.DataFrame) -> pd.DataFrame:
-            present = None
-            if mode == "auto" and len(pg):
-                # per-shard, per-QUERY adaptive choice (same dominance
-                # test as topk(mode="auto")): one drop_duplicates over
-                # in-hand postings shared by every query in the batch
-                present = set(
-                    pg[["field", "term_id"]]
-                    .drop_duplicates()
-                    .itertuples(index=False, name=None)
-                )
+        def shard_topk(_shard: int, pg: pd.DataFrame, batch):
+            # per-shard, per-QUERY adaptive choice (same dominance
+            # test as topk(mode="auto")): one drop_duplicates over
+            # in-hand postings shared by every query in the batch
+            present = _present_keys(pg) if mode == "auto" else None
             frames = []
-            for qid, sp in b_specs.value.items():
-                if mode == "auto":
-                    ws = sorted(
-                        (
-                            w
-                            for kk, w in sp.term_weights.items()
-                            if kk in (present or ())
-                        ),
-                        reverse=True,
+            for qid, sp in batch.items():
+                use_wand = (
+                    safe
+                    and not sp.is_boolean
+                    and (
+                        _wand_pays(present, sp)
+                        if mode == "auto"
+                        else mode == "wand"
                     )
-                    use_wand = (
-                        safe
-                        and not sp.is_boolean
-                        and bool(ws)
-                        and ws[0] > sum(ws[1:])
-                    )
-                else:
-                    use_wand = mode == "wand" and safe and not sp.is_boolean
+                )
                 fn = wand_mod.wand if use_wand else wand_mod.taat
                 ids, scores = fn(pg, sp, k)
                 if ids.size:
@@ -1315,15 +1433,9 @@ class IndexQueryEngine:
                             {"query_id": qid, "doc_id": ids, "score": scores}
                         )
                     )
-            if not frames:
-                return pd.DataFrame(
-                    {"query_id": [], "doc_id": [], "score": []}
-                ).astype({"doc_id": "int64", "score": "float64"})
-            return pd.concat(frames, ignore_index=True)
+            return pd.concat(frames, ignore_index=True) if frames else None
 
-        local = postings.groupBy("shard").applyInPandas(
-            shard_topk, schema=out_schema
-        )
+        local = self._scatter(keys, shard_topk, out_schema, specs)
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
@@ -1395,14 +1507,12 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
 
-        def shard_docs(pg: pd.DataFrame) -> pd.DataFrame:
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            return pd.DataFrame({"doc_id": ids})
+        def shard_docs(_shard: int, pg: pd.DataFrame, sp) -> pd.DataFrame:
+            return pd.DataFrame({"doc_id": wand_mod.match_docs(pg, sp)})
 
-        return self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_docs, schema=out_schema
+        return self._scatter(
+            self._scan_keys(spec), shard_docs, out_schema, spec
         )
 
     def sorted_matches(
@@ -1427,7 +1537,7 @@ class IndexQueryEngine:
         "rows offset..offset+k of the match set ordered by X" API.
 
         Plan shape (the deep-paging-safe distributed top-k): each
-        shard's `applyInPandas` worker computes its own match set,
+        shard function (``_scatter``) computes its own match set,
         reads ITS doc-store partition directly (pyarrow,
         column-pruned: doc_id + sort key + requested columns), and
         emits only its LOCAL top-(offset+k) rows by the sort key — so
@@ -1480,26 +1590,16 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
         idx_dir = self.index_dir
         n_local = offset + k
         cols = ["doc_id", by, *[c for c in columns if c != by]]
 
-        def shard_sorted(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            empty = pd.DataFrame({c: [] for c in cols}).astype(
-                {"doc_id": "int64"}
-            )
+        def shard_sorted(shard: int, pg: pd.DataFrame, sp):
+            ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=cols, filters=flt
-            ).to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
-            if after is not None and len(hit):
+                return None
+            hit = _store_rows(idx_dir, shard, ids, cols, flt)
+            if after is not None:
                 av, ad = after
                 if ascending:
                     keep = (hit[by] > av) | (
@@ -1510,14 +1610,12 @@ class IndexQueryEngine:
                         (hit[by] == av) & (hit["doc_id"] > ad)
                     )
                 hit = hit[keep]
-            if not len(hit):
-                return empty
             return hit.sort_values(
                 [by, "doc_id"], ascending=[ascending, True], kind="mergesort"
             ).head(n_local)[cols]
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_sorted, schema=out_schema
+        local = self._scatter(
+            self._scan_keys(spec), shard_sorted, out_schema, spec
         )
         order = F.asc(by) if ascending else F.desc(by)
         out = local.orderBy(order, F.asc("doc_id"))
@@ -1572,27 +1670,17 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
         idx_dir = self.index_dir
         cols = ["doc_id", by, *[c for c in columns if c != by]]
 
-        def shard_export(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            empty = pd.DataFrame({c: [] for c in cols}).astype(
-                {"doc_id": "int64"}
-            )
+        def shard_export(shard: int, pg: pd.DataFrame, sp):
+            ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=cols, filters=flt
-            ).to_pandas()
-            return store[np.isin(store["doc_id"].to_numpy(), ids)][cols]
+                return None
+            return _store_rows(idx_dir, shard, ids, cols, flt)[cols]
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_export, schema=out_schema
+        local = self._scatter(
+            self._scan_keys(spec), shard_export, out_schema, spec
         )
         order = F.asc(by) if ascending else F.desc(by)
         return local.orderBy(order, F.asc("doc_id"))
@@ -1742,21 +1830,13 @@ class IndexQueryEngine:
             return _empty_df(self.spark, out_schema)
         did = int(doc_id)
         dps = int(self.manifest.get("docs_per_shard") or 0)
-        postings = self._postings_for(spec)
-        if dps:
-            postings = postings.filter(F.col("shard") == did // dps)
-        b_spec = self.spark.sparkContext.broadcast(spec)
+        names = out_schema.fieldNames()
 
-        def shard_explain(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            sp = b_spec.value
-            names = [f.name for f in out_schema.fields]
-            empty = pd.DataFrame({c: [] for c in names}).astype(
-                {"df": "int64"}
-            )
+        def shard_explain(_shard: int, pg: pd.DataFrame, sp):
             # boolean membership first: an excluded doc explains empty
             ids, _scores = wand_mod.match_scores(pg, sp)
             if did not in ids:
-                return empty
+                return None
             recs = []
             for r in pg.itertuples():
                 k = (r.field, int(r.term_id))
@@ -1791,12 +1871,12 @@ class IndexQueryEngine:
                         contrib,
                     )
                 )
-            if not recs:
-                return empty
-            return pd.DataFrame(recs, columns=names)
+            return pd.DataFrame(recs, columns=names) if recs else None
 
-        local = postings.groupBy("shard").applyInPandas(
-            shard_explain, schema=out_schema
+        # the doc lives in exactly one shard (dense layout)
+        local = self._scatter(
+            self._scan_keys(spec), shard_explain, out_schema, spec,
+            shard=did // dps if dps else None,
         )
         return local.orderBy(F.desc("contribution"), F.asc("term"))
 
@@ -1908,7 +1988,7 @@ class IndexQueryEngine:
     ) -> DataFrame:
         """Facet counts with ZERO match-set shuffle: ``by`` is a column
         of the per-shard doc store, and shards partition docID space,
-        so each shard's `applyInPandas` worker counts its own matches
+        so each shard function (``_scatter``) counts its own matches
         against a direct columnar read of ITS doc-store partition
         (pyarrow, column-pruned + partition-pruned by construction —
         the path is `docs/shard=<s>`), and per-shard counts simply SUM.
@@ -1932,67 +2012,51 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
         idx_dir = self.index_dir
 
-        def shard_facets(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            empty = pd.DataFrame({by: [], "n_docs": []}).astype(
-                {by: "object", "n_docs": "int64"}
-            )
+        def shard_facets(shard: int, pg: pd.DataFrame, sp):
+            ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
-            tbl = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", by]
-            )
-            store = tbl.to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
-            if not len(hit):
-                return empty
+                return None
+            hit = _store_rows(idx_dir, shard, ids, ["doc_id", by])
             vc = hit[by].astype(str).value_counts()
             return pd.DataFrame(
                 {by: vc.index.to_numpy(), "n_docs": vc.to_numpy("int64")}
             )
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_facets, schema=out_schema
+        local = self._scatter(
+            self._scan_keys(spec), shard_facets, out_schema, spec
         )
         return local.groupBy(by).agg(F.sum("n_docs").alias("n_docs"))
 
-    def _shard_group_heads(self, spec, by, k_groups, k_per_group, within):
-        """Per-shard worker factory for grouped retrieval: score every
+    def _grouped_gather(self, spec, by, k_groups, k_per_group, within):
+        """Per-shard group heads for grouped retrieval: score every
         match (wand.match_scores), attach the group value from a
         column-pruned pyarrow read of the shard's OWN doc-store
         partition, keep each group's local top-``k_per_group`` docs,
         then only the local top-``k_groups`` groups by head score.
         ``within`` (optional frozenset) restricts to already-selected
-        groups (pass 2). Emits <= k_groups x k_per_group tiny rows."""
-        b_spec = self.spark.sparkContext.broadcast(spec)
+        groups (pass 2). Emits <= k_groups x k_per_group tiny rows per
+        shard."""
+        schema = T.StructType(
+            [
+                T.StructField(by, T.StringType(), True),
+                T.StructField("doc_id", T.LongType(), False),
+                T.StructField("score", T.DoubleType(), False),
+            ]
+        )
         idx_dir = self.index_dir
 
-        def shard_groups(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame(
-                {by: [], "doc_id": [], "score": []}
-            ).astype({by: "object", "doc_id": "int64", "score": "float64"})
-            ids, scores = wand_mod.match_scores(pg, b_spec.value)
+        def shard_groups(shard: int, pg: pd.DataFrame, sp):
+            ids, scores = wand_mod.match_scores(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", by]
-            ).to_pandas().set_index("doc_id")
-            grp = store[by].reindex(ids).to_numpy()
+                return None
+            store = _store_rows(idx_dir, shard, ids, ["doc_id", by])
+            grp = store.set_index("doc_id")[by].reindex(ids).to_numpy()
             hit = pd.DataFrame({by: grp, "doc_id": ids, "score": scores})
             hit = hit[hit[by].notna()]  # Solr-style: ungrouped docs drop
             if within is not None:
                 hit = hit[hit[by].isin(within)]
-            if not len(hit):
-                return empty
             hit = hit.sort_values(
                 ["score", "doc_id"], ascending=[False, True],
                 kind="mergesort",
@@ -2002,20 +2066,7 @@ class IndexQueryEngine:
             heads = hit.drop_duplicates(by).head(k_groups)
             return hit[hit[by].isin(heads[by])][[by, "doc_id", "score"]]
 
-        return shard_groups
-
-    def _grouped_gather(self, spec, by, k_groups, k_per_group, within):
-        schema = T.StructType(
-            [
-                T.StructField(by, T.StringType(), True),
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("score", T.DoubleType(), False),
-            ]
-        )
-        fn = self._shard_group_heads(spec, by, k_groups, k_per_group, within)
-        return self._postings_for(spec).groupBy("shard").applyInPandas(
-            fn, schema=schema
-        )
+        return self._scatter(self._scan_keys(spec), shard_groups, schema, spec)
 
     def grouped_topk(
         self,
@@ -2163,27 +2214,17 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
         idx_dir = self.index_dir
 
-        def shard_ranges(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame(
-                {"bucket_start": [], "n_docs": []}
-            ).astype({"bucket_start": "int64", "n_docs": "int64"})
-            ids = wand_mod.match_docs(pg, b_spec.value)
+        def shard_ranges(shard: int, pg: pd.DataFrame, sp):
+            ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", by]
-            ).to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
+                return None
+            hit = _store_rows(idx_dir, shard, ids, ["doc_id", by])
             vals = hit[by].dropna().to_numpy()
             vals = vals[(vals >= start) & (vals < end)]
             if not vals.size:
-                return empty
+                return None
             buckets = start + ((vals - start) // gap).astype("int64") * gap
             vc = pd.Series(buckets).value_counts()
             return pd.DataFrame(
@@ -2193,8 +2234,8 @@ class IndexQueryEngine:
                 }
             )
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_ranges, schema=out_schema
+        local = self._scatter(
+            self._scan_keys(spec), shard_ranges, out_schema, spec
         )
         return local.groupBy("bucket_start").agg(
             F.sum("n_docs").alias("n_docs")
@@ -2223,27 +2264,16 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
         idx_dir = self.index_dir
 
-        def shard_pivot(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame(
-                {by_a: [], by_b: [], "n_docs": []}
-            ).astype({by_a: "object", by_b: "object", "n_docs": "int64"})
-            ids = wand_mod.match_docs(pg, b_spec.value)
+        def shard_pivot(shard: int, pg: pd.DataFrame, sp):
+            ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}",
-                columns=["doc_id", by_a, by_b],
-            ).to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
+                return None
+            hit = _store_rows(idx_dir, shard, ids, ["doc_id", by_a, by_b])
             hit = hit.dropna(subset=[by_a, by_b])
             if not len(hit):
-                return empty
+                return None
             vc = (
                 hit.groupby([by_a, by_b], sort=False)
                 .size()
@@ -2253,8 +2283,8 @@ class IndexQueryEngine:
             vc[by_b] = vc[by_b].astype(str)
             return vc
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_pivot, schema=out_schema
+        local = self._scatter(
+            self._scan_keys(spec), shard_pivot, out_schema, spec
         )
         return local.groupBy(by_a, by_b).agg(
             F.sum("n_docs").alias("n_docs")
@@ -2319,29 +2349,17 @@ class IndexQueryEngine:
                 T.StructField("vmax", T.DoubleType(), True),
             ]
         )
-        b_spec = self.spark.sparkContext.broadcast(spec)
         idx_dir = self.index_dir
 
-        def shard_stats(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            names = [f.name for f in part_schema.fields]
-            empty = pd.DataFrame({c: [] for c in names}).astype(
-                {"n": "int64", "missing": "int64"}
-            )
-            ids = wand_mod.match_docs(pg, b_spec.value)
+        def shard_stats(shard: int, pg: pd.DataFrame, sp):
+            ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}",
-                columns=["doc_id", on, *gcols],
-            ).to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
+                return None
+            hit = _store_rows(idx_dir, shard, ids, ["doc_id", on, *gcols])
             if by:
                 hit = hit[hit[by].notna()]
             if not len(hit):
-                return empty
+                return None
 
             def partial(g: pd.DataFrame) -> pd.Series:
                 v = g[on].dropna().astype("float64")
@@ -2365,7 +2383,9 @@ class IndexQueryEngine:
                 )
             else:
                 out = partial(hit).to_frame().T
-            out = out.astype(
+            # NaN float cells cross Arrow as nulls, which the JVM-side
+            # min/sum aggs then ignore — exactly the merge we want
+            return out.astype(
                 {
                     "n": "int64",
                     "missing": "int64",
@@ -2375,12 +2395,9 @@ class IndexQueryEngine:
                     "vmax": "float64",
                 }
             )
-            # NaN float cells cross Arrow as nulls, which the JVM-side
-            # min/sum aggs then ignore — exactly the merge we want
-            return out[names]
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_stats, schema=part_schema
+        local = self._scatter(
+            self._scan_keys(spec), shard_stats, part_schema, spec
         )
         merged = local.groupBy(*gcols).agg(
             F.sum("n").alias("n_docs"),
@@ -2447,27 +2464,14 @@ class IndexQueryEngine:
                 T.StructField("c", T.LongType(), False),
             ]
         )
-        b_spec = self.spark.sparkContext.broadcast(spec)
         idx_dir = self.index_dir
 
-        def shard_hist(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame({"v": [], "c": []}).astype(
-                {"v": "float64", "c": "int64"}
-            )
-            ids = wand_mod.match_docs(pg, b_spec.value)
+        def shard_hist(shard: int, pg: pd.DataFrame, sp):
+            ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", on]
-            ).to_pandas()
-            vals = store[np.isin(store["doc_id"].to_numpy(), ids)][
-                on
-            ].dropna()
-            if not len(vals):
-                return empty
+                return None
+            hit = _store_rows(idx_dir, shard, ids, ["doc_id", on])
+            vals = hit[on].dropna()
             vc = vals.astype("float64").value_counts()
             return pd.DataFrame(
                 {"v": vc.index.to_numpy("float64"),
@@ -2475,9 +2479,7 @@ class IndexQueryEngine:
             )
 
         hist = (
-            self._postings_for(spec)
-            .groupBy("shard")
-            .applyInPandas(shard_hist, schema=part_schema)
+            self._scatter(self._scan_keys(spec), shard_hist, part_schema, spec)
             .groupBy("v")
             .agg(F.sum("c").alias("c"))
         )
@@ -2561,11 +2563,10 @@ class IndexQueryEngine:
             return _empty_df(self.spark, out_schema)
         terms = analyze.tokenize_query(query, self.fields[field])
         tids = [self._tid(t) for t in terms]
-        b_spec = self.spark.sparkContext.broadcast(spec)
         prunable = self.blockmax_safe and not spec.is_boolean
         shard_auto = mode == "auto" and prunable
         use_wand = mode == "wand" and prunable
-        empty_cast = {
+        dtypes = {
             "doc_id": "int64",
             "score": "float64",
             "start_pos": "int32",
@@ -2573,42 +2574,24 @@ class IndexQueryEngine:
             "n_hits": "int32",
         }
 
-        def shard_hl(pg: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {c: [] for c in empty_cast}
-            ).astype(empty_cast)
-            if not len(pg):
-                return empty
-            sp = b_spec.value
-            if shard_auto:
-                present = set(
-                    pg[["field", "term_id"]]
-                    .drop_duplicates()
-                    .itertuples(index=False, name=None)
-                )
-                ws = sorted(
-                    (w for kk, w in sp.term_weights.items() if kk in present),
-                    reverse=True,
-                )
-                use = bool(ws) and ws[0] > sum(ws[1:])
-            else:
-                use = use_wand
+        def shard_hl(_shard: int, pg: pd.DataFrame, sp):
+            use = _wand_pays(_present_keys(pg), sp) if shard_auto else use_wand
             fn = wand_mod.wand if use else wand_mod.taat
             ids, scores = fn(pg, sp, k)
             if not ids.size:
-                return empty
+                return None
             rows = wand_mod.best_window_shard(pg, tids, field, ids, window)
             if not rows:
-                return empty
+                return None
             sc = dict(zip(ids.tolist(), scores.tolist()))
             df = pd.DataFrame(
                 rows, columns=["doc_id", "start_pos", "end_pos", "n_hits"]
             )
             df["score"] = df["doc_id"].map(sc)
-            return df[list(empty_cast)].astype(empty_cast)
+            return df[list(dtypes)].astype(dtypes)
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_hl, schema=out_schema
+        local = self._scatter(
+            self._scan_keys(spec), shard_hl, out_schema, spec
         )
         out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         if not render:
@@ -2674,15 +2657,16 @@ class IndexQueryEngine:
             [T.StructField("n_matches", T.LongType(), False)]
         )
         if not spec.term_weights:
-            return self.spark.createDataFrame([(0,)], out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
+            return _local_df(
+                self.spark, pd.DataFrame({"n_matches": [0]}), out_schema
+            )
 
-        def shard_count(pg: pd.DataFrame) -> pd.DataFrame:
-            ids = wand_mod.match_docs(pg, b_spec.value)
+        def shard_count(_shard: int, pg: pd.DataFrame, sp) -> pd.DataFrame:
+            ids = wand_mod.match_docs(pg, sp)
             return pd.DataFrame({"n_matches": [int(ids.size)]})
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_count, schema=out_schema
+        local = self._scatter(
+            self._scan_keys(spec), shard_count, out_schema, spec
         )
         return local.agg(
             F.coalesce(F.sum("n_matches"), F.lit(0)).alias("n_matches")

@@ -1,7 +1,8 @@
 """Per-shard top-k scoring: vectorized exact TAAT and block-max WAND.
 
-Both run inside the ``applyInPandas`` worker of operators/query.py —
-one call per shard (SURVEY.md §3.4 scatter-gather). Posting segments
+Both run as the shard function of operators/query.py's ``_scatter``
+— one call per shard, in a Spark Python worker or, for small scans,
+in the driver (SURVEY.md §3.4 scatter-gather). Posting segments
 are self-contained: per-posting doc lengths (the Lucene-norms analog)
 travel inside the blocks, so scoring needs no doc_stats side lookup
 and the query path shuffles ONLY the query terms' postings.

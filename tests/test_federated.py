@@ -191,3 +191,30 @@ def test_federated_rejects_mismatched_params(built, spark, tmp_path):
 def test_federated_empty_query(built, spark):
     fed = FederatedQueryEngine(spark, [built["h0"], built["h1"]])
     assert fed.topk("zzzznotaterm", k=5).collect() == []
+
+
+def test_federated_members_size_scan_by_own_df(
+    built, spark, monkeypatch
+):
+    """A merged-stats spec carries federation-wide df sums; each member
+    picks its scatter backend from ITS OWN postings estimate, so a
+    federation whose member scans each fit under the guard runs every
+    member on the driver-local backend."""
+    from gxdindexer_spark.operators import query
+
+    fed = FederatedQueryEngine(spark, [built["h0"], built["h1"]])
+    q = "getIndexList if return"
+    want = fed.topk(q, k=15).collect()
+    own = max(
+        sum(e._scan_keys(e.make_spec(q)).values()) for e in fed.engines
+    )
+    merged = sum(IndexQueryEngine._scan_keys(fed.make_spec(q)).values())
+    assert merged > own
+    monkeypatch.setattr(query, "LOCAL_MAX_POSTINGS", own)
+    df = fed.topk(q, k=15)
+    assert "FlatMapGroupsInPandas" not in df._jdf.queryExecution().toString()
+    assert df.collect() == want
+    monkeypatch.setattr(query, "LOCAL_MAX_POSTINGS", own - 1)
+    df = fed.topk(q, k=15)
+    assert "FlatMapGroupsInPandas" in df._jdf.queryExecution().toString()
+    assert df.collect() == want

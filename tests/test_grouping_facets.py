@@ -528,34 +528,43 @@ def test_export_matches_full_sorted(built, spark):
         eng.export_matches(q, by="nope")
 
 
-def test_grouped_and_facet_plans_scan_postings_only(built, spark):
+def test_grouped_and_facet_plans_scan_postings_only(
+    built, spark, monkeypatch
+):
     """Plan shape: like facet_counts_stored, the grouped/range/pivot
     paths read ONLY the postings through Spark — the doc store is a
-    direct per-shard pyarrow read inside the worker, never a Spark
-    scan or exchange."""
+    direct per-shard pyarrow read inside the shard function, never a
+    Spark scan or exchange. Checked on both scatter backends: the
+    Spark one scans the postings once, the driver-local one hands the
+    gather a local relation and scans nothing."""
     import contextlib
     import io
     import re
 
+    from gxdindexer_spark.operators import query
+
     idx, _pdocs = built
     eng = IndexQueryEngine(spark, idx)
-    for df in (
-        eng.grouped_topk("merge* if", by="lang", k_groups=3),
-        eng.facet_ranges_stored(
-            "merge* if", by="n_chars", start=0, end=400, gap=50
-        ),
-        eng.facet_pivot_stored("merge* if", by_a="lang", by_b="repo"),
-    ):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        # formatted explain emits one "(n) Scan parquet" detail header
-        # per scan node (the tree line "Scan parquet  (n)" would
-        # double-count against it)
-        scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
-        assert len(scans) == 1, plan
-        locations = [
-            ln for ln in plan.splitlines() if "Location" in ln
-        ]
-        assert locations and all("postings" in ln for ln in locations), plan
+    for guard, n_scans in ((query.LOCAL_MAX_POSTINGS, 0), (-1, 1)):
+        monkeypatch.setattr(query, "LOCAL_MAX_POSTINGS", guard)
+        for df in (
+            eng.grouped_topk("merge* if", by="lang", k_groups=3),
+            eng.facet_ranges_stored(
+                "merge* if", by="n_chars", start=0, end=400, gap=50
+            ),
+            eng.facet_pivot_stored("merge* if", by_a="lang", by_b="repo"),
+        ):
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+            plan = buf.getvalue()
+            # formatted explain emits one "(n) Scan parquet" detail
+            # header per scan node (the tree line "Scan parquet  (n)"
+            # would double-count against it)
+            scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
+            assert len(scans) == n_scans, plan
+            locations = [
+                ln for ln in plan.splitlines() if "Location" in ln
+            ]
+            assert len(locations) >= n_scans, plan
+            assert all("postings" in ln for ln in locations), plan

@@ -807,21 +807,27 @@ def test_auto_mode_planner(built, spark):
             assert x["score"] == pytest.approx(y["score"], rel=1e-12)
 
 
-def test_facet_counts_plan_prunes_columns(built, spark):
+def test_facet_counts_plan_prunes_columns(built, spark, monkeypatch):
     """The facet attribute scan must read ONLY (doc_id, facet col) —
     a facet query over a wide doc table must not drag every column
     through the join."""
+    from gxdindexer_spark.operators import query
     from gxdindexer_spark.plans import explain
 
     idx, docs, _pdocs, _m = built
     facets = docs.select("doc_id", "lang")
-    out = IndexQueryEngine(spark, idx).facet_counts(
-        "merge* if", facets, by="lang", fields=["content"]
-    )
-    # postings scan pushes term_id/field; no scan reads doc content
-    schemas = explain.read_schemas(out)
-    assert schemas, "no scans in plan"
-    assert not any("content" in s for s in schemas)
+    eng = IndexQueryEngine(spark, idx)
+    # the Spark scatter backend scans the postings; the driver-local
+    # one hands the join a local relation and scans nothing
+    for guard, scans in ((-1, True), (query.LOCAL_MAX_POSTINGS, False)):
+        monkeypatch.setattr(query, "LOCAL_MAX_POSTINGS", guard)
+        out = eng.facet_counts(
+            "merge* if", facets, by="lang", fields=["content"]
+        )
+        # postings scan pushes term_id/field; no scan reads doc content
+        schemas = explain.read_schemas(out)
+        assert bool(schemas) == scans, schemas
+        assert not any("content" in s for s in schemas)
 
 
 def test_incremental_finalize_matches_full(built, spark, tmpdir_idx):
@@ -952,14 +958,17 @@ def test_sorted_matches_pages_by_stored_field(built, spark):
         eng.sorted_matches(q, by="path", k=3, offset=2, after=("x", 1))
 
 
-def test_facet_counts_stored_shard_local(built, spark):
+def test_facet_counts_stored_shard_local(built, spark, monkeypatch):
     """facet_counts_stored: same counts as the join-based path and the
     python match-set oracle, with exactly ONE Spark file scan (the
-    postings) in the plan — the facet table never enters a Spark scan
-    or exchange; per-shard workers count against direct columnar reads
-    of their own doc-store partition and the counts sum."""
+    postings) in the Spark-backend plan and none in the driver-local
+    one — the facet table never enters a Spark scan or exchange;
+    per-shard workers count against direct columnar reads of their own
+    doc-store partition and the counts sum."""
     import contextlib
     import io
+
+    from gxdindexer_spark.operators import query
 
     idx, _docs, pdocs, _m = built
     eng = IndexQueryEngine(spark, idx)
@@ -987,14 +996,21 @@ def test_facet_counts_stored_shard_local(built, spark):
     # plan shape: one parquet scan total (postings); no facet-side scan
     # (AQE prints the tree twice + node details -> count in the final
     # tree only, and assert the doc store path is absent everywhere)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        res.explain("formatted")
-    plan = buf.getvalue()
-    final_tree = plan.split("== Initial Plan ==")[0]
-    assert final_tree.count("Scan parquet") == 1, plan
-    locations = [ln for ln in plan.splitlines() if "Location" in ln]
-    assert locations and all("postings" in ln for ln in locations), plan
+    for guard, n_scans in ((query.LOCAL_MAX_POSTINGS, 0), (-1, 1)):
+        monkeypatch.setattr(query, "LOCAL_MAX_POSTINGS", guard)
+        res = eng.facet_counts_stored(
+            "merge* if", by="lang", fields=["content"]
+        )
+        assert {r["lang"]: r["n_docs"] for r in res.collect()} == got
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            res.explain("formatted")
+        plan = buf.getvalue()
+        final_tree = plan.split("== Initial Plan ==")[0]
+        assert final_tree.count("Scan parquet") == n_scans, plan
+        locations = [ln for ln in plan.splitlines() if "Location" in ln]
+        assert len(locations) >= n_scans, plan
+        assert all("postings" in ln for ln in locations), plan
 
 
 def test_doc_level_delete(built, spark, tmpdir_idx):
@@ -1331,6 +1347,16 @@ def test_no_match_results_are_empty_and_cheap(spark, built):
     ).collect()
     keys = {r["query_id"] for r in many}
     assert "hit" in keys and "miss" not in keys
+    # count_matches of a no-term query: one Arrow-built local row, not
+    # a python-list frame (Scan ExistingRDD, workers spawned per action)
+    cm = eng.count_matches("zzzznotaterm")
+    assert cm.collect()[0]["n_matches"] == 0
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        cm.explain("formatted")
+    plan = buf.getvalue()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert "Scan parquet" not in plan and "Python" not in plan, plan
 
 
 def test_suggest_matches_python_oracle(built, spark):
