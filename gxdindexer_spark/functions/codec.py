@@ -414,60 +414,3 @@ def posting_list_from_row(term: str, row: dict) -> PostingList:
         pos_buf=bytes(row.get("pos_buf") or b""),
     )
 
-
-def merge_salted(parts: list[dict]) -> dict:
-    """Merge per-salt partial encodings of ONE term into a single row.
-
-    Salts are doc_id *range* buckets (salt = doc_id // range), so the
-    partial posting lists cover disjoint, ascending docID ranges and can
-    be concatenated block-wise in salt order without re-sorting — the
-    skew-handling merge described in SURVEY.md §4.1. Each part carries
-    its ``salt`` key.
-    """
-    parts = sorted(parts, key=lambda p: p["salt"])
-    # verify disjoint ascending ranges
-    for a, b in zip(parts, parts[1:]):
-        if a["block_last"][-1] >= b["block_first"][0]:
-            raise ValueError("salted parts overlap in docID space")
-    out = {
-        "df": sum(p["df"] for p in parts),
-        "cf": sum(p["cf"] for p in parts),
-        "block_first": [],
-        "block_last": [],
-        "block_max_tfn": [],
-        "block_count": [],
-        "doc_offsets": [0],
-        "tf_offsets": [0],
-        "dl_offsets": [0],
-        "pos_offsets": [0],
-        "docs_buf": b"",
-        "tfs_buf": b"",
-        "dls_buf": b"",
-        "pos_buf": b"",
-    }
-    dbufs, tbufs, lbufs, pbufs = [], [], [], []
-    for p in parts:
-        d0, t0, l0, p0 = (
-            out["doc_offsets"][-1],
-            out["tf_offsets"][-1],
-            out["dl_offsets"][-1],
-            out["pos_offsets"][-1],
-        )
-        out["block_first"] += list(p["block_first"])
-        out["block_last"] += list(p["block_last"])
-        out["block_max_tfn"] += list(p["block_max_tfn"])
-        out["block_count"] += list(p["block_count"])
-        out["doc_offsets"] += [d0 + o for o in p["doc_offsets"][1:]]
-        out["tf_offsets"] += [t0 + o for o in p["tf_offsets"][1:]]
-        out["dl_offsets"] += [l0 + o for o in p["dl_offsets"][1:]]
-        pos_off = p.get("pos_offsets") or [0] * len(p["doc_offsets"])
-        out["pos_offsets"] += [p0 + o for o in pos_off[1:]]
-        dbufs.append(p["docs_buf"])
-        tbufs.append(p["tfs_buf"])
-        lbufs.append(p["dls_buf"])
-        pbufs.append(p.get("pos_buf") or b"")
-    out["docs_buf"] = b"".join(dbufs)
-    out["tfs_buf"] = b"".join(tbufs)
-    out["dls_buf"] = b"".join(lbufs)
-    out["pos_buf"] = b"".join(pbufs)
-    return out

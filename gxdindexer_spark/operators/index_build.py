@@ -13,12 +13,18 @@ Skew handling (north_rule, SURVEY.md §4.1): stopword-like terms get
 posting lists orders of magnitude longer than the median, but a
 shard's docID range is bounded by ``docs_per_shard``, so the heaviest
 term contributes at most ``docs_per_shard`` rows to its shard's
-encode group — the same per-group bound the earlier salted two-phase
-(partial encode + ``merge_salted`` concatenation) enforced with a
-docID-range salt, minus that design's second full shuffle and second
-Python pass (guide §2.4: two operations keyed the same way — encode
-and the shard-partitioned write — share one exchange). AQE only fixes
-*join* skew, not groupBy-key skew, hence the explicit bounded key.
+encode group — the same per-group bound an earlier salted two-phase
+encode (partial lists per docID-range salt, then concatenated)
+enforced, minus that design's second full shuffle and second Python
+pass (guide §2.4: two operations keyed the same way — encode and the
+shard-partitioned write — share one exchange). AQE only fixes *join*
+skew, not groupBy-key skew, hence the explicit bounded key.
+
+Every write (build, delete, update, attach, compaction) is one
+``_Commit``: it computes into a dot-prefixed staging root without
+touching a live file, then publishes once — shard partitions, the
+dictionary artifacts, ``ledger.json``, ``manifest.json`` — through a
+journal that the next writer replays forward after a crash.
 
 The reference analog of this stage is the chunked extract-assemble-load
 loop in GxdResultIndexer.java:900-1268 (chunks == partitions here) with
@@ -30,6 +36,7 @@ Lucene.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -40,6 +47,9 @@ from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,6 +59,19 @@ from gxdindexer_spark.functions import analyze, bm25, hashing
 from gxdindexer_spark.functions.codec import encode_postings
 
 DEFAULT_FIELDS = {"content": "code", "path": "path", "lang": "lang"}
+# per-shard partitions of a build; the global artifacts its finalize
+# derives from them
+SHARD_ARTIFACTS = ("docs", "doc_stats", "dict_parts", "postings")
+STATS_ARTIFACTS = (
+    "dictionary", "dictionary_rev", "dictionary_ngrams", "corpus_stats"
+)
+# a commit computes under STAGING and records its renames in JOURNAL
+# before applying them (``_Commit``)
+STAGING = ".staging"
+JOURNAL = ".publish.json"
+# ledger metrics are read driver-side with pyarrow up to this many
+# bytes of touched partitions, with Spark above it
+ARROW_METRICS_MAX = 256 << 20
 
 
 def _empty_like(spark: SparkSession, schema: T.StructType) -> DataFrame:
@@ -249,8 +272,8 @@ class IndexBuilder:
         doc_id). Every (shard, field, term_id) group is then
         contiguous inside one task and the group-aware stream encodes
         each term's FINAL posting row directly. The salted two-phase
-        this replaces (partial encode keyed on a docID-range salt,
-        then a second shuffle + Python pass to ``merge_salted`` the
+        this replaced (partial encode keyed on a docID-range salt,
+        then a second shuffle + Python pass concatenating the
         partials) paid a full extra shuffle of the raw tf bytes plus a
         payload shuffle to reassemble groups this plan never splits:
         a shard's docID range is bounded by ``docs_per_shard``, so the
@@ -258,9 +281,9 @@ class IndexBuilder:
         term's salted partials were (guide §2.4: operations keyed the
         same way share one exchange). Rows stay sorted by
         (field, term_id) in-file, so row-group min/max stats keep
-        pruning term IN-list scans. Per-phase-out equivalence:
-        decoded postings are identical (test_codec asserts
-        merge-of-salted == unsalted encode content); only block
+        pruning term IN-list scans. Decoded postings equal the salted
+        design's (its partials covered disjoint ascending docID
+        ranges, so concatenation was the whole merge); only block
         boundaries near old salt edges differ, which WAND's
         block-max pruning treats as metadata (rank-identical,
         property-tested WAND == TAAT).
@@ -353,33 +376,37 @@ class IndexBuilder:
         it for shards whose every document was tombstoned.
 
         Returns a metrics dict (docs/sec, postings/sec, bytes).
-        Resumability (north_rule): per-shard lineage entries are written
-        after the shard's artifacts commit; a re-run skips shards whose
-        ledger entry matches the input fingerprint (SURVEY.md §4.4).
+        Resumability (north_rule): the build computes every artifact
+        into staging and publishes once (``_Commit``); the ledger's
+        per-shard lineage entries publish after the shard partitions
+        and the dictionary, and a re-run skips shards whose ledger
+        entry matches the input fingerprint (SURVEY.md §4.4).
 
-        Single-writer: the whole mutate region holds the index's
-        writer lock (``_WriterLock``); a second live writer raises
+        Single-writer: the whole commit holds the index's writer lock
+        (``_WriterLock``); a second live writer raises
         ``ConcurrentWriteError``. Every content-changing build commits
         a new ``snapshot_id`` (monotonic, with parent pointer and a
         bounded history) in the manifest — the Iceberg snapshot-lineage
         contract on plain parquet.
         """
-        os.makedirs(index_dir, exist_ok=True)
-        with _WriterLock(index_dir):
+        with _Commit(index_dir) as commit:
             return self._build_locked(
-                docs, index_dir, resume, append, drop_shards
+                commit, docs, resume, append, drop_shards
             )
 
     def _build_locked(
         self,
+        commit: "_Commit",
         docs: DataFrame,
-        index_dir: str,
         resume: bool,
         append: bool = False,
         drop_shards: set[int] | None = None,
         precomputed_fp: dict[int, str] | None = None,
     ) -> dict:
+        """Body of ``build``: computes into ``commit``'s staging root
+        and lists what the commit publishes."""
         spark = docs.sparkSession
+        index_dir = commit.index_dir
         t0 = time.monotonic()
         trace = os.environ.get("GXDIDX_TRACE") == "1"
         _last = [t0]
@@ -393,15 +420,13 @@ class IndexBuilder:
                 )
                 _last[0] = now
 
-        _recover_compaction(index_dir)
-
         # input fingerprint per shard (see _fp_map for the contract).
         # Point mutations (delete/update) pass ``precomputed_fp``:
         # the same agg, computed by the caller CONCURRENTLY with its
-        # own scan/checkpoint jobs (guide §2.6), so the serial
-        # fingerprint job disappears from the mutation critical path
-        # while the resume gate below stays byte-identical (replayed
-        # no-op mutations still skip with shards_built == 0).
+        # own scan/cache jobs (guide §2.6), so the serial fingerprint
+        # job disappears from the mutation critical path while the
+        # resume gate below stays byte-identical (replayed no-op
+        # mutations still skip with shards_built == 0).
         if precomputed_fp is not None:
             shard_fp = dict(precomputed_fp)
         else:
@@ -425,6 +450,9 @@ class IndexBuilder:
                 and done.get(s, {}).get("status") == "done"
             )
         )
+        # shards whose live partitions this commit replaces (pending)
+        # or removes (orphans); every other shard is kept as it is
+        replaced = set(pending) | orphans
         # ---- incremental-finalize eligibility (north_rule: an append
         # or streaming micro-batch must not pay O(index) to commit).
         # Kept entries = shards untouched by this build; incremental
@@ -434,43 +462,20 @@ class IndexBuilder:
         kept_entries = {
             s: e
             for s, e in done.items()
-            if s not in set(pending)
-            and s not in orphans
-            and (append or s in shard_fp)
+            if s not in replaced and (append or s in shard_fp)
         }
         stats_incremental = bool(kept_entries) and all(
             "field_stats" in e for e in kept_entries.values()
         )
+        # global per-field totals come from ledger field_stats unless a
+        # kept shard predates them (legacy ledger: scan doc_stats)
+        ledger_totals = stats_incremental or not kept_entries
         dict_incremental = (
             stats_incremental
             and os.path.isdir(f"{index_dir}/dictionary")
             and os.path.isdir(f"{index_dir}/corpus_stats")
         )
-        # changed shards that already have artifacts: their OLD
-        # dictionary contributions must be SUBTRACTED in the merge —
-        # capture them before the wipe (localCheckpoint materializes
-        # the negated partials so the deletes below can't unseat them)
-        old_neg = None
-        if dict_incremental:
-            changed_existing = sorted(
-                (set(pending) | orphans) & _artifact_shards(index_dir)
-            )
-            if changed_existing:
-                old_neg = (
-                    spark.read.parquet(f"{index_dir}/dict_parts")
-                    .filter(F.col("shard").isin(changed_existing))
-                    .groupBy("field", "term", "term_id")
-                    .agg(
-                        (-F.sum("df")).alias("df"),
-                        (-F.sum("cf")).alias("cf"),
-                    )
-                    .localCheckpoint()
-                )
-        for s in sorted(orphans):
-            for art in ("docs", "doc_stats", "dict_parts", "postings"):
-                shutil.rmtree(
-                    f"{index_dir}/{art}/shard={s}", ignore_errors=True
-                )
+        for s in orphans:
             done.pop(s, None)
         metrics = {
             "shards_total": len(shard_fp),
@@ -480,15 +485,6 @@ class IndexBuilder:
         avgdl: dict[str, float] = {}
         delta_field_stats: dict[int, dict[str, dict]] = {}
         if pending:
-            # a crashed prior run may have left partial shard partitions;
-            # wipe pending shards' artifacts so append stays exactly-once
-            # (the reference's full-rebuild deleteByQuery analog, but
-            # scoped to un-committed shards — Indexer.java:83-88).
-            for art in ("docs", "doc_stats", "dict_parts", "postings"):
-                for s in pending:
-                    shutil.rmtree(
-                        f"{index_dir}/{art}/shard={s}", ignore_errors=True
-                    )
             # repartition on the shard key: the docs input is typically
             # a handful of scan partitions (one smallish parquet file →
             # ONE task), which serialized the whole Arrow tokenizer pass
@@ -504,26 +500,28 @@ class IndexBuilder:
             sub = docs.filter(F.col("shard").isin(pending))
             if wide:
                 sub = sub.repartition(F.col("shard"))
-            # the doc-store write is independent of everything the
-            # tokenize pipeline produces — submit it from a thread so
-            # its tasks back-fill cores while tokenization runs
-            # (guide §2.6: overlap independent jobs); joined below
-            # before finalize/ledger commit.
-            # 3 artifact writes + the overlapped finalize below — one
-            # worker each so none queues behind the others
-            bg_pool = ThreadPoolExecutor(max_workers=4)
-            docs_fut = bg_pool.submit(
-                lambda: sub.write.mode("append")
-                .partitionBy("shard")
-                .parquet(f"{index_dir}/docs")
-            )
+
+            def write_staged(df: DataFrame, art: str):
+                """Submit ``df``'s shard-partitioned write into staging
+                on the commit pool: its tasks back-fill cores while the
+                tokenize/postings pipeline runs (guide §2.6); joined
+                before the ledger."""
+                return commit.pool.submit(
+                    lambda: df.write.partitionBy("shard").parquet(
+                        commit.stage(art)
+                    )
+                )
+
+            docs_fut = write_staged(sub, "docs")
             # tokenize ONCE; both doc_stats and postings consume it.
             # MEMORY_AND_DISK: at cluster scale this spills instead of
             # re-running the (expensive) tokenizer pass.
-            tf = term_freqs_df(
-                sub, self.fields, with_positions=self.with_positions,
-                synonyms=self.synonyms,
-            ).persist()
+            tf = commit.cache(
+                term_freqs_df(
+                    sub, self.fields, with_positions=self.with_positions,
+                    synonyms=self.synonyms,
+                )
+            )
             doc_stats = (
                 tf.groupBy("doc_id", "field", "shard")
                 .agg(F.first("dl").alias("dl"))
@@ -551,46 +549,36 @@ class IndexBuilder:
             # the full group key, so writing it directly would emit one
             # file per (task x shard) dir — ~32x the files every later
             # shard-pruned read must open (guide §6)
-            ds_out = (
-                doc_stats.repartition(F.col("shard")) if wide else doc_stats
-            )
-            ds_fut = bg_pool.submit(
-                lambda: ds_out.write.mode("append")
-                .partitionBy("shard")
-                .parquet(f"{index_dir}/doc_stats")
+            ds_fut = write_staged(
+                doc_stats.repartition(F.col("shard")) if wide else doc_stats,
+                "doc_stats",
             )
             # per-shard dictionary contributions: the ONLY consumer of
             # the term string; partial agg shrinks it to ~vocab rows per
             # partition before the (small) shuffle. Reads the
             # materialized tf cache — runs concurrently with the
-            # postings pipeline below. The incremental finalize merges
-            # the IN-MEMORY ``dp`` (same cached lineage), so it never
-            # waits on this write; the write itself is joined before
-            # the ledger commit.
+            # postings pipeline below. Finalize merges the IN-MEMORY
+            # ``dp`` (same cached lineage) wherever it can, so it
+            # rarely waits on this write.
             dp = tf.groupBy("shard", "field", "term", "term_id").agg(
                 F.count("*").alias("df"), F.sum("tf").alias("cf")
             )
             if wide:
                 dp = dp.repartition(F.col("shard"))
-            dict_parts_fut = bg_pool.submit(
-                lambda: dp.write.mode("append")
-                .partitionBy("shard")
-                .parquet(f"{index_dir}/dict_parts")
-            )
+            dict_parts_fut = write_staged(dp, "dict_parts")
             # avgdl must be GLOBAL (all shards incl. previously built):
             # kept shards contribute via their ledger field_stats (no
             # doc_stats scan — O(delta) input); legacy ledgers without
-            # field_stats pay the full scan once (joining the
-            # backgrounded doc_stats write first — that artifact is
-            # the scan's input)
-            if stats_incremental or not kept_entries:
+            # field_stats pay the full scan once (joining the staged
+            # doc_stats write first — it holds the pending shards' rows)
+            if ledger_totals:
                 totals = _field_totals(kept_entries, delta_field_stats)
                 avgdl = {f: t[1] / t[0] for f, t in totals.items() if t[0]}
             else:
                 ds_fut.result()
-                all_stats = spark.read.parquet(f"{index_dir}/doc_stats")
                 cs = (
-                    all_stats.groupBy("field")
+                    commit.view(spark, "doc_stats", replaced)
+                    .groupBy("field")
                     .agg((F.sum("dl") / F.count("*")).alias("avgdl"))
                     .collect()
                 )
@@ -599,110 +587,103 @@ class IndexBuilder:
         # global stats only change when shards did: a pure no-op resume
         # (the common "is it up to date?" probe) skips the dictionary
         # re-agg + collision check + corpus_stats rewrite entirely.
-        changed = bool(pending) or bool(orphans)
+        changed = bool(replaced)
         run_finalize = changed or not (
             os.path.isdir(f"{index_dir}/dictionary")
             and os.path.isdir(f"{index_dir}/corpus_stats")
         )
 
         def _run_finalize() -> str:
-            field_totals = (
-                _field_totals(kept_entries, delta_field_stats)
-                if (stats_incremental or not kept_entries)
-                else None
-            )
-            # full-mode finalize with NO kept shards (fresh build, or
-            # resume rebuilding everything): the just-computed dp IS
-            # the whole dict_parts content, so aggregate the in-memory
-            # lineage (cached tf) instead of waiting for the
-            # backgrounded artifact write and re-reading it — the
-            # dictionary work then genuinely overlaps the postings job
-            fresh_full = (
-                bool(pending) and not dict_incremental and not kept_entries
-            )
-            if pending and not dict_incremental and not fresh_full:
-                # full-mode finalize over kept+pending shards
-                # re-aggregates the dict_parts ARTIFACT — the
-                # backgrounded write is its input
-                dict_parts_fut.result()
-            return self._finalize_stats(
-                spark,
-                index_dir,
-                pending=pending if dict_incremental else None,
-                old_neg=old_neg,
-                field_totals=field_totals,
-                delta_parts=(
-                    dp
-                    if (pending and (dict_incremental or fresh_full))
+            if dict_incremental:
+                # prior dictionary, minus the replaced shards' old
+                # contributions (their live dict_parts, untouched until
+                # publish), plus the rebuilt shards' new partials
+                rows = [spark.read.parquet(f"{index_dir}/dictionary")]
+                gone = sorted(
+                    replaced & _artifact_shards(index_dir, ("dict_parts",))
+                )
+                if gone:
+                    rows.append(
+                        spark.read.parquet(f"{index_dir}/dict_parts")
+                        .filter(F.col("shard").isin(gone))
+                        .select(
+                            "field", "term", "term_id",
+                            (-F.col("df")).alias("df"),
+                            (-F.col("cf")).alias("cf"),
+                        )
+                    )
+                if pending:
+                    rows.append(dp)
+            elif pending and not kept_entries:
+                # fresh build (or a resume rebuilding everything): the
+                # just-computed dp IS the whole dict_parts content, so
+                # aggregate the in-memory lineage (cached tf) instead
+                # of waiting for the staged write and re-reading it —
+                # the dictionary work then overlaps the postings job
+                rows = [dp]
+            else:
+                # full re-aggregation over the kept shards' live and
+                # the pending shards' staged dict_parts
+                if pending:
+                    dict_parts_fut.result()
+                rows = [commit.view(spark, "dict_parts", replaced)]
+            self._finalize_stats(
+                commit,
+                rows,
+                field_totals=(
+                    _field_totals(kept_entries, delta_field_stats)
+                    if ledger_totals
                     else None
                 ),
+                doc_stats=(
+                    None
+                    if ledger_totals
+                    else commit.view(spark, "doc_stats", replaced)
+                ),
             )
+            return "incremental" if dict_incremental else "full"
 
         finalize_mode = "skipped"
+        metrics_fut = None
         if pending:
             # the postings encode+write and finalize's dictionary work
-            # are independent (disjoint artifact dirs; both read the
-            # cached tf / the backgrounded dict_parts write) — run
-            # finalize in a thread CONCURRENTLY with the postings job
-            # (guide §2.6). Failure atomicity is unchanged: the
-            # ledger/manifest commit below still happens only after
-            # BOTH succeed, so a failure in either leaves pending
-            # shards un-committed and the next resume rebuilds them —
-            # exactly the crash contract of the sequential order (the
-            # dictionary swap stays marker-bracketed).
+            # are independent (both read the cached tf; each stages its
+            # own dirs) — finalize runs on the commit pool CONCURRENTLY
+            # with the postings job (guide §2.6). Neither touches a
+            # live file: the commit publishes only after both, the
+            # staged writes and the ledger metrics have succeeded, so a
+            # failure anywhere before publish leaves the index exactly
+            # as it was.
             fin_fut = (
-                bg_pool.submit(_run_finalize) if run_finalize else None
+                commit.pool.submit(_run_finalize) if run_finalize else None
             )
-            try:
-                postings = self.postings_df(tf, avgdl)
-                postings.write.mode("append").partitionBy("shard").parquet(
-                    f"{index_dir}/postings"
-                )
-            except BaseException:
-                # a failed postings write must not leave the finalize
-                # thread (or the artifact writes) running past the
-                # writer lock: a retrying writer could otherwise race
-                # its own finalize against this orphaned one on the
-                # same dictionary swap dirs. Join everything
-                # best-effort, then re-raise the original failure.
-                for fut in (fin_fut, docs_fut, ds_fut, dict_parts_fut):
-                    if fut is not None:
-                        try:
-                            fut.result()
-                        except Exception:
-                            pass
-                raise
+            self.postings_df(tf, avgdl).write.partitionBy("shard").parquet(
+                commit.stage("postings")
+            )
             mark("postings")
-            # per-shard metrics only need postings (written above) and
-            # doc_stats (write backgrounded; the wrapper joins it
-            # first) — overlap the scan with finalize's tail; joined
-            # at the ledger step below
+
+            # per-shard metrics only need the staged postings (written
+            # above) and doc_stats (joined first) — overlap the scan
+            # with finalize's tail
             def _metrics_after_ds():
                 ds_fut.result()
-                return self._shard_metrics(spark, index_dir, pending)
+                return self._shard_metrics(spark, commit.staging, pending)
 
-            metrics_pool = ThreadPoolExecutor(max_workers=1)
-            metrics_fut = metrics_pool.submit(_metrics_after_ds)
+            metrics_fut = commit.pool.submit(_metrics_after_ds)
             if fin_fut is not None:
                 finalize_mode = fin_fut.result()
-        else:
-            metrics_fut = None
-            if run_finalize:
-                finalize_mode = _run_finalize()
+        elif run_finalize:
+            finalize_mode = _run_finalize()
         metrics["finalize_mode"] = finalize_mode
         mark("finalize")
         if pending:
-            # join the remaining overlapped writes before the ledger
-            # commit asserts completeness; tf stays cached until its
-            # last consumers (dict_parts write, finalize's checkpoint)
-            # are done
+            # a failed staged write must fail the commit before publish
             docs_fut.result()
-            ds_fut.result()
             dict_parts_fut.result()
-            bg_pool.shutdown()
-            tf.unpersist()
             mark("bg_writes_join")
         wall_ms = int((time.monotonic() - t0) * 1000)
+        built = metrics_fut.result() if metrics_fut is not None else {}
+        mark("shard_metrics")
 
         # consolidated ledger: one file, one atomic replace, O(1) reads
         # at engine init (vs O(shards) file opens at the 10^6-shard
@@ -719,11 +700,6 @@ class IndexBuilder:
         prev_snap = int(prev_manifest.get("snapshot_id", 0))
         snap = prev_snap + 1 if changed or not prev_snap else prev_snap
 
-        built = {}
-        if metrics_fut is not None:
-            built = metrics_fut.result()
-            metrics_pool.shutdown()
-        mark("shard_metrics")
         # append mode keeps every untouched shard's entry; full mode
         # keeps only shards present in the input (orphans dropped)
         entries = {
@@ -749,7 +725,6 @@ class IndexBuilder:
                 # ledger entries instead of scanning doc_stats
                 "field_stats": delta_field_stats.get(s, {}),
             }
-        self._write_ledger(index_dir, entries)
         total_docs = sum(v["n_docs"] for v in built.values())
         total_postings = sum(v["n_postings"] for v in built.values())
         metrics.update(
@@ -772,60 +747,66 @@ class IndexBuilder:
                 }
             )
             history = history[-20:]
-        manifest_tmp = f"{index_dir}/manifest.json.tmp"
-        with open(manifest_tmp, "w") as fh:
-            json.dump(
-                {
-                    "fields": self.fields,
-                    "with_positions": self.with_positions,
-                    "synonyms": self.synonyms,
-                    "docs_per_shard": self.docs_per_shard,
-                    "block_size": self.block_size,
-                    "k1": self.k1,
-                    "b": self.b,
-                    "snapshot_id": snap,
-                    "parent_snapshot_id": prev_snap or None,
-                    "snapshots": history,
-                    # full map incl. shards untouched by an append delta
-                    "shard_fingerprints": {
-                        s: e["input_fingerprint"] for s, e in entries.items()
-                    },
-                    "metrics": metrics,
+        # publish order: shard partitions (a partition with nothing
+        # staged is removed), then the dictionary artifacts, then the
+        # ledger, then the manifest
+        commit.publish += [
+            f"{art}/shard={s}"
+            for s in sorted(replaced)
+            for art in SHARD_ARTIFACTS
+        ]
+        if run_finalize:
+            commit.publish += list(STATS_ARTIFACTS)
+        commit.files["ledger.json"] = json.dumps(
+            {str(s): e for s, e in entries.items()}
+        )
+        commit.files["manifest.json"] = json.dumps(
+            {
+                "fields": self.fields,
+                "with_positions": self.with_positions,
+                "synonyms": self.synonyms,
+                "docs_per_shard": self.docs_per_shard,
+                "block_size": self.block_size,
+                "k1": self.k1,
+                "b": self.b,
+                "snapshot_id": snap,
+                "parent_snapshot_id": prev_snap or None,
+                "snapshots": history,
+                # full map incl. shards untouched by an append delta
+                "shard_fingerprints": {
+                    s: e["input_fingerprint"] for s, e in entries.items()
                 },
-                fh,
-                indent=2,
-            )
-        os.replace(manifest_tmp, f"{index_dir}/manifest.json")
+                "metrics": metrics,
+            },
+            indent=2,
+        )
         return metrics
 
     def _finalize_stats(
         self,
-        spark: SparkSession,
-        index_dir: str,
-        pending: list[int] | None = None,
-        old_neg: DataFrame | None = None,
+        commit: "_Commit",
+        rows: list[DataFrame],
         field_totals: dict[str, list[int]] | None = None,
-        delta_parts: DataFrame | None = None,
-    ) -> str:
-        """(Re)derive global dictionary + corpus_stats. Returns the
-        mode used ("incremental" or "full").
+        doc_stats: DataFrame | None = None,
+    ) -> None:
+        """Derive the global dictionary, its reversed and 3-gram
+        companions and corpus_stats into ``commit``'s staging; the
+        commit publishes them.
 
-        Incremental (``pending`` is not None): merge the CHANGED
-        shards' dict_parts into the existing dictionary — prior
-        dictionary rows, minus the changed shards' old contributions
-        (``old_neg``, captured before the wipe), plus the rebuilt
-        shards' new partials (a shard-pruned dict_parts scan) — summed
-        by key, zero-df terms dropped. Input read is O(delta shards) +
-        one pass over the prior dictionary (O(vocab), unavoidable for
-        a merge), NOT O(all shards' dict_parts): a streaming
-        micro-batch commits in time proportional to its own size. The
-        swap is marker-bracketed like compaction (crash-safe).
+        ``rows`` are (field, term, term_id, df, cf) contributions,
+        summed by key with zero-df terms dropped: every shard's
+        dict-part rows (full mode), or the prior dictionary plus the
+        replaced shards' negated old rows plus the rebuilt shards' new
+        rows (incremental: input is O(delta shards) + one pass over the
+        prior dictionary, O(vocab) and unavoidable for a merge, so a
+        streaming micro-batch commits in time proportional to its own
+        size).
 
         corpus_stats: written from ``field_totals`` (per-shard sums
-        carried in the ledger) when available — no doc_stats scan;
-        falls back to the full aggregation for legacy ledgers.
+        carried in the ledger) when given, else aggregated from
+        ``doc_stats`` (legacy ledgers).
         """
-        mode = "incremental" if pending is not None else "full"
+        spark = rows[0].sparkSession
         trace = os.environ.get("GXDIDX_TRACE") == "1"
         _last = [time.monotonic()]
 
@@ -838,254 +819,157 @@ class IndexBuilder:
                 )
                 _last[0] = now
 
-        if pending is not None:
-            prior = spark.read.parquet(f"{index_dir}/dictionary").select(
-                "field", "term", "term_id", "df", "cf"
+        # one source aggregation feeds the collision check and the
+        # three dictionary writes: checkpointed once (small: distinct
+        # terms, not postings) and held until the commit ends
+        keys = ("field", "term", "term_id")
+        dict_df = commit.checkpoint(
+            functools.reduce(
+                DataFrame.unionByName,
+                [r.select(*keys, "df", "cf") for r in rows],
             )
-            merged = prior
-            if old_neg is not None:
-                merged = merged.unionByName(old_neg)
-            if pending:
-                # the caller passes the delta's dict-part rows as the
-                # IN-MEMORY DataFrame it just computed (lineage over
-                # the cached tokenizer output) so this merge never
-                # waits on the backgrounded dict_parts artifact write;
-                # the artifact-read fallback (equivalent content: the
-                # pending shards' partitions were wiped and freshly
-                # rewritten this build) serves external callers.
-                delta = (
-                    delta_parts
-                    if delta_parts is not None
-                    else spark.read.parquet(
-                        f"{index_dir}/dict_parts"
-                    ).filter(F.col("shard").isin(sorted(pending)))
-                ).select("field", "term", "term_id", "df", "cf")
-                merged = merged.unionByName(delta)
-            dict_df = (
-                merged.groupBy("field", "term", "term_id")
-                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-                .filter(F.col("df") > 0)
-            )
-        else:
-            # full mode: all shards' partials. ``delta_parts`` (when
-            # the caller proves it covers every shard — fresh build,
-            # no kept entries) is the in-memory lineage over the
-            # cached tokenizer output; otherwise read the artifact.
-            parts = (
-                delta_parts
-                if delta_parts is not None
-                else spark.read.parquet(f"{index_dir}/dict_parts")
-            )
-            dict_df = parts.groupBy("field", "term", "term_id").agg(
-                F.sum("df").alias("df"), F.sum("cf").alias("cf")
-            )
-        # one source aggregation feeds the collision check, the
-        # dictionary write AND the reversed dictionary. localCheckpoint
-        # (not persist): the vocab is computed once (small: distinct
-        # terms, not postings) AND lineage is severed — the incremental
-        # branch's lineage reads the pre-swap dictionary path, so a
-        # recompute-after-swap would double-apply the delta.
-        dict_df = dict_df.localCheckpoint(eager=True)
+            .groupBy(*keys)
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            .filter(F.col("df") > 0)
+        )
         fmark("dict_agg+ckpt")
-        try:
-            # term_id collision check (functions/hashing.py): two
-            # distinct terms hashing to one id would silently merge
-            # posting lists. One global agg on the checkpointed vocab
-            # (distinct ids == distinct terms <=> injective), not a
-            # groupBy+filter shuffle — finalize is job-count-bound.
-            # The check runs CONCURRENTLY with the artifact writes
-            # below (guide §2.6): every write lands in a tmp dir and
-            # publication (the renames) is gated on the check passing,
-            # so a clash still aborts before any artifact is replaced.
-            def check_clash() -> None:
-                row = dict_df.agg(
-                    F.count_distinct(
-                        F.struct("field", "term_id")
-                    ).alias("ids"),
-                    F.count_distinct(F.struct("field", "term")).alias(
-                        "terms"
-                    ),
-                ).first()
-                if row["ids"] != row["terms"]:
-                    raise RuntimeError(
-                        f"{row['terms'] - row['ids']} term_id collisions "
-                        "detected — widen term_id (hashing.py) before "
-                        "using this index"
-                    )
 
-            tmp_dict = f"{index_dir}/.dictionary_compact_tmp"
-            tmp_rev = f"{index_dir}/.dictionary_rev_tmp"
-            tmp_ngrams = f"{index_dir}/.dictionary_ngrams_tmp"
-            tmp_cs = f"{index_dir}/.corpus_stats_tmp"
-
-            def write_dictionary() -> None:
-                dict_df.write.mode("overwrite").parquet(tmp_dict)
-
-            # reversed-term dictionary: the Lucene
-            # ReversedWildcardFilter analog — leading wildcards (*fix)
-            # become a PREFIX range scan over rev_term, pushed to the
-            # parquet source like the forward prefix path
-            # (query.expand_suffix). Sorted by (field, rev_term) so
-            # row-group min/max stats prune the range.
-            def write_rev() -> None:
-                (
-                    dict_df.select(
-                        "field",
-                        F.reverse(F.col("term")).alias("rev_term"),
-                        "term",
-                        "term_id",
-                        "df",
-                    )
-                    .sortWithinPartitions("field", "rev_term")
-                    .write.mode("overwrite")
-                    .parquet(tmp_rev)
+        # term_id collision check (functions/hashing.py): two distinct
+        # terms hashing to one id would silently merge posting lists.
+        # One global agg on the checkpointed vocab (distinct ids == distinct
+        # terms <=> injective), not a groupBy+filter shuffle — finalize
+        # is job-count-bound. It runs CONCURRENTLY with the staged
+        # writes below (guide §2.6); a clash fails the commit before
+        # anything publishes.
+        def check_clash() -> None:
+            row = dict_df.agg(
+                F.count_distinct(F.struct("field", "term_id")).alias("ids"),
+                F.count_distinct(F.struct("field", "term")).alias("terms"),
+            ).first()
+            if row["ids"] != row["terms"]:
+                raise RuntimeError(
+                    f"{row['terms'] - row['ids']} term_id collisions "
+                    "detected — widen term_id (hashing.py) before "
+                    "using this index"
                 )
 
-            # character-3-gram -> term artifact: sub-linear fuzzy
-            # candidate generation (VERDICT r4 #6). expand_fuzzy's
-            # uncached path previously scanned the full same-field
-            # length band per fuzzy token; with this artifact the scan
-            # is a gram IN-list (<= len(term)-2 grams) + length band,
-            # range-partitioned AND sorted by (field, gram) so both
-            # file- and row-group-level min/max stats prune the
-            # lookup. Derived from the SAME checkpointed vocab as
-            # dictionary/dictionary_rev each finalize, so it can never
-            # go stale vs the dictionary (incremental appends re-derive
-            # it too — O(vocab), the same cost class as the dictionary
-            # swap itself). ~(avg term len - 2) x dictionary rows of
-            # (field, gram, term, df) — small next to postings.
-            def write_ngrams() -> None:
-                (
-                    dict_df.filter(F.length("term") >= 3)
-                    .select(
-                        "field",
-                        "term",
-                        "df",
-                        F.explode(
-                            F.array_distinct(
-                                F.expr(
-                                    "transform(sequence(1, length(term) - 2),"
-                                    " i -> substring(term, i, 3))"
-                                )
+        def write_dictionary() -> None:
+            dict_df.write.parquet(commit.stage("dictionary"))
+
+        # reversed-term dictionary: the Lucene ReversedWildcardFilter
+        # analog — leading wildcards (*fix) become a PREFIX range scan
+        # over rev_term, pushed to the parquet source like the forward
+        # prefix path (query.expand_suffix). Sorted by (field,
+        # rev_term) so row-group min/max stats prune the range.
+        def write_rev() -> None:
+            (
+                dict_df.select(
+                    "field",
+                    F.reverse(F.col("term")).alias("rev_term"),
+                    "term",
+                    "term_id",
+                    "df",
+                )
+                .sortWithinPartitions("field", "rev_term")
+                .write.parquet(commit.stage("dictionary_rev"))
+            )
+
+        # character-3-gram -> term artifact: sub-linear fuzzy candidate
+        # generation (VERDICT r4 #6). expand_fuzzy's uncached path
+        # previously scanned the full same-field length band per fuzzy
+        # token; with this artifact the scan is a gram IN-list
+        # (<= len(term)-2 grams) + length band, range-partitioned AND
+        # sorted by (field, gram) so both file- and row-group-level
+        # min/max stats prune the lookup. Derived from the SAME checkpointed
+        # vocab as dictionary/dictionary_rev each finalize, so it can
+        # never go stale vs the dictionary (incremental appends
+        # re-derive it too — O(vocab), the same cost class as the
+        # dictionary itself). ~(avg term len - 2) x dictionary rows of
+        # (field, gram, term, df) — small next to postings.
+        def write_ngrams() -> None:
+            (
+                dict_df.filter(F.length("term") >= 3)
+                .select(
+                    "field",
+                    "term",
+                    "df",
+                    F.explode(
+                        F.array_distinct(
+                            F.expr(
+                                "transform(sequence(1, length(term) - 2),"
+                                " i -> substring(term, i, 3))"
                             )
-                        ).alias("gram"),
-                    )
-                    .repartitionByRange(F.col("field"), F.col("gram"))
-                    .sortWithinPartitions("field", "gram")
-                    .write.mode("overwrite")
-                    .parquet(tmp_ngrams)
+                        )
+                    ).alias("gram"),
                 )
+                .repartitionByRange(F.col("field"), F.col("gram"))
+                .sortWithinPartitions("field", "gram")
+                .write.parquet(commit.stage("dictionary_ngrams"))
+            )
 
-            def write_corpus_stats() -> None:
-                if field_totals is not None:
-                    rows = [
-                        (f, int(t[0]), int(t[1]), t[1] / t[0])
-                        for f, t in sorted(field_totals.items())
-                        if t[0]
+        def write_corpus_stats() -> None:
+            if field_totals is not None:
+                vals = [
+                    (f, int(t[0]), int(t[1]), t[1] / t[0])
+                    for f, t in sorted(field_totals.items())
+                    if t[0]
+                ]
+                schema = T.StructType(
+                    [
+                        T.StructField("field", T.StringType(), False),
+                        T.StructField("n_docs", T.LongType(), False),
+                        T.StructField("sum_dl", T.LongType(), False),
+                        T.StructField("avgdl", T.DoubleType(), False),
                     ]
-                    schema = T.StructType(
-                        [
-                            T.StructField("field", T.StringType(), False),
-                            T.StructField("n_docs", T.LongType(), False),
-                            T.StructField("sum_dl", T.LongType(), False),
-                            T.StructField("avgdl", T.DoubleType(), False),
-                        ]
-                    )
-                    # Arrow path (pandas), NOT createDataFrame(list): a
-                    # python list becomes a 32-partition python RDD whose
-                    # write spawns a Python worker per partition (~7s for
-                    # one row on local[32]); the pandas local relation
-                    # stays JVM-side.
-                    pdf = pd.DataFrame(
-                        rows, columns=["field", "n_docs", "sum_dl", "avgdl"]
-                    )
-                    spark.createDataFrame(pdf, schema).coalesce(
-                        1
-                    ).write.mode("overwrite").parquet(tmp_cs)
-                else:
-                    doc_stats = spark.read.parquet(f"{index_dir}/doc_stats")
-                    (
-                        doc_stats.groupBy("field")
-                        .agg(
-                            F.count("*").alias("n_docs"),
-                            F.sum("dl").alias("sum_dl"),
-                            (F.sum("dl") / F.count("*")).alias("avgdl"),
-                        )
-                        .write.mode("overwrite")
-                        .parquet(tmp_cs)
-                    )
-
-            # the clash check and the four artifact writes all consume
-            # the checkpointed vocab (corpus_stats only its inputs) and
-            # are independent jobs — submit them together so later
-            # jobs back-fill executor cores idled by earlier jobs'
-            # tails (guide §2.6); finalize is job-count-bound, not
-            # data-bound. Everything lands in tmp dirs; the renames
-            # below run only after ALL futures (incl. the clash check)
-            # succeeded, so an abort leaves every published artifact
-            # untouched — strictly more atomic than the sequential
-            # direct-overwrite shape this replaces.
-            for d in (tmp_dict, tmp_rev, tmp_ngrams, tmp_cs):
-                shutil.rmtree(d, ignore_errors=True)
-            try:
-                with ThreadPoolExecutor(max_workers=5) as pool:
-                    futs = [
-                        pool.submit(fn)
-                        for fn in (
-                            check_clash,
-                            write_dictionary,
-                            write_rev,
-                            write_ngrams,
-                            write_corpus_stats,
-                        )
-                    ]
-                    for fut in futs:
-                        fut.result()
-            except BaseException:
-                for d in (tmp_dict, tmp_rev, tmp_ngrams, tmp_cs):
-                    shutil.rmtree(d, ignore_errors=True)
-                raise
-            fmark("clash+writes")
-            # publish (renames only). The dictionary swap stays
-            # marker-bracketed (crash recovery replays it); rev/
-            # ngrams/corpus_stats rename into place — they are
-            # re-derived whole at every finalize, so a crash between
-            # renames is recovered by the next finalize exactly as
-            # under the old sequential writes.
-            if os.path.isdir(f"{index_dir}/dictionary"):
-                old = f"{index_dir}/.dictionary_old"
-                shutil.rmtree(old, ignore_errors=True)
-                marker = f"{index_dir}/.dictionary_swap.marker"
-                with open(marker, "w") as fh:
-                    json.dump({"artifact": "dictionary"}, fh)
-                os.rename(f"{index_dir}/dictionary", old)
-                os.rename(tmp_dict, f"{index_dir}/dictionary")
-                os.remove(marker)
-                shutil.rmtree(old, ignore_errors=True)
+                )
+                # Arrow path (pandas), NOT createDataFrame(list): a
+                # python list becomes a 32-partition python RDD whose
+                # write spawns a Python worker per partition (~7s for
+                # one row on local[32]); the pandas local relation
+                # stays JVM-side.
+                pdf = pd.DataFrame(
+                    vals, columns=["field", "n_docs", "sum_dl", "avgdl"]
+                )
+                out = spark.createDataFrame(pdf, schema).coalesce(1)
             else:
-                os.rename(tmp_dict, f"{index_dir}/dictionary")
-            for tmp, name in (
-                (tmp_rev, "dictionary_rev"),
-                (tmp_ngrams, "dictionary_ngrams"),
-                (tmp_cs, "corpus_stats"),
-            ):
-                shutil.rmtree(f"{index_dir}/{name}", ignore_errors=True)
-                os.rename(tmp, f"{index_dir}/{name}")
-            fmark("publish")
-        finally:
-            dict_df.unpersist()  # releases the checkpoint blocks
-        return mode
+                out = doc_stats.groupBy("field").agg(
+                    F.count("*").alias("n_docs"),
+                    F.sum("dl").alias("sum_dl"),
+                    (F.sum("dl") / F.count("*")).alias("avgdl"),
+                )
+            out.write.parquet(commit.stage("corpus_stats"))
+
+        # the clash check and the four staged writes are independent
+        # jobs — submit them together so later jobs back-fill executor
+        # cores idled by earlier jobs' tails (guide §2.6); finalize is
+        # job-count-bound, not data-bound.
+        futs = [
+            commit.pool.submit(fn)
+            for fn in (
+                check_clash,
+                write_dictionary,
+                write_rev,
+                write_ngrams,
+                write_corpus_stats,
+            )
+        ]
+        for fut in futs:
+            fut.result()
+        fmark("clash+writes")
 
     def _shard_metrics(
-        self, spark: SparkSession, index_dir: str, shards: list[int]
+        self, spark: SparkSession, root: str, shards: list[int]
     ) -> dict[int, dict]:
+        """Per-shard ledger metrics of ``shards`` read from the
+        postings/doc_stats partitions under ``root`` (a commit's
+        staging root, or an index dir)."""
         if not shards:
             return {}
-        out = self._shard_metrics_arrow(index_dir, shards)
+        out = self._shard_metrics_arrow(root, shards)
         if out is not None:
             return out
         p = (
-            spark.read.parquet(f"{index_dir}/postings")
+            spark.read.parquet(f"{root}/postings")
             .filter(F.col("shard").isin(shards))
             .groupBy("shard")
             .agg(
@@ -1096,7 +980,7 @@ class IndexBuilder:
             )
         )
         d = (
-            spark.read.parquet(f"{index_dir}/doc_stats")
+            spark.read.parquet(f"{root}/doc_stats")
             .filter(F.col("shard").isin(shards))
             .groupBy("shard")
             .agg(F.count_distinct("doc_id").alias("n_docs"))
@@ -1112,7 +996,7 @@ class IndexBuilder:
 
     @staticmethod
     def _shard_metrics_arrow(
-        index_dir: str, shards: list[int]
+        root: str, shards: list[int]
     ) -> dict[int, dict] | None:
         """Driver-side twin of the Spark ledger-metrics aggregation.
 
@@ -1120,28 +1004,21 @@ class IndexBuilder:
         small file each (the build's write layout), so for a local
         filesystem the three per-shard aggregates (sum(df), summed
         posting-buffer bytes, distinct doc count) are a bounded
-        pyarrow read — no Spark job on the commit critical path. The
-        per-shard file-size guard keeps the driver read bounded;
-        anything bigger (or any read error / non-local store) falls
-        back to the Spark aggregation, which is value-identical.
+        pyarrow read — no Spark job on the commit critical path.
+        Partitions larger than ``ARROW_METRICS_MAX`` bytes in all, or
+        a read error, fall back to the Spark aggregation, which is
+        value-identical.
         """
-        max_bytes = int(
-            os.environ.get("GXDIDX_ARROW_METRICS_MAX", str(256 << 20))
-        )
+
+        def _files(art: str, s: int) -> list[str]:
+            d = f"{root}/{art}/shard={s}"
+            if not os.path.isdir(d):
+                return []
+            return [
+                f"{d}/{fn}" for fn in os.listdir(d) if fn.endswith(".parquet")
+            ]
+
         try:
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            def _files(art: str, s: int) -> list[str]:
-                d = f"{index_dir}/{art}/shard={s}"
-                if not os.path.isdir(d):
-                    return []
-                return [
-                    f"{d}/{fn}"
-                    for fn in os.listdir(d)
-                    if fn.endswith(".parquet")
-                ]
-
             todo: dict[int, tuple[list[str], list[str]]] = {}
             total = 0
             for s in shards:
@@ -1149,7 +1026,7 @@ class IndexBuilder:
                 for fp_ in pf + df_:
                     total += os.path.getsize(fp_)
                 todo[int(s)] = (pf, df_)
-            if total > max_bytes:
+            if total > ARROW_METRICS_MAX:
                 return None
             out: dict[int, dict] = {}
             for s, (pf, df_) in todo.items():
@@ -1177,7 +1054,7 @@ class IndexBuilder:
                     "n_docs": len(docs),
                 }
             return out
-        except Exception:  # pragma: no cover - fallback to Spark
+        except (OSError, pa.ArrowInvalid):
             return None
 
     # ------------------------------------------------------------ ledger
@@ -1185,14 +1062,6 @@ class IndexBuilder:
     @staticmethod
     def _read_ledger(index_dir: str) -> dict[int, dict]:
         return read_ledger(index_dir)
-
-    @staticmethod
-    def _write_ledger(index_dir: str, entries: dict[int, dict]) -> None:
-        path = f"{index_dir}/ledger.json"
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({str(s): e for s, e in entries.items()}, fh)
-        os.replace(tmp, path)  # atomic commit of the lineage record
 
 
 def delete_docs(
@@ -1232,7 +1101,7 @@ def delete_docs(
     ids = sorted({int(i) for i in doc_ids})
     if not ids:
         return {"docs_deleted": 0, "shards_rebuilt": 0, "shards_dropped": 0}
-    with _WriterLock(index_dir):
+    with _Commit(index_dir) as commit:
         store = spark.read.parquet(f"{index_dir}/docs")
         scoped = store
         candidates: list[int] | None = None
@@ -1270,12 +1139,11 @@ def delete_docs(
             # discovers the no-op) and the work is bounded by the
             # candidate shards, but it is no longer a single job.
             surv_q = scoped.filter(~F.col("doc_id").isin(ids))
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                surv_fut = pool.submit(surv_q.localCheckpoint)
-                fp_fut = pool.submit(builder._fp_map, surv_q)
-                hit = hit_query.collect()
-                surv_all = surv_fut.result()
-                surv_fp = fp_fut.result()
+            surv_fut = commit.pool.submit(commit.checkpoint, surv_q)
+            fp_fut = commit.pool.submit(builder._fp_map, surv_q)
+            hit = hit_query.collect()
+            surv_all = surv_fut.result()
+            surv_fp = fp_fut.result()
         else:
             hit = hit_query.collect()
         if not hit:
@@ -1286,7 +1154,6 @@ def delete_docs(
         totals = {int(r["shard"]): int(r["n"]) for r in hit}
         emptied = {s for s, n in affected.items() if n == totals[s]}
         rebuild = sorted(set(affected) - emptied)
-        # survivors materialize BEFORE the build wipes their partitions
         if surv_all is not None:
             survivors = (
                 surv_all.filter(F.col("shard").isin(rebuild))
@@ -1296,16 +1163,18 @@ def delete_docs(
             pre_fp = {s: f for s, f in surv_fp.items() if s in rebuild}
         else:
             survivors = (
-                store.filter(F.col("shard").isin(rebuild))
-                .filter(~F.col("doc_id").isin(ids))
-                .localCheckpoint()
+                commit.checkpoint(
+                    store.filter(F.col("shard").isin(rebuild)).filter(
+                        ~F.col("doc_id").isin(ids)
+                    )
+                )
                 if rebuild
                 else _empty_like(spark, store.schema)
             )
             pre_fp = None
         metrics = builder._build_locked(
+            commit,
             survivors,
-            index_dir,
             resume=True,
             append=True,
             drop_shards=emptied,
@@ -1363,9 +1232,9 @@ def update_docs(
     - STORED-ONLY attributes (rank/facet columns) -> the Lucene
       ``updateDocValues`` analog: postings and stats are untouched by
       construction, so ONLY the affected doc-store shard partitions
-      rewrite, committed with the same marker-bracketed atomic swap
-      compaction uses (crash mid-swap replays on next open). No
-      re-analysis, no finalize — O(touched shards) I/O.
+      rewrite, published by the same journaled commit every write
+      uses (a crash mid-publish replays forward). No re-analysis, no
+      finalize — O(touched shards) I/O.
 
     A single call mixing both classes takes the rebuild path for
     everything (correct, just not minimal).
@@ -1378,7 +1247,6 @@ def update_docs(
 
     -> builder metrics + {"docs_updated": n, "shards_rebuilt": n}.
     """
-    _recover_compaction(index_dir)
     bad = sorted({c for u in updates.values() for c in u}
                  & {"doc_id", "shard"})
     if bad:
@@ -1386,21 +1254,22 @@ def update_docs(
     ids = sorted({int(i) for i in updates})
     if not ids:
         return {"docs_updated": 0, "shards_rebuilt": 0}
-    with _WriterLock(index_dir):
+    with _Commit(index_dir) as commit:
         return _update_docs_locked(
-            spark, index_dir, builder, updates, ids, assume_dense_shards
+            commit, spark, builder, updates, ids, assume_dense_shards
         )
 
 
 def _update_docs_locked(
+    commit: "_Commit",
     spark: SparkSession,
-    index_dir: str,
     builder: "IndexBuilder",
     updates: dict[int, dict],
     ids: list[int],
     assume_dense_shards: bool,
 ) -> dict:
-    """Body of ``update_docs``; caller holds the writer lock."""
+    """Body of ``update_docs``, inside its commit."""
+    index_dir = commit.index_dir
     store = spark.read.parquet(f"{index_dir}/docs")
     store_types = {f.name: f.dataType for f in store.schema.fields}
     upd_cols = sorted({c for u in updates.values() for c in u})
@@ -1463,8 +1332,6 @@ def _update_docs_locked(
             )
         return m
 
-    # materialize the merged rows BEFORE the rewrite wipes the source
-    # partitions (same self-read hazard delete_docs guards against)
     if candidates is not None:
         # dense layout: the candidate shards are known without the hit
         # counts, so the merged snapshot (and, for the rebuild class,
@@ -1473,16 +1340,15 @@ def _update_docs_locked(
         # shards, keeping metrics and the resume gate byte-identical
         # (a replayed identical update still skips, shards_built == 0).
         merged_q = _merged_over(scoped)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            ck_fut = pool.submit(merged_q.localCheckpoint)
-            fp_fut = (
-                pool.submit(builder._fp_map, merged_q)
-                if rebuild_class
-                else None
-            )
-            hit = hit_query.collect()
-            merged_all = ck_fut.result()
-            fp_all = fp_fut.result() if fp_fut is not None else None
+        ck_fut = commit.pool.submit(commit.checkpoint, merged_q)
+        fp_fut = (
+            commit.pool.submit(builder._fp_map, merged_q)
+            if rebuild_class
+            else None
+        )
+        hit = hit_query.collect()
+        merged_all = ck_fut.result()
+        fp_all = fp_fut.result() if fp_fut is not None else None
         affected = sorted(int(r["shard"]) for r in hit)
         n_updated = int(sum(r["n"] for r in hit))
         if not affected:
@@ -1499,30 +1365,28 @@ def _update_docs_locked(
         n_updated = int(sum(r["n"] for r in hit))
         if not affected:
             return {"docs_updated": 0, "shards_rebuilt": 0}
-        merged = _merged_over(
-            store.filter(F.col("shard").isin(affected))
-        ).localCheckpoint()
+        merged = commit.checkpoint(
+            _merged_over(store.filter(F.col("shard").isin(affected)))
+        )
         pre_fp = None
     if rebuild_class:
         metrics = builder._build_locked(
-            merged, index_dir, resume=True, append=True,
+            commit, merged, resume=True, append=True,
             precomputed_fp=pre_fp,
         )
     else:
         # stored-only attrs: docvalues-style doc-store partition
-        # rewrite; postings/stats untouched (caller holds the lock).
-        # Shards are independent (per-shard swap markers) — rewrite
-        # them concurrently (guide §2.6).
+        # rewrite; postings/stats untouched. Shards are independent —
+        # stage them concurrently (guide §2.6); the commit publishes
+        # each partition.
         def _rewrite(s: int) -> None:
             rows = merged.filter(F.col("shard") == s).drop("shard")
-            key = f"docs__shard={s}"
-            tmp = f"{index_dir}/.{key}_compact_tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            rows.repartition(1).write.mode("overwrite").parquet(tmp)
-            _swap_dir_commit(index_dir, f"docs/shard={s}", key)
+            rows.repartition(1).write.parquet(
+                commit.stage(f"docs/shard={s}")
+            )
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            list(pool.map(_rewrite, affected))
+        list(commit.pool.map(_rewrite, affected))
+        commit.publish += [f"docs/shard={s}" for s in affected]
         metrics = {}
     metrics.update(docs_updated=n_updated, shards_rebuilt=len(affected))
     return metrics
@@ -1548,9 +1412,8 @@ def attach_stored_column(
     Scale shape: ONE distributed job — the doc store left-joins the
     values on doc_id (co-partitioned by repartitioning on shard
     before the partitioned write, so each output partition writes
-    once), lands in a tmp dir, and the whole ``docs`` artifact swaps
-    in with the compaction marker protocol (crash mid-swap replays on
-    next open). Docs absent from ``values`` get NULL (Solr's missing
+    once), lands in staging, and the whole ``docs`` artifact publishes
+    through the commit journal (a crash mid-publish replays forward). Docs absent from ``values`` get NULL (Solr's missing
     docvalue). ``values`` must not contain duplicate doc_ids (raises
     — a dup would fan out the join and duplicate store rows).
 
@@ -1564,30 +1427,27 @@ def attach_stored_column(
         )
     if column in ("doc_id", "shard"):
         raise ValueError(f"cannot attach identity column {column!r}")
-    _recover_compaction(index_dir)
-    with _WriterLock(index_dir):
+    with _Commit(index_dir) as commit:
         store = spark.read.parquet(f"{index_dir}/docs")
-        vals = values.localCheckpoint()
+        vals = commit.checkpoint(values)
         n_vals = vals.count()
         if vals.select("doc_id").distinct().count() != n_vals:
             raise ValueError("values contains duplicate doc_ids")
         base = store.drop(column) if column in store.columns else store
         joined = base.join(vals, "doc_id", "left")
-        tmp = f"{index_dir}/.docs_compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
         (
             joined.repartition("shard")
             .write.partitionBy("shard")
-            .parquet(tmp)
+            .parquet(commit.stage("docs"))
         )
-        _swap_dir_commit(index_dir, "docs", "docs")
         # honest count: values for ids absent from the index dropped
         # through the left join (column-pruned scan of the new store)
         n_attached = (
-            spark.read.parquet(f"{index_dir}/docs")
+            spark.read.parquet(commit.stage("docs"))
             .filter(F.col(column).isNotNull())
             .count()
         )
+        commit.publish.append("docs")
     return {"column": column, "docs_with_value": int(n_attached)}
 
 
@@ -1651,24 +1511,30 @@ def restore_index(backup_dir: str, dest_dir: str) -> dict:
     return {"artifacts": n}
 
 
-def _swap_dir_commit(index_dir: str, rel: str, key: str) -> None:
-    """Marker-bracketed atomic directory swap (the compaction
-    protocol, nested-path variant): replace ``{index_dir}/{rel}``
-    with the fully-written ``.{key}_compact_tmp``. ``key`` must be
-    ``rel`` with '/' encoded as '__' so ``_recover_compaction`` can
-    replay an interrupted swap on next open."""
+def _swap_dir_commit(index_dir: str, rel: str, drop: bool = False) -> None:
+    """Publish one path: replace ``{index_dir}/{rel}`` with its staged
+    copy ``{STAGING}/{rel}``, or remove it (``drop``). A directory
+    moves aside to ``.<rel, '/' as '__'>_old`` before its replacement
+    renames in, so readers see the old or the new tree, never a
+    half-deleted one; a file is replaced atomically. Idempotent: a
+    replay after a crash between any two steps finishes the job."""
     src = f"{index_dir}/{rel}"
-    tmp = f"{index_dir}/.{key}_compact_tmp"
-    old = f"{index_dir}/.{key}_old"
-    marker = f"{index_dir}/.{key}_swap.marker"
+    new = f"{index_dir}/{STAGING}/{rel}"
+    old = f"{index_dir}/.{rel.replace('/', '__')}_old"
+    if os.path.isfile(new):
+        os.replace(new, src)
+        return
+    if drop or os.path.isdir(new):
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.isdir(src):
+            os.rename(src, old)
+        if not drop:
+            os.makedirs(os.path.dirname(src), exist_ok=True)
+            os.rename(new, src)
+    elif not os.path.isdir(src) and os.path.isdir(old):
+        # moved aside, but the replacement is gone: roll back
+        os.rename(old, src)
     shutil.rmtree(old, ignore_errors=True)
-    with open(marker, "w") as fh:
-        fh.write(rel)
-    if os.path.isdir(src):
-        os.rename(src, old)
-    os.rename(tmp, src)
-    shutil.rmtree(old, ignore_errors=True)
-    os.remove(marker)
 
 
 def _field_totals(
@@ -1710,9 +1576,10 @@ class _WriterLock:
     both proceed). The pid is written into the file for diagnostics
     only; the lock file itself is never deleted.
 
-    Readers never take the lock: artifacts commit via atomic renames
-    and the manifest/ledger are replaced last, so a reader sees either
-    the old or the new snapshot, never a torn one. On a multi-writer
+    Readers never wait on the lock: artifacts publish via renames in
+    a fixed order with the ledger and manifest last (``_Commit``), and
+    an engine open takes the lock only without blocking, only to
+    replay a publish a crashed writer left half done. On a multi-writer
     cluster against shared object storage, replace this with the
     catalog's optimistic commit (Iceberg) or a lock service — flock
     is a same-host primitive, which is exactly the scope a single
@@ -1754,6 +1621,126 @@ class _WriterLock:
             self._fd = None
 
 
+class _Commit:
+    """One writer-side commit of an index: compute into staging,
+    publish once.
+
+    Entering takes the writer lock and, holding it, finishes any
+    publish a crashed writer left half done (``_recover_compaction``,
+    which also clears stale staging). The body writes every new
+    artifact to ``stage(rel)`` under the dot-prefixed staging root,
+    runs its concurrent jobs on the commit's one thread ``pool``,
+    persists through ``cache`` and ``checkpoint``, and lists what it publishes: paths in
+    ``publish`` (a path with nothing staged is removed) and json texts
+    in ``files``. Reads of the index as the commit will leave it go
+    through ``view``.
+
+    Exit, on every path, joins the pool (cancelling queued work after
+    a failure) and releases what it cached. Only a clean exit
+    publishes: it stages the json files, records the whole plan in
+    the journal, then applies it in order — removals, then the
+    ``publish`` paths as listed, then the files (a build lists shard
+    partitions, then the dictionary artifacts, then ``ledger.json``,
+    then ``manifest.json``) — and deletes the journal. A failure
+    before publish leaves every live file untouched; a crash during
+    it is replayed forward from the journal by the next writer (or
+    engine open), so the index ends up exactly as this commit would
+    have left it.
+    """
+
+    def __init__(self, index_dir: str):
+        self.index_dir = index_dir
+        self.staging = f"{index_dir}/{STAGING}"
+        self.publish: list[str] = []
+        self.files: dict[str, str] = {}
+        self._cached: list[DataFrame] = []
+        self._rdds: list = []
+        self._lock = _WriterLock(index_dir)
+
+    def __enter__(self) -> "_Commit":
+        os.makedirs(self.index_dir, exist_ok=True)
+        self._lock.__enter__()
+        try:
+            _recover_compaction(self.index_dir)
+        except BaseException:
+            self._lock.__exit__()
+            raise
+        # every job a commit overlaps (guide §2.6) runs here; sized for
+        # a build's peak: 3 staged artifact writes, finalize with its
+        # clash check and 4 writes, and the ledger-metrics read
+        self.pool = ThreadPoolExecutor(
+            max_workers=10, thread_name_prefix="gxdidx-commit"
+        )
+        return self
+
+    def stage(self, rel: str) -> str:
+        return f"{self.staging}/{rel}"
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` until the commit ends."""
+        self._cached.append(df.persist())
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """``df.localCheckpoint()`` held until the commit ends. Spark
+        frees a checkpoint only through its RDD (``unpersist`` on the
+        checkpointed frame leaves the blocks), so the commit keeps
+        that RDD."""
+        ck = df.localCheckpoint()
+        self._rdds.append(ck._jdf.queryExecution().analyzed().rdd())
+        return ck
+
+    def view(
+        self, spark: SparkSession, art: str, replaced: set[int]
+    ) -> DataFrame:
+        """Shard artifact ``art`` as this commit publishes it: live
+        partitions of the shards it keeps, staged partitions of the
+        ``replaced`` shards it rebuilds."""
+        parts = []
+        live = f"{self.index_dir}/{art}"
+        if _artifact_shards(self.index_dir, (art,)) - replaced:
+            parts.append(
+                spark.read.parquet(live).filter(
+                    ~F.col("shard").isin(sorted(replaced))
+                )
+            )
+        if _artifact_shards(self.staging, (art,)):
+            parts.append(spark.read.parquet(self.stage(art)))
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    def __exit__(self, exc_type, *_exc) -> None:
+        try:
+            self.pool.shutdown(cancel_futures=exc_type is not None)
+            for df in self._cached:
+                df.unpersist()
+            for rdd in self._rdds:
+                rdd.unpersist(False)
+            if exc_type is not None:
+                shutil.rmtree(self.staging, ignore_errors=True)
+            else:
+                self._publish()
+        finally:
+            self._lock.__exit__()
+
+    def _publish(self) -> None:
+        os.makedirs(self.staging, exist_ok=True)
+        for name, text in self.files.items():
+            with open(self.stage(name), "w") as fh:
+                fh.write(text)
+        paths = self.publish + list(self.files)
+        staged = {p for p in paths if os.path.exists(self.stage(p))}
+        plan = {
+            "remove": [p for p in paths if p not in staged],
+            "replace": [p for p in paths if p in staged],
+        }
+        if paths:
+            tmp = self.stage(".journal")
+            with open(tmp, "w") as fh:
+                json.dump(plan, fh)
+            os.replace(tmp, f"{self.index_dir}/{JOURNAL}")
+        _recover_compaction(self.index_dir)
+
+
 def read_ledger(index_dir: str) -> dict[int, dict]:
     """Consolidated ledger (single json) with fallback to the legacy
     per-shard ledger/ directory from pre-consolidation builds."""
@@ -1773,10 +1760,12 @@ def read_ledger(index_dir: str) -> dict[int, dict]:
     return out
 
 
-def _artifact_shards(index_dir: str) -> set[int]:
-    """Shard ids present in any artifact's partition directories."""
+def _artifact_shards(
+    index_dir: str, arts: tuple[str, ...] = SHARD_ARTIFACTS
+) -> set[int]:
+    """Shard ids present in the partition directories of ``arts``."""
     out: set[int] = set()
-    for art in ("docs", "doc_stats", "dict_parts", "postings"):
+    for art in arts:
         d = f"{index_dir}/{art}"
         if not os.path.isdir(d):
             continue
@@ -1790,33 +1779,55 @@ def _artifact_shards(index_dir: str) -> set[int]:
 
 
 def _recover_compaction(index_dir: str) -> None:
-    """Finish or roll back a compaction swap interrupted mid-rename.
+    """Finish a publish a crashed writer left half done, then clear
+    staging. Caller holds the writer lock.
 
-    The swap window (src renamed away, replacement not yet in place)
-    is bracketed by a marker file; on open we replay: prefer the fully
-    written tmp (the marker is only written after tmp commits), else
-    restore the old directory.
+    The journal is written only after everything it names is fully
+    staged, so replay rolls FORWARD: each removal and replacement is
+    applied again (``_swap_dir_commit`` is idempotent) and the journal
+    is deleted. A single-swap marker (``.<key>_swap.marker``, its
+    replacement in ``.<key>_compact_tmp``) left by a writer that
+    predates the journal replays the same way.
     """
     if not os.path.isdir(index_dir):
         return
-    for name in os.listdir(index_dir):
-        if not (name.startswith(".") and name.endswith("_swap.marker")):
-            continue
-        art = name[1 : -len("_swap.marker")]
-        # "__" encodes a nested path (a doc-store shard partition
-        # swapped by update_docs' attr-only path); plain artifact
-        # names never contain it
-        src = f"{index_dir}/{art.replace('__', '/')}"
-        tmp = f"{index_dir}/.{art}_compact_tmp"
-        old = f"{index_dir}/.{art}_old"
-        if not os.path.isdir(src):
-            if os.path.isdir(tmp):
-                os.rename(tmp, src)
-            elif os.path.isdir(old):
-                os.rename(old, src)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
+    staging = f"{index_dir}/{STAGING}"
+    journal = f"{index_dir}/{JOURNAL}"
+    plan = {"remove": [], "replace": []}
+    if os.path.isfile(journal):
+        with open(journal) as fh:
+            plan = json.load(fh)
+    markers = [n for n in os.listdir(index_dir) if _is_swap_marker(n)]
+    for name in markers:
+        key = name[1 : -len("_swap.marker")]
+        rel = key.replace("__", "/")
+        legacy_tmp = f"{index_dir}/.{key}_compact_tmp"
+        if os.path.isdir(legacy_tmp):
+            os.makedirs(os.path.dirname(f"{staging}/{rel}"), exist_ok=True)
+            os.rename(legacy_tmp, f"{staging}/{rel}")
+        plan["replace"].append(rel)
+    for rel in plan["remove"]:
+        _swap_dir_commit(index_dir, rel, drop=True)
+    for rel in plan["replace"]:
+        _swap_dir_commit(index_dir, rel)
+    for name in markers:
         os.remove(f"{index_dir}/{name}")
+    if os.path.isfile(journal):
+        os.remove(journal)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def _is_swap_marker(name: str) -> bool:
+    return name.startswith(".") and name.endswith("_swap.marker")
+
+
+def _publish_pending(index_dir: str) -> bool:
+    """True when an interrupted publish awaits replay in ``index_dir``
+    (one directory listing)."""
+    return os.path.isdir(index_dir) and any(
+        name == JOURNAL or _is_swap_marker(name)
+        for name in os.listdir(index_dir)
+    )
 
 
 def compact_index(spark: SparkSession, index_dir: str) -> dict:
@@ -1824,63 +1835,47 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     (Indexer.java:126-129) / Iceberg `rewrite_data_files` analog:
     rewrite each artifact coalesced to one file per shard partition so
     query-time scans open O(shards) files instead of O(shards x tasks).
-    Content is unchanged (queries return identical results). The swap
-    window is bracketed by a marker file and replayed by
-    ``_recover_compaction`` on the next open, so a crash mid-swap
-    never strands the index without an artifact. Holds the writer
-    lock: compaction never races a build.
+    Content is unchanged (queries return identical results). Every
+    artifact is rewritten into staging and all of them publish in one
+    journaled commit, so a crash leaves the index either as it was or
+    (after replay) fully compacted. Holds the writer lock: compaction
+    never races a build.
     """
-    with _WriterLock(index_dir):
-        return _compact_locked(spark, index_dir)
+    with _Commit(index_dir) as commit:
+        stats: dict = {}
+        for art in ("postings", "doc_stats", "dict_parts", "docs"):
+            src = f"{index_dir}/{art}"
+            if not os.path.isdir(src):
+                continue
+            # sort by the query-pushed keys inside each shard file so
+            # parquet row-group min/max stats prune the term_id IN-list
+            # scans (a query then reads only the row groups holding
+            # its terms, not the whole shard file).
+            sort_keys = (
+                ["shard", "field", "term_id"]
+                if art == "postings"
+                else ["shard"]
+            )
+            (
+                spark.read.parquet(src)
+                .repartition("shard")
+                .sortWithinPartitions(*sort_keys)
+                .write.option("maxRecordsPerFile", 0)
+                .partitionBy("shard")
+                .parquet(commit.stage(art))
+            )
+            stats[art] = {
+                "files_before": _parquet_files(src),
+                "files_after": _parquet_files(commit.stage(art)),
+            }
+            commit.publish.append(art)
+        return stats
 
 
-def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
-    _recover_compaction(index_dir)
-    stats: dict = {}
-    for art in ("postings", "doc_stats", "dict_parts", "docs"):
-        src = f"{index_dir}/{art}"
-        if not os.path.isdir(src):
-            continue
-        before = sum(
-            1
-            for root, _d, files in os.walk(src)
-            for f in files
-            if f.endswith(".parquet")
-        )
-        tmp = f"{index_dir}/.{art}_compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        # sort by the query-pushed keys inside each shard file so
-        # parquet row-group min/max stats prune the term_id IN-list
-        # scans (a query then reads only the row groups holding its
-        # terms, not the whole shard file).
-        sort_keys = (
-            ["shard", "field", "term_id"]
-            if art == "postings"
-            else ["shard"]
-        )
-        (
-            spark.read.parquet(src)
-            .repartition("shard")
-            .sortWithinPartitions(*sort_keys)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", 0)
-            .partitionBy("shard")
-            .parquet(tmp)
-        )
-        old = f"{index_dir}/.{art}_old"
-        shutil.rmtree(old, ignore_errors=True)
-        marker = f"{index_dir}/.{art}_swap.marker"
-        with open(marker, "w") as fh:
-            json.dump({"artifact": art}, fh)
-        os.rename(src, old)
-        os.rename(tmp, src)
-        os.remove(marker)
-        shutil.rmtree(old, ignore_errors=True)
-        after = sum(
-            1
-            for root, _d, files in os.walk(src)
-            for f in files
-            if f.endswith(".parquet")
-        )
-        stats[art] = {"files_before": before, "files_after": after}
-    return stats
+def _parquet_files(path: str) -> int:
+    return sum(
+        1
+        for _root, _d, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )

@@ -282,11 +282,19 @@ class IndexQueryEngine:
         bounds driver memory to ~100 MB. Set 0 to disable."""
         self.spark = spark
         self.index_dir = index_dir
-        # replay any compaction swap interrupted mid-rename (cheap:
-        # one directory listing) before touching artifacts
+        # replay a publish a crashed writer left half done (cheap: one
+        # directory listing when there is none) before touching
+        # artifacts — only under the writer lock, taken without
+        # blocking: a live writer holding it is mid-commit and
+        # publishes its own journal, which a replay here would race
         from gxdindexer_spark.operators import index_build as _ib
 
-        _ib._recover_compaction(index_dir)
+        if _ib._publish_pending(index_dir):
+            try:
+                with _ib._WriterLock(index_dir):
+                    _ib._recover_compaction(index_dir)
+            except _ib.ConcurrentWriteError:
+                pass
         with open(f"{index_dir}/manifest.json") as fh:
             self.manifest = json.load(fh)
         self.fields: dict[str, str] = self.manifest["fields"]

@@ -10,7 +10,6 @@ from gxdindexer_spark.functions.codec import (
     delta_decode,
     delta_encode,
     encode_postings,
-    merge_salted,
     posting_list_from_row,
     varbyte_decode,
     varbyte_encode,
@@ -89,36 +88,6 @@ def test_encode_postings_property(n, block_size, seed):
     assert np.array_equal(t, tfs)
     assert np.array_equal(l, dls)
     assert row["cf"] == int(tfs.sum())
-
-
-def test_merge_salted_equals_unsalted():
-    """SURVEY.md §5.4: merge of salted sub-lists == unsalted build."""
-    ids, tfs, dls, tfn, whole = _mk_postings(500, seed=7, block_size=32)
-    # range-bucket salts: salt = doc_id // range keeps ranges disjoint
-    rng_size = int(ids.max()) // 3 + 1
-    salts = ids // rng_size
-    parts = []
-    for s in np.unique(salts):
-        m = salts == s
-        p = encode_postings(ids[m], tfs[m], tfn[m], block_size=32, dls=dls[m])
-        p["salt"] = int(s)
-        parts.append(p)
-    merged = merge_salted(parts)
-    pl = posting_list_from_row("t", merged)
-    d, t, l = pl.decode_all()
-    assert np.array_equal(d, ids)
-    assert np.array_equal(t, tfs)
-    assert np.array_equal(l, dls)
-    assert merged["df"] == whole["df"]
-    assert merged["cf"] == whole["cf"]
-
-
-def test_merge_salted_rejects_overlap():
-    _, _, _, _, p1 = _mk_postings(50, seed=1)
-    _, _, _, _, p2 = _mk_postings(50, seed=1)
-    p1["salt"], p2["salt"] = 0, 1
-    with pytest.raises(ValueError):
-        merge_salted([p1, p2])
 
 
 @settings(max_examples=50, deadline=None)

@@ -20,8 +20,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from gxdindexer_spark.operators import ann
-from gxdindexer_spark.operators.index_build import IndexBuilder
+from gxdindexer_spark.operators import ann, index_build
+from gxdindexer_spark.operators.index_build import IndexBuilder, _Commit
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
 
@@ -38,7 +38,7 @@ def _builder(dps=30):
     )
 
 
-def test_shard_metrics_arrow_matches_spark(spark, tmpdir_idx):
+def test_shard_metrics_arrow_matches_spark(spark, tmpdir_idx, monkeypatch):
     docs = _docs(spark)
     b = _builder()
     b.build(docs, tmpdir_idx, resume=False)
@@ -50,12 +50,9 @@ def test_shard_metrics_arrow_matches_spark(spark, tmpdir_idx):
     via_arrow = b._shard_metrics_arrow(tmpdir_idx, shards)
     assert via_arrow is not None and set(via_arrow) == set(shards)
     # force the Spark path through the size guard and compare
-    os.environ["GXDIDX_ARROW_METRICS_MAX"] = "0"
-    try:
-        assert b._shard_metrics_arrow(tmpdir_idx, shards) is None
-        via_spark = b._shard_metrics(spark, tmpdir_idx, shards)
-    finally:
-        del os.environ["GXDIDX_ARROW_METRICS_MAX"]
+    monkeypatch.setattr(index_build, "ARROW_METRICS_MAX", 0)
+    assert b._shard_metrics_arrow(tmpdir_idx, shards) is None
+    via_spark = b._shard_metrics(spark, tmpdir_idx, shards)
     assert via_arrow == via_spark
     # and the ledger recorded the same values at build time
     from gxdindexer_spark.operators.index_build import read_ledger
@@ -100,9 +97,10 @@ def test_precomputed_fp_matches_gate(spark, tmpdir_idx):
     m1 = b.build(docs, tmpdir_idx, resume=False)
     assert m1["shards_built"] > 0
     pre = b._fp_map(docs)
-    m2 = b._build_locked(
-        docs, tmpdir_idx, resume=True, append=True, precomputed_fp=pre
-    )
+    with _Commit(tmpdir_idx) as commit:
+        m2 = b._build_locked(
+            commit, docs, resume=True, append=True, precomputed_fp=pre
+        )
     assert m2["shards_built"] == 0
     assert m2["shards_skipped"] == m1["shards_built"]
 
