@@ -144,7 +144,8 @@ def cmd_serving(spark) -> dict:
 
 def cmd_builder(spark) -> dict:
     """Cold index build + positional build, the bench.py shape
-    (1-shot each; enable GXDIDX_TRACE=1 for stage breakdown)."""
+    (1-shot each; ``perfbench/run.py --trace 1`` reports the per-layer
+    breakdown of a build)."""
     from gxdindexer_spark.operators.index_build import IndexBuilder
 
     t: dict = {}

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gxdindexer_spark.functions.partitioning import spread
+from gxdindexer_spark.session import local_checkpoint
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (prime)
 # fixed Carter-Wegman coefficients (deterministic, shared with oracle)
@@ -265,7 +266,9 @@ def neardup_components(
     large-star/small-star contraction (Kiveris et al., "Connected
     Components in MapReduce and Beyond", public) — same interface.
     Convergence is detected by the (monotonically decreasing) sum of
-    labels; each round localCheckpoints to cut the lineage chain.
+    labels; each round localCheckpoints to cut the lineage chain and
+    frees the round it supersedes, so only the returned labels stay
+    checkpointed.
 
     A graph whose diameter exceeds ``max_iters`` yields PARTIAL labels
     — silently returning them would make the keep-rule keep several
@@ -281,21 +284,25 @@ def neardup_components(
     ).union(
         pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
     )
-    labels = ids.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("component_id")
-    ).localCheckpoint()
+    labels, rdd = local_checkpoint(
+        ids.select(
+            F.col(id_col).alias("node"), F.col(id_col).alias("component_id")
+        )
+    )
     prev_sum = labels.agg(F.sum("component_id")).first()[0]
     converged = False
     for _ in range(max_iters):
         prop = edges.join(
             labels, edges["src"] == labels["node"]
         ).select(F.col("dst").alias("node"), "component_id")
-        labels = (
+        # the new round is materialized: free the superseded one
+        labels, new_rdd = local_checkpoint(
             labels.union(prop)
             .groupBy("node")
             .agg(F.min("component_id").alias("component_id"))
-            .localCheckpoint()
         )
+        rdd.unpersist(False)
+        rdd = new_rdd
         cur_sum = labels.agg(F.sum("component_id")).first()[0]
         if cur_sum == prev_sum:
             converged = True
@@ -309,6 +316,7 @@ def neardup_components(
             "long-chain graphs"
         )
         if on_nonconverged == "raise":
+            rdd.unpersist(False)
             raise RuntimeError(msg)
         import warnings
 

@@ -39,7 +39,6 @@ from __future__ import annotations
 import functools
 import json
 import os
-import sys
 import shutil
 import time
 from collections.abc import Iterator
@@ -57,6 +56,7 @@ from pyspark.sql import types as T
 from gxdindexer_spark import schemas
 from gxdindexer_spark.functions import analyze, bm25, hashing
 from gxdindexer_spark.functions.codec import encode_postings
+from gxdindexer_spark.session import local_checkpoint
 
 DEFAULT_FIELDS = {"content": "code", "path": "path", "lang": "lang"}
 # per-shard partitions of a build; the global artifacts its finalize
@@ -167,16 +167,16 @@ class IndexBuilder:
     encode-group size and the per-task work of the single-phase
     postings encode (pick smaller shards for more build parallelism);
     ``block_size`` is the posting block length (skip-pointer grain).
-    ``salt_range`` is retained for API/manifest-fingerprint
-    compatibility: the docID-range salting it once configured is
-    subsumed by the shard bound (see ``postings_df``).
+    ``salt_range`` is accepted and ignored: the docID-range salting it
+    once configured is subsumed by the shard bound (see
+    ``postings_df``).
     """
 
     def __init__(
         self,
         fields: dict[str, str] | None = None,
         docs_per_shard: int = 1_000_000,
-        salt_range: int = 65_536,
+        salt_range: int | None = None,
         block_size: int = 128,
         k1: float = bm25.K1,
         b: float = bm25.B,
@@ -185,7 +185,6 @@ class IndexBuilder:
     ):
         self.fields = fields or DEFAULT_FIELDS
         self.docs_per_shard = docs_per_shard
-        self.salt_range = salt_range
         self.block_size = block_size
         self.k1 = k1
         self.b = b
@@ -210,7 +209,6 @@ class IndexBuilder:
             {
                 "fields": self.fields,
                 "docs_per_shard": self.docs_per_shard,
-                "salt_range": self.salt_range,
                 "block_size": self.block_size,
                 "k1": self.k1,
                 "b": self.b,
@@ -408,18 +406,6 @@ class IndexBuilder:
         spark = docs.sparkSession
         index_dir = commit.index_dir
         t0 = time.monotonic()
-        trace = os.environ.get("GXDIDX_TRACE") == "1"
-        _last = [t0]
-
-        def mark(stage: str) -> None:
-            if trace:
-                now = time.monotonic()
-                print(
-                    f"[build-trace] {stage}: {now - _last[0]:.1f}s",
-                    file=sys.stderr,
-                )
-                _last[0] = now
-
         # input fingerprint per shard (see _fp_map for the contract).
         # Point mutations (delete/update) pass ``precomputed_fp``:
         # the same agg, computed by the caller CONCURRENTLY with its
@@ -431,8 +417,7 @@ class IndexBuilder:
             shard_fp = dict(precomputed_fp)
         else:
             shard_fp = self._fp_map(docs)
-        mark("fingerprint")
-        done = self._read_ledger(index_dir)
+        done = read_ledger(index_dir)
         # orphaned shards: present in artifacts/ledger but absent from
         # the input (shrunk or re-sharded corpus). Left in place they
         # would keep feeding dictionary df / avgdl / query results.
@@ -453,28 +438,31 @@ class IndexBuilder:
         # shards whose live partitions this commit replaces (pending)
         # or removes (orphans); every other shard is kept as it is
         replaced = set(pending) | orphans
-        # ---- incremental-finalize eligibility (north_rule: an append
-        # or streaming micro-batch must not pay O(index) to commit).
-        # Kept entries = shards untouched by this build; incremental
-        # needs their per-field stats in the ledger (legacy indexes
-        # without them fall back to the full re-aggregation) and an
-        # existing dictionary to merge into.
+        # kept shards feed the global stats through their ledger
+        # field_stats and the prior dictionary (north_rule: an append
+        # or streaming micro-batch must not pay O(index) to commit)
         kept_entries = {
             s: e
             for s, e in done.items()
             if s not in replaced and (append or s in shard_fp)
         }
-        stats_incremental = bool(kept_entries) and all(
-            "field_stats" in e for e in kept_entries.values()
-        )
-        # global per-field totals come from ledger field_stats unless a
-        # kept shard predates them (legacy ledger: scan doc_stats)
-        ledger_totals = stats_incremental or not kept_entries
-        dict_incremental = (
-            stats_incremental
-            and os.path.isdir(f"{index_dir}/dictionary")
+        # global stats only change when shards did: a pure no-op resume
+        # (the common "is it up to date?" probe) skips the dictionary
+        # re-agg + collision check + corpus_stats rewrite entirely.
+        changed = bool(replaced)
+        run_finalize = changed or not (
+            os.path.isdir(f"{index_dir}/dictionary")
             and os.path.isdir(f"{index_dir}/corpus_stats")
         )
+        if run_finalize and kept_entries and (
+            not os.path.isdir(f"{index_dir}/dictionary")
+            or not all("field_stats" in e for e in kept_entries.values())
+        ):
+            raise ValueError(
+                f"{index_dir}: kept shards lack ledger field_stats or a "
+                "dictionary (written by an older builder); rebuild every "
+                "shard with build(docs, index_dir, resume=False)"
+            )
         for s in orphans:
             done.pop(s, None)
         metrics = {
@@ -543,7 +531,6 @@ class IndexBuilder:
                 delta_field_stats.setdefault(int(r["shard"]), {})[
                     r["field"]
                 ] = {"n_docs": int(r["n"]), "sum_dl": int(r["s"])}
-            mark("tokenize+delta_stats")
             # doc_stats/dict_parts repartition on shard before the
             # partitioned write: the agg output is hash-partitioned on
             # the full group key, so writing it directly would emit one
@@ -558,47 +545,27 @@ class IndexBuilder:
             # partition before the (small) shuffle. Reads the
             # materialized tf cache — runs concurrently with the
             # postings pipeline below. Finalize merges the IN-MEMORY
-            # ``dp`` (same cached lineage) wherever it can, so it
-            # rarely waits on this write.
+            # ``dp`` (same cached lineage), so it never waits on this
+            # write.
             dp = tf.groupBy("shard", "field", "term", "term_id").agg(
                 F.count("*").alias("df"), F.sum("tf").alias("cf")
             )
             if wide:
                 dp = dp.repartition(F.col("shard"))
             dict_parts_fut = write_staged(dp, "dict_parts")
-            # avgdl must be GLOBAL (all shards incl. previously built):
-            # kept shards contribute via their ledger field_stats (no
-            # doc_stats scan — O(delta) input); legacy ledgers without
-            # field_stats pay the full scan once (joining the staged
-            # doc_stats write first — it holds the pending shards' rows)
-            if ledger_totals:
-                totals = _field_totals(kept_entries, delta_field_stats)
-                avgdl = {f: t[1] / t[0] for f, t in totals.items() if t[0]}
-            else:
-                ds_fut.result()
-                cs = (
-                    commit.view(spark, "doc_stats", replaced)
-                    .groupBy("field")
-                    .agg((F.sum("dl") / F.count("*")).alias("avgdl"))
-                    .collect()
-                )
-                avgdl = {r["field"]: float(r["avgdl"]) for r in cs}
-            mark("corpus_stats")
-        # global stats only change when shards did: a pure no-op resume
-        # (the common "is it up to date?" probe) skips the dictionary
-        # re-agg + collision check + corpus_stats rewrite entirely.
-        changed = bool(replaced)
-        run_finalize = changed or not (
-            os.path.isdir(f"{index_dir}/dictionary")
-            and os.path.isdir(f"{index_dir}/corpus_stats")
-        )
+        # global per-field totals (avgdl, corpus_stats): kept shards'
+        # ledger field_stats plus this build's delta — no doc_stats scan
+        totals = _field_totals(kept_entries, delta_field_stats)
+        avgdl = {f: t[1] / t[0] for f, t in totals.items() if t[0]}
 
         def _run_finalize() -> str:
-            if dict_incremental:
-                # prior dictionary, minus the replaced shards' old
-                # contributions (their live dict_parts, untouched until
-                # publish), plus the rebuilt shards' new partials
-                rows = [spark.read.parquet(f"{index_dir}/dictionary")]
+            # the dictionary as this commit leaves it: the prior
+            # dictionary minus the replaced shards' old contributions
+            # (their live dict_parts, untouched until publish) when any
+            # shard is kept, plus the rebuilt shards' in-memory partials
+            rows = []
+            if kept_entries:
+                rows.append(spark.read.parquet(f"{index_dir}/dictionary"))
                 gone = sorted(
                     replaced & _artifact_shards(index_dir, ("dict_parts",))
                 )
@@ -612,36 +579,12 @@ class IndexBuilder:
                             (-F.col("cf")).alias("cf"),
                         )
                     )
-                if pending:
-                    rows.append(dp)
-            elif pending and not kept_entries:
-                # fresh build (or a resume rebuilding everything): the
-                # just-computed dp IS the whole dict_parts content, so
-                # aggregate the in-memory lineage (cached tf) instead
-                # of waiting for the staged write and re-reading it —
-                # the dictionary work then overlaps the postings job
-                rows = [dp]
-            else:
-                # full re-aggregation over the kept shards' live and
-                # the pending shards' staged dict_parts
-                if pending:
-                    dict_parts_fut.result()
-                rows = [commit.view(spark, "dict_parts", replaced)]
-            self._finalize_stats(
-                commit,
-                rows,
-                field_totals=(
-                    _field_totals(kept_entries, delta_field_stats)
-                    if ledger_totals
-                    else None
-                ),
-                doc_stats=(
-                    None
-                    if ledger_totals
-                    else commit.view(spark, "doc_stats", replaced)
-                ),
-            )
-            return "incremental" if dict_incremental else "full"
+            if pending:
+                rows.append(dp)
+            # no source: the commit leaves no shard, so no term
+            rows = rows or [_empty_like(spark, schemas.DICTIONARY)]
+            self._finalize_stats(commit, rows, totals)
+            return "incremental" if kept_entries else "full"
 
         finalize_mode = "skipped"
         metrics_fut = None
@@ -654,13 +597,10 @@ class IndexBuilder:
             # staged writes and the ledger metrics have succeeded, so a
             # failure anywhere before publish leaves the index exactly
             # as it was.
-            fin_fut = (
-                commit.pool.submit(_run_finalize) if run_finalize else None
-            )
+            fin_fut = commit.pool.submit(_run_finalize)
             self.postings_df(tf, avgdl).write.partitionBy("shard").parquet(
                 commit.stage("postings")
             )
-            mark("postings")
 
             # per-shard metrics only need the staged postings (written
             # above) and doc_stats (joined first) — overlap the scan
@@ -670,20 +610,15 @@ class IndexBuilder:
                 return self._shard_metrics(spark, commit.staging, pending)
 
             metrics_fut = commit.pool.submit(_metrics_after_ds)
-            if fin_fut is not None:
-                finalize_mode = fin_fut.result()
-        elif run_finalize:
-            finalize_mode = _run_finalize()
-        metrics["finalize_mode"] = finalize_mode
-        mark("finalize")
-        if pending:
+            finalize_mode = fin_fut.result()
             # a failed staged write must fail the commit before publish
             docs_fut.result()
             dict_parts_fut.result()
-            mark("bg_writes_join")
+        elif run_finalize:
+            finalize_mode = _run_finalize()
+        metrics["finalize_mode"] = finalize_mode
         wall_ms = int((time.monotonic() - t0) * 1000)
         built = metrics_fut.result() if metrics_fut is not None else {}
-        mark("shard_metrics")
 
         # consolidated ledger: one file, one atomic replace, O(1) reads
         # at engine init (vs O(shards) file opens at the 10^6-shard
@@ -755,6 +690,11 @@ class IndexBuilder:
             for s in sorted(replaced)
             for art in SHARD_ARTIFACTS
         ]
+        # an index left with no shard keeps an (empty) postings dir, so
+        # an engine can open it
+        if not pending and not os.path.isdir(f"{index_dir}/postings"):
+            os.makedirs(commit.stage("postings"))
+            commit.publish.append("postings")
         if run_finalize:
             commit.publish += list(STATS_ARTIFACTS)
         commit.files["ledger.json"] = json.dumps(
@@ -786,39 +726,24 @@ class IndexBuilder:
         self,
         commit: "_Commit",
         rows: list[DataFrame],
-        field_totals: dict[str, list[int]] | None = None,
-        doc_stats: DataFrame | None = None,
+        field_totals: dict[str, list[int]],
     ) -> None:
         """Derive the global dictionary, its reversed and 3-gram
         companions and corpus_stats into ``commit``'s staging; the
         commit publishes them.
 
         ``rows`` are (field, term, term_id, df, cf) contributions,
-        summed by key with zero-df terms dropped: every shard's
-        dict-part rows (full mode), or the prior dictionary plus the
-        replaced shards' negated old rows plus the rebuilt shards' new
-        rows (incremental: input is O(delta shards) + one pass over the
+        summed by key with zero-df terms dropped: the prior dictionary
+        plus the replaced shards' negated old rows plus the rebuilt
+        shards' new rows (input is O(delta shards) + one pass over the
         prior dictionary, O(vocab) and unavoidable for a merge, so a
         streaming micro-batch commits in time proportional to its own
         size).
 
-        corpus_stats: written from ``field_totals`` (per-shard sums
-        carried in the ledger) when given, else aggregated from
-        ``doc_stats`` (legacy ledgers).
+        corpus_stats: written from ``field_totals``, the global
+        per-field [n_docs, sum_dl] summed from the ledger.
         """
         spark = rows[0].sparkSession
-        trace = os.environ.get("GXDIDX_TRACE") == "1"
-        _last = [time.monotonic()]
-
-        def fmark(stage: str) -> None:
-            if trace:
-                now = time.monotonic()
-                print(
-                    f"[finalize-trace] {stage}: {now - _last[0]:.1f}s",
-                    file=sys.stderr,
-                )
-                _last[0] = now
-
         # one source aggregation feeds the collision check and the
         # three dictionary writes: checkpointed once (small: distinct
         # terms, not postings) and held until the commit ends
@@ -832,7 +757,6 @@ class IndexBuilder:
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
             .filter(F.col("df") > 0)
         )
-        fmark("dict_agg+ckpt")
 
         # term_id collision check (functions/hashing.py): two distinct
         # terms hashing to one id would silently merge posting lists.
@@ -908,36 +832,19 @@ class IndexBuilder:
             )
 
         def write_corpus_stats() -> None:
-            if field_totals is not None:
-                vals = [
-                    (f, int(t[0]), int(t[1]), t[1] / t[0])
-                    for f, t in sorted(field_totals.items())
-                    if t[0]
-                ]
-                schema = T.StructType(
-                    [
-                        T.StructField("field", T.StringType(), False),
-                        T.StructField("n_docs", T.LongType(), False),
-                        T.StructField("sum_dl", T.LongType(), False),
-                        T.StructField("avgdl", T.DoubleType(), False),
-                    ]
-                )
-                # Arrow path (pandas), NOT createDataFrame(list): a
-                # python list becomes a 32-partition python RDD whose
-                # write spawns a Python worker per partition (~7s for
-                # one row on local[32]); the pandas local relation
-                # stays JVM-side.
-                pdf = pd.DataFrame(
-                    vals, columns=["field", "n_docs", "sum_dl", "avgdl"]
-                )
-                out = spark.createDataFrame(pdf, schema).coalesce(1)
-            else:
-                out = doc_stats.groupBy("field").agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum("dl").alias("sum_dl"),
-                    (F.sum("dl") / F.count("*")).alias("avgdl"),
-                )
-            out.write.parquet(commit.stage("corpus_stats"))
+            vals = [
+                (f, int(t[0]), int(t[1]), t[1] / t[0])
+                for f, t in sorted(field_totals.items())
+                if t[0]
+            ]
+            # Arrow path (pandas), NOT createDataFrame(list): a python
+            # list becomes a 32-partition python RDD whose write spawns
+            # a Python worker per partition (~7s for one row on
+            # local[32]); the pandas local relation stays JVM-side.
+            pdf = pd.DataFrame(vals, columns=schemas.CORPUS_STATS.names)
+            spark.createDataFrame(pdf, schemas.CORPUS_STATS).coalesce(
+                1
+            ).write.parquet(commit.stage("corpus_stats"))
 
         # the clash check and the four staged writes are independent
         # jobs — submit them together so later jobs back-fill executor
@@ -955,7 +862,6 @@ class IndexBuilder:
         ]
         for fut in futs:
             fut.result()
-        fmark("clash+writes")
 
     def _shard_metrics(
         self, spark: SparkSession, root: str, shards: list[int]
@@ -1057,12 +963,6 @@ class IndexBuilder:
         except (OSError, pa.ArrowInvalid):
             return None
 
-    # ------------------------------------------------------------ ledger
-
-    @staticmethod
-    def _read_ledger(index_dir: str) -> dict[int, dict]:
-        return read_ledger(index_dir)
-
 
 def delete_docs(
     spark: SparkSession,
@@ -1099,9 +999,13 @@ def delete_docs(
     snapshot's rebuild).
     """
     ids = sorted({int(i) for i in doc_ids})
+    nothing = {"docs_deleted": 0, "shards_rebuilt": 0, "shards_dropped": 0}
     if not ids:
-        return {"docs_deleted": 0, "shards_rebuilt": 0, "shards_dropped": 0}
+        return nothing
     with _Commit(index_dir) as commit:
+        # an index left with no shard holds no doc to delete
+        if not _artifact_shards(index_dir, ("docs",)):
+            return nothing
         store = spark.read.parquet(f"{index_dir}/docs")
         scoped = store
         candidates: list[int] | None = None
@@ -1147,9 +1051,7 @@ def delete_docs(
         else:
             hit = hit_query.collect()
         if not hit:
-            return {
-                "docs_deleted": 0, "shards_rebuilt": 0, "shards_dropped": 0
-            }
+            return nothing
         affected = {int(r["shard"]): int(r["n_del"]) for r in hit}
         totals = {int(r["shard"]): int(r["n"]) for r in hit}
         emptied = {s for s, n in affected.items() if n == totals[s]}
@@ -1255,6 +1157,9 @@ def update_docs(
     if not ids:
         return {"docs_updated": 0, "shards_rebuilt": 0}
     with _Commit(index_dir) as commit:
+        # an index left with no shard holds no doc to update
+        if not _artifact_shards(index_dir, ("docs",)):
+            return {"docs_updated": 0, "shards_rebuilt": 0}
         return _update_docs_locked(
             commit, spark, builder, updates, ids, assume_dense_shards
         )
@@ -1630,10 +1535,9 @@ class _Commit:
     which also clears stale staging). The body writes every new
     artifact to ``stage(rel)`` under the dot-prefixed staging root,
     runs its concurrent jobs on the commit's one thread ``pool``,
-    persists through ``cache`` and ``checkpoint``, and lists what it publishes: paths in
-    ``publish`` (a path with nothing staged is removed) and json texts
-    in ``files``. Reads of the index as the commit will leave it go
-    through ``view``.
+    persists through ``cache`` and ``checkpoint``, and lists what it
+    publishes: paths in ``publish`` (a path with nothing staged is
+    removed) and json texts in ``files``.
 
     Exit, on every path, joins the pool (cancelling queued work after
     a failure) and releases what it cached. Only a clean exit
@@ -1682,31 +1586,11 @@ class _Commit:
         return df
 
     def checkpoint(self, df: DataFrame) -> DataFrame:
-        """``df.localCheckpoint()`` held until the commit ends. Spark
-        frees a checkpoint only through its RDD (``unpersist`` on the
-        checkpointed frame leaves the blocks), so the commit keeps
-        that RDD."""
-        ck = df.localCheckpoint()
-        self._rdds.append(ck._jdf.queryExecution().analyzed().rdd())
+        """``df.localCheckpoint()`` held until the commit ends (the
+        commit keeps the RDD that frees it)."""
+        ck, rdd = local_checkpoint(df)
+        self._rdds.append(rdd)
         return ck
-
-    def view(
-        self, spark: SparkSession, art: str, replaced: set[int]
-    ) -> DataFrame:
-        """Shard artifact ``art`` as this commit publishes it: live
-        partitions of the shards it keeps, staged partitions of the
-        ``replaced`` shards it rebuilds."""
-        parts = []
-        live = f"{self.index_dir}/{art}"
-        if _artifact_shards(self.index_dir, (art,)) - replaced:
-            parts.append(
-                spark.read.parquet(live).filter(
-                    ~F.col("shard").isin(sorted(replaced))
-                )
-            )
-        if _artifact_shards(self.staging, (art,)):
-            parts.append(spark.read.parquet(self.stage(art)))
-        return functools.reduce(DataFrame.unionByName, parts)
 
     def __exit__(self, exc_type, *_exc) -> None:
         try:
@@ -1742,22 +1626,13 @@ class _Commit:
 
 
 def read_ledger(index_dir: str) -> dict[int, dict]:
-    """Consolidated ledger (single json) with fallback to the legacy
-    per-shard ledger/ directory from pre-consolidation builds."""
+    """Consolidated per-shard ledger, ``{}`` when the index has none
+    (a build then rebuilds every shard)."""
     path = f"{index_dir}/ledger.json"
-    if os.path.isfile(path):
-        with open(path) as fh:
-            return {int(s): e for s, e in json.load(fh).items()}
-    out: dict[int, dict] = {}
-    ldir = f"{index_dir}/ledger"
-    if not os.path.isdir(ldir):
-        return out
-    for fn in os.listdir(ldir):
-        if fn.endswith(".json"):
-            with open(f"{ldir}/{fn}") as fh:
-                e = json.load(fh)
-            out[int(e["shard"])] = e
-    return out
+    if not os.path.isfile(path):
+        return {}
+    with open(path) as fh:
+        return {int(s): e for s, e in json.load(fh).items()}
 
 
 def _artifact_shards(
@@ -1845,7 +1720,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         stats: dict = {}
         for art in ("postings", "doc_stats", "dict_parts", "docs"):
             src = f"{index_dir}/{art}"
-            if not os.path.isdir(src):
+            if not _artifact_shards(index_dir, (art,)):
                 continue
             # sort by the query-pushed keys inside each shard file so
             # parquet row-group min/max stats prune the term_id IN-list

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gxdindexer_spark import schemas
 from gxdindexer_spark.functions import analyze, bm25, hashing
 from gxdindexer_spark.functions import codec as codec_mod
 from gxdindexer_spark.operators import wand as wand_mod
@@ -311,14 +312,19 @@ class IndexQueryEngine:
         # file index (directory listing + footer schema read) is built
         # once per engine instead of once per query — at 10^6 shard
         # dirs the per-query listing would dominate latency.
-        self._postings = spark.read.parquet(f"{index_dir}/postings")
+        # (explicit schema: an index left with no shard has an empty
+        # postings dir, nothing to infer a schema from)
+        self._postings = spark.read.schema(schemas.POSTINGS).parquet(
+            f"{index_dir}/postings"
+        )
         # the driver-local scatter backend's view: the relation's own
         # file list (no second listing), so both backends read the
         # same snapshot; files pyarrow cannot open (a non-local
-        # scheme) leave the engine on the Spark backend only
+        # scheme), or no file at all, leave the engine on the Spark
+        # backend only
         files = [urlparse(u) for u in self._postings.inputFiles()]
         self._postings_ds = None
-        if all(u.scheme == "file" for u in files):
+        if files and all(u.scheme == "file" for u in files):
             try:
                 self._postings_ds = ds.dataset(
                     [unquote(u.path) for u in files], format="parquet",

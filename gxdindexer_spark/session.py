@@ -11,7 +11,16 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def local_checkpoint(df: DataFrame):
+    """``df.localCheckpoint()`` and the JVM RDD holding its blocks.
+    Spark frees a local checkpoint only through that RDD
+    (``rdd.unpersist(False)``); ``unpersist`` on the checkpointed
+    frame leaves the blocks."""
+    ck = df.localCheckpoint()
+    return ck, ck._jdf.queryExecution().analyzed().rdd()
 
 
 def get_spark(

@@ -19,7 +19,7 @@ upstream job writes one parquet file per shard. Global stats
 merges only the changed shards' dictionary partials (subtracting the
 replaced shards' old contributions) and derives corpus stats from the
 ledger's per-shard field_stats — ``metrics["finalize_mode"] ==
-"incremental"`` on every append batch (index_build._finalize_index;
+"incremental"`` on every append batch (``IndexBuilder._finalize_stats``;
 asserted stream-vs-batch-identical in tests/test_streaming_ingest.py).
 Queries opening the index between batches see a consistent committed
 snapshot (manifest/ledger are replaced atomically, and the engine

@@ -38,7 +38,6 @@ def main(argv: list[str] | None = None) -> int:
     src.add_argument("--synth-docs", type=int, help="generate N synthetic docs")
     p.add_argument("--index-dir", required=True)
     p.add_argument("--docs-per-shard", type=int, default=1_000_000)
-    p.add_argument("--salt-range", type=int, default=65_536)
     p.add_argument("--block-size", type=int, default=128)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--master", default=None, help="e.g. local[8]")
@@ -82,7 +81,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         builder = IndexBuilder(
             docs_per_shard=args.docs_per_shard,
-            salt_range=args.salt_range,
             block_size=args.block_size,
             with_positions=args.with_positions,
         )

@@ -9,6 +9,7 @@ replayed only by a holder of the writer lock.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -184,6 +185,44 @@ def test_crash_at_each_commit_step_resumes_to_clean_commit(
         for key in want:
             assert got[key] == want[key], (step, key)
         assert _results(spark, idx) == _results(spark, clean)
+
+
+def _tree(idx):
+    """Every file under ``idx`` (the lock file aside) with its bytes."""
+    out = {}
+    for root, _dirs, files in os.walk(idx):
+        for name in files:
+            path = os.path.join(root, name)
+            if name != "_writer.lock":
+                with open(path, "rb") as fh:
+                    out[os.path.relpath(path, idx)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("legacy", ["no_field_stats", "no_dictionary"])
+def test_unreadable_kept_shards_are_rejected_before_staging(
+    legacy, corpus, base, spark, tmp_path
+):
+    """A kept shard whose ledger entry has no field_stats, or kept
+    shards with no dictionary to merge into (an index an older builder
+    wrote), fail an incremental build with a ValueError naming the
+    fix, before anything is staged; the rebuild it names succeeds."""
+    idx = str(tmp_path / "idx")
+    shutil.copytree(base, idx)
+    if legacy == "no_field_stats":
+        ledger = read_ledger(idx)
+        del ledger[0]["field_stats"]
+        with open(f"{idx}/ledger.json", "w") as fh:
+            json.dump({str(s): e for s, e in ledger.items()}, fh)
+    else:
+        shutil.rmtree(f"{idx}/dictionary")
+    before = _tree(idx)
+    with pytest.raises(ValueError, match=r"resume=False"):
+        _builder().build(_grown(corpus, spark), idx, resume=True)
+    assert _tree(idx) == before
+    m = _builder().build(_grown(corpus, spark), idx, resume=False)
+    assert m["shards_built"] == 6 and m["finalize_mode"] == "full"
+    assert _results(spark, idx)[0]
 
 
 def test_failed_build_releases_threads_and_cached_blocks(

@@ -837,33 +837,32 @@ def test_incremental_finalize_matches_full(built, spark, tmpdir_idx):
     subtracted, new added) and derives corpus_stats from per-shard
     sums in the ledger — asserted via metrics['finalize_mode'] — and
     the merged artifacts are value-identical to a from-scratch build
-    in all three mutation shapes: append a new shard, rebuild a
-    changed shard, remove an orphaned shard."""
+    in all four mutation shapes: append a new shard, rebuild a
+    changed shard, remove an orphaned shard, shrink to an empty
+    input."""
     import tempfile
 
     _idx, docs, _pdocs, _m = built
     builder = IndexBuilder(docs_per_shard=100, salt_range=64, block_size=16)
 
+    order = {
+        "dictionary": ("field", "term"),
+        "dictionary_rev": ("field", "term"),
+        "dictionary_ngrams": ("field", "gram", "term"),
+        "corpus_stats": ("field",),
+    }
+
     def snap(d):
-        dic = (
-            spark.read.parquet(f"{d}/dictionary")
-            .orderBy("field", "term")
-            .toPandas()
-        )
-        cs = (
-            spark.read.parquet(f"{d}/corpus_stats")
-            .orderBy("field")
-            .toPandas()
-        )
-        return dic, cs
+        return [
+            spark.read.parquet(f"{d}/{art}").orderBy(*keys).toPandas()
+            for art, keys in order.items()
+        ]
 
     def assert_matches_scratch(current_docs):
         ref = tempfile.mkdtemp(prefix="gxdidx_incref_")
         builder.build(current_docs, ref, resume=False)
-        a_dic, a_cs = snap(tmpdir_idx)
-        b_dic, b_cs = snap(ref)
-        pd.testing.assert_frame_equal(a_dic, b_dic)
-        pd.testing.assert_frame_equal(a_cs, b_cs)
+        for a, b in zip(snap(tmpdir_idx), snap(ref)):
+            pd.testing.assert_frame_equal(a, b)
 
     # fresh build of shards 0-2: full finalize (nothing to merge into)
     m0 = builder.build(docs.filter(F.col("shard") < 3), tmpdir_idx)
@@ -902,6 +901,19 @@ def test_incremental_finalize_matches_full(built, spark, tmpdir_idx):
     eng = IndexQueryEngine(spark, tmpdir_idx)
     got = eng.topk("getIndexList if return", k=10, mode="taat").collect()
     assert len(got) > 0
+
+    # 4) SHRINK to an empty input: every shard is an orphan, the commit
+    # keeps none and builds none; the index is then empty and serves
+    # no hits
+    empty = shrunk.filter(F.lit(False))
+    m5 = builder.build(empty, tmpdir_idx, resume=True)
+    assert m5["finalize_mode"] == "full"
+    assert m5["shards_total"] == 0 and m5["shards_built"] == 0
+    assert_matches_scratch(empty)
+    eng = IndexQueryEngine(spark, tmpdir_idx)
+    for mode in ("wand", "taat"):
+        assert eng.topk("getIndexList if return", k=10, mode=mode).count() == 0
+    assert eng.count_matches("if").first()["n_matches"] == 0
 
 
 def test_sorted_matches_pages_by_stored_field(built, spark):
@@ -1018,10 +1030,16 @@ def test_doc_level_delete(built, spark, tmpdir_idx):
     rebuild; a fully-emptied shard drops through the orphan path; the
     dictionary/corpus stats merge incrementally; queries exclude the
     deleted docs and match a from-scratch build of the survivors;
-    replayed deletes are no-ops."""
+    replayed deletes are no-ops; deleting every doc leaves an empty
+    index that serves no hits, on which deletes, updates and
+    compaction are no-ops, and a later resume rebuilds."""
     import tempfile
 
-    from gxdindexer_spark.operators.index_build import delete_docs
+    from gxdindexer_spark.operators.index_build import (
+        compact_index,
+        delete_docs,
+        update_docs,
+    )
 
     _idx, docs, pdocs, _m = built
     builder = IndexBuilder(docs_per_shard=100, salt_range=64, block_size=16)
@@ -1074,6 +1092,40 @@ def test_doc_level_delete(built, spark, tmpdir_idx):
     )
     assert m2["docs_deleted"] == 0
     assert m2["shards_rebuilt"] == 0 and m2["shards_dropped"] == 0
+
+    # delete every remaining doc: the commit keeps no shard and builds
+    # none
+    rest = [r["doc_id"] for r in survivors.select("doc_id").collect()]
+    m3 = delete_docs(
+        spark, tmpdir_idx, builder, rest, assume_dense_shards=True
+    )
+    assert m3["docs_deleted"] == len(rest)
+    assert m3["shards_rebuilt"] == 0 and m3["shards_dropped"] == 3
+    assert m3["finalize_mode"] == "full"
+    e3 = IndexQueryEngine(spark, tmpdir_idx)
+    for q in QUERIES[:3]:
+        assert e3.topk(q, k=15, mode="taat").count() == 0
+    assert e3.count_matches(QUERIES[0]).first()["n_matches"] == 0
+    # every other write on the empty index is a no-op
+    assert delete_docs(spark, tmpdir_idx, builder, rest)["docs_deleted"] == 0
+    upd = update_docs(spark, tmpdir_idx, builder, {rest[0]: {"content": "x"}})
+    assert upd["docs_updated"] == 0
+    assert compact_index(spark, tmpdir_idx) == {}
+
+    # a later resume rebuilds the survivors' shards
+    m4 = builder.build(survivors, tmpdir_idx, resume=True)
+    assert m4["shards_built"] == 3
+    e4 = IndexQueryEngine(spark, tmpdir_idx)
+    for q in QUERIES[:3]:
+        got = [
+            (r["doc_id"], round(r["score"], 9))
+            for r in e4.topk(q, k=15, mode="taat").collect()
+        ]
+        want = [
+            (r["doc_id"], round(r["score"], 9))
+            for r in e2.topk(q, k=15, mode="taat").collect()
+        ]
+        assert got == want
 
 
 def test_leading_wildcard_expansion_and_ranking(built, spark):

@@ -352,7 +352,8 @@ def test_ivf_topk_finds_self_and_overlaps_exact(spark):
 def test_neardup_components_chains_and_singletons(spark):
     """Connected components over the pair graph: chains collapse to
     their min id, singletons map to themselves; multi-hop chains need
-    several propagation rounds."""
+    several propagation rounds, and a call leaves at most its result
+    checkpointed."""
     from gxdindexer_spark.operators import dedup
 
     ids = spark.createDataFrame(
@@ -365,10 +366,15 @@ def test_neardup_components_chains_and_singletons(spark):
          (20, 21), (21, 22), (22, 23), (23, 24)],
         "doc_a long, doc_b long",
     )
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
     got = {
         r["doc_id"]: r["component_id"]
         for r in dedup.neardup_components(ids, pairs).collect()
     }
+    # each superseded round's checkpoint is freed: only the returned
+    # labels' checkpoint stays
+    assert jsc.getPersistentRDDs().size() <= persisted + 1
     expect = {i: i for i in (0, 4, 7, 8, 9)}
     expect.update({1: 1, 2: 1, 3: 1, 5: 5, 6: 5})
     expect.update({n: 20 for n in (20, 21, 22, 23, 24)})

@@ -61,8 +61,6 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
         idx,
         "--docs-per-shard",
         "100",
-        "--salt-range",
-        "64",
         "--query",
         "if return",
         "--topk",
