@@ -9,7 +9,10 @@ setJobDescription, min-of-reps where re-running doesn't mutate state.
 
 Usage: python bench_extra.py <subcmd> [...]   (prints one JSON line)
 Subcommands: neardup, dedup, textstats, entry <name...>, serving,
-ann_build, builder
+ann_build, builder, commit_crossover
+
+``commit_crossover`` needs no $SPARK_GRAFT_SF_DIR: it builds its own
+corpus with sources/synth.py and writes BENCH/commit_crossover.json.
 """
 
 from __future__ import annotations
@@ -244,10 +247,93 @@ def cmd_mutate(spark) -> dict:
     return t
 
 
+def cmd_commit_crossover(spark) -> dict:
+    """Local vs Spark commit backend over delta docs x shards touched x
+    prior dictionary rows: each cell appends ``delta`` new docs spread
+    over ``shards`` new shards to a copy of a base index and times the
+    commit on each backend (median of 5 after one warm-up). Writes
+    BENCH/commit_crossover.json; the guard
+    ``index_build.LOCAL_MAX_COMMIT_ROWS`` cites it."""
+    import statistics
+
+    from gxdindexer_spark.operators import index_build
+    from gxdindexer_spark.operators.index_build import IndexBuilder
+    from gxdindexer_spark.sources.synth import generate_corpus
+    from gxdindexer_spark.sources.tables import prepare_docs
+
+    dps, reps = 80, 5
+    bases, deltas, shard_counts = (240, 4800, 19200), (80, 320, 1280), (1, 4)
+    work = "/tmp/gxdidx_bxcross"
+    shutil.rmtree(work, ignore_errors=True)
+    builder = IndexBuilder(docs_per_shard=dps, with_positions=True)
+    n_max = max(bases) + max(deltas)
+    docs = prepare_docs(
+        generate_corpus(spark, n_max, seed=5), docs_per_shard=dps
+    ).toPandas()
+    schema = spark.createDataFrame(docs.head(1)).schema
+    cells = []
+    for n_base in bases:
+        base = f"{work}/base{n_base}"
+        builder.build(
+            spark.createDataFrame(docs[docs["doc_id"] < n_base], schema),
+            base, resume=False,
+        )
+        dict_rows = index_build._dictionary_rows(base)
+        for n_delta in deltas:
+            for n_shards in shard_counts:
+                delta = docs[
+                    (docs["doc_id"] >= n_base)
+                    & (docs["doc_id"] < n_base + n_delta)
+                ].copy()
+                delta["shard"] = (
+                    n_base // dps + (delta["doc_id"] - n_base) % n_shards
+                ).astype("int32")
+                cell = {
+                    "base_docs": n_base, "dict_rows": dict_rows,
+                    "delta_docs": n_delta, "shards": n_shards,
+                }
+                for backend, guard in (("local", 1 << 62), ("spark", -1)):
+                    index_build.LOCAL_MAX_COMMIT_ROWS = guard
+                    runs = []
+                    for _ in range(reps + 1):
+                        idx = f"{work}/run"
+                        shutil.rmtree(idx, ignore_errors=True)
+                        shutil.copytree(base, idx)
+                        df = spark.createDataFrame(delta, schema)
+                        t0 = time.monotonic()
+                        m = builder.build(df, idx, append=True)
+                        runs.append(time.monotonic() - t0)
+                        assert m["backend"] == backend, m
+                    cell[f"{backend}_s"] = round(statistics.median(runs[1:]), 3)
+                cell["local_wins"] = cell["local_s"] < cell["spark_s"]
+                print(json.dumps(cell), file=sys.stderr, flush=True)
+                cells.append(cell)
+    shutil.rmtree(work, ignore_errors=True)
+    out = {
+        "what": "append commit wall time, local vs Spark backend",
+        "docs_per_shard": dps, "reps": f"median of {reps} after 1 warm-up",
+        "local": f"local[{spark.sparkContext.defaultParallelism}]",
+        "cells": cells,
+    }
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
+    with open(f"{path}/commit_crossover.json", "w") as fh:
+        json.dump(out, fh, indent=1)
+    return {
+        f"{c['base_docs']}b_{c['delta_docs']}d_{c['shards']}s": [
+            c["local_s"], c["spark_s"]
+        ]
+        for c in cells
+    }
+
+
 def main() -> int:
     sub = sys.argv[1]
     spark = get_spark(app_name=f"bench-extra-{sub}", master=f"local[{CPUS}]")
     spark.range(1000).selectExpr("sum(id)").collect()  # warm
+    if sub == "commit_crossover":
+        _emit(sub, cmd_commit_crossover(spark))
+        spark.stop()
+        return 0
     entrymod._t(spark, SF_DIR, "documents").count()
     if sub == "neardup":
         t = cmd_neardup(spark)

@@ -26,6 +26,28 @@ touching a live file, then publishes once — shard partitions, the
 dictionary artifacts, ``ledger.json``, ``manifest.json`` — through a
 journal that the next writer replays forward after a crash.
 
+Two commit backends compute into that staging root, picked per commit
+by the ``LOCAL_MAX_COMMIT_ROWS`` guard on the delta docs plus the
+prior dictionary rows the merge reads:
+
+* **local** (at or under the guard): the commit runs in the driver on
+  pandas + pyarrow. An incremental ``build`` brings its delta rows to
+  the driver once; ``delete_docs`` / ``update_docs`` read the
+  candidate ``docs/shard=S`` partitions with pyarrow; ``compact_index``
+  rewrites each shard partition with pyarrow. A small commit then
+  starts at most the fingerprint and delta-collect jobs of a build
+  input, and none for a delete, update or compaction — most of a
+  Spark commit of a few shards is job dispatch, not work.
+* **Spark**: fresh builds (no kept shard: the delta is the whole
+  corpus, where the executors' parallel encode wins and there is no
+  prior dictionary to merge) and deltas above the guard.
+
+Both run the same tokenizer (``_tokenize``), the same encoder
+(``encode_groups``) and the same dictionary rule (prior dictionary −
+replaced ``dict_parts`` + new partials), and write every artifact with
+the same schema (``schemas.*``), so either backend's commit reads the
+same through both query backends and leaves row-identical artifacts.
+
 The reference analog of this stage is the chunked extract-assemble-load
 loop in GxdResultIndexer.java:900-1268 (chunks == partitions here) with
 its hand-rolled HashMap broadcast caches (==F.broadcast / broadcast
@@ -37,10 +59,12 @@ Lucene.
 from __future__ import annotations
 
 import functools
+import hashlib
 import json
 import os
 import shutil
 import time
+import zlib
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 
@@ -52,6 +76,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from gxdindexer_spark import schemas
 from gxdindexer_spark.functions import analyze, bm25, hashing
@@ -72,6 +97,24 @@ JOURNAL = ".publish.json"
 # ledger metrics are read driver-side with pyarrow up to this many
 # bytes of touched partitions, with Spark above it
 ARROW_METRICS_MAX = 256 << 20
+#: Commit-backend guard (see module docstring): a commit whose delta
+#: docs, at ``ROWS_PER_DELTA_DOC`` rows each, plus the prior dictionary
+#: rows its merge reads number at most this runs on the driver-local
+#: backend, a larger one on Spark. Set from ``bench_extra.py
+#: commit_crossover`` (BENCH/commit_crossover.json: append commits on
+#: local[4], median of 5, prior dictionaries of 0.9k, 5.5k and 20k
+#: rows): the local backend wins every 80-doc delta (0.75-2.7 s vs
+#: 2.2-2.9 s on Spark) and every one-shard delta up to 1280 docs
+#: (1.0-3.8 s vs 2.3-4.8 s); spread over 4 shards, Spark's parallel
+#: encode ties from 320 docs (2.0 s vs 1.9 s at 5.5k rows, 3.1 s vs
+#: 3.0 s at 20k) and wins at 1280 on the 0.9k-row base (4.5 s vs
+#: 4.1 s). A delta doc costs the local backend about 2 ms of tokenize
+#: + encode, a dictionary row 4-60 us of merge, hence the weight. The
+#: guard also bounds what a local commit holds in the driver.
+LOCAL_MAX_COMMIT_ROWS = 50_000
+ROWS_PER_DELTA_DOC = 100
+POSTING_COLS = [f.name for f in schemas.POSTINGS.fields]
+ENCODE_KEYS = ["shard", "field", "term_id"]
 
 
 def _empty_like(spark: SparkSession, schema: T.StructType) -> DataFrame:
@@ -98,36 +141,95 @@ def term_freqs_df(
     workers like the rest of the builder params — tiny)."""
     fields = fields or DEFAULT_FIELDS
 
-    out_cols = ["doc_id", "shard", "field", "term", "term_id", "tf", "dl"]
-    if with_positions:
-        out_cols.append("positions")
-
     def tok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
-                continue
-            shard_of = pdf.set_index("doc_id")["shard"]
-            for field, tokenizer in fields.items():
-                if with_positions:
-                    tf = analyze.term_freqs_positions(
-                        pdf["doc_id"], pdf[field], tokenizer,
-                        synonyms=synonyms,
-                    )
-                else:
-                    tf = analyze.term_freqs(
-                        pdf["doc_id"], pdf[field], tokenizer,
-                        synonyms=synonyms,
-                    )
-                if not len(tf):
-                    continue
-                tf.insert(1, "shard", shard_of.loc[tf["doc_id"]].to_numpy())
-                tf.insert(2, "field", field)
-                tf["term_id"] = hashing.term_ids(tf["term"])
-                yield tf[out_cols]
+            yield from _tokenize(pdf, fields, with_positions, synonyms)
 
     schema = schemas.TERM_FREQS if with_positions else schemas.TERM_FREQS_BASE
     cols = ["doc_id", "shard"] + list(fields)
     return docs.select(*cols).mapInPandas(tok, schema=schema)
+
+
+def _tokenize(
+    pdf: pd.DataFrame,
+    fields: dict[str, str],
+    with_positions: bool,
+    synonyms: dict[str, list[str]] | None,
+) -> Iterator[pd.DataFrame]:
+    """One batch of docs (doc_id, shard, <fields>) -> its TERM_FREQS
+    rows, one frame per non-empty field: the tokenizer of both commit
+    backends (``term_freqs_df`` maps it over Arrow batches, the local
+    backend calls it on the delta)."""
+    if not len(pdf):
+        return
+    out_cols = ["doc_id", "shard", "field", "term", "term_id", "tf", "dl"]
+    if with_positions:
+        out_cols.append("positions")
+    shard_of = pdf.set_index("doc_id")["shard"]
+    for field, tokenizer in fields.items():
+        if with_positions:
+            tf = analyze.term_freqs_positions(
+                pdf["doc_id"], pdf[field], tokenizer, synonyms=synonyms,
+            )
+        else:
+            tf = analyze.term_freqs(
+                pdf["doc_id"], pdf[field], tokenizer, synonyms=synonyms,
+            )
+        if not len(tf):
+            continue
+        tf.insert(1, "shard", shard_of.loc[tf["doc_id"]].to_numpy())
+        tf.insert(2, "field", field)
+        tf["term_id"] = hashing.term_ids(tf["term"])
+        yield tf[out_cols]
+
+
+def encode_groups(
+    chunk: pd.DataFrame,
+    avgdl: dict[str, float],
+    k1: float,
+    b: float,
+    block_size: int,
+    with_positions: bool,
+) -> pd.DataFrame:
+    """Whole (shard, field, term_id) groups, rows sorted by those keys
+    then doc_id -> one POSTINGS row per group: the encoder of both
+    commit backends. Group bounds come from numpy on the sorted key
+    arrays, and each group's postings reach ``encode_postings`` as
+    array slices (no per-group sub-frame)."""
+    n = len(chunk)
+    sh = chunk["shard"].to_numpy()
+    fl = chunk["field"].to_numpy()
+    tid = chunk["term_id"].to_numpy()
+    cut = (
+        np.flatnonzero(
+            (sh[1:] != sh[:-1]) | (fl[1:] != fl[:-1]) | (tid[1:] != tid[:-1])
+        )
+        + 1
+    )
+    starts = np.concatenate(([0], cut)) if n else cut
+    ends = np.concatenate((cut, [n])) if n else cut
+    docs = chunk["doc_id"].to_numpy(np.int64)
+    tfs = chunk["tf"].to_numpy(np.uint64)
+    dls = chunk["dl"].to_numpy(np.uint64)
+    dlf = dls.astype(np.float64)
+    pos = chunk["positions"].to_numpy() if with_positions else None
+    rows = []
+    for lo, hi in zip(starts.tolist(), ends.tolist()):
+        f = fl[lo]
+        row = encode_postings(
+            docs[lo:hi],
+            tfs[lo:hi],
+            bm25.tf_norm(tfs[lo:hi], dlf[lo:hi], avgdl[f], k1, b),
+            block_size,
+            dls=dls[lo:hi],
+            positions=(
+                [np.asarray(p, dtype=np.int64) for p in pos[lo:hi]]
+                if pos is not None
+                else None
+            ),
+        )
+        rows.append({"shard": sh[lo], "field": f, "term_id": tid[lo], **row})
+    return pd.DataFrame(rows, columns=POSTING_COLS)
 
 
 def _stream_groups(
@@ -203,8 +305,6 @@ class IndexBuilder:
         resume with different params (k1/b/block_size/tokenizers/
         positions/...) rebuilds instead of silently mixing postings
         built under one config with a manifest describing another."""
-        import hashlib
-
         blob = json.dumps(
             {
                 "fields": self.fields,
@@ -259,10 +359,43 @@ class IndexBuilder:
             for r in rows
         }
 
+    def _fp_map_local(self, docs: pd.DataFrame) -> dict[int, str]:
+        """Driver-local twin of ``_fp_map``, equal strings on equal
+        rows: the row hash is CRC-32 of the UTF-8 bytes of
+        ``concat_ws("\x1f", content_sha256, <other indexed fields,
+        null as "">)`` (``concat_ws`` skips a null hash)."""
+        pfp = self._params_fp()
+        nonc = [f for f in sorted(self.fields) if f != "content"]
+
+        def text(v) -> str:
+            return "" if v is None or pd.isna(v) else str(v)
+
+        crc = [
+            zlib.crc32(
+                "\x1f".join(
+                    ([] if sha is None else [sha]) + [text(v) for v in rest]
+                ).encode()
+            )
+            for sha, *rest in zip(
+                docs["content_sha256"], *[docs[f] for f in nonc]
+            )
+        ]
+        agg = (
+            pd.DataFrame({"shard": docs["shard"].to_numpy(), "crc": crc})
+            .groupby("shard")["crc"]
+            .agg(["size", "sum"])
+        )
+        return {
+            int(sh): f"{int(r['size'])}:{int(r['sum'])}:{pfp}"
+            for sh, r in agg.iterrows()
+        }
+
     # ------------------------------------------------------------ build
 
     def postings_df(self, tf: DataFrame, avgdl: dict[str, float]) -> DataFrame:
         """TERM_FREQS -> final POSTINGS rows (single-phase, shard-keyed).
+        A pandas ``tf`` (the driver-local commit backend) gives a pandas
+        frame of the same rows.
 
         ONE shuffle: repartition on shard — the exact key the
         partitioned write needs, so the write still emits one file per
@@ -286,11 +419,18 @@ class IndexBuilder:
         block-max pruning treats as metadata (rank-identical,
         property-tested WAND == TAAT).
         """
+        k1, b_, bs = self.k1, self.b, self.block_size
+        with_pos = self.with_positions
+        if isinstance(tf, pd.DataFrame):
+            # driver-local backend: the same encoder over the delta,
+            # sorted as the Spark plan below arranges each partition
+            return encode_groups(
+                tf.sort_values([*ENCODE_KEYS, "doc_id"], ignore_index=True),
+                avgdl, k1, b_, bs, with_pos,
+            )
         spark = tf.sparkSession
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         b_avgdl = spark.sparkContext.broadcast(avgdl)
-        k1, b_, bs = self.k1, self.b, self.block_size
-        with_pos = self.with_positions
         # drop the term STRING before the shuffle: only numeric
         # columns (plus the tiny field tag) cross the Arrow boundary.
         cols = [
@@ -303,51 +443,24 @@ class IndexBuilder:
         ]
         if self.with_positions:
             cols.append(F.col("positions"))
-        keys = ["shard", "field", "term_id"]
         arranged = (
             tf.select(*cols)
             .repartition(n_parts, "shard")
-            .sortWithinPartitions(*keys, "doc_id")
+            .sortWithinPartitions(*ENCODE_KEYS, "doc_id")
         )
 
         def encode_stream(
             batches: Iterator[pd.DataFrame],
         ) -> Iterator[pd.DataFrame]:
-            """Group-aware streaming encoder: pandas-groupby within each
-            Arrow batch, carrying the (possibly split) last group over
-            to the next batch so memory stays bounded by group size,
-            not partition size."""
+            """Group-aware streaming encoder: carries the (possibly
+            split) last group of each Arrow batch over to the next so
+            memory stays bounded by group size, not partition size."""
             avg = b_avgdl.value
-            use_pos = with_pos
-
-            def emit(chunk: pd.DataFrame) -> pd.DataFrame:
-                rows = []
-                for (sh, fl, tid), g in chunk.groupby(keys, sort=False):
-                    tfs = g["tf"].to_numpy(np.uint64)
-                    dls = g["dl"].to_numpy(np.uint64)
-                    tfn = bm25.tf_norm(
-                        tfs, dls.astype(np.float64), avg[fl], k1, b_
-                    )
-                    pos = (
-                        [np.asarray(p, dtype=np.int64) for p in g["positions"]]
-                        if use_pos
-                        else None
-                    )
-                    row = encode_postings(
-                        g["doc_id"].to_numpy(np.int64),
-                        tfs,
-                        tfn,
-                        bs,
-                        dls=dls,
-                        positions=pos,
-                    )
-                    rows.append(
-                        {"shard": sh, "field": fl, "term_id": tid, **row}
-                    )
-                out = pd.DataFrame(rows)
-                return out[[f.name for f in schemas.POSTINGS.fields]]
-
-            yield from _stream_groups(batches, keys, emit)
+            yield from _stream_groups(
+                batches,
+                ENCODE_KEYS,
+                lambda chunk: encode_groups(chunk, avg, k1, b_, bs, with_pos),
+            )
 
         return arranged.mapInPandas(encode_stream, schema=schemas.POSTINGS)
 
@@ -395,17 +508,28 @@ class IndexBuilder:
     def _build_locked(
         self,
         commit: "_Commit",
-        docs: DataFrame,
+        docs: DataFrame | pa.Table,
         resume: bool,
         append: bool = False,
         drop_shards: set[int] | None = None,
         precomputed_fp: dict[int, str] | None = None,
+        spark: SparkSession | None = None,
     ) -> dict:
         """Body of ``build``: computes into ``commit``'s staging root
-        and lists what the commit publishes."""
-        spark = docs.sparkSession
+        and lists what the commit publishes. ``docs`` is a Spark frame,
+        or the Arrow table a driver-local delete/update hands over with
+        its ``spark`` session (and commits on the local backend)."""
         index_dir = commit.index_dir
         t0 = time.monotonic()
+        local = isinstance(docs, pa.Table)
+        rows_here = docs if local else None
+        if not local:
+            spark = docs.sparkSession
+            if docs.isLocal():
+                # a local relation: its rows already live in the
+                # driver, so they come over once and are fingerprinted
+                # here
+                rows_here = docs.toArrow()
         # input fingerprint per shard (see _fp_map for the contract).
         # Point mutations (delete/update) pass ``precomputed_fp``:
         # the same agg, computed by the caller CONCURRENTLY with its
@@ -415,6 +539,8 @@ class IndexBuilder:
         # mutations still skip with shards_built == 0).
         if precomputed_fp is not None:
             shard_fp = dict(precomputed_fp)
+        elif rows_here is not None:
+            shard_fp = self._fp_map_local(rows_here.to_pandas())
         else:
             shard_fp = self._fp_map(docs)
         done = read_ledger(index_dir)
@@ -470,9 +596,33 @@ class IndexBuilder:
             "shards_built": len(pending),
             "shards_skipped": len(shard_fp) - len(pending),
         }
+        # commit backend (module docstring): an incremental Spark-frame
+        # build under the guard brings its pending rows to the driver
+        # once (n_docs leads each shard's fingerprint)
+        if (
+            not local
+            and kept_entries
+            and _fits_local(
+                index_dir,
+                sum(int(shard_fp[s].split(":", 1)[0]) for s in pending),
+            )
+        ):
+            local = True
+            if rows_here is not None:
+                docs = rows_here.filter(
+                    pc.is_in(
+                        rows_here["shard"],
+                        pa.array(pending, rows_here["shard"].type),
+                    )
+                )
+            elif pending:
+                docs = docs.filter(F.col("shard").isin(pending)).toArrow()
+        metrics["backend"] = "local" if local else "spark"
         avgdl: dict[str, float] = {}
         delta_field_stats: dict[int, dict[str, dict]] = {}
-        if pending:
+        if pending and local:
+            tf, dp = self._stage_local(commit, docs, delta_field_stats)
+        elif pending:
             # repartition on the shard key: the docs input is typically
             # a handful of scan partitions (one smallish parquet file →
             # ONE task), which serialized the whole Arrow tokenizer pass
@@ -564,11 +714,20 @@ class IndexBuilder:
             # (their live dict_parts, untouched until publish) when any
             # shard is kept, plus the rebuilt shards' in-memory partials
             rows = []
-            if kept_entries:
-                rows.append(spark.read.parquet(f"{index_dir}/dictionary"))
-                gone = sorted(
-                    replaced & _artifact_shards(index_dir, ("dict_parts",))
+            gone = sorted(
+                replaced & _artifact_shards(index_dir, ("dict_parts",))
+            )
+            if kept_entries and local:
+                rows.append(
+                    pq.read_table(f"{index_dir}/dictionary").to_pandas()
                 )
+                if gone:
+                    old = _read_partitions(
+                        index_dir, "dict_parts", gone
+                    ).to_pandas()
+                    rows.append(old.assign(df=-old["df"], cf=-old["cf"]))
+            elif kept_entries:
+                rows.append(spark.read.parquet(f"{index_dir}/dictionary"))
                 if gone:
                     rows.append(
                         spark.read.parquet(f"{index_dir}/dict_parts")
@@ -582,13 +741,26 @@ class IndexBuilder:
             if pending:
                 rows.append(dp)
             # no source: the commit leaves no shard, so no term
-            rows = rows or [_empty_like(spark, schemas.DICTIONARY)]
+            rows = rows or [
+                to_arrow_schema(schemas.DICTIONARY).empty_table().to_pandas()
+                if local
+                else _empty_like(spark, schemas.DICTIONARY)
+            ]
             self._finalize_stats(commit, rows, totals)
             return "incremental" if kept_entries else "full"
 
         finalize_mode = "skipped"
         metrics_fut = None
-        if pending:
+        if pending and local:
+            _stage_shards(
+                commit, "postings", self.postings_df(tf, avgdl),
+                schemas.POSTINGS,
+            )
+            finalize_mode = _run_finalize()
+            metrics_fut = commit.pool.submit(
+                self._shard_metrics, spark, commit.staging, pending
+            )
+        elif pending:
             # the postings encode+write and finalize's dictionary work
             # are independent (both read the cached tf; each stages its
             # own dirs) — finalize runs on the commit pool CONCURRENTLY
@@ -742,7 +914,13 @@ class IndexBuilder:
 
         corpus_stats: written from ``field_totals``, the global
         per-field [n_docs, sum_dl] summed from the ledger.
+
+        pandas ``rows`` (the driver-local backend) run the same rule
+        in the driver (``_finalize_stats_local``).
         """
+        if isinstance(rows[0], pd.DataFrame):
+            self._finalize_stats_local(commit, rows, field_totals)
+            return
         spark = rows[0].sparkSession
         # one source aggregation feeds the collision check and the
         # three dictionary writes: checkpointed once (small: distinct
@@ -832,16 +1010,11 @@ class IndexBuilder:
             )
 
         def write_corpus_stats() -> None:
-            vals = [
-                (f, int(t[0]), int(t[1]), t[1] / t[0])
-                for f, t in sorted(field_totals.items())
-                if t[0]
-            ]
             # Arrow path (pandas), NOT createDataFrame(list): a python
             # list becomes a 32-partition python RDD whose write spawns
             # a Python worker per partition (~7s for one row on
             # local[32]); the pandas local relation stays JVM-side.
-            pdf = pd.DataFrame(vals, columns=schemas.CORPUS_STATS.names)
+            pdf = _corpus_stats(field_totals)
             spark.createDataFrame(pdf, schemas.CORPUS_STATS).coalesce(
                 1
             ).write.parquet(commit.stage("corpus_stats"))
@@ -862,6 +1035,108 @@ class IndexBuilder:
         ]
         for fut in futs:
             fut.result()
+
+    @staticmethod
+    def _finalize_stats_local(
+        commit: "_Commit",
+        rows: list[pd.DataFrame],
+        field_totals: dict[str, list[int]],
+    ) -> None:
+        """Driver-local twin of ``_finalize_stats``: the same sum over
+        ``rows``, clash check and four artifacts, written with pyarrow
+        in the Arrow form of their schemas."""
+        keys = ["field", "term", "term_id"]
+        d = (
+            pd.concat(
+                [r[[*keys, "df", "cf"]] for r in rows], ignore_index=True
+            )
+            .groupby(keys, as_index=False)[["df", "cf"]]
+            .sum()
+        )
+        d = d[d["df"] > 0].sort_values(["field", "term"], ignore_index=True)
+        n_ids = d[["field", "term_id"]].drop_duplicates().shape[0]
+        if n_ids != len(d):
+            raise RuntimeError(
+                f"{len(d) - n_ids} term_id collisions "
+                "detected — widen term_id (hashing.py) before "
+                "using this index"
+            )
+
+        def write(art: str, pdf: pd.DataFrame, schema: T.StructType) -> None:
+            _write_local(
+                commit.stage(art),
+                pa.Table.from_pandas(
+                    pdf[schema.names], schema=to_arrow_schema(schema),
+                    preserve_index=False,
+                ),
+            )
+
+        write("dictionary", d, schemas.DICTIONARY)
+        rev = d.assign(rev_term=[t[::-1] for t in d["term"]])
+        write(
+            "dictionary_rev",
+            rev.sort_values(["field", "rev_term"]),
+            schemas.DICTIONARY_REV,
+        )
+        grams = [
+            (f, t, df, g)
+            for f, t, df in zip(d["field"], d["term"], d["df"].tolist())
+            if len(t) >= 3
+            for g in dict.fromkeys(t[i : i + 3] for i in range(len(t) - 2))
+        ]
+        write(
+            "dictionary_ngrams",
+            pd.DataFrame(
+                grams, columns=schemas.DICTIONARY_NGRAMS.names
+            ).sort_values(["field", "gram"], kind="stable"),
+            schemas.DICTIONARY_NGRAMS,
+        )
+        write(
+            "corpus_stats", _corpus_stats(field_totals), schemas.CORPUS_STATS
+        )
+
+    def _stage_local(
+        self,
+        commit: "_Commit",
+        docs: pa.Table,
+        delta_field_stats: dict[int, dict[str, dict]],
+    ) -> tuple[pd.DataFrame, pd.DataFrame]:
+        """Driver-local twin of the Spark stage in ``_build_locked``:
+        tokenizes the delta ``docs`` once, stages its docs, doc_stats
+        and dict_parts partitions and fills ``delta_field_stats``.
+        -> (term freqs, dictionary partials)."""
+        _stage_shards(commit, "docs", docs)
+        cols = list(dict.fromkeys(["doc_id", "shard", *self.fields]))
+        frames = list(
+            _tokenize(
+                docs.select(cols).to_pandas(), self.fields,
+                self.with_positions, self.synonyms,
+            )
+        )
+        tf = (
+            pd.concat(frames, ignore_index=True)
+            if frames
+            else to_arrow_schema(
+                schemas.TERM_FREQS
+                if self.with_positions
+                else schemas.TERM_FREQS_BASE
+            ).empty_table().to_pandas()
+        )
+        doc_stats = tf[["doc_id", "field", "dl", "shard"]].drop_duplicates(
+            ["doc_id", "field"]
+        )
+        _stage_shards(commit, "doc_stats", doc_stats, schemas.DOC_STATS)
+        for (sh, f), dl in doc_stats.groupby(["shard", "field"])["dl"]:
+            delta_field_stats.setdefault(int(sh), {})[f] = {
+                "n_docs": len(dl), "sum_dl": int(dl.sum()),
+            }
+        dp = (
+            tf.groupby(["shard", "field", "term", "term_id"], sort=False)
+            .agg(df=("tf", "size"), cf=("tf", "sum"))
+            .reset_index()
+        )
+        _stage_shards(commit, "dict_parts", dp, schemas.DICT_PARTS)
+        return tf, dp
 
     def _shard_metrics(
         self, spark: SparkSession, root: str, shards: list[int]
@@ -1004,17 +1279,57 @@ def delete_docs(
         return nothing
     with _Commit(index_dir) as commit:
         # an index left with no shard holds no doc to delete
-        if not _artifact_shards(index_dir, ("docs",)):
+        present = _artifact_shards(index_dir, ("docs",))
+        if not present:
             return nothing
-        store = spark.read.parquet(f"{index_dir}/docs")
-        scoped = store
         candidates: list[int] | None = None
         if assume_dense_shards:
             with open(f"{index_dir}/manifest.json") as fh:
                 dps = int(json.load(fh).get("docs_per_shard") or 0)
             if dps:
                 candidates = sorted({i // dps for i in ids})
-                scoped = store.filter(F.col("shard").isin(candidates))
+        scope = sorted(
+            present if candidates is None else present & set(candidates)
+        )
+        if _fits_local(index_dir, _ledger_docs(index_dir, scope)):
+            # driver-local backend: the candidate partitions via pyarrow
+            if not scope:
+                return nothing
+            store = _read_partitions(index_dir, "docs", scope)
+            gone = pc.is_in(store["doc_id"], pa.array(ids, pa.int64()))
+            per = (
+                pd.DataFrame(
+                    {
+                        "shard": store["shard"].to_numpy(),
+                        "gone": gone.to_numpy(zero_copy_only=False),
+                    }
+                )
+                .groupby("shard")["gone"]
+                .agg(["size", "sum"])
+            )
+            per = per[per["sum"] > 0]
+            if not len(per):
+                return nothing
+            affected = {int(s): int(r["sum"]) for s, r in per.iterrows()}
+            emptied = {
+                int(s) for s, r in per.iterrows() if r["sum"] == r["size"]
+            }
+            rebuild = sorted(set(affected) - emptied)
+            survivors = store.filter(
+                pc.and_(
+                    pc.invert(gone),
+                    pc.is_in(store["shard"], pa.array(rebuild, pa.int32())),
+                )
+            )
+            metrics = builder._build_locked(
+                commit, survivors, resume=True, append=True,
+                drop_shards=emptied, spark=spark,
+            )
+            return _delete_metrics(metrics, affected, rebuild, emptied)
+        store = spark.read.parquet(f"{index_dir}/docs")
+        scoped = store
+        if candidates is not None:
+            scoped = store.filter(F.col("shard").isin(candidates))
         # one pass answers both questions (tombstones per shard AND
         # shard totals): the former two sequential jobs scanned the
         # same scoped rows twice
@@ -1082,12 +1397,34 @@ def delete_docs(
             drop_shards=emptied,
             precomputed_fp=pre_fp,
         )
+    return _delete_metrics(metrics, affected, rebuild, emptied)
+
+
+def _delete_metrics(
+    metrics: dict, affected: dict[int, int], rebuild: list, emptied: set
+) -> dict:
     metrics.update(
         docs_deleted=sum(affected.values()),
         shards_rebuilt=len(rebuild),
         shards_dropped=len(emptied),
     )
     return metrics
+
+
+def _fits_local(index_dir: str, delta_docs: int, merge: bool = True) -> bool:
+    """The commit-backend guard (``LOCAL_MAX_COMMIT_ROWS``) for a
+    commit over ``delta_docs`` docs; ``merge``: it merges the prior
+    dictionary."""
+    rows = ROWS_PER_DELTA_DOC * delta_docs
+    if merge:
+        rows += _dictionary_rows(index_dir)
+    return rows <= LOCAL_MAX_COMMIT_ROWS
+
+
+def _ledger_docs(index_dir: str, shards) -> int:
+    """Docs the ledger records for ``shards``."""
+    ledger = read_ledger(index_dir)
+    return sum(int(ledger.get(s, {}).get("n_docs", 0)) for s in shards)
 
 
 def update_docs(
@@ -1175,26 +1512,41 @@ def _update_docs_locked(
 ) -> dict:
     """Body of ``update_docs``, inside its commit."""
     index_dir = commit.index_dir
-    store = spark.read.parquet(f"{index_dir}/docs")
-    store_types = {f.name: f.dataType for f in store.schema.fields}
+    present = _artifact_shards(index_dir, ("docs",))
+    d0 = f"{index_dir}/docs/shard={min(present)}"
+    part = next(n for n in sorted(os.listdir(d0)) if n.endswith(".parquet"))
+    store_cols = pq.read_schema(f"{d0}/{part}").names + ["shard"]
     upd_cols = sorted({c for u in updates.values() for c in u})
     for c in upd_cols:
-        if c not in store_types:
+        if c not in store_cols:
             raise ValueError(
                 f"update column {c!r} is not in the doc store "
-                f"(has: {sorted(store_types)})"
+                f"(has: {sorted(store_cols)})"
             )
     with open(f"{index_dir}/manifest.json") as fh:
         manifest = json.load(fh)
     indexed = set(manifest.get("fields") or {})
     rebuild_class = bool(set(upd_cols) & indexed)
-    scoped = store
     candidates: list[int] | None = None
     if assume_dense_shards:
         dps = int(manifest.get("docs_per_shard") or 0)
         if dps:
             candidates = sorted({i // dps for i in ids})
-            scoped = store.filter(F.col("shard").isin(candidates))
+    scope = sorted(
+        present if candidates is None else present & set(candidates)
+    )
+    if _fits_local(
+        index_dir, _ledger_docs(index_dir, scope), merge=rebuild_class
+    ):
+        return _update_docs_local(
+            commit, spark, builder, updates, ids, upd_cols, scope,
+            rebuild_class,
+        )
+    store = spark.read.parquet(f"{index_dir}/docs")
+    store_types = {f.name: f.dataType for f in store.schema.fields}
+    scoped = store
+    if candidates is not None:
+        scoped = store.filter(F.col("shard").isin(candidates))
     # one job yields the affected shards AND the updated-doc count
     # (doc_id is unique in the store, so rows hit == docs updated);
     # the former shape paid a distinct-collect here plus a semi-join
@@ -1291,6 +1643,67 @@ def _update_docs_locked(
             )
 
         list(commit.pool.map(_rewrite, affected))
+        commit.publish += [f"docs/shard={s}" for s in affected]
+        metrics = {}
+    metrics.update(docs_updated=n_updated, shards_rebuilt=len(affected))
+    return metrics
+
+
+def _update_docs_local(
+    commit: "_Commit",
+    spark: SparkSession,
+    builder: "IndexBuilder",
+    updates: dict[int, dict],
+    ids: list[int],
+    upd_cols: list[str],
+    scope: list[int],
+    rebuild_class: bool,
+) -> dict:
+    """Driver-local backend of ``update_docs``: the candidate
+    ``docs/shard=S`` partitions are read with pyarrow and merged in the
+    driver with the Spark path's rule (a ``None`` value keeps the old
+    one, a new value is cast to the column's type, ``content_sha256``
+    recomputed on a content update)."""
+    nothing = {"docs_updated": 0, "shards_rebuilt": 0}
+    if not scope:
+        return nothing
+    store = _read_partitions(commit.index_dir, "docs", scope)
+    hit = pc.is_in(store["doc_id"], pa.array(ids, pa.int64()))
+    affected = sorted(set(store["shard"].filter(hit).to_pylist()))
+    if not affected:
+        return nothing
+    n_updated = int(pc.sum(hit.cast(pa.int64())).as_py())
+    merged = store.filter(
+        pc.is_in(store["shard"], pa.array(affected, pa.int32()))
+    )
+    doc_ids = merged["doc_id"].to_pylist()
+    upd = {int(i): u for i, u in updates.items()}
+    for c in upd_cols:
+        typ = merged.schema.field(c).type
+        vals = merged[c].to_pylist()
+        for j, d in enumerate(doc_ids):
+            v = upd.get(d, {}).get(c)
+            if v is not None:
+                vals[j] = pa.array([v]).cast(typ)[0].as_py()
+        merged = merged.set_column(
+            merged.schema.get_field_index(c), merged.schema.field(c),
+            pa.array(vals, type=typ),
+        )
+    if "content" in upd_cols and "content_sha256" in merged.column_names:
+        sha = [
+            hashlib.sha256((t or "").encode()).hexdigest()
+            for t in merged["content"].to_pylist()
+        ]
+        i = merged.schema.get_field_index("content_sha256")
+        merged = merged.set_column(
+            i, merged.schema.field(i), pa.array(sha, pa.string())
+        )
+    if rebuild_class:
+        metrics = builder._build_locked(
+            commit, merged, resume=True, append=True, spark=spark
+        )
+    else:
+        _stage_shards(commit, "docs", merged)
         commit.publish += [f"docs/shard={s}" for s in affected]
         metrics = {}
     metrics.update(docs_updated=n_updated, shards_rebuilt=len(affected))
@@ -1440,6 +1853,75 @@ def _swap_dir_commit(index_dir: str, rel: str, drop: bool = False) -> None:
         # moved aside, but the replacement is gone: roll back
         os.rename(old, src)
     shutil.rmtree(old, ignore_errors=True)
+
+
+def _corpus_stats(field_totals: dict[str, list[int]]) -> pd.DataFrame:
+    """corpus_stats rows from the global per-field [n_docs, sum_dl]."""
+    return pd.DataFrame(
+        [
+            (f, int(t[0]), int(t[1]), t[1] / t[0])
+            for f, t in sorted(field_totals.items())
+            if t[0]
+        ],
+        columns=schemas.CORPUS_STATS.names,
+    )
+
+
+def _dictionary_rows(index_dir: str) -> int:
+    """Rows of the live dictionary from its file footers (0 if none)."""
+    d = f"{index_dir}/dictionary"
+    if not os.path.isdir(d):
+        return 0
+    return sum(
+        pq.ParquetFile(f"{d}/{n}").metadata.num_rows
+        for n in os.listdir(d)
+        if n.endswith(".parquet")
+    )
+
+
+def _write_local(path: str, table: pa.Table) -> None:
+    """Write ``table`` as the one parquet file of directory ``path``."""
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(table, f"{path}/part-00000-local.parquet")
+
+
+def _stage_shards(
+    commit: "_Commit",
+    art: str,
+    rows: pd.DataFrame | pa.Table,
+    schema: T.StructType | None = None,
+) -> None:
+    """Stage ``rows`` (with a shard column) as one file per shard
+    partition of ``art``, the layout the Spark backend's partitioned
+    write leaves; a pandas frame is written in the Arrow form of
+    ``schema``."""
+    tbl = (
+        rows
+        if isinstance(rows, pa.Table)
+        else pa.Table.from_pandas(
+            rows[schema.names], schema=to_arrow_schema(schema),
+            preserve_index=False,
+        )
+    )
+    for s in pc.unique(tbl["shard"]).to_pylist():
+        _write_local(
+            commit.stage(f"{art}/shard={s}"),
+            tbl.filter(pc.equal(tbl["shard"], s)).drop_columns(["shard"]),
+        )
+
+
+def _read_partitions(index_dir: str, art: str, shards) -> pa.Table:
+    """The ``art/shard=S`` partitions of ``shards`` as one Arrow table
+    with its shard column (the Spark read's partition column)."""
+    parts = []
+    for s in shards:
+        t = pq.read_table(f"{index_dir}/{art}/shard={s}")
+        parts.append(
+            t.append_column(
+                "shard", pa.array(np.full(t.num_rows, s, np.int32))
+            )
+        )
+    return pa.concat_tables(parts, promote_options="permissive")
 
 
 def _field_totals(
@@ -1718,27 +2200,37 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     """
     with _Commit(index_dir) as commit:
         stats: dict = {}
+        # driver-local backend: the guard on every doc it rewrites
+        local = _fits_local(
+            index_dir,
+            _ledger_docs(index_dir, _artifact_shards(index_dir, ("docs",))),
+            merge=False,
+        )
         for art in ("postings", "doc_stats", "dict_parts", "docs"):
             src = f"{index_dir}/{art}"
-            if not _artifact_shards(index_dir, (art,)):
+            shards = _artifact_shards(index_dir, (art,))
+            if not shards:
                 continue
             # sort by the query-pushed keys inside each shard file so
             # parquet row-group min/max stats prune the term_id IN-list
             # scans (a query then reads only the row groups holding
             # its terms, not the whole shard file).
-            sort_keys = (
-                ["shard", "field", "term_id"]
-                if art == "postings"
-                else ["shard"]
-            )
-            (
-                spark.read.parquet(src)
-                .repartition("shard")
-                .sortWithinPartitions(*sort_keys)
-                .write.option("maxRecordsPerFile", 0)
-                .partitionBy("shard")
-                .parquet(commit.stage(art))
-            )
+            sort_keys = ["field", "term_id"] if art == "postings" else []
+            if local:
+                for s in sorted(shards):
+                    t = pq.read_table(f"{src}/shard={s}")
+                    if sort_keys:
+                        t = t.sort_by([(k, "ascending") for k in sort_keys])
+                    _write_local(commit.stage(f"{art}/shard={s}"), t)
+            else:
+                (
+                    spark.read.parquet(src)
+                    .repartition("shard")
+                    .sortWithinPartitions("shard", *sort_keys)
+                    .write.option("maxRecordsPerFile", 0)
+                    .partitionBy("shard")
+                    .parquet(commit.stage(art))
+                )
             stats[art] = {
                 "files_before": _parquet_files(src),
                 "files_after": _parquet_files(commit.stage(art)),

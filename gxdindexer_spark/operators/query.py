@@ -364,7 +364,7 @@ class IndexQueryEngine:
                             tbl["field"], tbl["term"], tbl["df"]
                         )
                     }
-            except Exception:  # noqa: BLE001 — non-local fs: Spark path
+            except (OSError, pa.ArrowInvalid):  # non-local fs: Spark path
                 d = self._dictionary
                 if d.count() <= preload_dictionary:
                     self._dict_cache = {

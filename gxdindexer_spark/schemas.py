@@ -74,6 +74,33 @@ DICTIONARY = T.StructType(
     ]
 )
 
+# Per-shard dictionary contributions (the ``dict_parts`` artifact).
+DICT_PARTS = T.StructType(
+    [T.StructField("shard", T.IntegerType(), False)]
+    + list(DICTIONARY.fields)
+)
+
+# Reversed-term dictionary: leading-wildcard (*fix) prefix scans.
+DICTIONARY_REV = T.StructType(
+    [
+        T.StructField("field", T.StringType(), False),
+        T.StructField("rev_term", T.StringType(), False),
+        T.StructField("term", T.StringType(), False),
+        T.StructField("term_id", T.LongType(), False),
+        T.StructField("df", T.LongType(), False),
+    ]
+)
+
+# Character-3-gram -> term: fuzzy candidate generation.
+DICTIONARY_NGRAMS = T.StructType(
+    [
+        T.StructField("field", T.StringType(), False),
+        T.StructField("term", T.StringType(), False),
+        T.StructField("df", T.LongType(), False),
+        T.StructField("gram", T.StringType(), False),
+    ]
+)
+
 DOC_STATS = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

@@ -1,7 +1,8 @@
 """Writer commits: compute into staging, publish once (index_build._Commit).
 
-Invariants: a crash at any step of an incremental build or a delete
-resumes to exactly the index the uncrashed commit leaves; a reader
+Invariants: a crash at any step of an incremental build or a delete,
+on either commit backend, resumes to exactly the index the uncrashed
+commit leaves; a reader
 opened before publish sees the pre-commit index; a failed commit
 releases its threads and cached blocks; a half-done publish is
 replayed only by a holder of the writer lock.
@@ -29,6 +30,8 @@ from gxdindexer_spark.operators.index_build import (
 from gxdindexer_spark.operators.query import IndexQueryEngine
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
+
+from tests.test_commit_backends import use_commit_backend
 
 DPS = 30
 Q = "getIndexList if return"
@@ -131,10 +134,20 @@ def _crash_at(monkeypatch, step):
     return boom
 
 
-@pytest.mark.parametrize("op", ["build", "delete"])
+@pytest.mark.parametrize(
+    "op,backend",
+    [
+        ("build", "local"),
+        ("delete", "local"),
+        ("build", "spark"),
+        ("delete", "spark"),
+    ],
+    ids=["build", "delete", "build-spark", "delete-spark"],
+)
 def test_crash_at_each_commit_step_resumes_to_clean_commit(
-    op, corpus, base, spark, tmp_path, monkeypatch
+    op, backend, corpus, base, spark, tmp_path, monkeypatch
 ):
+    use_commit_backend(monkeypatch, backend)
     run = _ops(corpus, spark)[op]
     pre_results = _results(spark, base)
     pre_ledger = read_ledger(base)

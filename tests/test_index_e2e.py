@@ -20,6 +20,8 @@ from gxdindexer_spark.operators.query import IndexQueryEngine, brute_force_bm25_
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
 
+from tests.test_commit_backends import use_commit_backend
+
 N_DOCS = 400
 QUERIES = [
     "getIndexList if return",
@@ -830,7 +832,9 @@ def test_facet_counts_plan_prunes_columns(built, spark, monkeypatch):
         assert not any("content" in s for s in schemas)
 
 
-def test_incremental_finalize_matches_full(built, spark, tmpdir_idx):
+def test_incremental_finalize_matches_full(
+    built, spark, tmpdir_idx, monkeypatch, backend="local"
+):
     """North-rule scale contract: committing a delta must not re-read
     the whole index. The finalize merges the changed shards'
     dict_parts into the existing dictionary (old contributions
@@ -839,8 +843,10 @@ def test_incremental_finalize_matches_full(built, spark, tmpdir_idx):
     the merged artifacts are value-identical to a from-scratch build
     in all four mutation shapes: append a new shard, rebuild a
     changed shard, remove an orphaned shard, shrink to an empty
-    input."""
+    input. Incremental commits run on ``backend``."""
     import tempfile
+
+    use_commit_backend(monkeypatch, backend)
 
     _idx, docs, _pdocs, _m = built
     builder = IndexBuilder(docs_per_shard=100, salt_range=64, block_size=16)
@@ -914,6 +920,14 @@ def test_incremental_finalize_matches_full(built, spark, tmpdir_idx):
     for mode in ("wand", "taat"):
         assert eng.topk("getIndexList if return", k=10, mode=mode).count() == 0
     assert eng.count_matches("if").first()["n_matches"] == 0
+
+
+def test_incremental_finalize_matches_full_on_spark(
+    built, spark, tmpdir_idx, monkeypatch
+):
+    test_incremental_finalize_matches_full(
+        built, spark, tmpdir_idx, monkeypatch, "spark"
+    )
 
 
 def test_sorted_matches_pages_by_stored_field(built, spark):
@@ -1025,15 +1039,20 @@ def test_facet_counts_stored_shard_local(built, spark, monkeypatch):
         assert all("postings" in ln for ln in locations), plan
 
 
-def test_doc_level_delete(built, spark, tmpdir_idx):
+def test_doc_level_delete(
+    built, spark, tmpdir_idx, monkeypatch, backend="local"
+):
     """Tombstone-driven delete: only the shards holding deleted docs
     rebuild; a fully-emptied shard drops through the orphan path; the
     dictionary/corpus stats merge incrementally; queries exclude the
     deleted docs and match a from-scratch build of the survivors;
     replayed deletes are no-ops; deleting every doc leaves an empty
     index that serves no hits, on which deletes, updates and
-    compaction are no-ops, and a later resume rebuilds."""
+    compaction are no-ops, and a later resume rebuilds. Commits run on
+    ``backend``."""
     import tempfile
+
+    use_commit_backend(monkeypatch, backend)
 
     from gxdindexer_spark.operators.index_build import (
         compact_index,
@@ -1126,6 +1145,10 @@ def test_doc_level_delete(built, spark, tmpdir_idx):
             for r in e2.topk(q, k=15, mode="taat").collect()
         ]
         assert got == want
+
+
+def test_doc_level_delete_on_spark(built, spark, tmpdir_idx, monkeypatch):
+    test_doc_level_delete(built, spark, tmpdir_idx, monkeypatch, "spark")
 
 
 def test_leading_wildcard_expansion_and_ranking(built, spark):

@@ -29,6 +29,7 @@ from gxdindexer_spark.operators.query import IndexQueryEngine
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
 
+from tests.test_commit_backends import use_commit_backend
 from tests.test_grouping_facets import _oracle_scores
 
 N_DOCS = 150
@@ -139,10 +140,14 @@ def test_update_guards(spark, tmp_path):
     assert m == {"docs_updated": 0, "shards_rebuilt": 0}
 
 
-def test_attr_swap_crash_replays(spark, tmp_path):
+def test_attr_swap_crash_replays(
+    spark, tmp_path, monkeypatch, backend="local"
+):
     """Simulate a crash mid-swap (shard dir renamed away, tmp fully
-    written): _recover_compaction promotes the tmp on next open."""
+    written) after an attr update committed on ``backend``:
+    _recover_compaction promotes the tmp on next open."""
     idx, builder, docs, _ = _build(spark, tmp_path, "updcrash")
+    use_commit_backend(monkeypatch, backend)
     update_docs(
         spark, idx, builder, {3: {"n_chars": 111_111}},
         assume_dense_shards=True,
@@ -161,6 +166,10 @@ def test_attr_swap_crash_replays(spark, tmp_path):
     assert eng.get_docs([3], columns=("n_chars",)).collect()[0][
         "n_chars"
     ] == 111_111
+
+
+def test_attr_swap_crash_replays_on_spark(spark, tmp_path, monkeypatch):
+    test_attr_swap_crash_replays(spark, tmp_path, monkeypatch, "spark")
 
 
 def test_backup_restore_roundtrip(spark, tmp_path):
