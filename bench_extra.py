@@ -248,13 +248,18 @@ def cmd_mutate(spark) -> dict:
 
 
 def cmd_commit_crossover(spark) -> dict:
-    """Local vs Spark commit backend over delta docs x shards touched x
-    prior dictionary rows: each cell appends ``delta`` new docs spread
-    over ``shards`` new shards to a copy of a base index and times the
-    commit on each backend (median of 5 after one warm-up). Writes
-    BENCH/commit_crossover.json; the guard
-    ``index_build.LOCAL_MAX_COMMIT_ROWS`` cites it."""
+    """Local vs Spark commit backend, per commit kind, over the docs a
+    commit re-indexes or rewrites (the quantity the guard
+    ``index_build.LOCAL_MAX_COMMIT_DOCS`` bounds): appends of new
+    shards, deletes (2 docs a shard), content updates and stored-
+    attribute updates (1 doc a shard) over ``shards`` dense shards,
+    and compaction of the whole index, on bases with about 0.9k, 5.5k
+    and 20k dictionary rows. Each cell times the commit on a fresh copy
+    of the base on each backend (median of 5 after one warm-up) and
+    writes BENCH/commit_crossover.json."""
     import statistics
+
+    import pyarrow.parquet as pq
 
     from gxdindexer_spark.operators import index_build
     from gxdindexer_spark.operators.index_build import IndexBuilder
@@ -262,55 +267,98 @@ def cmd_commit_crossover(spark) -> dict:
     from gxdindexer_spark.sources.tables import prepare_docs
 
     dps, reps = 80, 5
-    bases, deltas, shard_counts = (240, 4800, 19200), (80, 320, 1280), (1, 4)
+    # base docs -> (kind, shards touched, docs appended) cells
+    plan = {
+        240: [("append", 1, 80), ("append", 4, 320), ("compact", 0, 0)],
+        4800: [
+            *[("append", k, k * dps) for k in (1, 4, 8, 16, 32)],
+            # 16 shards' worth of docs in 4 shards: fewer posting lists
+            ("append", 4, 16 * dps),
+            *[("delete", k, 0) for k in (1, 4, 8, 16)],
+            *[("update", k, 0) for k in (1, 4, 8, 16)],
+            *[("attrs", k, 0) for k in (1, 16, 60)],
+            ("compact", 0, 0),
+        ],
+        19200: [
+            ("append", 1, 80), ("append", 8, 8 * dps), ("delete", 8, 0),
+            ("compact", 0, 0),
+        ],
+    }
     work = "/tmp/gxdidx_bxcross"
     shutil.rmtree(work, ignore_errors=True)
     builder = IndexBuilder(docs_per_shard=dps, with_positions=True)
-    n_max = max(bases) + max(deltas)
-    docs = prepare_docs(
-        generate_corpus(spark, n_max, seed=5), docs_per_shard=dps
-    ).toPandas()
+    n_max = max(plan) + max(n for cells in plan.values() for *_, n in cells)
+    docs = (
+        prepare_docs(generate_corpus(spark, n_max, seed=5), docs_per_shard=dps)
+        .withColumn("n_chars", F.length("content").cast("long"))
+        .toPandas()
+    )
     schema = spark.createDataFrame(docs.head(1)).schema
+
+    def commit(kind: str, idx: str, n_base: int, k: int, n_app: int):
+        """-> (the commit to time, the docs it re-indexes or rewrites)."""
+        first = [s * dps for s in range(k)]
+        if kind == "append":
+            delta = docs[
+                (docs["doc_id"] >= n_base) & (docs["doc_id"] < n_base + n_app)
+            ].copy()
+            delta["shard"] = (
+                n_base // dps + (delta["doc_id"] - n_base) % k
+            ).astype("int32")
+            df = spark.createDataFrame(delta, schema)
+            return lambda: builder.build(df, idx, append=True), n_app
+        if kind == "delete":
+            ids = [d + j for d in first for j in (1, 2)]
+            return lambda: index_build.delete_docs(
+                spark, idx, builder, ids, assume_dense_shards=True
+            ), k * dps
+        if kind in ("update", "attrs"):
+            upd = {
+                d + 3: (
+                    {"content": f"def getIndexList{d}(): return {d}"}
+                    if kind == "update"
+                    else {"n_chars": d}
+                )
+                for d in first
+            }
+            return lambda: index_build.update_docs(
+                spark, idx, builder, upd, assume_dense_shards=True
+            ), k * dps
+        return lambda: index_build.compact_index(spark, idx), n_base
+
     cells = []
-    for n_base in bases:
+    for n_base, todo in plan.items():
         base = f"{work}/base{n_base}"
         builder.build(
             spark.createDataFrame(docs[docs["doc_id"] < n_base], schema),
             base, resume=False,
         )
-        dict_rows = index_build._dictionary_rows(base)
-        for n_delta in deltas:
-            for n_shards in shard_counts:
-                delta = docs[
-                    (docs["doc_id"] >= n_base)
-                    & (docs["doc_id"] < n_base + n_delta)
-                ].copy()
-                delta["shard"] = (
-                    n_base // dps + (delta["doc_id"] - n_base) % n_shards
-                ).astype("int32")
-                cell = {
-                    "base_docs": n_base, "dict_rows": dict_rows,
-                    "delta_docs": n_delta, "shards": n_shards,
-                }
-                for backend, guard in (("local", 1 << 62), ("spark", -1)):
-                    index_build.LOCAL_MAX_COMMIT_ROWS = guard
-                    runs = []
-                    for _ in range(reps + 1):
-                        idx = f"{work}/run"
-                        shutil.rmtree(idx, ignore_errors=True)
-                        shutil.copytree(base, idx)
-                        df = spark.createDataFrame(delta, schema)
-                        t0 = time.monotonic()
-                        m = builder.build(df, idx, append=True)
-                        runs.append(time.monotonic() - t0)
-                        assert m["backend"] == backend, m
-                    cell[f"{backend}_s"] = round(statistics.median(runs[1:]), 3)
-                cell["local_wins"] = cell["local_s"] < cell["spark_s"]
-                print(json.dumps(cell), file=sys.stderr, flush=True)
-                cells.append(cell)
+        dict_rows = pq.read_table(
+            f"{base}/dictionary", columns=["term_id"]
+        ).num_rows
+        for kind, k, n_app in todo:
+            cell = {"kind": kind, "base_docs": n_base, "dict_rows": dict_rows,
+                    "shards": k}
+            for backend, guard in (("local", 1 << 30), ("spark", -1)):
+                index_build.LOCAL_MAX_COMMIT_DOCS = guard
+                runs = []
+                for _ in range(reps + 1):
+                    idx = f"{work}/run"
+                    shutil.rmtree(idx, ignore_errors=True)
+                    shutil.copytree(base, idx)
+                    fn, cell["docs"] = commit(kind, idx, n_base, k, n_app)
+                    t0 = time.monotonic()
+                    m = fn()
+                    runs.append(time.monotonic() - t0)
+                    assert m.get("backend", backend) == backend, m
+                cell[f"{backend}_s"] = round(statistics.median(runs[1:]), 3)
+            cell["local_wins"] = cell["local_s"] < cell["spark_s"]
+            print(json.dumps(cell), file=sys.stderr, flush=True)
+            cells.append(cell)
     shutil.rmtree(work, ignore_errors=True)
     out = {
-        "what": "append commit wall time, local vs Spark backend",
+        "what": "commit wall time, local vs Spark backend, by commit kind "
+        "and docs re-indexed or rewritten",
         "docs_per_shard": dps, "reps": f"median of {reps} after 1 warm-up",
         "local": f"local[{spark.sparkContext.defaultParallelism}]",
         "cells": cells,
@@ -319,7 +367,7 @@ def cmd_commit_crossover(spark) -> dict:
     with open(f"{path}/commit_crossover.json", "w") as fh:
         json.dump(out, fh, indent=1)
     return {
-        f"{c['base_docs']}b_{c['delta_docs']}d_{c['shards']}s": [
+        f"{c['kind']}_{c['base_docs']}b_{c['docs']}d_{c['shards']}s": [
             c["local_s"], c["spark_s"]
         ]
         for c in cells

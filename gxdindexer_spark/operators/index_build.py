@@ -27,8 +27,9 @@ dictionary artifacts, ``ledger.json``, ``manifest.json`` — through a
 journal that the next writer replays forward after a crash.
 
 Two commit backends compute into that staging root, picked per commit
-by the ``LOCAL_MAX_COMMIT_ROWS`` guard on the delta docs plus the
-prior dictionary rows the merge reads:
+by the ``LOCAL_MAX_COMMIT_DOCS`` guard on the docs the commit
+re-indexes or rewrites (an append's delta, the docs of the shards a
+delete or update touches, every doc for a compaction):
 
 * **local** (at or under the guard): the commit runs in the driver on
   pandas + pyarrow. An incremental ``build`` brings its delta rows to
@@ -40,13 +41,16 @@ prior dictionary rows the merge reads:
   Spark commit of a few shards is job dispatch, not work.
 * **Spark**: fresh builds (no kept shard: the delta is the whole
   corpus, where the executors' parallel encode wins and there is no
-  prior dictionary to merge) and deltas above the guard.
+  prior dictionary to merge) and commits above the guard, where the
+  local backend's one-core encode loses to the executors'.
 
 Both run the same tokenizer (``_tokenize``), the same encoder
-(``encode_groups``) and the same dictionary rule (prior dictionary −
-replaced ``dict_parts`` + new partials), and write every artifact with
-the same schema (``schemas.*``), so either backend's commit reads the
-same through both query backends and leaves row-identical artifacts.
+(``encode_groups``), the same dictionary rule (prior dictionary −
+replaced ``dict_parts`` + new partials), the same update merge
+(``_cast_updates`` + ``_merge_updates``) and delete plan
+(``_tombstone_plan``), and write every artifact with the same schema
+(``schemas.*``), so either backend's commit reads the same through
+both query backends and leaves row-identical artifacts.
 
 The reference analog of this stage is the chunked extract-assemble-load
 loop in GxdResultIndexer.java:900-1268 (chunks == partitions here) with
@@ -76,7 +80,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
 
 from gxdindexer_spark import schemas
 from gxdindexer_spark.functions import analyze, bm25, hashing
@@ -97,22 +101,23 @@ JOURNAL = ".publish.json"
 # ledger metrics are read driver-side with pyarrow up to this many
 # bytes of touched partitions, with Spark above it
 ARROW_METRICS_MAX = 256 << 20
-#: Commit-backend guard (see module docstring): a commit whose delta
-#: docs, at ``ROWS_PER_DELTA_DOC`` rows each, plus the prior dictionary
-#: rows its merge reads number at most this runs on the driver-local
-#: backend, a larger one on Spark. Set from ``bench_extra.py
-#: commit_crossover`` (BENCH/commit_crossover.json: append commits on
-#: local[4], median of 5, prior dictionaries of 0.9k, 5.5k and 20k
-#: rows): the local backend wins every 80-doc delta (0.75-2.7 s vs
-#: 2.2-2.9 s on Spark) and every one-shard delta up to 1280 docs
-#: (1.0-3.8 s vs 2.3-4.8 s); spread over 4 shards, Spark's parallel
-#: encode ties from 320 docs (2.0 s vs 1.9 s at 5.5k rows, 3.1 s vs
-#: 3.0 s at 20k) and wins at 1280 on the 0.9k-row base (4.5 s vs
-#: 4.1 s). A delta doc costs the local backend about 2 ms of tokenize
-#: + encode, a dictionary row 4-60 us of merge, hence the weight. The
-#: guard also bounds what a local commit holds in the driver.
-LOCAL_MAX_COMMIT_ROWS = 50_000
-ROWS_PER_DELTA_DOC = 100
+#: Commit-backend guard (see module docstring): a commit that
+#: re-indexes or rewrites at most this many docs runs on the
+#: driver-local backend, a larger one on Spark. Set at the crossover of
+#: ``bench_extra.py commit_crossover`` (BENCH/commit_crossover.json:
+#: local[4], 80 docs a shard, median of 5). The local backend's cost is
+#: its one-core encode, which grows with the docs (and shards) a
+#: commit re-indexes; Spark's is ~3 s of job dispatch plus a parallel
+#: encode. Appends tie at 640 docs (8 shards: 5.1 s local vs 4.8 s
+#: Spark over a 5.5k-row dictionary, 4.80 vs 4.84 s over 20k rows) and
+#: lose from 1280 (9.6 vs 7.6 s); deletes and content updates still
+#: win at 640 (4.1 vs 5.4 s, 4.7 vs 7.7 s) and by 7-10% at 1280. The
+#: dictionary rows a merge reads barely move it (an 80-doc append:
+#: 0.7-1.0 s local, 2.7-3.4 s Spark over 0.9k-20k rows). Compaction and
+#: stored-attribute updates re-index nothing and win locally well past
+#: it (a 4800-doc compaction 1.8 vs 5.1 s), but share the guard, so a
+#: large one runs on the executors rather than in the driver.
+LOCAL_MAX_COMMIT_DOCS = 640
 POSTING_COLS = [f.name for f in schemas.POSTINGS.fields]
 ENCODE_KEYS = ["shard", "field", "term_id"]
 
@@ -230,6 +235,33 @@ def encode_groups(
         )
         rows.append({"shard": sh[lo], "field": f, "term_id": tid[lo], **row})
     return pd.DataFrame(rows, columns=POSTING_COLS)
+
+
+def _rev_rows(d: pd.DataFrame) -> pd.DataFrame:
+    """Dictionary rows -> ``dictionary_rev`` rows on the local backend:
+    each term reversed by code point, as ``F.reverse`` does in
+    ``_finalize_stats``."""
+    return d.assign(rev_term=[t[::-1] for t in d["term"]])[
+        schemas.DICTIONARY_REV.names
+    ]
+
+
+def _gram_rows(d: pd.DataFrame) -> pd.DataFrame:
+    """Dictionary rows -> ``dictionary_ngrams`` rows on the local
+    backend: one per distinct character 3-gram of each term of 3+
+    characters, as ``_finalize_stats``' SQL expression derives them.
+    (Running this function on Spark through ``mapInPandas`` instead
+    added 1-2 s to a Spark commit, so each runner keeps its own form;
+    ``tests/test_commit_backends.py`` holds them row-identical.)"""
+    return pd.DataFrame(
+        [
+            (f, t, df, g)
+            for f, t, df in zip(d["field"], d["term"], d["df"].tolist())
+            if len(t) >= 3
+            for g in dict.fromkeys(t[i : i + 3] for i in range(len(t) - 2))
+        ],
+        columns=schemas.DICTIONARY_NGRAMS.names,
+    )
 
 
 def _stream_groups(
@@ -523,13 +555,17 @@ class IndexBuilder:
         t0 = time.monotonic()
         local = isinstance(docs, pa.Table)
         rows_here = docs if local else None
+        done = read_ledger(index_dir)
         if not local:
             spark = docs.sparkSession
-            if docs.isLocal():
-                # a local relation: its rows already live in the
-                # driver, so they come over once and are fingerprinted
-                # here
-                rows_here = docs.toArrow()
+            if done and precomputed_fp is None and docs.isLocal():
+                # a local relation committed onto an index: if it is
+                # small enough for the local backend its rows come to
+                # the driver once (at most guard + 1 rows are pulled)
+                # and are fingerprinted here, otherwise by ``_fp_map``
+                head = docs.limit(LOCAL_MAX_COMMIT_DOCS + 1).toArrow()
+                if _fits_local(head.num_rows):
+                    rows_here = head
         # input fingerprint per shard (see _fp_map for the contract).
         # Point mutations (delete/update) pass ``precomputed_fp``:
         # the same agg, computed by the caller CONCURRENTLY with its
@@ -543,7 +579,6 @@ class IndexBuilder:
             shard_fp = self._fp_map_local(rows_here.to_pandas())
         else:
             shard_fp = self._fp_map(docs)
-        done = read_ledger(index_dir)
         # orphaned shards: present in artifacts/ledger but absent from
         # the input (shrunk or re-sharded corpus). Left in place they
         # would keep feeding dictionary df / avgdl / query results.
@@ -603,8 +638,7 @@ class IndexBuilder:
             not local
             and kept_entries
             and _fits_local(
-                index_dir,
-                sum(int(shard_fp[s].split(":", 1)[0]) for s in pending),
+                sum(int(shard_fp[s].split(":", 1)[0]) for s in pending)
             )
         ):
             local = True
@@ -1072,23 +1106,14 @@ class IndexBuilder:
             )
 
         write("dictionary", d, schemas.DICTIONARY)
-        rev = d.assign(rev_term=[t[::-1] for t in d["term"]])
         write(
             "dictionary_rev",
-            rev.sort_values(["field", "rev_term"]),
+            _rev_rows(d).sort_values(["field", "rev_term"]),
             schemas.DICTIONARY_REV,
         )
-        grams = [
-            (f, t, df, g)
-            for f, t, df in zip(d["field"], d["term"], d["df"].tolist())
-            if len(t) >= 3
-            for g in dict.fromkeys(t[i : i + 3] for i in range(len(t) - 2))
-        ]
         write(
             "dictionary_ngrams",
-            pd.DataFrame(
-                grams, columns=schemas.DICTIONARY_NGRAMS.names
-            ).sort_values(["field", "gram"], kind="stable"),
+            _gram_rows(d).sort_values(["field", "gram"], kind="stable"),
             schemas.DICTIONARY_NGRAMS,
         )
         write(
@@ -1291,7 +1316,7 @@ def delete_docs(
         scope = sorted(
             present if candidates is None else present & set(candidates)
         )
-        if _fits_local(index_dir, _ledger_docs(index_dir, scope)):
+        if _fits_local(_ledger_docs(index_dir, scope)):
             # driver-local backend: the candidate partitions via pyarrow
             if not scope:
                 return nothing
@@ -1307,14 +1332,14 @@ def delete_docs(
                 .groupby("shard")["gone"]
                 .agg(["size", "sum"])
             )
-            per = per[per["sum"] > 0]
-            if not len(per):
+            affected, emptied, rebuild = _tombstone_plan(
+                {
+                    int(s): (int(r["size"]), int(r["sum"]))
+                    for s, r in per.iterrows()
+                }
+            )
+            if not affected:
                 return nothing
-            affected = {int(s): int(r["sum"]) for s, r in per.iterrows()}
-            emptied = {
-                int(s) for s, r in per.iterrows() if r["sum"] == r["size"]
-            }
-            rebuild = sorted(set(affected) - emptied)
             survivors = store.filter(
                 pc.and_(
                     pc.invert(gone),
@@ -1365,12 +1390,11 @@ def delete_docs(
             surv_fp = fp_fut.result()
         else:
             hit = hit_query.collect()
-        if not hit:
+        affected, emptied, rebuild = _tombstone_plan(
+            {int(r["shard"]): (int(r["n"]), int(r["n_del"])) for r in hit}
+        )
+        if not affected:
             return nothing
-        affected = {int(r["shard"]): int(r["n_del"]) for r in hit}
-        totals = {int(r["shard"]): int(r["n"]) for r in hit}
-        emptied = {s for s, n in affected.items() if n == totals[s]}
-        rebuild = sorted(set(affected) - emptied)
         if surv_all is not None:
             survivors = (
                 surv_all.filter(F.col("shard").isin(rebuild))
@@ -1400,6 +1424,17 @@ def delete_docs(
     return _delete_metrics(metrics, affected, rebuild, emptied)
 
 
+def _tombstone_plan(
+    counts: dict[int, tuple[int, int]],
+) -> tuple[dict[int, int], set[int], list[int]]:
+    """Per-shard (docs, tombstoned docs) -> the delete plan of both
+    backends: (tombstones per affected shard, shards left empty, which
+    drop, shards to rebuild from their survivors)."""
+    affected = {s: n_del for s, (_n, n_del) in counts.items() if n_del}
+    emptied = {s for s, n_del in affected.items() if n_del == counts[s][0]}
+    return affected, emptied, sorted(set(affected) - emptied)
+
+
 def _delete_metrics(
     metrics: dict, affected: dict[int, int], rebuild: list, emptied: set
 ) -> dict:
@@ -1411,14 +1446,10 @@ def _delete_metrics(
     return metrics
 
 
-def _fits_local(index_dir: str, delta_docs: int, merge: bool = True) -> bool:
-    """The commit-backend guard (``LOCAL_MAX_COMMIT_ROWS``) for a
-    commit over ``delta_docs`` docs; ``merge``: it merges the prior
-    dictionary."""
-    rows = ROWS_PER_DELTA_DOC * delta_docs
-    if merge:
-        rows += _dictionary_rows(index_dir)
-    return rows <= LOCAL_MAX_COMMIT_ROWS
+def _fits_local(delta_docs: int) -> bool:
+    """The commit-backend guard (``LOCAL_MAX_COMMIT_DOCS``) for a
+    commit that re-indexes or rewrites ``delta_docs`` docs."""
+    return delta_docs <= LOCAL_MAX_COMMIT_DOCS
 
 
 def _ledger_docs(index_dir: str, shards) -> int:
@@ -1515,7 +1546,8 @@ def _update_docs_locked(
     present = _artifact_shards(index_dir, ("docs",))
     d0 = f"{index_dir}/docs/shard={min(present)}"
     part = next(n for n in sorted(os.listdir(d0)) if n.endswith(".parquet"))
-    store_cols = pq.read_schema(f"{d0}/{part}").names + ["shard"]
+    store_schema = pq.read_schema(f"{d0}/{part}")
+    store_cols = store_schema.names + ["shard"]
     upd_cols = sorted({c for u in updates.values() for c in u})
     for c in upd_cols:
         if c not in store_cols:
@@ -1535,15 +1567,14 @@ def _update_docs_locked(
     scope = sorted(
         present if candidates is None else present & set(candidates)
     )
-    if _fits_local(
-        index_dir, _ledger_docs(index_dir, scope), merge=rebuild_class
-    ):
+    upd = _cast_updates(spark, updates, ids, upd_cols, store_schema)
+    rehash = "content" in upd_cols and "content_sha256" in store_cols
+    if _fits_local(_ledger_docs(index_dir, scope)):
         return _update_docs_local(
-            commit, spark, builder, updates, ids, upd_cols, scope,
+            commit, spark, builder, upd, upd_cols, rehash, scope,
             rebuild_class,
         )
     store = spark.read.parquet(f"{index_dir}/docs")
-    store_types = {f.name: f.dataType for f in store.schema.fields}
     scoped = store
     if candidates is not None:
         scoped = store.filter(F.col("shard").isin(candidates))
@@ -1556,38 +1587,17 @@ def _update_docs_locked(
         .groupBy("shard")
         .agg(F.count("*").alias("n"))
     )
-    upd_pdf = pd.DataFrame(
-        [
-            {"doc_id": i, **{c: updates[i].get(c) for c in upd_cols}}
-            for i in ids
-        ]
-    )
-    upd = spark.createDataFrame(upd_pdf).alias("u")
 
     def _merged_over(rows_df: DataFrame) -> DataFrame:
-        m = rows_df.alias("s").join(
-            F.broadcast(upd), "doc_id", "left"
-        ).select(
-            "doc_id",
-            *[
-                (
-                    F.coalesce(
-                        F.col(f"u.{c}").cast(store_types[c]),
-                        F.col(f"s.{c}"),
-                    )
-                    if c in upd_cols
-                    else F.col(f"s.{c}")
-                ).alias(c)
-                for c in store_types
-                if c != "doc_id"
-            ],
-        )
-        if "content" in upd_cols and "content_sha256" in store_types:
-            m = m.withColumn(
-                "content_sha256",
-                F.sha2(F.coalesce("content", F.lit("")), 256),
-            )
-        return m
+        def merge(
+            batches: Iterator[pa.RecordBatch],
+        ) -> Iterator[pa.RecordBatch]:
+            for b in batches:
+                yield from _merge_updates(
+                    pa.Table.from_batches([b]), upd, upd_cols, rehash
+                ).to_batches()
+
+        return rows_df.mapInArrow(merge, rows_df.schema)
 
     if candidates is not None:
         # dense layout: the candidate shards are known without the hit
@@ -1649,55 +1659,106 @@ def _update_docs_locked(
     return metrics
 
 
+def _cast_updates(
+    spark: SparkSession,
+    updates: dict[int, dict],
+    ids: list[int],
+    cols: list[str],
+    store_schema: pa.Schema,
+) -> dict[int, dict]:
+    """doc_id -> {column: new value} with every value cast to its
+    doc-store column type by Spark's own cast (e.g. a float into a
+    long column truncates, a malformed string fails the update). The
+    cast runs on a local relation, which the optimizer folds, so no
+    Spark job starts; both backends merge these values."""
+    rows = (
+        spark.createDataFrame(
+            pd.DataFrame(
+                [
+                    {"doc_id": i, **{c: updates[i].get(c) for c in cols}}
+                    for i in ids
+                ]
+            )
+        )
+        .select(
+            "doc_id",
+            *[
+                F.col(c)
+                .cast(from_arrow_type(store_schema.field(c).type))
+                .alias(c)
+                for c in cols
+            ],
+        )
+        .collect()
+    )
+    return {int(r["doc_id"]): {c: r[c] for c in cols} for r in rows}
+
+
+def _merge_updates(
+    t: pa.Table, upd: dict[int, dict], cols: list[str], rehash: bool
+) -> pa.Table:
+    """The update rule of both backends over doc-store rows ``t``: a
+    (cast) new value replaces the old one, ``None`` keeps it; with
+    ``rehash`` (a content update) ``content_sha256`` is recomputed."""
+    doc = t["doc_id"].to_pylist()
+    for c in cols:
+        new = [upd.get(d, {}).get(c) for d in doc]
+        if all(v is None for v in new):
+            continue
+        i = t.schema.get_field_index(c)
+        f = t.schema.field(i)
+        t = t.set_column(
+            i, f,
+            pc.replace_with_mask(
+                t[c].combine_chunks(),
+                pa.array([v is not None for v in new]),
+                pa.array([v for v in new if v is not None], f.type),
+            ),
+        )
+    if rehash:
+        i = t.schema.get_field_index("content_sha256")
+        f = t.schema.field(i)
+        t = t.set_column(
+            i, f,
+            pa.array(
+                [
+                    hashlib.sha256((x or "").encode()).hexdigest()
+                    for x in t["content"].to_pylist()
+                ],
+                f.type,
+            ),
+        )
+    return t
+
+
 def _update_docs_local(
     commit: "_Commit",
     spark: SparkSession,
     builder: "IndexBuilder",
-    updates: dict[int, dict],
-    ids: list[int],
+    upd: dict[int, dict],
     upd_cols: list[str],
+    rehash: bool,
     scope: list[int],
     rebuild_class: bool,
 ) -> dict:
     """Driver-local backend of ``update_docs``: the candidate
     ``docs/shard=S`` partitions are read with pyarrow and merged in the
-    driver with the Spark path's rule (a ``None`` value keeps the old
-    one, a new value is cast to the column's type, ``content_sha256``
-    recomputed on a content update)."""
+    driver by ``_merge_updates``."""
     nothing = {"docs_updated": 0, "shards_rebuilt": 0}
     if not scope:
         return nothing
     store = _read_partitions(commit.index_dir, "docs", scope)
-    hit = pc.is_in(store["doc_id"], pa.array(ids, pa.int64()))
+    hit = pc.is_in(store["doc_id"], pa.array(list(upd), pa.int64()))
     affected = sorted(set(store["shard"].filter(hit).to_pylist()))
     if not affected:
         return nothing
     n_updated = int(pc.sum(hit.cast(pa.int64())).as_py())
-    merged = store.filter(
-        pc.is_in(store["shard"], pa.array(affected, pa.int32()))
+    merged = _merge_updates(
+        store.filter(
+            pc.is_in(store["shard"], pa.array(affected, pa.int32()))
+        ),
+        upd, upd_cols, rehash,
     )
-    doc_ids = merged["doc_id"].to_pylist()
-    upd = {int(i): u for i, u in updates.items()}
-    for c in upd_cols:
-        typ = merged.schema.field(c).type
-        vals = merged[c].to_pylist()
-        for j, d in enumerate(doc_ids):
-            v = upd.get(d, {}).get(c)
-            if v is not None:
-                vals[j] = pa.array([v]).cast(typ)[0].as_py()
-        merged = merged.set_column(
-            merged.schema.get_field_index(c), merged.schema.field(c),
-            pa.array(vals, type=typ),
-        )
-    if "content" in upd_cols and "content_sha256" in merged.column_names:
-        sha = [
-            hashlib.sha256((t or "").encode()).hexdigest()
-            for t in merged["content"].to_pylist()
-        ]
-        i = merged.schema.get_field_index("content_sha256")
-        merged = merged.set_column(
-            i, merged.schema.field(i), pa.array(sha, pa.string())
-        )
     if rebuild_class:
         metrics = builder._build_locked(
             commit, merged, resume=True, append=True, spark=spark
@@ -1864,18 +1925,6 @@ def _corpus_stats(field_totals: dict[str, list[int]]) -> pd.DataFrame:
             if t[0]
         ],
         columns=schemas.CORPUS_STATS.names,
-    )
-
-
-def _dictionary_rows(index_dir: str) -> int:
-    """Rows of the live dictionary from its file footers (0 if none)."""
-    d = f"{index_dir}/dictionary"
-    if not os.path.isdir(d):
-        return 0
-    return sum(
-        pq.ParquetFile(f"{d}/{n}").metadata.num_rows
-        for n in os.listdir(d)
-        if n.endswith(".parquet")
     )
 
 
@@ -2202,9 +2251,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         stats: dict = {}
         # driver-local backend: the guard on every doc it rewrites
         local = _fits_local(
-            index_dir,
-            _ledger_docs(index_dir, _artifact_shards(index_dir, ("docs",))),
-            merge=False,
+            _ledger_docs(index_dir, _artifact_shards(index_dir, ("docs",)))
         )
         for art in ("postings", "doc_stats", "dict_parts", "docs"):
             src = f"{index_dir}/{art}"

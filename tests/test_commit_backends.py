@@ -1,8 +1,8 @@
 """The two commit backends of ``index_build``.
 
-A commit at or under ``LOCAL_MAX_COMMIT_ROWS`` (delta docs plus the
-prior dictionary rows its merge reads) runs in the driver on pandas +
-pyarrow; a larger one, and every fresh build, runs on Spark. Both must
+A commit that re-indexes or rewrites at most ``LOCAL_MAX_COMMIT_DOCS``
+docs runs in the driver on pandas + pyarrow; a larger one, and every
+fresh build, runs on Spark. Both must
 leave row-identical artifacts, identical ledger entries and identical
 query results; the tests move the guard with monkeypatch.
 """
@@ -27,7 +27,7 @@ from gxdindexer_spark.operators.query import IndexQueryEngine
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
 
-BACKENDS = {"local": 1 << 62, "spark": -1}
+BACKENDS = {"local": 1 << 30, "spark": -1}
 DPS = 30
 Q = "getIndexList if return"
 ARTIFACTS = {
@@ -45,7 +45,7 @@ ARTIFACTS = {
 def use_commit_backend(monkeypatch, backend: str) -> None:
     """Route every following commit to ``backend`` ("local"/"spark")."""
     monkeypatch.setattr(
-        index_build, "LOCAL_MAX_COMMIT_ROWS", BACKENDS[backend]
+        index_build, "LOCAL_MAX_COMMIT_DOCS", BACKENDS[backend]
     )
 
 
@@ -155,6 +155,22 @@ def _script(corpus, spark):
                 spark, idx, _builder(), {3: {"n_chars": 999_999}},
             ),
         ),
+        # values of another type, cast by Spark's rule on both
+        # backends: a float into a long column truncates, a numeric
+        # string parses
+        (
+            "update_attrs_float",
+            lambda idx: update_docs(
+                spark, idx, _builder(),
+                {4: {"n_chars": 1.5}, 5: {"n_chars": None}},
+            ),
+        ),
+        (
+            "update_attrs_str",
+            lambda idx: update_docs(
+                spark, idx, _builder(), {6: {"n_chars": "42"}},
+            ),
+        ),
         (
             "empty_delta",
             lambda idx: _builder().build(
@@ -231,6 +247,35 @@ def test_local_fingerprint_matches_spark(spark):
     )
     b = IndexBuilder(docs_per_shard=2)
     assert b._fp_map_local(docs.toPandas()) == b._fp_map(docs)
+
+
+def test_driver_collects_only_inputs_under_the_guard(
+    corpus, spark, tmp_path, monkeypatch
+):
+    """A local relation is brought to the driver only when its commit
+    can run there: never for a fresh build, and at most guard + 1 rows
+    for an append over the guard, which then commits on Spark."""
+    collected = []
+    frame = type(spark.range(1))
+    to_arrow = frame.toArrow
+
+    def recording(self):
+        t = to_arrow(self)
+        collected.append(t.num_rows)
+        return t
+
+    monkeypatch.setattr(frame, "toArrow", recording)
+    idx = str(tmp_path / "idx")
+    m = _builder().build(
+        spark.createDataFrame(corpus[corpus["shard"] < 2]), idx, resume=False
+    )
+    assert m["backend"] == "spark" and collected == []
+    monkeypatch.setattr(index_build, "LOCAL_MAX_COMMIT_DOCS", 10)
+    m = _builder().build(
+        spark.createDataFrame(corpus[corpus["shard"] == 2]), idx, append=True
+    )
+    assert m["backend"] == "spark" and m["shards_built"] == 1
+    assert collected == [11]
 
 
 @pytest.mark.parametrize("first", ["local", "spark"])
