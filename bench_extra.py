@@ -263,6 +263,7 @@ def cmd_commit_crossover(spark) -> dict:
 
     from gxdindexer_spark.operators import index_build
     from gxdindexer_spark.operators.index_build import IndexBuilder
+    from gxdindexer_spark.snapshot import Snapshot
     from gxdindexer_spark.sources.synth import generate_corpus
     from gxdindexer_spark.sources.tables import prepare_docs
 
@@ -334,7 +335,7 @@ def cmd_commit_crossover(spark) -> dict:
             base, resume=False,
         )
         dict_rows = pq.read_table(
-            f"{base}/dictionary", columns=["term_id"]
+            Snapshot.load(base).path("dictionary"), columns=["term_id"]
         ).num_rows
         for kind, k, n_app in todo:
             cell = {"kind": kind, "base_docs": n_base, "dict_rows": dict_rows,

@@ -41,14 +41,15 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gxdindexer_spark import snapshot as layout
 from gxdindexer_spark.operators.index_build import _WriterLock
 from gxdindexer_spark.operators.similarity import (
     _hyperplane,
@@ -137,7 +138,7 @@ def _partition_counts(
                 for f in glob_mod.glob(os.path.join(d, "*.parquet"))
             )
         return out
-    except Exception:  # noqa: BLE001 — non-local fs
+    except (OSError, pa.ArrowInvalid):  # non-local fs
         return {
             str(r[part_col]): int(r["n"])
             for r in spark.read.parquet(path)
@@ -164,46 +165,39 @@ def _versioned_name(art: str, version: int) -> str:
     return art if version == 0 else f"{art}_v{version}"
 
 
-def _gc_unreferenced(index_dir: str, meta: dict) -> None:
-    """Remove artifact dirs and delta staging dirs that the committed
-    meta no longer references — the post-commit cleanup phase of build
-    / compact, safe to replay after a crash (anything it deletes is,
-    by construction, unreachable from meta.json).
+def _referenced(meta: dict) -> set[str]:
+    """Paths under the index dir that ``meta`` keeps: its live
+    artifact dirs and applied deltas, and, for snapshot retention
+    (ADVICE r4), the previous version's dirs (``prev_dirs``) and the
+    deltas its readers union (``prev_deltas``) — kept one more version
+    so an ``AnnIndex`` opened before a compaction/rebuild can finish
+    its in-flight lazy plans (the Iceberg expire-snapshots pattern).
+    Readers that idle across TWO maintenance commits must re-open."""
+    dirs = {meta.get("lsh_dir", "lsh"), meta.get("ivf_dir", "ivf")}
+    deltas = (meta.get("applied_deltas") or []) + (
+        meta.get("prev_deltas") or []
+    )
+    return (
+        dirs
+        | set(meta.get("prev_dirs") or [])
+        | {f"deltas/{_delta_tag(fp)}" for fp in deltas}
+    )
 
-    Snapshot retention (ADVICE r4): the PREVIOUS version's dirs —
-    ``meta.prev_dirs`` plus the delta staging dirs that snapshot's
-    readers union (``meta.prev_deltas``) — are KEPT for one more
-    version, so an ``AnnIndex`` opened before a compaction/rebuild can
-    finish its in-flight lazy plans (the Iceberg expire-snapshots
-    pattern: old manifests live until expiry). Version N-2 is swept
-    here; readers that idle across TWO maintenance commits must
-    re-open."""
-    live = {meta.get("lsh_dir", "lsh"), meta.get("ivf_dir", "ivf")}
-    live |= set(meta.get("prev_dirs") or [])
-    for name in os.listdir(index_dir):
-        if (
-            # also sweep pre-versioning temp dirs (.lsh_compact_tmp /
-            # .lsh_old) a crashed older build may have stranded
-            name.lstrip(".").startswith(("lsh", "ivf"))
-            and name not in live
-            and os.path.isdir(f"{index_dir}/{name}")
-        ):
-            shutil.rmtree(f"{index_dir}/{name}", ignore_errors=True)
-    ddir = f"{index_dir}/deltas"
-    keep_tags = {
-        _delta_tag(fp)
-        for fp in (
-            (meta.get("applied_deltas") or [])
-            + (meta.get("prev_deltas") or [])
-        )
-    }
-    if os.path.isdir(ddir):
-        if not keep_tags:
-            shutil.rmtree(ddir, ignore_errors=True)
-        else:
-            for name in os.listdir(ddir):
-                if name not in keep_tags:
-                    shutil.rmtree(f"{ddir}/{name}", ignore_errors=True)
+
+def _sweep_unreferenced(index_dir: str, meta: dict) -> None:
+    """Remove every artifact and delta dir the committed ``meta`` does
+    not keep — the replay of a crashed commit's cleanup (also sweeps
+    the pre-versioning temp dirs, .lsh_compact_tmp / .lsh_old, a
+    crashed older build may have stranded)."""
+    layout.sweep(
+        index_dir,
+        [
+            n
+            for n in os.listdir(index_dir)
+            if n.lstrip(".").startswith(("lsh", "ivf")) or n == "deltas"
+        ],
+        _referenced(meta),
+    )
 
 
 def _input_fingerprint(
@@ -409,7 +403,7 @@ def _build_ann_locked(
         "attr_cols": list(attr_cols),
         # snapshot retention: keep the replaced version's artifacts
         # (and the delta dirs its readers union) for ONE more version
-        # so in-flight readers finish — see _gc_unreferenced
+        # so in-flight readers finish — see _referenced
         "prev_dirs": (
             [old_meta["lsh_dir"], old_meta["ivf_dir"]]
             if old_meta.get("lsh_dir")
@@ -420,16 +414,14 @@ def _build_ann_locked(
     _commit_meta(index_dir, meta)  # single atomic commit point
     # post-commit cleanup: version N-2 artifacts and any staged
     # deltas neither this nor the previous snapshot references
-    _gc_unreferenced(index_dir, meta)
+    layout.drop(index_dir, _referenced(old_meta), _referenced(meta))
     return meta
 
 
 def _commit_meta(index_dir: str, meta: dict) -> None:
-    tmp = f"{index_dir}/meta.json.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, f"{index_dir}/meta.json")  # meta commits LAST: its
-    # presence/content guarantees the referenced artifacts are complete
+    # meta commits LAST: its presence/content guarantees the
+    # referenced artifacts are complete
+    layout.replace_json(f"{index_dir}/meta.json", meta)
 
 
 def _existing_ids_for_buckets(
@@ -616,7 +608,8 @@ def compact_ann_index(spark: SparkSession, index_dir: str) -> dict:
         with open(f"{index_dir}/meta.json") as fh:
             meta = json.load(fh)
         # replay any crashed predecessor's post-commit cleanup first
-        _gc_unreferenced(index_dir, meta)
+        _sweep_unreferenced(index_dir, meta)
+        before = _referenced(meta)
         deltas = meta.get("applied_deltas") or []
         if not deltas:
             return meta
@@ -634,7 +627,7 @@ def compact_ann_index(spark: SparkSession, index_dir: str) -> dict:
         # snapshot retention: the pre-compact base dirs AND the delta
         # dirs its readers union stay on disk for one more version so
         # an AnnIndex opened before this commit finishes its lazy
-        # plans (ADVICE r4 low; _gc_unreferenced docstring)
+        # plans (ADVICE r4 low; _referenced docstring)
         meta["prev_dirs"] = [meta["lsh_dir"], meta["ivf_dir"]] if meta.get(
             "lsh_dir"
         ) else ["lsh", "ivf"]
@@ -645,7 +638,7 @@ def compact_ann_index(spark: SparkSession, index_dir: str) -> dict:
         meta["applied_deltas"] = []
         meta.setdefault("compacted_deltas", []).extend(deltas)
         _commit_meta(index_dir, meta)  # single atomic commit point
-        _gc_unreferenced(index_dir, meta)
+        layout.drop(index_dir, before, _referenced(meta))
         return meta
 
 

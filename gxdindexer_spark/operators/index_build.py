@@ -22,9 +22,10 @@ skew, not groupBy-key skew, hence the explicit bounded key.
 
 Every write (build, delete, update, attach, compaction) is one
 ``_Commit``: it computes into a dot-prefixed staging root without
-touching a live file, then publishes once — shard partitions, the
-dictionary artifacts, ``ledger.json``, ``manifest.json`` — through a
-journal that the next writer replays forward after a crash.
+touching a live file, moves what it staged to new paths that nothing
+overwrites, and commits by one atomic replace of ``manifest.json``,
+which also carries the per-shard ledger (``gxdindexer_spark.snapshot``
+owns the layout). A reader stays on the snapshot it opened.
 
 Two commit backends compute into that staging root, picked per commit
 by the ``LOCAL_MAX_COMMIT_DOCS`` guard on the docs the commit
@@ -63,6 +64,7 @@ Lucene.
 from __future__ import annotations
 
 import functools
+import glob
 import hashlib
 import json
 import os
@@ -83,9 +85,10 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
 
 from gxdindexer_spark import schemas
+from gxdindexer_spark import snapshot as layout
 from gxdindexer_spark.functions import analyze, bm25, hashing
 from gxdindexer_spark.functions.codec import encode_postings
-from gxdindexer_spark.session import local_checkpoint
+from gxdindexer_spark.session import empty_frame, local_checkpoint
 
 DEFAULT_FIELDS = {"content": "code", "path": "path", "lang": "lang"}
 # per-shard partitions of a build; the global artifacts its finalize
@@ -94,10 +97,6 @@ SHARD_ARTIFACTS = ("docs", "doc_stats", "dict_parts", "postings")
 STATS_ARTIFACTS = (
     "dictionary", "dictionary_rev", "dictionary_ngrams", "corpus_stats"
 )
-# a commit computes under STAGING and records its renames in JOURNAL
-# before applying them (``_Commit``)
-STAGING = ".staging"
-JOURNAL = ".publish.json"
 # ledger metrics are read driver-side with pyarrow up to this many
 # bytes of touched partitions, with Spark above it
 ARROW_METRICS_MAX = 256 << 20
@@ -120,15 +119,6 @@ ARROW_METRICS_MAX = 256 << 20
 LOCAL_MAX_COMMIT_DOCS = 640
 POSTING_COLS = [f.name for f in schemas.POSTINGS.fields]
 ENCODE_KEYS = ["shard", "field", "term_id"]
-
-
-def _empty_like(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    """Empty frame with ``schema`` built JVM-side (range(0)) — a
-    python-list createDataFrame becomes a 32-partition python RDD that
-    spawns a worker per partition on every action."""
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
 
 
 def term_freqs_df(
@@ -520,10 +510,12 @@ class IndexBuilder:
 
         Returns a metrics dict (docs/sec, postings/sec, bytes).
         Resumability (north_rule): the build computes every artifact
-        into staging and publishes once (``_Commit``); the ledger's
-        per-shard lineage entries publish after the shard partitions
-        and the dictionary, and a re-run skips shards whose ledger
-        entry matches the input fingerprint (SURVEY.md §4.4).
+        into staging and publishes once (``_Commit``); one manifest
+        replace commits the shard partitions, the dictionary and the
+        ledger's per-shard lineage entries together, and a re-run
+        skips shards whose ledger entry matches the input fingerprint
+        (SURVEY.md §4.4). ``resume=False`` also rebuilds an index an
+        older builder wrote, and removes its files.
 
         Single-writer: the whole commit holds the index's writer lock
         (``_WriterLock``); a second live writer raises
@@ -532,7 +524,7 @@ class IndexBuilder:
         bounded history) in the manifest — the Iceberg snapshot-lineage
         contract on plain parquet.
         """
-        with _Commit(index_dir) as commit:
+        with _Commit(index_dir, fresh=not resume) as commit:
             return self._build_locked(
                 commit, docs, resume, append, drop_shards
             )
@@ -551,11 +543,11 @@ class IndexBuilder:
         and lists what the commit publishes. ``docs`` is a Spark frame,
         or the Arrow table a driver-local delete/update hands over with
         its ``spark`` session (and commits on the local backend)."""
-        index_dir = commit.index_dir
+        prior = commit.prior
         t0 = time.monotonic()
         local = isinstance(docs, pa.Table)
         rows_here = docs if local else None
-        done = read_ledger(index_dir)
+        done = dict(prior.ledger)
         if not local:
             spark = docs.sparkSession
             if done and precomputed_fp is None and docs.isLocal():
@@ -585,7 +577,8 @@ class IndexBuilder:
         orphans = (
             set()
             if append
-            else (set(done) | _artifact_shards(index_dir)) - set(shard_fp)
+            else set(done).union(*map(prior.shards, SHARD_ARTIFACTS))
+            - set(shard_fp)
         ) | set(drop_shards or ())
         pending = sorted(
             s
@@ -610,19 +603,17 @@ class IndexBuilder:
         # global stats only change when shards did: a pure no-op resume
         # (the common "is it up to date?" probe) skips the dictionary
         # re-agg + collision check + corpus_stats rewrite entirely.
-        changed = bool(replaced)
-        run_finalize = changed or not (
-            os.path.isdir(f"{index_dir}/dictionary")
-            and os.path.isdir(f"{index_dir}/corpus_stats")
+        run_finalize = bool(replaced) or not (
+            prior.path("dictionary") and prior.path("corpus_stats")
         )
         if run_finalize and kept_entries and (
-            not os.path.isdir(f"{index_dir}/dictionary")
+            not prior.path("dictionary")
             or not all("field_stats" in e for e in kept_entries.values())
         ):
             raise ValueError(
-                f"{index_dir}: kept shards lack ledger field_stats or a "
-                "dictionary (written by an older builder); rebuild every "
-                "shard with build(docs, index_dir, resume=False)"
+                f"{commit.index_dir}: kept shards lack ledger field_stats "
+                "or a dictionary (written by an older builder); rebuild "
+                "every shard with build(docs, index_dir, resume=False)"
             )
         for s in orphans:
             done.pop(s, None)
@@ -745,27 +736,22 @@ class IndexBuilder:
         def _run_finalize() -> str:
             # the dictionary as this commit leaves it: the prior
             # dictionary minus the replaced shards' old contributions
-            # (their live dict_parts, untouched until publish) when any
-            # shard is kept, plus the rebuilt shards' in-memory partials
+            # (their prior dict_parts) when any shard is kept, plus the
+            # rebuilt shards' in-memory partials
             rows = []
-            gone = sorted(
-                replaced & _artifact_shards(index_dir, ("dict_parts",))
-            )
+            gone = sorted(replaced & set(prior.shards("dict_parts")))
             if kept_entries and local:
                 rows.append(
-                    pq.read_table(f"{index_dir}/dictionary").to_pandas()
+                    pq.read_table(prior.path("dictionary")).to_pandas()
                 )
                 if gone:
-                    old = _read_partitions(
-                        index_dir, "dict_parts", gone
-                    ).to_pandas()
+                    old = prior.table("dict_parts", gone).to_pandas()
                     rows.append(old.assign(df=-old["df"], cf=-old["cf"]))
             elif kept_entries:
-                rows.append(spark.read.parquet(f"{index_dir}/dictionary"))
+                rows.append(prior.read(spark, "dictionary"))
                 if gone:
                     rows.append(
-                        spark.read.parquet(f"{index_dir}/dict_parts")
-                        .filter(F.col("shard").isin(gone))
+                        prior.read(spark, "dict_parts", gone)
                         .select(
                             "field", "term", "term_id",
                             (-F.col("df")).alias("df"),
@@ -778,7 +764,7 @@ class IndexBuilder:
             rows = rows or [
                 to_arrow_schema(schemas.DICTIONARY).empty_table().to_pandas()
                 if local
-                else _empty_like(spark, schemas.DICTIONARY)
+                else empty_frame(spark, schemas.DICTIONARY)
             ]
             self._finalize_stats(commit, rows, totals)
             return "incremental" if kept_entries else "full"
@@ -792,7 +778,7 @@ class IndexBuilder:
             )
             finalize_mode = _run_finalize()
             metrics_fut = commit.pool.submit(
-                self._shard_metrics, spark, commit.staging, pending
+                self._shard_metrics, spark, commit.staged(), pending
             )
         elif pending:
             # the postings encode+write and finalize's dictionary work
@@ -813,7 +799,7 @@ class IndexBuilder:
             # with finalize's tail
             def _metrics_after_ds():
                 ds_fut.result()
-                return self._shard_metrics(spark, commit.staging, pending)
+                return self._shard_metrics(spark, commit.staged(), pending)
 
             metrics_fut = commit.pool.submit(_metrics_after_ds)
             finalize_mode = fin_fut.result()
@@ -826,23 +812,11 @@ class IndexBuilder:
         wall_ms = int((time.monotonic() - t0) * 1000)
         built = metrics_fut.result() if metrics_fut is not None else {}
 
-        # consolidated ledger: one file, one atomic replace, O(1) reads
-        # at engine init (vs O(shards) file opens at the 10^6-shard
-        # target). Skipped shards keep their prior entries; orphans
-        # were dropped above.
-        # snapshot lineage: every content-changing commit gets a new
-        # monotonic snapshot_id with a parent pointer + bounded history
-        # (the Iceberg snapshot contract on plain parquet; a no-op
-        # resume re-asserts the current snapshot unchanged).
-        prev_manifest: dict = {}
-        if os.path.isfile(f"{index_dir}/manifest.json"):
-            with open(f"{index_dir}/manifest.json") as fh:
-                prev_manifest = json.load(fh)
-        prev_snap = int(prev_manifest.get("snapshot_id", 0))
-        snap = prev_snap + 1 if changed or not prev_snap else prev_snap
-
-        # append mode keeps every untouched shard's entry; full mode
-        # keeps only shards present in the input (orphans dropped)
+        # the ledger rides in the manifest: one atomic replace commits
+        # it with the paths it describes, O(1) reads at engine init.
+        # Skipped shards keep their prior entries; orphans were dropped
+        # above. Append mode keeps every untouched shard's entry; full
+        # mode keeps only shards present in the input.
         entries = {
             s: e for s, e in done.items() if append or s in shard_fp
         }
@@ -856,7 +830,7 @@ class IndexBuilder:
                 "n_postings": m["n_postings"],
                 "bytes_compressed": m["bytes"],
                 "wall_ms": wall_ms,
-                "snapshot_id": snap,
+                "snapshot_id": commit.snap,
                 # avgdl in force when this shard's block-max metadata
                 # was computed; the WAND path disables block pruning
                 # (falls back to exact TAAT) if global avgdl drifted.
@@ -876,55 +850,35 @@ class IndexBuilder:
             docs_per_sec=total_docs / max(wall_ms / 1000, 1e-9),
             postings_per_sec=total_postings / max(wall_ms / 1000, 1e-9),
         )
-        history = list(prev_manifest.get("snapshots", []))
-        if snap != prev_snap or not history:
-            history.append(
-                {
-                    "snapshot_id": snap,
-                    "parent_snapshot_id": prev_snap or None,
-                    "shards_built": len(pending),
-                    "orphans_removed": len(orphans),
-                    "wall_ms": wall_ms,
-                }
-            )
-            history = history[-20:]
-        # publish order: shard partitions (a partition with nothing
-        # staged is removed), then the dictionary artifacts, then the
-        # ledger, then the manifest
+        # the commit replaces the rebuilt and removed shards'
+        # partitions (a partition with nothing staged is removed) and,
+        # after a finalize, the dictionary artifacts
         commit.publish += [
             f"{art}/shard={s}"
             for s in sorted(replaced)
             for art in SHARD_ARTIFACTS
         ]
-        # an index left with no shard keeps an (empty) postings dir, so
-        # an engine can open it
-        if not pending and not os.path.isdir(f"{index_dir}/postings"):
-            os.makedirs(commit.stage("postings"))
-            commit.publish.append("postings")
         if run_finalize:
             commit.publish += list(STATS_ARTIFACTS)
-        commit.files["ledger.json"] = json.dumps(
-            {str(s): e for s, e in entries.items()}
-        )
-        commit.files["manifest.json"] = json.dumps(
-            {
-                "fields": self.fields,
-                "with_positions": self.with_positions,
-                "synonyms": self.synonyms,
-                "docs_per_shard": self.docs_per_shard,
-                "block_size": self.block_size,
-                "k1": self.k1,
-                "b": self.b,
-                "snapshot_id": snap,
-                "parent_snapshot_id": prev_snap or None,
-                "snapshots": history,
-                # full map incl. shards untouched by an append delta
-                "shard_fingerprints": {
-                    s: e["input_fingerprint"] for s, e in entries.items()
-                },
-                "metrics": metrics,
+        commit.lineage = {
+            "shards_built": len(pending),
+            "orphans_removed": len(orphans),
+            "wall_ms": wall_ms,
+        }
+        commit.manifest.update(
+            fields=self.fields,
+            with_positions=self.with_positions,
+            synonyms=self.synonyms,
+            docs_per_shard=self.docs_per_shard,
+            block_size=self.block_size,
+            k1=self.k1,
+            b=self.b,
+            # full map incl. shards untouched by an append delta
+            shard_fingerprints={
+                s: e["input_fingerprint"] for s, e in entries.items()
             },
-            indent=2,
+            metrics=metrics,
+            ledger={str(s): e for s, e in entries.items()},
         )
         return metrics
 
@@ -1164,19 +1118,18 @@ class IndexBuilder:
         return tf, dp
 
     def _shard_metrics(
-        self, spark: SparkSession, root: str, shards: list[int]
+        self, spark: SparkSession, snap: layout.Snapshot, shards: list[int]
     ) -> dict[int, dict]:
         """Per-shard ledger metrics of ``shards`` read from the
-        postings/doc_stats partitions under ``root`` (a commit's
-        staging root, or an index dir)."""
+        postings/doc_stats partitions of ``snap`` (a commit's
+        ``staged`` view, or an index's snapshot)."""
         if not shards:
             return {}
-        out = self._shard_metrics_arrow(root, shards)
+        out = self._shard_metrics_arrow(snap, shards)
         if out is not None:
             return out
         p = (
-            spark.read.parquet(f"{root}/postings")
-            .filter(F.col("shard").isin(shards))
+            snap.read(spark, "postings", shards, schemas.POSTINGS)
             .groupBy("shard")
             .agg(
                 F.sum("df").alias("n_postings"),
@@ -1186,8 +1139,7 @@ class IndexBuilder:
             )
         )
         d = (
-            spark.read.parquet(f"{root}/doc_stats")
-            .filter(F.col("shard").isin(shards))
+            snap.read(spark, "doc_stats", shards, schemas.DOC_STATS)
             .groupBy("shard")
             .agg(F.count_distinct("doc_id").alias("n_docs"))
         )
@@ -1202,7 +1154,7 @@ class IndexBuilder:
 
     @staticmethod
     def _shard_metrics_arrow(
-        root: str, shards: list[int]
+        snap: layout.Snapshot, shards: list[int]
     ) -> dict[int, dict] | None:
         """Driver-side twin of the Spark ledger-metrics aggregation.
 
@@ -1216,9 +1168,11 @@ class IndexBuilder:
         value-identical.
         """
 
+        parts = {art: snap.shards(art) for art in ("postings", "doc_stats")}
+
         def _files(art: str, s: int) -> list[str]:
-            d = f"{root}/{art}/shard={s}"
-            if not os.path.isdir(d):
+            d = parts[art].get(s)
+            if d is None:
                 return []
             return [
                 f"{d}/{fn}" for fn in os.listdir(d) if fn.endswith(".parquet")
@@ -1303,24 +1257,24 @@ def delete_docs(
     if not ids:
         return nothing
     with _Commit(index_dir) as commit:
+        prior = commit.prior
         # an index left with no shard holds no doc to delete
-        present = _artifact_shards(index_dir, ("docs",))
+        present = set(prior.shards("docs"))
         if not present:
             return nothing
         candidates: list[int] | None = None
         if assume_dense_shards:
-            with open(f"{index_dir}/manifest.json") as fh:
-                dps = int(json.load(fh).get("docs_per_shard") or 0)
+            dps = int(prior.manifest.get("docs_per_shard") or 0)
             if dps:
                 candidates = sorted({i // dps for i in ids})
         scope = sorted(
             present if candidates is None else present & set(candidates)
         )
-        if _fits_local(_ledger_docs(index_dir, scope)):
+        if _fits_local(_ledger_docs(prior, scope)):
             # driver-local backend: the candidate partitions via pyarrow
             if not scope:
                 return nothing
-            store = _read_partitions(index_dir, "docs", scope)
+            store = prior.table("docs", scope)
             gone = pc.is_in(store["doc_id"], pa.array(ids, pa.int64()))
             per = (
                 pd.DataFrame(
@@ -1351,7 +1305,7 @@ def delete_docs(
                 drop_shards=emptied, spark=spark,
             )
             return _delete_metrics(metrics, affected, rebuild, emptied)
-        store = spark.read.parquet(f"{index_dir}/docs")
+        store = prior.read(spark, "docs")
         scoped = store
         if candidates is not None:
             scoped = store.filter(F.col("shard").isin(candidates))
@@ -1399,7 +1353,7 @@ def delete_docs(
             survivors = (
                 surv_all.filter(F.col("shard").isin(rebuild))
                 if rebuild
-                else _empty_like(spark, store.schema)
+                else empty_frame(spark, store.schema)
             )
             pre_fp = {s: f for s, f in surv_fp.items() if s in rebuild}
         else:
@@ -1410,7 +1364,7 @@ def delete_docs(
                     )
                 )
                 if rebuild
-                else _empty_like(spark, store.schema)
+                else empty_frame(spark, store.schema)
             )
             pre_fp = None
         metrics = builder._build_locked(
@@ -1452,10 +1406,9 @@ def _fits_local(delta_docs: int) -> bool:
     return delta_docs <= LOCAL_MAX_COMMIT_DOCS
 
 
-def _ledger_docs(index_dir: str, shards) -> int:
-    """Docs the ledger records for ``shards``."""
-    ledger = read_ledger(index_dir)
-    return sum(int(ledger.get(s, {}).get("n_docs", 0)) for s in shards)
+def _ledger_docs(snap: layout.Snapshot, shards) -> int:
+    """Docs ``snap``'s ledger records for ``shards``."""
+    return sum(int(snap.ledger.get(s, {}).get("n_docs", 0)) for s in shards)
 
 
 def update_docs(
@@ -1502,9 +1455,8 @@ def update_docs(
     - STORED-ONLY attributes (rank/facet columns) -> the Lucene
       ``updateDocValues`` analog: postings and stats are untouched by
       construction, so ONLY the affected doc-store shard partitions
-      rewrite, published by the same journaled commit every write
-      uses (a crash mid-publish replays forward). No re-analysis, no
-      finalize — O(touched shards) I/O.
+      rewrite, published by the same manifest replace every write
+      uses. No re-analysis, no finalize — O(touched shards) I/O.
 
     A single call mixing both classes takes the rebuild path for
     everything (correct, just not minimal).
@@ -1526,7 +1478,7 @@ def update_docs(
         return {"docs_updated": 0, "shards_rebuilt": 0}
     with _Commit(index_dir) as commit:
         # an index left with no shard holds no doc to update
-        if not _artifact_shards(index_dir, ("docs",)):
+        if not commit.prior.shards("docs"):
             return {"docs_updated": 0, "shards_rebuilt": 0}
         return _update_docs_locked(
             commit, spark, builder, updates, ids, assume_dense_shards
@@ -1542,9 +1494,10 @@ def _update_docs_locked(
     assume_dense_shards: bool,
 ) -> dict:
     """Body of ``update_docs``, inside its commit."""
-    index_dir = commit.index_dir
-    present = _artifact_shards(index_dir, ("docs",))
-    d0 = f"{index_dir}/docs/shard={min(present)}"
+    prior = commit.prior
+    store_paths = prior.shards("docs")
+    present = set(store_paths)
+    d0 = store_paths[min(present)]
     part = next(n for n in sorted(os.listdir(d0)) if n.endswith(".parquet"))
     store_schema = pq.read_schema(f"{d0}/{part}")
     store_cols = store_schema.names + ["shard"]
@@ -1555,13 +1508,11 @@ def _update_docs_locked(
                 f"update column {c!r} is not in the doc store "
                 f"(has: {sorted(store_cols)})"
             )
-    with open(f"{index_dir}/manifest.json") as fh:
-        manifest = json.load(fh)
-    indexed = set(manifest.get("fields") or {})
+    indexed = set(prior.manifest.get("fields") or {})
     rebuild_class = bool(set(upd_cols) & indexed)
     candidates: list[int] | None = None
     if assume_dense_shards:
-        dps = int(manifest.get("docs_per_shard") or 0)
+        dps = int(prior.manifest.get("docs_per_shard") or 0)
         if dps:
             candidates = sorted({i // dps for i in ids})
     scope = sorted(
@@ -1569,12 +1520,12 @@ def _update_docs_locked(
     )
     upd = _cast_updates(spark, updates, ids, upd_cols, store_schema)
     rehash = "content" in upd_cols and "content_sha256" in store_cols
-    if _fits_local(_ledger_docs(index_dir, scope)):
+    if _fits_local(_ledger_docs(prior, scope)):
         return _update_docs_local(
             commit, spark, builder, upd, upd_cols, rehash, scope,
             rebuild_class,
         )
-    store = spark.read.parquet(f"{index_dir}/docs")
+    store = prior.read(spark, "docs")
     scoped = store
     if candidates is not None:
         scoped = store.filter(F.col("shard").isin(candidates))
@@ -1747,7 +1698,7 @@ def _update_docs_local(
     nothing = {"docs_updated": 0, "shards_rebuilt": 0}
     if not scope:
         return nothing
-    store = _read_partitions(commit.index_dir, "docs", scope)
+    store = commit.prior.table("docs", scope)
     hit = pc.is_in(store["doc_id"], pa.array(list(upd), pa.int64()))
     affected = sorted(set(store["shard"].filter(hit).to_pylist()))
     if not affected:
@@ -1792,12 +1743,13 @@ def attach_stored_column(
     values on doc_id (co-partitioned by repartitioning on shard
     before the partitioned write, so each output partition writes
     once), lands in staging, and the whole ``docs`` artifact publishes
-    through the commit journal (a crash mid-publish replays forward). Docs absent from ``values`` get NULL (Solr's missing
-    docvalue). ``values`` must not contain duplicate doc_ids (raises
-    — a dup would fan out the join and duplicate store rows).
+    in one manifest replace. Docs absent from ``values`` get NULL
+    (Solr's missing docvalue). ``values`` must not contain duplicate
+    doc_ids (raises — a dup would fan out the join and duplicate store
+    rows).
 
-    Engines opened before the attach keep reading their old relation
-    plans — re-open after, exactly like compaction.
+    Engines opened before the attach keep serving their snapshot —
+    re-open to see the column, exactly like every other commit.
     """
     if set(values.columns) != {"doc_id", column}:
         raise ValueError(
@@ -1807,7 +1759,7 @@ def attach_stored_column(
     if column in ("doc_id", "shard"):
         raise ValueError(f"cannot attach identity column {column!r}")
     with _Commit(index_dir) as commit:
-        store = spark.read.parquet(f"{index_dir}/docs")
+        store = commit.prior.read(spark, "docs")
         vals = commit.checkpoint(values)
         n_vals = vals.count()
         if vals.select("doc_id").distinct().count() != n_vals:
@@ -1826,39 +1778,34 @@ def attach_stored_column(
             .filter(F.col(column).isNotNull())
             .count()
         )
-        commit.publish.append("docs")
+        commit.publish += [
+            f"docs/shard={s}" for s in commit.prior.shards("docs")
+        ]
     return {"column": column, "docs_with_value": int(n_attached)}
 
 
 def backup_index(index_dir: str, dest_dir: str) -> dict:
     """Consistent point-in-time copy of a committed index — the Solr
     admin backup analog (the reference has no backup story beyond
-    re-running the build). Holds the writer lock for the duration so
-    no build/compaction/update mutates artifacts mid-copy; readers
-    are unaffected (they never take the lock). Pending swaps are
-    replayed first, so the copy is always a committed snapshot.
-
-    The lock file and in-flight swap temporaries (dot-prefixed) are
-    excluded — a restore must not resurrect another writer's lock
-    state. Local-filesystem ``copytree`` here; on a cluster the same
-    artifact set copies via distcp / object-store copy — the layout
-    is plain parquet + json either way.
+    re-running the build). Copies the manifest and exactly the paths
+    of the live snapshot (not the previous snapshot's retained ones,
+    nor staging or the writer lock), holding the writer lock so no
+    commit expires the snapshot mid-copy; readers are unaffected
+    (they never take the lock). Local-filesystem ``copytree`` here; on
+    a cluster the same path list copies via distcp / object-store
+    copy — the layout is plain parquet + json either way.
 
     -> {"files": n, "bytes": n}."""
     if os.path.exists(dest_dir) and os.listdir(dest_dir):
         raise ValueError(f"backup destination {dest_dir!r} is not empty")
     with _WriterLock(index_dir):
-        _recover_compaction(index_dir)
+        snap = layout.Snapshot.load(index_dir)
         os.makedirs(dest_dir, exist_ok=True)
-        for name in sorted(os.listdir(index_dir)):
-            if name.startswith(".") or name == "_writer.lock":
-                continue
-            src = f"{index_dir}/{name}"
-            dst = f"{dest_dir}/{name}"
-            if os.path.isdir(src):
-                shutil.copytree(src, dst)
-            else:
-                shutil.copy2(src, dst)
+        for rel in sorted(snap.live()):
+            shutil.copytree(f"{index_dir}/{rel}", f"{dest_dir}/{rel}")
+        layout.replace_json(
+            f"{dest_dir}/{layout.MANIFEST}", {**snap.manifest, "retained": []}
+        )
         n_files = n_bytes = 0
         for root, _dirs, files in os.walk(dest_dir):
             for f in files:
@@ -1873,7 +1820,7 @@ def restore_index(backup_dir: str, dest_dir: str) -> dict:
     half-merged). The restored directory is immediately queryable and
     writable; it acquires its own fresh writer-lock file on first
     mutation."""
-    if not os.path.isfile(f"{backup_dir}/manifest.json"):
+    if not os.path.isfile(f"{backup_dir}/{layout.MANIFEST}"):
         raise ValueError(f"{backup_dir!r} is not an index backup")
     if os.path.exists(dest_dir) and os.listdir(dest_dir):
         raise ValueError(f"restore destination {dest_dir!r} is not empty")
@@ -1888,32 +1835,6 @@ def restore_index(backup_dir: str, dest_dir: str) -> dict:
             shutil.copy2(src, dst)
         n += 1
     return {"artifacts": n}
-
-
-def _swap_dir_commit(index_dir: str, rel: str, drop: bool = False) -> None:
-    """Publish one path: replace ``{index_dir}/{rel}`` with its staged
-    copy ``{STAGING}/{rel}``, or remove it (``drop``). A directory
-    moves aside to ``.<rel, '/' as '__'>_old`` before its replacement
-    renames in, so readers see the old or the new tree, never a
-    half-deleted one; a file is replaced atomically. Idempotent: a
-    replay after a crash between any two steps finishes the job."""
-    src = f"{index_dir}/{rel}"
-    new = f"{index_dir}/{STAGING}/{rel}"
-    old = f"{index_dir}/.{rel.replace('/', '__')}_old"
-    if os.path.isfile(new):
-        os.replace(new, src)
-        return
-    if drop or os.path.isdir(new):
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(src):
-            os.rename(src, old)
-        if not drop:
-            os.makedirs(os.path.dirname(src), exist_ok=True)
-            os.rename(new, src)
-    elif not os.path.isdir(src) and os.path.isdir(old):
-        # moved aside, but the replacement is gone: roll back
-        os.rename(old, src)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def _corpus_stats(field_totals: dict[str, list[int]]) -> pd.DataFrame:
@@ -1959,20 +1880,6 @@ def _stage_shards(
         )
 
 
-def _read_partitions(index_dir: str, art: str, shards) -> pa.Table:
-    """The ``art/shard=S`` partitions of ``shards`` as one Arrow table
-    with its shard column (the Spark read's partition column)."""
-    parts = []
-    for s in shards:
-        t = pq.read_table(f"{index_dir}/{art}/shard={s}")
-        parts.append(
-            t.append_column(
-                "shard", pa.array(np.full(t.num_rows, s, np.int32))
-            )
-        )
-    return pa.concat_tables(parts, promote_options="permissive")
-
-
 def _field_totals(
     kept_entries: dict[int, dict],
     delta_field_stats: dict[int, dict[str, dict]],
@@ -2012,10 +1919,9 @@ class _WriterLock:
     both proceed). The pid is written into the file for diagnostics
     only; the lock file itself is never deleted.
 
-    Readers never wait on the lock: artifacts publish via renames in
-    a fixed order with the ledger and manifest last (``_Commit``), and
-    an engine open takes the lock only without blocking, only to
-    replay a publish a crashed writer left half done. On a multi-writer
+    Readers never take the lock: a commit writes only new paths and
+    publishes by one manifest replace (``_Commit``), so a reader sees
+    the whole old snapshot or the whole new one. On a multi-writer
     cluster against shared object storage, replace this with the
     catalog's optimistic commit (Iceberg) or a lock service — flock
     is a same-host primitive, which is exactly the scope a single
@@ -2023,7 +1929,7 @@ class _WriterLock:
     """
 
     def __init__(self, index_dir: str):
-        self.path = f"{index_dir}/_writer.lock"
+        self.path = f"{index_dir}/{layout.LOCK}"
         self._fd: int | None = None
 
     def __enter__(self) -> "_WriterLock":
@@ -2059,35 +1965,40 @@ class _WriterLock:
 
 class _Commit:
     """One writer-side commit of an index: compute into staging,
-    publish once.
+    publish by one manifest replace.
 
-    Entering takes the writer lock and, holding it, finishes any
-    publish a crashed writer left half done (``_recover_compaction``,
-    which also clears stale staging). The body writes every new
-    artifact to ``stage(rel)`` under the dot-prefixed staging root,
-    runs its concurrent jobs on the commit's one thread ``pool``,
-    persists through ``cache`` and ``checkpoint``, and lists what it
-    publishes: paths in ``publish`` (a path with nothing staged is
-    removed) and json texts in ``files``.
+    Entering takes the writer lock and loads the committed snapshot
+    (``prior``); a commit numbers its new paths ``v<snap>``, one past
+    the prior snapshot. A staging root already there is what a
+    crashed commit left behind: everything the prior manifest does
+    not name is swept first. The body writes every new artifact to
+    ``stage(rel)`` under the staging root, runs its concurrent jobs on
+    the commit's one thread ``pool``, persists through ``cache`` and
+    ``checkpoint``, lists the slots it replaces in ``publish`` (a
+    shard's ``art/shard=S`` or a stats artifact; a slot with nothing
+    staged is removed) and sets its manifest entries in ``manifest``.
 
     Exit, on every path, joins the pool (cancelling queued work after
-    a failure) and releases what it cached. Only a clean exit
-    publishes: it stages the json files, records the whole plan in
-    the journal, then applies it in order — removals, then the
-    ``publish`` paths as listed, then the files (a build lists shard
-    partitions, then the dictionary artifacts, then ``ledger.json``,
-    then ``manifest.json``) — and deletes the journal. A failure
-    before publish leaves every live file untouched; a crash during
-    it is replayed forward from the journal by the next writer (or
-    engine open), so the index ends up exactly as this commit would
-    have left it.
+    a failure) and releases what it cached. A failed body removes the
+    staging root and leaves the index as it was. A clean exit moves
+    each staged directory to its new path, replaces ``manifest.json``
+    (the commit point), deletes what the prior manifest retained and
+    the new one drops, and removes the staging root. A crash before
+    the replace leaves every reader and the ledger on the prior
+    snapshot; a crash after it leaves the new one committed. The
+    next commit sweeps what either left behind.
+
+    ``fresh`` (a ``resume=False`` build) reads an index an older
+    builder wrote as empty, and sweeps its files after the commit.
     """
 
-    def __init__(self, index_dir: str):
+    def __init__(self, index_dir: str, fresh: bool = False):
         self.index_dir = index_dir
-        self.staging = f"{index_dir}/{STAGING}"
+        self.staging = f"{index_dir}/{layout.STAGING}"
+        self.fresh = fresh
         self.publish: list[str] = []
-        self.files: dict[str, str] = {}
+        self.manifest: dict = {}
+        self.lineage: dict = {}
         self._cached: list[DataFrame] = []
         self._rdds: list = []
         self._lock = _WriterLock(index_dir)
@@ -2096,10 +2007,15 @@ class _Commit:
         os.makedirs(self.index_dir, exist_ok=True)
         self._lock.__enter__()
         try:
-            _recover_compaction(self.index_dir)
+            self.prior = layout.Snapshot.load(
+                self.index_dir, legacy_ok=self.fresh
+            )
+            if os.path.isdir(self.staging):
+                self._sweep(self.prior.live() | set(self.prior.retained))
         except BaseException:
             self._lock.__exit__()
             raise
+        self.snap = self.prior.snapshot_id + 1
         # every job a commit overlaps (guide §2.6) runs here; sized for
         # a build's peak: 3 staged artifact writes, finalize with its
         # clash check and 4 writes, and the ledger-metrics read
@@ -2110,6 +2026,16 @@ class _Commit:
 
     def stage(self, rel: str) -> str:
         return f"{self.staging}/{rel}"
+
+    def staged(self) -> layout.Snapshot:
+        """The shard partitions staged so far, as a snapshot view."""
+        slots = [
+            os.path.relpath(p, self.staging)
+            for p in glob.glob(f"{self.staging}/*/shard=*")
+        ]
+        return layout.Snapshot(
+            self.staging, {"paths": dict(zip(slots, slots))}
+        )
 
     def cache(self, df: DataFrame) -> DataFrame:
         """Persist ``df`` until the commit ends."""
@@ -2130,110 +2056,71 @@ class _Commit:
                 df.unpersist()
             for rdd in self._rdds:
                 rdd.unpersist(False)
-            if exc_type is not None:
-                shutil.rmtree(self.staging, ignore_errors=True)
-            else:
+            if exc_type is None:
                 self._publish()
+            shutil.rmtree(self.staging, ignore_errors=True)
         finally:
             self._lock.__exit__()
 
     def _publish(self) -> None:
+        prior, root = self.prior, self.index_dir
+        paths = dict(prior.paths)
+        for rel in self.publish:
+            paths.pop(rel, None)
+            if os.path.isdir(self.stage(rel)):
+                paths[rel] = f"{rel}/v{self.snap}"
+                layout.install(root, self.stage(rel), paths[rel])
+        changed = paths != prior.paths
+        if not (changed or self.manifest):
+            return
+        manifest = {**prior.manifest, **self.manifest, "paths": paths}
+        if changed:
+            parent = prior.snapshot_id or None
+            manifest.update(
+                snapshot_id=self.snap,
+                parent_snapshot_id=parent,
+                snapshots=[
+                    *prior.manifest.get("snapshots", []),
+                    {
+                        "snapshot_id": self.snap,
+                        "parent_snapshot_id": parent,
+                        **self.lineage,
+                    },
+                ][-20:],
+                # the prior snapshot's paths stay one more commit
+                retained=sorted(prior.live() - set(paths.values())),
+            )
         os.makedirs(self.staging, exist_ok=True)
-        for name, text in self.files.items():
-            with open(self.stage(name), "w") as fh:
-                fh.write(text)
-        paths = self.publish + list(self.files)
-        staged = {p for p in paths if os.path.exists(self.stage(p))}
-        plan = {
-            "remove": [p for p in paths if p not in staged],
-            "replace": [p for p in paths if p in staged],
-        }
-        if paths:
-            tmp = self.stage(".journal")
-            with open(tmp, "w") as fh:
-                json.dump(plan, fh)
-            os.replace(tmp, f"{self.index_dir}/{JOURNAL}")
-        _recover_compaction(self.index_dir)
+        layout.replace_json(
+            f"{root}/{layout.MANIFEST}", manifest,
+            tmp=self.stage(layout.MANIFEST),
+        )
+        keep = set(paths.values()) | set(manifest.get("retained", []))
+        if changed:
+            layout.drop(root, prior.retained, keep)
+        if self.fresh:
+            self._sweep(keep)
+
+    def _sweep(self, keep: set[str]) -> None:
+        """Delete every file of the index that no path of ``keep``
+        holds — all but the manifest, the writer lock and other
+        writers' dot-prefixed state."""
+        layout.sweep(
+            self.index_dir,
+            [
+                n
+                for n in os.listdir(self.index_dir)
+                if n not in (layout.MANIFEST, layout.LOCK)
+                and (n == layout.STAGING or not n.startswith("."))
+            ],
+            keep,
+        )
 
 
 def read_ledger(index_dir: str) -> dict[int, dict]:
-    """Consolidated per-shard ledger, ``{}`` when the index has none
-    (a build then rebuilds every shard)."""
-    path = f"{index_dir}/ledger.json"
-    if not os.path.isfile(path):
-        return {}
-    with open(path) as fh:
-        return {int(s): e for s, e in json.load(fh).items()}
-
-
-def _artifact_shards(
-    index_dir: str, arts: tuple[str, ...] = SHARD_ARTIFACTS
-) -> set[int]:
-    """Shard ids present in the partition directories of ``arts``."""
-    out: set[int] = set()
-    for art in arts:
-        d = f"{index_dir}/{art}"
-        if not os.path.isdir(d):
-            continue
-        for name in os.listdir(d):
-            if name.startswith("shard="):
-                try:
-                    out.add(int(name.split("=", 1)[1]))
-                except ValueError:
-                    pass
-    return out
-
-
-def _recover_compaction(index_dir: str) -> None:
-    """Finish a publish a crashed writer left half done, then clear
-    staging. Caller holds the writer lock.
-
-    The journal is written only after everything it names is fully
-    staged, so replay rolls FORWARD: each removal and replacement is
-    applied again (``_swap_dir_commit`` is idempotent) and the journal
-    is deleted. A single-swap marker (``.<key>_swap.marker``, its
-    replacement in ``.<key>_compact_tmp``) left by a writer that
-    predates the journal replays the same way.
-    """
-    if not os.path.isdir(index_dir):
-        return
-    staging = f"{index_dir}/{STAGING}"
-    journal = f"{index_dir}/{JOURNAL}"
-    plan = {"remove": [], "replace": []}
-    if os.path.isfile(journal):
-        with open(journal) as fh:
-            plan = json.load(fh)
-    markers = [n for n in os.listdir(index_dir) if _is_swap_marker(n)]
-    for name in markers:
-        key = name[1 : -len("_swap.marker")]
-        rel = key.replace("__", "/")
-        legacy_tmp = f"{index_dir}/.{key}_compact_tmp"
-        if os.path.isdir(legacy_tmp):
-            os.makedirs(os.path.dirname(f"{staging}/{rel}"), exist_ok=True)
-            os.rename(legacy_tmp, f"{staging}/{rel}")
-        plan["replace"].append(rel)
-    for rel in plan["remove"]:
-        _swap_dir_commit(index_dir, rel, drop=True)
-    for rel in plan["replace"]:
-        _swap_dir_commit(index_dir, rel)
-    for name in markers:
-        os.remove(f"{index_dir}/{name}")
-    if os.path.isfile(journal):
-        os.remove(journal)
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def _is_swap_marker(name: str) -> bool:
-    return name.startswith(".") and name.endswith("_swap.marker")
-
-
-def _publish_pending(index_dir: str) -> bool:
-    """True when an interrupted publish awaits replay in ``index_dir``
-    (one directory listing)."""
-    return os.path.isdir(index_dir) and any(
-        name == JOURNAL or _is_swap_marker(name)
-        for name in os.listdir(index_dir)
-    )
+    """Per-shard ledger of the committed snapshot, ``{}`` when the
+    index has none (a build then rebuilds every shard)."""
+    return layout.Snapshot.load(index_dir).ledger
 
 
 def compact_index(spark: SparkSession, index_dir: str) -> dict:
@@ -2243,19 +2130,17 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     query-time scans open O(shards) files instead of O(shards x tasks).
     Content is unchanged (queries return identical results). Every
     artifact is rewritten into staging and all of them publish in one
-    journaled commit, so a crash leaves the index either as it was or
-    (after replay) fully compacted. Holds the writer lock: compaction
-    never races a build.
+    manifest replace, so a crash leaves the index either as it was or
+    fully compacted. Holds the writer lock: compaction never races a
+    build.
     """
     with _Commit(index_dir) as commit:
+        prior = commit.prior
         stats: dict = {}
         # driver-local backend: the guard on every doc it rewrites
-        local = _fits_local(
-            _ledger_docs(index_dir, _artifact_shards(index_dir, ("docs",)))
-        )
+        local = _fits_local(_ledger_docs(prior, prior.shards("docs")))
         for art in ("postings", "doc_stats", "dict_parts", "docs"):
-            src = f"{index_dir}/{art}"
-            shards = _artifact_shards(index_dir, (art,))
+            shards = prior.shards(art)
             if not shards:
                 continue
             # sort by the query-pushed keys inside each shard file so
@@ -2264,14 +2149,14 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             # its terms, not the whole shard file).
             sort_keys = ["field", "term_id"] if art == "postings" else []
             if local:
-                for s in sorted(shards):
-                    t = pq.read_table(f"{src}/shard={s}")
+                for s, path in sorted(shards.items()):
+                    t = pq.read_table(path)
                     if sort_keys:
                         t = t.sort_by([(k, "ascending") for k in sort_keys])
                     _write_local(commit.stage(f"{art}/shard={s}"), t)
             else:
                 (
-                    spark.read.parquet(src)
+                    prior.read(spark, art)
                     .repartition("shard")
                     .sortWithinPartitions("shard", *sort_keys)
                     .write.option("maxRecordsPerFile", 0)
@@ -2279,10 +2164,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                     .parquet(commit.stage(art))
                 )
             stats[art] = {
-                "files_before": _parquet_files(src),
+                "files_before": sum(map(_parquet_files, shards.values())),
                 "files_after": _parquet_files(commit.stage(art)),
             }
-            commit.publish.append(art)
+            commit.publish += [f"{art}/shard={s}" for s in shards]
         return stats
 
 

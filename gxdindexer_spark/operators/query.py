@@ -46,7 +46,7 @@ payload.
 
 from __future__ import annotations
 
-import json
+import functools
 import os
 import re
 from urllib.parse import unquote, urlparse
@@ -61,9 +61,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gxdindexer_spark import schemas
+from gxdindexer_spark import snapshot as layout
 from gxdindexer_spark.functions import analyze, bm25, hashing
 from gxdindexer_spark.functions import codec as codec_mod
 from gxdindexer_spark.operators import wand as wand_mod
+from gxdindexer_spark.session import empty_frame as _empty_df
 
 _HITS_SCHEMA = T.StructType(
     [
@@ -186,19 +188,6 @@ def _parse_where(where: str) -> list[tuple]:
     return out
 
 
-def _empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    """Empty result with ``schema``, built JVM-side via range(0).
-    ``createDataFrame([], schema)`` makes a 32-partition python RDD
-    whose every action spawns a Python worker per partition — ~2-5s
-    of overhead for an empty no-match result."""
-    return spark.range(0).select(
-        *[
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-    )
-
-
 def _local_df(
     spark: SparkSession, pdf: pd.DataFrame, schema: T.StructType
 ) -> DataFrame:
@@ -241,15 +230,17 @@ def _wand_pays(present: set, spec) -> bool:
 
 
 def _store_rows(
-    idx_dir: str, shard: int, ids, columns: list[str], filters=None
+    store_paths: dict[int, str], shard: int, ids, columns: list[str],
+    filters=None,
 ) -> pd.DataFrame:
-    """Rows of one shard's doc-store partition whose doc_id is in
-    ``ids`` — a direct pyarrow read, column-pruned, ``filters`` pushed
-    as parquet row-group filters. ``columns`` must include doc_id."""
+    """Rows of one shard's doc-store partition (its path in
+    ``store_paths``) whose doc_id is in ``ids`` — a direct pyarrow
+    read, column-pruned, ``filters`` pushed as parquet row-group
+    filters. ``columns`` must include doc_id."""
     import pyarrow.parquet as pq
 
     store = pq.read_table(
-        f"{idx_dir}/docs/shard={shard}", columns=columns, filters=filters
+        store_paths[shard], columns=columns, filters=filters
     ).to_pandas()
     return store[np.isin(store["doc_id"].to_numpy(), ids)]
 
@@ -280,27 +271,21 @@ class IndexQueryEngine:
         lookup costs no Spark job. Bigger dictionaries fall back to a
         pruned parquet scan per query (term IN-list / prefix range
         pushed to the scan), which is the 10^9-term path — the cap
-        bounds driver memory to ~100 MB. Set 0 to disable."""
+        bounds driver memory to ~100 MB. Set 0 to disable.
+
+        The engine resolves every artifact path once, here, from the
+        committed manifest, so it serves that snapshot until it is
+        reopened, whatever commits run meanwhile."""
         self.spark = spark
         self.index_dir = index_dir
-        # replay a publish a crashed writer left half done (cheap: one
-        # directory listing when there is none) before touching
-        # artifacts — only under the writer lock, taken without
-        # blocking: a live writer holding it is mid-commit and
-        # publishes its own journal, which a replay here would race
-        from gxdindexer_spark.operators import index_build as _ib
-
-        if _ib._publish_pending(index_dir):
-            try:
-                with _ib._WriterLock(index_dir):
-                    _ib._recover_compaction(index_dir)
-            except _ib.ConcurrentWriteError:
-                pass
-        with open(f"{index_dir}/manifest.json") as fh:
-            self.manifest = json.load(fh)
+        if not os.path.isfile(f"{index_dir}/{layout.MANIFEST}"):
+            raise FileNotFoundError(f"{index_dir}: no committed index")
+        self._snap = snap = layout.Snapshot.load(index_dir)
+        self.manifest = snap.manifest
+        self._docs_paths = snap.shards("docs")
         self.fields: dict[str, str] = self.manifest["fields"]
         cs = self._read_tiny_artifact(
-            f"{index_dir}/corpus_stats", ["field", "n_docs", "avgdl"]
+            snap.path("corpus_stats"), ["field", "n_docs", "avgdl"]
         )
         self.n_docs = {
             f: int(n) for f, n in zip(cs["field"], cs["n_docs"])
@@ -312,10 +297,10 @@ class IndexQueryEngine:
         # file index (directory listing + footer schema read) is built
         # once per engine instead of once per query — at 10^6 shard
         # dirs the per-query listing would dominate latency.
-        # (explicit schema: an index left with no shard has an empty
-        # postings dir, nothing to infer a schema from)
-        self._postings = spark.read.schema(schemas.POSTINGS).parquet(
-            f"{index_dir}/postings"
+        # (explicit schema: an index left with no shard has no
+        # postings file to infer a schema from)
+        self._postings = snap.read(
+            spark, "postings", schema=schemas.POSTINGS
         )
         # the driver-local scatter backend's view: the relation's own
         # file list (no second listing), so both backends read the
@@ -335,14 +320,11 @@ class IndexQueryEngine:
                 )
             except (OSError, pa.ArrowInvalid):
                 pass
-        # the three dictionary relations are LAZY (cached properties
-        # below): creating a parquet relation is a driver-blocking
-        # footer/schema read, and most queries never touch them — the
-        # preload cache answers term lookups, and rev/ngrams only
-        # serve leading-wildcard/fuzzy rewrites
-        self._dictionary_df: DataFrame | None = None
-        self._dictionary_rev_df: DataFrame | str | None = "unset"
-        self._dict_ngrams_df: DataFrame | str | None = "unset"
+        # the dictionary relations and the doc store are LAZY (cached
+        # properties below): creating a parquet relation is a
+        # driver-blocking footer/schema read, and most queries never
+        # touch them — the preload cache answers term lookups, and
+        # rev/ngrams only serve leading-wildcard/fuzzy rewrites
         self._dict_cache: dict[tuple[str, str], int] | None = None
         if preload_dictionary:
             # footer row counts first (metadata-only), full read only
@@ -353,10 +335,10 @@ class IndexQueryEngine:
             # (falls back to the Spark path if pyarrow cannot reach
             # the filesystem)
             try:
-                n_rows = self._count_rows(f"{index_dir}/dictionary")
+                n_rows = self._count_rows(snap.path("dictionary"))
                 if n_rows is not None and n_rows <= preload_dictionary:
                     tbl = self._read_tiny_artifact(
-                        f"{index_dir}/dictionary", ["field", "term", "df"]
+                        snap.path("dictionary"), ["field", "term", "df"]
                     )
                     self._dict_cache = {
                         (f, t): int(df)
@@ -383,49 +365,29 @@ class IndexQueryEngine:
         # that case WAND transparently falls back to exact TAAT.
         self.blockmax_safe = self._check_blockmax_safe()
 
-    @property
+    # (assigning one of these, e.g. None to force a fallback tier,
+    # overrides it)
+    @functools.cached_property
     def _dictionary(self) -> DataFrame:
-        if self._dictionary_df is None:
-            self._dictionary_df = self.spark.read.parquet(
-                f"{self.index_dir}/dictionary"
-            )
-        return self._dictionary_df
+        return self._snap.read(self.spark, "dictionary")
 
-    @_dictionary.setter
-    def _dictionary(self, value) -> None:
-        self._dictionary_df = value
-
-    @property
+    @functools.cached_property
     def _dictionary_rev(self) -> DataFrame | None:
-        """Reversed-term dictionary relation, or None for pre-r5
-        indexes without the artifact (callers raise)."""
-        if isinstance(self._dictionary_rev_df, str):
-            p = f"{self.index_dir}/dictionary_rev"
-            self._dictionary_rev_df = (
-                self.spark.read.parquet(p) if os.path.isdir(p) else None
-            )
-        return self._dictionary_rev_df
+        """Reversed-term dictionary relation (None: leading-wildcard
+        callers raise)."""
+        return self._snap.read(self.spark, "dictionary_rev")
 
-    @_dictionary_rev.setter
-    def _dictionary_rev(self, value) -> None:
-        self._dictionary_rev_df = value
-
-    @property
+    @functools.cached_property
     def _dict_ngrams(self) -> DataFrame | None:
         """char-3-gram -> term artifact (finalize-derived, never
         stale): sub-linear fuzzy candidate generation for big
-        dictionaries; absent on indexes built before r5 ->
-        length-band fallback."""
-        if isinstance(self._dict_ngrams_df, str):
-            p = f"{self.index_dir}/dictionary_ngrams"
-            self._dict_ngrams_df = (
-                self.spark.read.parquet(p) if os.path.isdir(p) else None
-            )
-        return self._dict_ngrams_df
+        dictionaries; None -> length-band fallback."""
+        return self._snap.read(self.spark, "dictionary_ngrams")
 
-    @_dict_ngrams.setter
-    def _dict_ngrams(self, value) -> None:
-        self._dict_ngrams_df = value
+    @functools.cached_property
+    def _docs(self) -> DataFrame:
+        """The doc-store relation, with its shard column."""
+        return self._snap.read(self.spark, "docs")
 
     def _read_tiny_artifact(
         self, path: str, columns: list[str]
@@ -439,7 +401,7 @@ class IndexQueryEngine:
 
             tbl = pq.read_table(path, columns=columns)
             return {c: tbl[c].to_pylist() for c in columns}
-        except Exception:  # noqa: BLE001 — non-local fs
+        except (OSError, pa.ArrowInvalid):  # non-local fs
             rows = self.spark.read.parquet(path).select(*columns).collect()
             return {c: [r[c] for r in rows] for c in columns}
 
@@ -458,10 +420,8 @@ class IndexQueryEngine:
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
     def _check_blockmax_safe(self) -> bool:
-        # one consolidated-ledger read (O(1) driver I/O, not O(shards))
-        from gxdindexer_spark.operators.index_build import read_ledger
-
-        for entry in read_ledger(self.index_dir).values():
+        # the ledger rides in the manifest read at open
+        for entry in self._snap.ledger.values():
             at_build = entry.get("avgdl_at_build") or {}
             for f, v in at_build.items():
                 if abs(self.avgdl.get(f, v) - v) > 1e-9:
@@ -914,7 +874,7 @@ class IndexQueryEngine:
         field = field or next(iter(self.fields))
         dps = int(self.manifest.get("docs_per_shard") or 1)
         row = (
-            self.spark.read.parquet(f"{self.index_dir}/docs")
+            self._docs
             .filter(
                 (F.col("shard") == int(doc_id) // dps)
                 & (F.col("doc_id") == int(doc_id))
@@ -1166,14 +1126,14 @@ class IndexQueryEngine:
         ready list of pyarrow filter tuples (the join qparser passes
         its computed IN-set directly)."""
         flt = _parse_where(where) if isinstance(where, str) else where
-        store_cols = {f.name for f in self._doc_store_schema().fields}
+        store_cols = {f.name for f in self._docs.schema.fields}
         for col, _op, _v in flt:
             if col not in store_cols:
                 raise ValueError(
                     f"where column {col!r} is not in the doc store "
                     f"(has: {sorted(store_cols)})"
                 )
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
 
         def shard_topk_filtered(shard: int, pg: pd.DataFrame, sp):
             ids, scores = wand_mod.match_scores(pg, sp)
@@ -1181,7 +1141,7 @@ class IndexQueryEngine:
                 return None
             # parquet filters -> row-group stats pruning; only the
             # doc_id column of surviving rows materializes
-            allowed = _store_rows(idx_dir, shard, ids, ["doc_id"], flt)
+            allowed = _store_rows(store_paths, shard, ids, ["doc_id"], flt)
             keep = np.isin(ids, allowed["doc_id"].to_numpy())
             ids, scores = wand_mod._topk_from_scores(
                 ids[keep], scores[keep], k
@@ -1242,7 +1202,7 @@ class IndexQueryEngine:
         if combine not in ("add", "mul"):
             raise ValueError("combine must be 'add' or 'mul'")
         spec = self.make_spec(query, fields)
-        store_cols = {f.name for f in self._doc_store_schema().fields}
+        store_cols = {f.name for f in self._docs.schema.fields}
         if field not in store_cols:
             raise ValueError(
                 f"boost field {field!r} is not in the doc store "
@@ -1250,14 +1210,14 @@ class IndexQueryEngine:
             )
         if not spec.term_weights:
             return _empty_df(self.spark, _HITS_SCHEMA)
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
         boost_fn = self._BOOST_FNS[fn]
 
         def shard_topk_boosted(shard: int, pg: pd.DataFrame, sp):
             ids, scores = wand_mod.match_scores(pg, sp)
             if not ids.size:
                 return None
-            store = _store_rows(idx_dir, shard, ids, ["doc_id", field])
+            store = _store_rows(store_paths, shard, ids, ["doc_id", field])
             v = store.set_index("doc_id")[field].reindex(ids).to_numpy(
                 "float64"
             )
@@ -1488,7 +1448,7 @@ class IndexQueryEngine:
         ids = [int(r["doc_id"]) for r in hits]
         shards = sorted({i // dps for i in ids})
         store = (
-            self.spark.read.parquet(f"{self.index_dir}/docs")
+            self._docs
             .filter(
                 F.col("shard").isin(shards) & F.col("doc_id").isin(ids)
             )
@@ -1584,7 +1544,7 @@ class IndexQueryEngine:
         flt = _parse_where(where) if where is not None else None
         spec = self.make_spec(query, fields)
         store_schema = {
-            f.name: f.dataType for f in self._doc_store_schema().fields
+            f.name: f.dataType for f in self._docs.schema.fields
         }
         for c in (by, *columns):
             if c not in store_schema:
@@ -1604,7 +1564,7 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
         n_local = offset + k
         cols = ["doc_id", by, *[c for c in columns if c != by]]
 
@@ -1612,7 +1572,7 @@ class IndexQueryEngine:
             ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
                 return None
-            hit = _store_rows(idx_dir, shard, ids, cols, flt)
+            hit = _store_rows(store_paths, shard, ids, cols, flt)
             if after is not None:
                 av, ad = after
                 if ascending:
@@ -1670,7 +1630,7 @@ class IndexQueryEngine:
         flt = _parse_where(where) if where is not None else None
         spec = self.make_spec(query, fields)
         store_schema = {
-            f.name: f.dataType for f in self._doc_store_schema().fields
+            f.name: f.dataType for f in self._docs.schema.fields
         }
         for c in (by, *columns, *[c for c, _o, _v in flt or ()]):
             if c not in store_schema:
@@ -1684,28 +1644,20 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
         cols = ["doc_id", by, *[c for c in columns if c != by]]
 
         def shard_export(shard: int, pg: pd.DataFrame, sp):
             ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
                 return None
-            return _store_rows(idx_dir, shard, ids, cols, flt)[cols]
+            return _store_rows(store_paths, shard, ids, cols, flt)[cols]
 
         local = self._scatter(
             self._scan_keys(spec), shard_export, out_schema, spec
         )
         order = F.asc(by) if ascending else F.desc(by)
         return local.orderBy(order, F.asc("doc_id"))
-
-    def _doc_store_schema(self) -> T.StructType:
-        """Doc-store schema, read once per engine (footer-only)."""
-        if not hasattr(self, "_docs_schema"):
-            self._docs_schema = self.spark.read.parquet(
-                f"{self.index_dir}/docs"
-            ).schema
-        return self._docs_schema
 
     def get_docs(
         self,
@@ -1723,14 +1675,14 @@ class IndexQueryEngine:
         result (Solr returns null docs; a DataFrame has no nulls to
         return). -> (doc_id, *stored columns), doc_id ascending."""
         ids = sorted({int(i) for i in doc_ids})
-        schema = {f.name for f in self._doc_store_schema().fields}
+        schema = {f.name for f in self._docs.schema.fields}
         for c in columns:
             if c not in schema:
                 raise ValueError(
                     f"column {c!r} is not in the doc store "
                     f"(has: {sorted(schema)})"
                 )
-        out = self.spark.read.parquet(f"{self.index_dir}/docs")
+        out = self._docs
         if not ids:
             out = out.filter(F.lit(False))
         dps = int(self.manifest.get("docs_per_shard") or 0)
@@ -1777,7 +1729,7 @@ class IndexQueryEngine:
 
         -> (doc_id, score) global top-k of the restricted set."""
         store_types = {
-            f.name: f.dataType for f in self._doc_store_schema().fields
+            f.name: f.dataType for f in self._docs.schema.fields
         }
         for c in (join_from, join_to):
             if c not in store_types:
@@ -2026,13 +1978,13 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
 
         def shard_facets(shard: int, pg: pd.DataFrame, sp):
             ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
                 return None
-            hit = _store_rows(idx_dir, shard, ids, ["doc_id", by])
+            hit = _store_rows(store_paths, shard, ids, ["doc_id", by])
             vc = hit[by].astype(str).value_counts()
             return pd.DataFrame(
                 {by: vc.index.to_numpy(), "n_docs": vc.to_numpy("int64")}
@@ -2059,13 +2011,13 @@ class IndexQueryEngine:
                 T.StructField("score", T.DoubleType(), False),
             ]
         )
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
 
         def shard_groups(shard: int, pg: pd.DataFrame, sp):
             ids, scores = wand_mod.match_scores(pg, sp)
             if not ids.size:
                 return None
-            store = _store_rows(idx_dir, shard, ids, ["doc_id", by])
+            store = _store_rows(store_paths, shard, ids, ["doc_id", by])
             grp = store.set_index("doc_id")[by].reindex(ids).to_numpy()
             hit = pd.DataFrame({by: grp, "doc_id": ids, "score": scores})
             hit = hit[hit[by].notna()]  # Solr-style: ungrouped docs drop
@@ -2228,13 +2180,13 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
 
         def shard_ranges(shard: int, pg: pd.DataFrame, sp):
             ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
                 return None
-            hit = _store_rows(idx_dir, shard, ids, ["doc_id", by])
+            hit = _store_rows(store_paths, shard, ids, ["doc_id", by])
             vals = hit[by].dropna().to_numpy()
             vals = vals[(vals >= start) & (vals < end)]
             if not vals.size:
@@ -2278,13 +2230,13 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
 
         def shard_pivot(shard: int, pg: pd.DataFrame, sp):
             ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
                 return None
-            hit = _store_rows(idx_dir, shard, ids, ["doc_id", by_a, by_b])
+            hit = _store_rows(store_paths, shard, ids, ["doc_id", by_a, by_b])
             hit = hit.dropna(subset=[by_a, by_b])
             if not len(hit):
                 return None
@@ -2363,13 +2315,13 @@ class IndexQueryEngine:
                 T.StructField("vmax", T.DoubleType(), True),
             ]
         )
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
 
         def shard_stats(shard: int, pg: pd.DataFrame, sp):
             ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
                 return None
-            hit = _store_rows(idx_dir, shard, ids, ["doc_id", on, *gcols])
+            hit = _store_rows(store_paths, shard, ids, ["doc_id", on, *gcols])
             if by:
                 hit = hit[hit[by].notna()]
             if not len(hit):
@@ -2478,13 +2430,13 @@ class IndexQueryEngine:
                 T.StructField("c", T.LongType(), False),
             ]
         )
-        idx_dir = self.index_dir
+        store_paths = self._docs_paths
 
         def shard_hist(shard: int, pg: pd.DataFrame, sp):
             ids = wand_mod.match_docs(pg, sp)
             if not ids.size:
                 return None
-            hit = _store_rows(idx_dir, shard, ids, ["doc_id", on])
+            hit = _store_rows(store_paths, shard, ids, ["doc_id", on])
             vals = hit[on].dropna()
             vc = vals.astype("float64").value_counts()
             return pd.DataFrame(
@@ -2634,7 +2586,7 @@ class IndexQueryEngine:
         shards = sorted({i // dps for i in ids})
         texts = {
             int(r["doc_id"]): r[field] or ""
-            for r in self.spark.read.parquet(f"{self.index_dir}/docs")
+            for r in self._docs
             .filter(
                 F.col("shard").isin(shards) & F.col("doc_id").isin(ids)
             )

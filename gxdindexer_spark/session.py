@@ -23,6 +23,18 @@ def local_checkpoint(df: DataFrame):
     return ck, ck._jdf.queryExecution().analyzed().rdd()
 
 
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """Empty frame with ``schema``, built JVM-side via range(0).
+    ``createDataFrame([], schema)`` makes a 32-partition python RDD
+    whose every action spawns a Python worker per partition — ~2-5s
+    of overhead for an empty result."""
+    from pyspark.sql import functions as F
+
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+    )
+
+
 def get_spark(
     app_name: str = "gxdindexer-spark",
     master: str | None = None,

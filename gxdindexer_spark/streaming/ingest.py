@@ -22,8 +22,9 @@ ledger's per-shard field_stats — ``metrics["finalize_mode"] ==
 "incremental"`` on every append batch (``IndexBuilder._finalize_stats``;
 asserted stream-vs-batch-identical in tests/test_streaming_ingest.py).
 Queries opening the index between batches see a consistent committed
-snapshot (manifest/ledger are replaced atomically, and the engine
-falls back to exact TAAT while stored block-max bounds are stale).
+snapshot (each batch commits by one atomic manifest replace, and an
+engine keeps serving the snapshot it opened; it falls back to exact
+TAAT while stored block-max bounds are stale).
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from gxdindexer_spark.operators.index_build import IndexBuilder
+from gxdindexer_spark.snapshot import replace_json
 
 #: minimal ingest schema: identity + text + per-row invariant + shard
 INGEST_DOCS = T.StructType(
@@ -56,10 +58,7 @@ def _read_ingest_state(index_dir: str) -> dict:
 
 
 def _write_ingest_state(index_dir: str, state: dict) -> None:
-    tmp = f"{index_dir}/.ingest_state.json.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(state, fh)
-    os.replace(tmp, f"{index_dir}/.ingest_state.json")
+    replace_json(f"{index_dir}/.ingest_state.json", state)
 
 
 def ingest_stream(
@@ -90,7 +89,8 @@ def ingest_stream(
     (``.ingest_state.json`` next to the artifacts, atomic replace) —
     not process memory — so the policy survives restarts and
     cron-style one-batch drains; the compaction itself holds the
-    index writer lock and is crash-safe (``_recover_compaction``).
+    index writer lock and, like every commit, publishes by one atomic
+    manifest replace.
     ``compact_log`` (optional list) receives each compaction's
     metrics dict — the caller's observability hook.
     """

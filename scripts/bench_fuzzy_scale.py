@@ -36,7 +36,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from gxdindexer_spark.functions import hashing  # noqa: E402
-from gxdindexer_spark.operators.index_build import IndexBuilder  # noqa: E402
+from gxdindexer_spark.operators.index_build import (  # noqa: E402
+    IndexBuilder,
+    _Commit,
+)
 from gxdindexer_spark.operators.query import (  # noqa: E402
     IndexQueryEngine,
     _dl_distance,
@@ -70,7 +73,7 @@ def main() -> int:
             salt_range=16, block_size=32,
         ).build(docs, idx, resume=True)
 
-    # --- synthetic 1M-term dictionary (overwrites the tiny real one):
+    # --- synthetic 1M-term dictionary (replaces the tiny real one):
     # md5-hex pseudo-words of length 6..17 + the planted variants
     planted = sorted(
         {t for vs in VARIANTS.values() for t in vs}
@@ -105,26 +108,29 @@ def main() -> int:
         .withColumn("term_id", F.lit(0).cast("long"))
         .localCheckpoint(eager=True)
     )
-    # term_id values don't matter for expansion; keep schema parity
-    dict_df.write.mode("overwrite").parquet(f"{idx}/dictionary")
-    (
-        dict_df.filter(F.length("term") >= 3)
-        .select(
-            "field", "term", "df",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(1, length(term) - 2),"
-                        " i -> substring(term, i, 3))"
+    # term_id values don't matter for expansion; keep schema parity.
+    # Published as a new snapshot through the builder's commit, so the
+    # engine reads it (a write into a live artifact path would not be)
+    with _Commit(idx) as commit:
+        dict_df.write.parquet(commit.stage("dictionary"))
+        (
+            dict_df.filter(F.length("term") >= 3)
+            .select(
+                "field", "term", "df",
+                F.explode(
+                    F.array_distinct(
+                        F.expr(
+                            "transform(sequence(1, length(term) - 2),"
+                            " i -> substring(term, i, 3))"
+                        )
                     )
-                )
-            ).alias("gram"),
+                ).alias("gram"),
+            )
+            .repartitionByRange(F.col("field"), F.col("gram"))
+            .sortWithinPartitions("field", "gram")
+            .write.parquet(commit.stage("dictionary_ngrams"))
         )
-        .repartitionByRange(F.col("field"), F.col("gram"))
-        .sortWithinPartitions("field", "gram")
-        .write.mode("overwrite")
-        .parquet(f"{idx}/dictionary_ngrams")
-    )
+        commit.publish += ["dictionary", "dictionary_ngrams"]
 
     eng = IndexQueryEngine(spark, idx, preload_dictionary=0)
     assert eng._dict_cache is None and eng._dict_ngrams is not None

@@ -66,20 +66,24 @@ def compute_only(idx: str, n_docs: int) -> dict:
 
     from gxdindexer_spark.functions import bm25, hashing
     from gxdindexer_spark.operators import wand as W
+    from gxdindexer_spark.snapshot import Snapshot
 
+    snap = Snapshot.load(idx)
+    dict_p, cs_p = snap.path("dictionary"), snap.path("corpus_stats")
+    post0 = snap.shards("postings")[0]
     con = duckdb.connect()
     terms = QUERY.split()
     tids = {t: hashing.term_id(t) for t in terms}
     in_list = ",".join(f"'{t}'" for t in terms)
     d = con.sql(
-        f"SELECT term, term_id, df FROM '{idx}/dictionary/*.parquet' "
+        f"SELECT term, term_id, df FROM '{dict_p}/*.parquet' "
         f"WHERE term IN ({in_list})"
     ).df()
-    cs = con.sql(f"SELECT * FROM '{idx}/corpus_stats/*.parquet'").df()
+    cs = con.sql(f"SELECT * FROM '{cs_p}/*.parquet'").df()
     n_total, avgdl = float(cs.n_docs[0]), float(cs.avgdl[0])
     tid_list = ",".join(str(v) for v in tids.values())
     pdf = con.sql(
-        f"SELECT * FROM '{idx}/postings/shard=0/*.parquet' "
+        f"SELECT * FROM '{post0}/*.parquet' "
         f"WHERE term_id IN ({tid_list})"
     ).df()
     pdf["field"] = "content"

@@ -1,11 +1,13 @@
-"""Writer commits: compute into staging, publish once (index_build._Commit).
+"""Writer commits: compute into staging, publish by one manifest
+replace (index_build._Commit, gxdindexer_spark.snapshot).
 
-Invariants: a crash at any step of an incremental build or a delete,
-on either commit backend, resumes to exactly the index the uncrashed
-commit leaves; a reader
-opened before publish sees the pre-commit index; a failed commit
-releases its threads and cached blocks; a half-done publish is
-replayed only by a holder of the writer lock.
+Invariants: a crash at any step of an incremental build, a delete or
+a compaction, on either commit backend, resumes to exactly the index
+the uncrashed commit leaves, and a crash before the manifest replace
+leaves the ledger and every reader on the whole old snapshot; an
+engine keeps serving the snapshot it opened across every kind of
+commit; a failed commit releases its threads and cached blocks; an
+index an older builder wrote is refused until rebuilt.
 """
 
 from __future__ import annotations
@@ -18,11 +20,10 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from gxdindexer_spark.operators import index_build
+from gxdindexer_spark import snapshot
 from gxdindexer_spark.operators.index_build import (
-    ConcurrentWriteError,
     IndexBuilder,
-    _WriterLock,
+    compact_index,
     delete_docs,
     read_ledger,
     update_docs,
@@ -79,12 +80,14 @@ def _ops(corpus, spark):
         "delete": lambda idx: delete_docs(
             spark, idx, _builder(), gone, assume_dense_shards=True
         ),
+        "compact": lambda idx: compact_index(spark, idx),
     }
 
 
 def _state(spark, idx):
     def rows(art, keys):
-        return spark.read.parquet(f"{idx}/{art}").orderBy(*keys).collect()
+        snap = snapshot.Snapshot.load(idx)
+        return snap.read(spark, art).orderBy(*keys).collect()
 
     ledger = {
         s: {k: v for k, v in e.items() if k not in ("wall_ms", "snapshot_id")}
@@ -104,6 +107,44 @@ def _results(spark, idx):
     return hits, eng.count_matches("return").collect()
 
 
+def _unnamed(idx):
+    """Files under ``idx`` that no path of the committed snapshot (live
+    or retained) holds, the manifest and writer lock aside."""
+    snap = snapshot.Snapshot.load(idx)
+    keep = snap.live() | set(snap.retained)
+    out = []
+    for root, _dirs, files in os.walk(idx):
+        for name in files:
+            rel = os.path.relpath(os.path.join(root, name), idx)
+            if rel in (snapshot.MANIFEST, snapshot.LOCK):
+                continue
+            if not any(rel.startswith(f"{k}/") for k in keep):
+                out.append(rel)
+    return out
+
+
+def _on_manifest_replace(monkeypatch, hook):
+    """Run ``hook()`` inside the next commits, just before each replaces
+    the manifest (every staged path already moved in)."""
+    replace = snapshot.replace_json
+
+    def paused(path, obj, tmp=None):
+        if path.endswith(snapshot.MANIFEST):
+            hook()
+        replace(path, obj, tmp)
+
+    monkeypatch.setattr(snapshot, "replace_json", paused)
+
+
+CRASH_STEPS = (
+    "postings_write",
+    "finalize",
+    "between_moves",
+    "before_replace",
+    "after_replace",
+)
+
+
 def _crash_at(monkeypatch, step):
     """Make ``step`` of the next commit raise."""
     boom = RuntimeError(f"injected crash: {step}")
@@ -115,22 +156,20 @@ def _crash_at(monkeypatch, step):
         monkeypatch.setattr(IndexBuilder, "postings_df", fail)
     elif step == "finalize":
         monkeypatch.setattr(IndexBuilder, "_finalize_stats", fail)
-    else:
-        swap = index_build._swap_dir_commit
-        seen = []
+    elif step == "between_moves":
+        install, seen = snapshot.install, []
 
-        def gated(index_dir, rel, drop=False):
-            if "shard=" in rel:
-                seen.append(rel)
-            if (
-                (step == "between_shard_swaps" and len(seen) == 2)
-                or (step == "before_dictionary" and rel == "dictionary")
-                or (step == "before_ledger" and rel == "ledger.json")
-            ):
+        def second_fails(*args):
+            seen.append(args)
+            if len(seen) == 2:
                 raise boom
-            swap(index_dir, rel, drop)
+            install(*args)
 
-        monkeypatch.setattr(index_build, "_swap_dir_commit", gated)
+        monkeypatch.setattr(snapshot, "install", second_fails)
+    elif step == "before_replace":
+        _on_manifest_replace(monkeypatch, fail)
+    else:  # the manifest is replaced, the prior retained paths not gone
+        monkeypatch.setattr(snapshot, "drop", fail)
     return boom
 
 
@@ -139,10 +178,15 @@ def _crash_at(monkeypatch, step):
     [
         ("build", "local"),
         ("delete", "local"),
+        ("compact", "local"),
         ("build", "spark"),
         ("delete", "spark"),
+        ("compact", "spark"),
     ],
-    ids=["build", "delete", "build-spark", "delete-spark"],
+    ids=[
+        "build", "delete", "compact",
+        "build-spark", "delete-spark", "compact-spark",
+    ],
 )
 def test_crash_at_each_commit_step_resumes_to_clean_commit(
     op, backend, corpus, base, spark, tmp_path, monkeypatch
@@ -155,30 +199,25 @@ def test_crash_at_each_commit_step_resumes_to_clean_commit(
     clean = str(tmp_path / "clean")
     shutil.copytree(base, clean)
     seen_before_publish = []
-    publish = index_build._Commit._publish
-
-    def paused(commit):
-        # the commit has computed everything; nothing is published yet
-        seen_before_publish.append(_results(spark, commit.index_dir))
-        publish(commit)
-
     with monkeypatch.context() as m:
-        m.setattr(index_build._Commit, "_publish", paused)
+        # the commit has moved everything in; nothing is published yet
+        _on_manifest_replace(
+            m, lambda: seen_before_publish.append(_results(spark, clean))
+        )
         run(clean)
     assert seen_before_publish == [pre_results]
     want = _state(spark, clean)
-    assert want["ledger"] != {
-        s: {k: v for k, v in e.items() if k not in ("wall_ms", "snapshot_id")}
-        for s, e in pre_ledger.items()
-    }
+    if op != "compact":
+        assert want["ledger"] != {
+            s: {
+                k: v for k, v in e.items()
+                if k not in ("wall_ms", "snapshot_id")
+            }
+            for s, e in pre_ledger.items()
+        }
 
-    for step in (
-        "postings_write",
-        "finalize",
-        "between_shard_swaps",
-        "before_dictionary",
-        "before_ledger",
-    ):
+    steps = CRASH_STEPS if op != "compact" else CRASH_STEPS[2:]
+    for step in steps:
         idx = str(tmp_path / step)
         shutil.copytree(base, idx)
         with monkeypatch.context() as m:
@@ -186,18 +225,80 @@ def test_crash_at_each_commit_step_resumes_to_clean_commit(
             with pytest.raises(RuntimeError) as err:
                 run(idx)
             assert err.value is boom
-        if step in ("postings_write", "finalize"):
-            # failed before publish: the live index is untouched
+        if step != "after_replace":
+            # failed before the commit point: the ledger and every
+            # reader stay on the whole old snapshot
             assert read_ledger(idx) == pre_ledger
-            assert not os.path.exists(f"{idx}/{index_build.STAGING}")
-        else:
-            assert os.path.isfile(f"{idx}/{index_build.JOURNAL}")
+            assert _results(spark, idx) == pre_results
+        # a failed body cleans its staging root; a crash in the
+        # publish leaves it for the next commit to sweep
+        staged = os.path.exists(f"{idx}/{snapshot.STAGING}")
+        assert staged == (step not in ("postings_write", "finalize"))
         run(idx)  # resume
-        assert not os.path.exists(f"{idx}/{index_build.JOURNAL}")
+        assert not os.path.exists(f"{idx}/{snapshot.STAGING}")
+        assert _unnamed(idx) == []
         got = _state(spark, idx)
         for key in want:
             assert got[key] == want[key], (step, key)
         assert _results(spark, idx) == _results(spark, clean)
+
+
+def _view(eng):
+    """What an engine serves: ranked hits, a match count, and stored
+    fields of a few docs (one per shard the commits touch)."""
+    hits = [(r["doc_id"], r["score"]) for r in eng.topk(Q, 10).collect()]
+    stored = sorted(
+        tuple(r) for r in eng.get_docs(
+            [3, 35, 95, 100, 160], columns=("repo", "content")
+        ).collect()
+    )
+    return hits, eng.count_matches("return").collect(), stored
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["append", "delete", "update_content", "update_attrs", "compact"],
+)
+def test_open_engine_keeps_its_snapshot_across_each_commit(
+    kind, corpus, base, spark, tmp_path, monkeypatch
+):
+    """An engine opened before a commit returns, after it, exactly what
+    it returned before; an engine opened while the commit is paused
+    just before its manifest replace sees the whole old snapshot; a
+    fresh engine sees the new one."""
+    idx = str(tmp_path / "idx")
+    shutil.copytree(base, idx)
+    held = IndexQueryEngine(spark, idx)
+    before = _view(held)
+    b = _builder()
+    commit = {
+        "append": lambda: b.build(
+            spark.createDataFrame(corpus[corpus["shard"] == 5]), idx,
+            append=True,
+        ),
+        "delete": lambda: delete_docs(
+            spark, idx, b, [3, 95], assume_dense_shards=True
+        ),
+        "update_content": lambda: update_docs(
+            spark, idx, b, {35: {"content": "return merged return"}},
+            assume_dense_shards=True,
+        ),
+        "update_attrs": lambda: update_docs(
+            spark, idx, b, {100: {"repo": "org9/moved"}},
+            assume_dense_shards=True,
+        ),
+        "compact": lambda: compact_index(spark, idx),
+    }[kind]
+    paused = []
+    with monkeypatch.context() as m:
+        _on_manifest_replace(
+            m, lambda: paused.append(_view(IndexQueryEngine(spark, idx)))
+        )
+        commit()
+    assert paused == [before]
+    assert _view(held) == before
+    after = _view(IndexQueryEngine(spark, idx))
+    assert (after == before) == (kind == "compact")
 
 
 def _tree(idx):
@@ -222,13 +323,13 @@ def test_unreadable_kept_shards_are_rejected_before_staging(
     fix, before anything is staged; the rebuild it names succeeds."""
     idx = str(tmp_path / "idx")
     shutil.copytree(base, idx)
+    with open(f"{idx}/{snapshot.MANIFEST}") as fh:
+        manifest = json.load(fh)
     if legacy == "no_field_stats":
-        ledger = read_ledger(idx)
-        del ledger[0]["field_stats"]
-        with open(f"{idx}/ledger.json", "w") as fh:
-            json.dump({str(s): e for s, e in ledger.items()}, fh)
+        del manifest["ledger"]["0"]["field_stats"]
     else:
-        shutil.rmtree(f"{idx}/dictionary")
+        shutil.rmtree(f"{idx}/{manifest['paths'].pop('dictionary')}")
+    snapshot.replace_json(f"{idx}/{snapshot.MANIFEST}", manifest)
     before = _tree(idx)
     with pytest.raises(ValueError, match=r"resume=False"):
         _builder().build(_grown(corpus, spark), idx, resume=True)
@@ -259,7 +360,7 @@ def test_failed_build_releases_threads_and_cached_blocks(
     assert not [
         t for t in threading.enumerate() if t.name.startswith("gxdidx-commit")
     ]
-    assert not os.path.exists(f"{tmpdir_idx}/{index_build.STAGING}")
+    assert not os.path.exists(f"{tmpdir_idx}/{snapshot.STAGING}")
     assert not os.path.exists(f"{tmpdir_idx}/manifest.json")
     m = _builder().build(docs, tmpdir_idx, resume=True)
     assert m["shards_built"] == 6
@@ -267,47 +368,74 @@ def test_failed_build_releases_threads_and_cached_blocks(
     assert IndexQueryEngine(spark, tmpdir_idx).topk(Q, 5).count() == 5
 
 
-@pytest.mark.parametrize("layout", ["journal", "swap_marker"])
-def test_half_done_publish_replays_only_under_the_writer_lock(
-    layout, corpus, base, spark, tmp_path
+def _to_older_layout(idx):
+    """Rewrite ``idx`` in the layout an older builder left: each
+    artifact's files directly in its directory (a shard's in
+    ``<art>/shard=S``), the ledger in a file of its own, a manifest
+    with no paths."""
+    with open(f"{idx}/{snapshot.MANIFEST}") as fh:
+        manifest = json.load(fh)
+    for slot, rel in manifest.pop("paths").items():
+        for name in os.listdir(f"{idx}/{rel}"):
+            os.rename(f"{idx}/{rel}/{name}", f"{idx}/{slot}/{name}")
+        os.rmdir(f"{idx}/{rel}")
+    ledger = manifest.pop("ledger")
+    manifest.pop("retained", None)
+    snapshot.replace_json(f"{idx}/ledger.json", ledger)
+    snapshot.replace_json(f"{idx}/{snapshot.MANIFEST}", manifest)
+
+
+def test_index_of_an_older_builder_is_refused_until_rebuilt(
+    corpus, base, spark, tmp_path
 ):
-    """A publish mid-flight (its plan recorded, nothing renamed yet)
-    belongs to the writer holding the lock: an engine open must not
-    replay it, and a second writer must fail before touching it."""
+    """Readers and writers refuse an index in the older layout with a
+    ValueError naming the rebuild; that rebuild leaves none of its
+    files behind."""
     idx = str(tmp_path / "idx")
     shutil.copytree(base, idx)
-    src = f"{idx}/docs/shard=0"
-    if layout == "journal":
-        marker = f"{idx}/{index_build.JOURNAL}"
-        tmp = f"{idx}/{index_build.STAGING}/docs/shard=0"
-        plan = '{"remove": [], "replace": ["docs/shard=0"]}'
-    else:
-        marker = f"{idx}/.docs__shard=0_swap.marker"
-        tmp = f"{idx}/.docs__shard=0_compact_tmp"
-        plan = "docs/shard=0"
-    staged = {}
-
-    def snapshot():
-        return {
-            p: sorted(os.listdir(p)) if os.path.isdir(p) else open(p).read()
-            for p in (src, tmp, marker)
-        }
-
-    with _WriterLock(idx):
-        shutil.copytree(src, tmp)
-        with open(marker, "w") as fh:
-            fh.write(plan)
-        staged = snapshot()
+    _to_older_layout(idx)
+    fix = r"build\(docs, index_dir, resume=False\)"
+    with pytest.raises(ValueError, match=fix):
         IndexQueryEngine(spark, idx)
-        assert snapshot() == staged
-        with pytest.raises(ConcurrentWriteError):
-            update_docs(
-                spark, idx, _builder(), {3: {"content": "x"}},
-                assume_dense_shards=True,
-            )
-        assert snapshot() == staged
-    # lock released: the next open finishes the publish
-    eng = IndexQueryEngine(spark, idx)
-    assert not os.path.exists(marker) and not os.path.exists(tmp)
-    assert sorted(os.listdir(src)) == staged[src]
-    assert eng.get_docs([3]).count() == 1
+    with pytest.raises(ValueError, match=fix):
+        _builder().build(_grown(corpus, spark), idx, resume=True)
+    with pytest.raises(ValueError, match=fix):
+        delete_docs(spark, idx, _builder(), [1], assume_dense_shards=True)
+    m = _builder().build(_grown(corpus, spark), idx, resume=False)
+    assert m["shards_built"] == 6
+    snap = snapshot.Snapshot.load(idx)
+    assert not snap.retained
+    tops = {p.split("/")[0] for p in snap.live()}
+    assert sorted(os.listdir(idx)) == sorted(
+        tops | {snapshot.MANIFEST, snapshot.LOCK}
+    )
+    assert _unnamed(idx) == []
+    assert _results(spark, idx)[0]
+
+
+def test_fresh_build_reads_the_same_through_artifact_dirs(base):
+    """Right after a fresh build into an empty directory, a pyarrow
+    dataset over an artifact directory (as perfbench/layers.py reads
+    docs/, postings/ and dictionary/) holds exactly the snapshot's
+    rows: the one snapshot is all there is on disk."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    snap = snapshot.Snapshot.load(base)
+    for art, keys in (
+        ("docs", ["doc_id"]),
+        ("postings", ["shard", "field", "term_id"]),
+        ("dictionary", ["field", "term"]),
+    ):
+        if art == "dictionary":
+            got = ds.dataset(f"{base}/{art}", format="parquet").to_table()
+            want = pq.read_table(snap.path(art))
+        else:
+            got = ds.dataset(
+                f"{base}/{art}", format="parquet", partitioning="hive"
+            ).to_table()
+            want = snap.table(art, sorted(snap.shards(art)))
+        order = [(k, "ascending") for k in keys]
+        assert got.sort_by(order).to_pylist() == (
+            want.sort_by(order).to_pylist()
+        ), art

@@ -24,6 +24,7 @@ from gxdindexer_spark.operators.index_build import (
     update_docs,
 )
 from gxdindexer_spark.operators.query import IndexQueryEngine
+from gxdindexer_spark.snapshot import Snapshot
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
 
@@ -89,7 +90,7 @@ def _state(spark, idx):
     out = {
         art: [
             r.asDict()
-            for r in spark.read.parquet(f"{idx}/{art}")
+            for r in Snapshot.load(idx).read(spark, art)
             .orderBy(*keys)
             .collect()
         ]
@@ -221,8 +222,8 @@ def test_engine_preloads_dictionary_after_local_commit(
     delete_docs(spark, idx, _builder(), [1, 2], assume_dense_shards=True)
     eng = IndexQueryEngine(spark, idx)
     assert eng._dict_cache
-    assert len(eng._dict_cache) == spark.read.parquet(
-        f"{idx}/dictionary"
+    assert len(eng._dict_cache) == Snapshot.load(idx).read(
+        spark, "dictionary"
     ).count()
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from gxdindexer_spark.functions import analyze, bm25
 from gxdindexer_spark.operators.index_build import IndexBuilder
 from gxdindexer_spark.operators.query import IndexQueryEngine, brute_force_bm25_df
+from gxdindexer_spark.snapshot import Snapshot
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
 
@@ -99,7 +100,7 @@ def test_build_metrics(built):
 def test_sha256_invariant(built, spark):
     """input_hint: per-row content sha256 equality source -> docs store."""
     idx, docs, _pdocs, _m = built
-    stored = spark.read.parquet(f"{idx}/docs")
+    stored = Snapshot.load(idx).read(spark, "docs")
     bad = (
         stored.withColumn(
             "expect", F.sha2(F.coalesce("content", F.lit("")), 256)
@@ -116,7 +117,7 @@ def test_sha256_invariant(built, spark):
 def test_dictionary_invariants(built, spark):
     """sum tf per term == cf; df == decoded posting length (SURVEY §5.3)."""
     idx, _docs, pdocs, _m = built
-    dictionary = spark.read.parquet(f"{idx}/dictionary")
+    dictionary = Snapshot.load(idx).read(spark, "dictionary")
     # recompute tf from the tokenizer directly (independent path)
     tf = analyze.term_freqs(pdocs["doc_id"], pdocs["content"], "code")
     expect = tf.groupby("term").agg(df=("doc_id", "nunique"), cf=("tf", "sum"))
@@ -132,7 +133,9 @@ def test_dictionary_invariants(built, spark):
     assert (got["cf"].to_numpy() == expect["cf"].to_numpy()).all()
     # doc_stats: sum of dl == total ORIGINAL token positions (word-part
     # expansions share positions and don't lengthen the doc)
-    ds = spark.read.parquet(f"{idx}/doc_stats").filter(F.col("field") == "content")
+    ds = Snapshot.load(idx).read(spark, "doc_stats").filter(
+        F.col("field") == "content"
+    )
     assert ds.agg(F.sum("dl")).first()[0] == int(
         analyze.original_token_counts(pdocs["content"], "code").sum()
     )
@@ -199,7 +202,7 @@ def test_resume_skips_done_shards(built, spark, tmpdir_idx):
     builder = IndexBuilder(docs_per_shard=100, salt_range=64, block_size=16)
     m1 = builder.build(docs, tmpdir_idx, resume=True)
     before = (
-        spark.read.parquet(f"{tmpdir_idx}/dictionary")
+        Snapshot.load(tmpdir_idx).read(spark, "dictionary")
         .orderBy("field", "term")
         .toPandas()
     )
@@ -207,7 +210,7 @@ def test_resume_skips_done_shards(built, spark, tmpdir_idx):
     assert m2["shards_built"] == 0
     assert m2["shards_skipped"] == m1["shards_built"] + m1["shards_skipped"]
     after = (
-        spark.read.parquet(f"{tmpdir_idx}/dictionary")
+        Snapshot.load(tmpdir_idx).read(spark, "dictionary")
         .orderBy("field", "term")
         .toPandas()
     )
@@ -230,12 +233,12 @@ def test_partial_build_resume(built, spark, tmpdir_idx):
     try:
         builder.build(docs, ref_dir, resume=False)
         a = (
-            spark.read.parquet(f"{tmpdir_idx}/dictionary")
+            Snapshot.load(tmpdir_idx).read(spark, "dictionary")
             .orderBy("field", "term")
             .toPandas()
         )
         b = (
-            spark.read.parquet(f"{ref_dir}/dictionary")
+            Snapshot.load(ref_dir).read(spark, "dictionary")
             .orderBy("field", "term")
             .toPandas()
         )
@@ -431,8 +434,8 @@ def test_orphan_shards_removed_on_shrunk_corpus(built, spark, tmpdir_idx):
     m = builder.build(sub, tmpdir_idx, resume=True)
     assert m["shards_total"] == 2
     # artifacts for shards >= 2 are gone
-    assert not os.path.isdir(f"{tmpdir_idx}/postings/shard=2")
-    assert not os.path.isdir(f"{tmpdir_idx}/docs/shard=3")
+    assert 2 not in Snapshot.load(tmpdir_idx).shards("postings")
+    assert 3 not in Snapshot.load(tmpdir_idx).shards("docs")
     # global stats equal a fresh build of the subset
     import shutil as _sh
     import tempfile as _tmp
@@ -441,12 +444,12 @@ def test_orphan_shards_removed_on_shrunk_corpus(built, spark, tmpdir_idx):
     try:
         builder.build(sub, ref, resume=False)
         a = (
-            spark.read.parquet(f"{tmpdir_idx}/dictionary")
+            Snapshot.load(tmpdir_idx).read(spark, "dictionary")
             .orderBy("field", "term")
             .toPandas()
         )
         b = (
-            spark.read.parquet(f"{ref}/dictionary")
+            Snapshot.load(ref).read(spark, "dictionary")
             .orderBy("field", "term")
             .toPandas()
         )
@@ -461,40 +464,6 @@ def test_orphan_shards_removed_on_shrunk_corpus(built, spark, tmpdir_idx):
             assert a_row["score"] == pytest.approx(b_row["score"], rel=1e-12)
     finally:
         _sh.rmtree(ref, ignore_errors=True)
-
-
-def test_compaction_crash_recovery(built, spark, tmpdir_idx):
-    """A crash inside the compaction swap window (src renamed away,
-    replacement not yet in place) is replayed on the next open."""
-    import json as _json
-
-    from gxdindexer_spark.operators.index_build import _recover_compaction
-
-    _idx, docs, _pdocs, _m = built
-    builder = IndexBuilder(docs_per_shard=100, salt_range=64, block_size=16)
-    builder.build(docs, tmpdir_idx, resume=False)
-    q = "getIndexList if return"
-    before = IndexQueryEngine(spark, tmpdir_idx).topk(q, 10).collect()
-
-    # simulate: crash right after `rename(src, old)` — marker present,
-    # src missing, old holds the only copy
-    os.rename(f"{tmpdir_idx}/postings", f"{tmpdir_idx}/.postings_old")
-    with open(f"{tmpdir_idx}/.postings_swap.marker", "w") as fh:
-        _json.dump({"artifact": "postings"}, fh)
-    _recover_compaction(tmpdir_idx)
-    assert os.path.isdir(f"{tmpdir_idx}/postings")
-    assert not os.path.exists(f"{tmpdir_idx}/.postings_swap.marker")
-    assert IndexQueryEngine(spark, tmpdir_idx).topk(q, 10).collect() == before
-
-    # simulate: crash after tmp fully written, src renamed away — the
-    # NEW data (tmp) must win
-    os.rename(f"{tmpdir_idx}/doc_stats", f"{tmpdir_idx}/.doc_stats_compact_tmp")
-    with open(f"{tmpdir_idx}/.doc_stats_swap.marker", "w") as fh:
-        _json.dump({"artifact": "doc_stats"}, fh)
-    # engine init itself must recover (ADVICE: recovery logic on open)
-    eng = IndexQueryEngine(spark, tmpdir_idx)
-    assert os.path.isdir(f"{tmpdir_idx}/doc_stats")
-    assert eng.topk(q, 10).collect() == before
 
 
 def test_wildcard_expansion_is_bounded(built, spark):
@@ -860,7 +829,7 @@ def test_incremental_finalize_matches_full(
 
     def snap(d):
         return [
-            spark.read.parquet(f"{d}/{art}").orderBy(*keys).toPandas()
+            Snapshot.load(d).read(spark, art).orderBy(*keys).toPandas()
             for art, keys in order.items()
         ]
 
@@ -1072,20 +1041,20 @@ def test_doc_level_delete(
     assert m["docs_deleted"] == len(ids)
     assert m["shards_rebuilt"] == 2 and m["shards_dropped"] == 1
     assert m["finalize_mode"] == "incremental"
-    assert not os.path.isdir(f"{tmpdir_idx}/postings/shard=3")
+    assert 3 not in Snapshot.load(tmpdir_idx).shards("postings")
 
     survivors = docs.filter(~F.col("doc_id").isin(ids))
     ref = tempfile.mkdtemp(prefix="gxdidx_delref_")
     builder.build(survivors, ref, resume=False)
     for art in ("dictionary", "corpus_stats"):
         a = (
-            spark.read.parquet(f"{tmpdir_idx}/{art}")
-            .orderBy(*spark.read.parquet(f"{ref}/{art}").columns[:2])
+            Snapshot.load(tmpdir_idx).read(spark, art)
+            .orderBy(*Snapshot.load(ref).read(spark, art).columns[:2])
             .toPandas()
         )
         b = (
-            spark.read.parquet(f"{ref}/{art}")
-            .orderBy(*spark.read.parquet(f"{ref}/{art}").columns[:2])
+            Snapshot.load(ref).read(spark, art)
+            .orderBy(*Snapshot.load(ref).read(spark, art).columns[:2])
             .toPandas()
         )
         pd.testing.assert_frame_equal(a, b)

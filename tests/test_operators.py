@@ -245,19 +245,6 @@ def test_broadcast_join_for_small_dim(spark):
     assert explain.has_broadcast_join(j)
 
 
-def test_smart_alpha_sort_key(spark):
-    """Reference O2 comparator (GxdImagePaneIndexer.java:280-300):
-    'a2' sorts before 'a10' under the smart-alpha key."""
-    from gxdindexer_spark.functions.sortkeys import smart_alpha_key
-
-    df = spark.createDataFrame(
-        [("a10",), ("a2",), ("a1b3",), ("a1b20",), ("b",), ("10",), ("2",)],
-        ["s"],
-    )
-    got = [r["s"] for r in df.orderBy(smart_alpha_key(F.col("s"))).collect()]
-    assert got == ["2", "10", "a1b3", "a1b20", "a2", "a10", "b"]
-
-
 def test_nested_struct_collect_and_json(spark):
     """Reference A5 (genotype->{marker->{symbol,name}} nested map,
     GxdResultIndexer.java:460-522) and F11 (JSON meta field)."""

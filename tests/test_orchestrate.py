@@ -58,6 +58,7 @@ def test_run_builds_parallel_matches_serial(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from gxdindexer_spark.operators.index_build import IndexBuilder
+    from gxdindexer_spark.snapshot import Snapshot
     from gxdindexer_spark.sources.synth import generate_corpus
     from gxdindexer_spark.sources.tables import prepare_docs
 
@@ -101,12 +102,12 @@ def test_run_builds_parallel_matches_serial(spark, tmp_path):
     )
     for variant in ("base", "positional"):
         a = (
-            spark.read.parquet(f"{par}/{variant}/dictionary")
+            Snapshot.load(f"{par}/{variant}").read(spark, "dictionary")
             .orderBy("field", "term")
             .collect()
         )
         b = (
-            spark.read.parquet(f"{ser}/{variant}/dictionary")
+            Snapshot.load(f"{ser}/{variant}").read(spark, "dictionary")
             .orderBy("field", "term")
             .collect()
         )

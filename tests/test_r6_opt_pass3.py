@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from gxdindexer_spark.operators import ann, index_build
 from gxdindexer_spark.operators.index_build import IndexBuilder, _Commit
+from gxdindexer_spark.snapshot import Snapshot
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
 
@@ -42,17 +43,14 @@ def test_shard_metrics_arrow_matches_spark(spark, tmpdir_idx, monkeypatch):
     docs = _docs(spark)
     b = _builder()
     b.build(docs, tmpdir_idx, resume=False)
-    shards = sorted(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmpdir_idx}/postings")
-        if d.startswith("shard=")
-    )
-    via_arrow = b._shard_metrics_arrow(tmpdir_idx, shards)
+    snap = Snapshot.load(tmpdir_idx)
+    shards = sorted(snap.shards("postings"))
+    via_arrow = b._shard_metrics_arrow(snap, shards)
     assert via_arrow is not None and set(via_arrow) == set(shards)
     # force the Spark path through the size guard and compare
     monkeypatch.setattr(index_build, "ARROW_METRICS_MAX", 0)
-    assert b._shard_metrics_arrow(tmpdir_idx, shards) is None
-    via_spark = b._shard_metrics(spark, tmpdir_idx, shards)
+    assert b._shard_metrics_arrow(snap, shards) is None
+    via_spark = b._shard_metrics(spark, snap, shards)
     assert via_arrow == via_spark
     # and the ledger recorded the same values at build time
     from gxdindexer_spark.operators.index_build import read_ledger
@@ -71,12 +69,13 @@ def test_fresh_full_finalize_dictionary_identical(spark, tmpdir_idx):
     docs = _docs(spark)
     b = _builder()
     b.build(docs, tmpdir_idx, resume=False)
+    snap = Snapshot.load(tmpdir_idx)
     from_artifact = (
-        spark.read.parquet(f"{tmpdir_idx}/dict_parts")
+        snap.read(spark, "dict_parts")
         .groupBy("field", "term", "term_id")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
     )
-    written = spark.read.parquet(f"{tmpdir_idx}/dictionary").select(
+    written = snap.read(spark, "dictionary").select(
         "field", "term", "term_id", "df", "cf"
     )
     assert written.count() == from_artifact.count()

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from gxdindexer_spark.operators.index_build import IndexBuilder, read_ledger
 from gxdindexer_spark.operators.query import IndexQueryEngine
+from gxdindexer_spark.snapshot import Snapshot
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
 from gxdindexer_spark.streaming import ingest
@@ -65,12 +66,12 @@ def test_streaming_ingest_matches_batch_build(spark, corpus_docs, tmp_path):
     ref = str(tmp_path / "ref")
     _builder().build(corpus_docs.select(*cols), ref, resume=False)
     a = (
-        spark.read.parquet(f"{idx}/dictionary")
+        Snapshot.load(idx).read(spark, "dictionary")
         .orderBy("field", "term")
         .toPandas()
     )
     b = (
-        spark.read.parquet(f"{ref}/dictionary")
+        Snapshot.load(ref).read(spark, "dictionary")
         .orderBy("field", "term")
         .toPandas()
     )
@@ -141,8 +142,8 @@ def test_ingest_compact_every_policy(spark, corpus_docs, tmp_path):
     # compaction really coalesced: postings now one file per shard
     n_files = sum(
         1
-        for _root, _d, files in os.walk(f"{idx}/postings")
-        for f in files
+        for path in Snapshot.load(idx).shards("postings").values()
+        for f in os.listdir(path)
         if f.endswith(".parquet")
     )
     assert n_files == len(read_ledger(idx))

@@ -6,7 +6,7 @@ Invariants: a content update re-ranks exactly as a corpus whose text
 was patched (df/dl/avgdl all refresh); an attr-only update rewrites
 ONLY doc-store partitions (postings byte-identical, scores unchanged)
 yet serves the new attrs through get/sort/facet paths; replays are
-no-ops; interrupted attr swaps replay on next open.
+no-ops; a backup copies only the live snapshot.
 """
 
 from __future__ import annotations
@@ -14,22 +14,20 @@ from __future__ import annotations
 import glob
 import math
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from gxdindexer_spark.operators.index_build import (
     IndexBuilder,
-    _recover_compaction,
     delete_docs,
     update_docs,
 )
 from gxdindexer_spark.operators.query import IndexQueryEngine
+from gxdindexer_spark.snapshot import Snapshot
 from gxdindexer_spark.sources.synth import generate_corpus
 from gxdindexer_spark.sources.tables import prepare_docs
 
-from tests.test_commit_backends import use_commit_backend
 from tests.test_grouping_facets import _oracle_scores
 
 N_DOCS = 150
@@ -140,38 +138,6 @@ def test_update_guards(spark, tmp_path):
     assert m == {"docs_updated": 0, "shards_rebuilt": 0}
 
 
-def test_attr_swap_crash_replays(
-    spark, tmp_path, monkeypatch, backend="local"
-):
-    """Simulate a crash mid-swap (shard dir renamed away, tmp fully
-    written) after an attr update committed on ``backend``:
-    _recover_compaction promotes the tmp on next open."""
-    idx, builder, docs, _ = _build(spark, tmp_path, "updcrash")
-    use_commit_backend(monkeypatch, backend)
-    update_docs(
-        spark, idx, builder, {3: {"n_chars": 111_111}},
-        assume_dense_shards=True,
-    )
-    shard_dir = f"{idx}/docs/shard=0"
-    key = "docs__shard=0"
-    # stage the interrupted state: marker + tmp present, src missing
-    shutil.copytree(shard_dir, f"{idx}/.{key}_compact_tmp")
-    os.rename(shard_dir, f"{idx}/.{key}_old")
-    with open(f"{idx}/.{key}_swap.marker", "w") as fh:
-        fh.write("docs/shard=0")
-    assert not os.path.isdir(shard_dir)
-    eng = IndexQueryEngine(spark, idx)  # init replays the swap
-    assert os.path.isdir(shard_dir)
-    assert not os.path.exists(f"{idx}/.{key}_swap.marker")
-    assert eng.get_docs([3], columns=("n_chars",)).collect()[0][
-        "n_chars"
-    ] == 111_111
-
-
-def test_attr_swap_crash_replays_on_spark(spark, tmp_path, monkeypatch):
-    test_attr_swap_crash_replays(spark, tmp_path, monkeypatch, "spark")
-
-
 def test_backup_restore_roundtrip(spark, tmp_path):
     """Backup is a consistent committed snapshot: mutations to the
     original after the backup don't leak in, the restored index
@@ -199,6 +165,31 @@ def test_backup_restore_roundtrip(spark, tmp_path):
         for r in IndexQueryEngine(spark, idx).topk(Q, k=10).collect()
     ]
     assert after != before and victim not in {d for d, _s in after}
+    # the original now retains its previous snapshot: a backup copies
+    # only the live paths, and restores to the live results
+    snap = Snapshot.load(idx)
+    assert snap.retained
+    bak2 = str(tmp_path / "bak_live")
+    backup_index(idx, bak2)
+
+    def files(root, rels):
+        return {
+            os.path.relpath(os.path.join(r, f), root)
+            for rel in rels
+            for r, _d, fs in os.walk(f"{root}/{rel}")
+            for f in fs
+        }
+
+    assert files(bak2, [""]) == {"manifest.json"} | files(
+        idx, snap.live()
+    )
+    restore_index(bak2, str(tmp_path / "restored_live"))
+    assert [
+        (r["doc_id"], r["score"])
+        for r in IndexQueryEngine(spark, str(tmp_path / "restored_live"))
+        .topk(Q, k=10)
+        .collect()
+    ] == after
     # restore serves the pre-mutation snapshot
     rest = str(tmp_path / "restored")
     restore_index(bak, rest)
