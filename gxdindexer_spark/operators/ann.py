@@ -295,6 +295,9 @@ def _build_ann_locked(
     if os.path.isfile(meta_path):
         with open(meta_path) as fh:
             old_meta = json.load(fh)
+        # a crashed predecessor's leftovers (a staged delta whose meta
+        # never committed, an unreferenced older version) go first
+        _sweep_unreferenced(index_dir, old_meta)
         if (
             resume
             and old_meta.get("fingerprint") == fingerprint

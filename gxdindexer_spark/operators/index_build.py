@@ -1970,13 +1970,14 @@ class _Commit:
     Entering takes the writer lock and loads the committed snapshot
     (``prior``); a commit numbers its new paths ``v<snap>``, one past
     the prior snapshot. A staging root already there is what a
-    crashed commit left behind: everything the prior manifest does
-    not name is swept first. The body writes every new artifact to
-    ``stage(rel)`` under the staging root, runs its concurrent jobs on
-    the commit's one thread ``pool``, persists through ``cache`` and
-    ``checkpoint``, lists the slots it replaces in ``publish`` (a
-    shard's ``art/shard=S`` or a stats artifact; a slot with nothing
-    staged is removed) and sets its manifest entries in ``manifest``.
+    crashed commit left behind: every builder-owned path the prior
+    manifest does not name is swept first. The body writes every new
+    artifact to ``stage(rel)`` under the staging root, runs its
+    concurrent jobs on the commit's one thread ``pool``, persists
+    through ``cache`` and ``checkpoint``, lists the slots it replaces
+    in ``publish`` (a shard's ``art/shard=S`` or a stats artifact; a
+    slot with nothing staged is removed) and sets its manifest entries
+    in ``manifest``.
 
     Exit, on every path, joins the pool (cancelling queued work after
     a failure) and releases what it cached. A failed body removes the
@@ -1990,6 +1991,8 @@ class _Commit:
 
     ``fresh`` (a ``resume=False`` build) reads an index an older
     builder wrote as empty, and sweeps its files after the commit.
+    Sweeps touch only the names the builder owns (``_owned``): other
+    files in the directory, an input corpus say, stay.
     """
 
     def __init__(self, index_dir: str, fresh: bool = False):
@@ -2102,19 +2105,25 @@ class _Commit:
             self._sweep(keep)
 
     def _sweep(self, keep: set[str]) -> None:
-        """Delete every file of the index that no path of ``keep``
-        holds — all but the manifest, the writer lock and other
-        writers' dot-prefixed state."""
-        layout.sweep(
-            self.index_dir,
-            [
-                n
-                for n in os.listdir(self.index_dir)
-                if n not in (layout.MANIFEST, layout.LOCK)
-                and (n == layout.STAGING or not n.startswith("."))
-            ],
-            keep,
-        )
+        """Delete every file under a name the builder owns (``_owned``)
+        that no path of ``keep`` holds; other entries stay."""
+        tops = filter(_owned, os.listdir(self.index_dir))
+        layout.sweep(self.index_dir, tops, keep)
+
+
+def _owned(name: str) -> bool:
+    """True for a top-level name of an index directory that a commit
+    may sweep: an artifact, the staging root, or what an older
+    builder's publish left (its ledger file, its journal, and the
+    ``.<art>[__shard=S]`` + ``_old`` / ``_swap.marker`` /
+    ``_compact_tmp`` state of a half-done swap)."""
+    arts = SHARD_ARTIFACTS + STATS_ARTIFACTS
+    if name in arts + (layout.STAGING, "ledger.json", ".publish.json"):
+        return True
+    for suffix in ("_old", "_swap.marker", "_compact_tmp"):
+        if name.startswith(".") and name.endswith(suffix):
+            return name[1 : -len(suffix)].split("__")[0] in arts
+    return False
 
 
 def read_ledger(index_dir: str) -> dict[int, dict]:

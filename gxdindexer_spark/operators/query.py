@@ -47,6 +47,7 @@ payload.
 from __future__ import annotations
 
 import functools
+import glob
 import os
 import re
 from urllib.parse import unquote, urlparse
@@ -56,6 +57,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -237,8 +239,6 @@ def _store_rows(
     ``store_paths``) whose doc_id is in ``ids`` — a direct pyarrow
     read, column-pruned, ``filters`` pushed as parquet row-group
     filters. ``columns`` must include doc_id."""
-    import pyarrow.parquet as pq
-
     store = pq.read_table(
         store_paths[shard], columns=columns, filters=filters
     ).to_pandas()
@@ -372,9 +372,8 @@ class IndexQueryEngine:
         return self._snap.read(self.spark, "dictionary")
 
     @functools.cached_property
-    def _dictionary_rev(self) -> DataFrame | None:
-        """Reversed-term dictionary relation (None: leading-wildcard
-        callers raise)."""
+    def _dictionary_rev(self) -> DataFrame:
+        """Reversed-term dictionary relation."""
         return self._snap.read(self.spark, "dictionary_rev")
 
     @functools.cached_property
@@ -397,8 +396,6 @@ class IndexQueryEngine:
         to pay one driver-blocking job per artifact), falling back to
         a Spark collect for filesystems pyarrow cannot open."""
         try:
-            import pyarrow.parquet as pq
-
             tbl = pq.read_table(path, columns=columns)
             return {c: tbl[c].to_pylist() for c in columns}
         except (OSError, pa.ArrowInvalid):  # non-local fs
@@ -410,11 +407,7 @@ class IndexQueryEngine:
         """Row count of a flat parquet dir from file footers only
         (metadata read, no data pages); None when the layout is not
         plain ``*.parquet`` files."""
-        import glob as glob_mod
-
-        import pyarrow.parquet as pq
-
-        files = glob_mod.glob(os.path.join(path, "*.parquet"))
+        files = glob.glob(os.path.join(path, "*.parquet"))
         if not files:
             return None
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
@@ -600,11 +593,6 @@ class IndexQueryEngine:
             if max_expansions:
                 cands = cands[:max_expansions]
             return sorted(t for _df, t in cands)
-        if self._dictionary_rev is None:
-            raise ValueError(
-                "index has no dictionary_rev artifact (built before "
-                "leading-wildcard support) — rebuild or rerun finalize"
-            )
         rev = suffix[::-1]
         hi = rev + chr(0x10FFFF)
         d = (
@@ -660,7 +648,7 @@ class IndexQueryEngine:
             if max_expansions:
                 cands = cands[:max_expansions]
             return sorted(t for _df, t in cands)
-        if len(prefix) >= len(suffix) or self._dictionary_rev is None:
+        if len(prefix) >= len(suffix):
             d = self._dictionary.filter(
                 (F.col("field") == field)
                 & (F.col("term") >= prefix)

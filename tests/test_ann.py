@@ -296,6 +296,30 @@ def test_append_crash_before_commit_is_invisible_and_retryable(
     assert ann.AnnIndex(spark, d)._lsh.count() == emb.count()
 
 
+def test_build_sweeps_what_a_crashed_append_left(spark, emb, tmp_path):
+    """A delta staged by an append that crashed before its meta commit
+    is removed by the next build, even one that resumes as a no-op."""
+    import json as _json
+
+    d = str(tmp_path / "annsweep")
+    half1 = emb.filter(F.col("vec_id") % 2 == 0)
+    meta = ann.build_ann_index(
+        half1, d, n_planes=N_PLANES, n_centroids=N_CENTROIDS, resume=False
+    )
+    ann.append_ann_index(emb.filter(F.col("vec_id") % 2 == 1), d)
+    # the crash: the delta is staged, the meta replace never happened
+    with open(f"{d}/meta.json", "w") as fh:
+        _json.dump(meta, fh)
+    assert os.listdir(f"{d}/deltas")
+    again = ann.build_ann_index(
+        half1, d, n_planes=N_PLANES, n_centroids=N_CENTROIDS, resume=True
+    )
+    assert again["version"] == meta["version"]
+    assert again["applied_deltas"] == []
+    assert not os.path.exists(f"{d}/deltas")
+    assert ann.AnnIndex(spark, d)._lsh.count() == half1.count()
+
+
 def test_build_fingerprint_is_content_sensitive(spark, emb, tmp_path):
     """Changed embedding VALUES under unchanged ids must invalidate a
     resume (the fingerprint folds in a crc over the vector content)."""

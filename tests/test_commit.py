@@ -7,7 +7,8 @@ the uncrashed commit leaves, and a crash before the manifest replace
 leaves the ledger and every reader on the whole old snapshot; an
 engine keeps serving the snapshot it opened across every kind of
 commit; a failed commit releases its threads and cached blocks; an
-index an older builder wrote is refused until rebuilt.
+index an older builder wrote is refused until rebuilt; a commit's
+cleanup never touches a file the builder does not own.
 """
 
 from __future__ import annotations
@@ -372,7 +373,9 @@ def _to_older_layout(idx):
     """Rewrite ``idx`` in the layout an older builder left: each
     artifact's files directly in its directory (a shard's in
     ``<art>/shard=S``), the ledger in a file of its own, a manifest
-    with no paths."""
+    with no paths, and the state a half-done publish of that builder
+    left (its journal, a moved-aside shard, a swap marker with its
+    replacement)."""
     with open(f"{idx}/{snapshot.MANIFEST}") as fh:
         manifest = json.load(fh)
     for slot, rel in manifest.pop("paths").items():
@@ -383,6 +386,12 @@ def _to_older_layout(idx):
     manifest.pop("retained", None)
     snapshot.replace_json(f"{idx}/ledger.json", ledger)
     snapshot.replace_json(f"{idx}/{snapshot.MANIFEST}", manifest)
+    snapshot.replace_json(
+        f"{idx}/.publish.json", {"remove": [], "replace": ["docs"]}
+    )
+    shutil.copytree(f"{idx}/postings/shard=0", f"{idx}/.postings__shard=0_old")
+    open(f"{idx}/.dictionary_swap.marker", "w").close()
+    shutil.copytree(f"{idx}/dictionary", f"{idx}/.dictionary_compact_tmp")
 
 
 def test_index_of_an_older_builder_is_refused_until_rebuilt(
@@ -401,16 +410,79 @@ def test_index_of_an_older_builder_is_refused_until_rebuilt(
         _builder().build(_grown(corpus, spark), idx, resume=True)
     with pytest.raises(ValueError, match=fix):
         delete_docs(spark, idx, _builder(), [1], assume_dense_shards=True)
+    foreign = _add_foreign_files(idx, corpus)
     m = _builder().build(_grown(corpus, spark), idx, resume=False)
     assert m["shards_built"] == 6
     snap = snapshot.Snapshot.load(idx)
     assert not snap.retained
     tops = {p.split("/")[0] for p in snap.live()}
     assert sorted(os.listdir(idx)) == sorted(
-        tops | {snapshot.MANIFEST, snapshot.LOCK}
+        tops | {snapshot.MANIFEST, snapshot.LOCK} | set(foreign)
     )
+    _check_and_remove_foreign_files(idx, foreign)
     assert _unnamed(idx) == []
     assert _results(spark, idx)[0]
+
+
+def _add_foreign_files(idx, corpus):
+    """Files the builder does not own, put into ``idx``: an input
+    corpus, a dot file, an ANN index's older temp dir. Returns their
+    names with the bytes of each file under them."""
+    corpus.to_parquet(f"{idx}/corpus.parquet")
+    with open(f"{idx}/.notes", "w") as fh:
+        fh.write("kept")
+    os.makedirs(f"{idx}/.lsh_old")
+    with open(f"{idx}/.lsh_old/part-0.parquet", "wb") as fh:
+        fh.write(b"lsh")
+    return {
+        name: _contents(idx, name)
+        for name in ("corpus.parquet", ".notes", ".lsh_old")
+    }
+
+
+def _contents(idx, name):
+    """{path relative to ``idx``: bytes} of each file under ``name``."""
+    if os.path.isfile(f"{idx}/{name}"):
+        rels = [name]
+    else:
+        rels = [
+            os.path.relpath(os.path.join(root, f), idx)
+            for root, _dirs, files in os.walk(f"{idx}/{name}")
+            for f in files
+        ]
+    out = {}
+    for rel in rels:
+        with open(f"{idx}/{rel}", "rb") as fh:
+            out[rel] = fh.read()
+    return out
+
+
+def _check_and_remove_foreign_files(idx, foreign):
+    """Assert each file of ``foreign`` is there unchanged, then remove
+    them all."""
+    for name, files in foreign.items():
+        assert _contents(idx, name) == files
+        if os.path.isdir(f"{idx}/{name}"):
+            shutil.rmtree(f"{idx}/{name}")
+        else:
+            os.remove(f"{idx}/{name}")
+
+
+def test_fresh_build_leaves_foreign_files_in_place(corpus, spark, tmp_path):
+    """A ``resume=False`` build into a directory that holds no index
+    but other files, and the staging root of a crashed commit, sweeps
+    only the staging root: the other files stay as they were."""
+    idx = str(tmp_path / "idx")
+    os.makedirs(f"{idx}/{snapshot.STAGING}/postings/shard=0")
+    foreign = _add_foreign_files(idx, corpus)
+    _builder().build(spark.createDataFrame(corpus), idx, resume=False)
+    snap = snapshot.Snapshot.load(idx)
+    tops = {p.split("/")[0] for p in snap.live()}
+    assert sorted(os.listdir(idx)) == sorted(
+        tops | {snapshot.MANIFEST, snapshot.LOCK} | set(foreign)
+    )
+    _check_and_remove_foreign_files(idx, foreign)
+    assert _unnamed(idx) == []
 
 
 def test_fresh_build_reads_the_same_through_artifact_dirs(base):
