@@ -150,10 +150,36 @@ def _script(corpus, spark):
                 assume_dense_shards=True,
             ),
         ),
+        # without assume_dense_shards: every shard is a candidate; an
+        # id already deleted (7) and one absent from the index (10**6)
+        # are ignored
+        (
+            "delete_any_shard",
+            lambda idx: delete_docs(
+                spark, idx, _builder(), [7, 12, 125, 10**6],
+            ),
+        ),
+        (
+            "update_content_any_shard",
+            lambda idx: update_docs(
+                spark, idx, _builder(),
+                {50: {"content": "return getIndexList if"},
+                 131: {"content": "if if if"}},
+            ),
+        ),
         (
             "update_attrs",
             lambda idx: update_docs(
                 spark, idx, _builder(), {3: {"n_chars": 999_999}},
+            ),
+        ),
+        (
+            "update_attrs_dense",
+            lambda idx: update_docs(
+                spark, idx, _builder(),
+                {8: {"n_chars": 7}, 61: {"n_chars": None},
+                 10**6: {"n_chars": 1}},
+                assume_dense_shards=True,
             ),
         ),
         # values of another type, cast by Spark's rule on both
