@@ -47,11 +47,12 @@ delete or update touches, every doc for a compaction):
 
 Both run the same tokenizer (``_tokenize``), the same encoder
 (``encode_groups``), the same dictionary rule (prior dictionary −
-replaced ``dict_parts`` + new partials), the same update merge
-(``_cast_updates`` + ``_merge_updates``) and delete plan
-(``_tombstone_plan``), and write every artifact with the same schema
-(``schemas.*``), so either backend's commit reads the same through
-both query backends and leaves row-identical artifacts.
+replaced ``dict_parts`` + new partials), read and plan the shards a
+delete or an update touches through one function
+(``_touched_shards``) with the same row rules (the tombstone filter,
+``_cast_updates`` + ``_merge_updates``), and write every artifact with
+the same schema (``schemas.*``), so either backend's commit reads the
+same through both query backends and leaves row-identical artifacts.
 
 The reference analog of this stage is the chunked extract-assemble-load
 loop in GxdResultIndexer.java:900-1268 (chunks == partitions here) with
@@ -1238,144 +1239,45 @@ def delete_docs(
     just "rebuild the affected shards from their surviving docs".
 
     Locating the affected shards costs one column-pruned doc-store
-    scan with the doc_id IN-list pushed down; pass
-    ``assume_dense_shards=True`` when shard == doc_id //
+    scan; pass ``assume_dense_shards=True`` when shard == doc_id //
     manifest.docs_per_shard (the layout every job in this repo uses)
-    to also push a shard IN-list — partition-pruned, O(tombstones).
+    to scan only the tombstones' shards — partition-pruned,
+    O(tombstones).
 
     Idempotent: deleting already-absent ids is a no-op (their shards'
-    fingerprints are unchanged, so resume skips them).
-
-    Holds the writer lock around the WHOLE read-plan-rebuild sequence
-    (ADVICE r5: the scan and the survivor checkpoint previously ran
-    before the build acquired the lock, so a concurrent writer could
-    commit between them and have its changes clobbered by the stale
-    snapshot's rebuild).
+    fingerprints are unchanged, so resume skips them). Holds the
+    writer lock around the whole read-plan-rebuild sequence.
     """
     ids = sorted({int(i) for i in doc_ids})
     nothing = {"docs_deleted": 0, "shards_rebuilt": 0, "shards_dropped": 0}
     if not ids:
         return nothing
+    gone = pa.array(ids, pa.int64())
+
+    def drop(rows):
+        # an Arrow filter locally, a JVM filter (no Python stage) on Spark
+        if isinstance(rows, pa.Table):
+            return rows.filter(pc.invert(pc.is_in(rows["doc_id"], gone)))
+        return rows.filter(~F.col("doc_id").isin(ids))
+
     with _Commit(index_dir) as commit:
-        prior = commit.prior
-        # an index left with no shard holds no doc to delete
-        present = set(prior.shards("docs"))
-        if not present:
-            return nothing
-        candidates: list[int] | None = None
-        if assume_dense_shards:
-            dps = int(prior.manifest.get("docs_per_shard") or 0)
-            if dps:
-                candidates = sorted({i // dps for i in ids})
-        scope = sorted(
-            present if candidates is None else present & set(candidates)
+        counts, survivors, fp = _touched_shards(
+            commit, spark, ids, assume_dense_shards, drop, builder._fp_map,
+            drops_hits=True,
         )
-        if _fits_local(_ledger_docs(prior, scope)):
-            # driver-local backend: the candidate partitions via pyarrow
-            if not scope:
-                return nothing
-            store = prior.table("docs", scope)
-            gone = pc.is_in(store["doc_id"], pa.array(ids, pa.int64()))
-            per = (
-                pd.DataFrame(
-                    {
-                        "shard": store["shard"].to_numpy(),
-                        "gone": gone.to_numpy(zero_copy_only=False),
-                    }
-                )
-                .groupby("shard")["gone"]
-                .agg(["size", "sum"])
-            )
-            affected, emptied, rebuild = _tombstone_plan(
-                {
-                    int(s): (int(r["size"]), int(r["sum"]))
-                    for s, r in per.iterrows()
-                }
-            )
-            if not affected:
-                return nothing
-            survivors = store.filter(
-                pc.and_(
-                    pc.invert(gone),
-                    pc.is_in(store["shard"], pa.array(rebuild, pa.int32())),
-                )
-            )
-            metrics = builder._build_locked(
-                commit, survivors, resume=True, append=True,
-                drop_shards=emptied, spark=spark,
-            )
-            return _delete_metrics(metrics, affected, rebuild, emptied)
-        store = prior.read(spark, "docs")
-        scoped = store
-        if candidates is not None:
-            scoped = store.filter(F.col("shard").isin(candidates))
-        # one pass answers both questions (tombstones per shard AND
-        # shard totals): the former two sequential jobs scanned the
-        # same scoped rows twice
-        hit_query = (
-            scoped.groupBy("shard")
-            .agg(
-                F.count("*").alias("n"),
-                F.count(
-                    F.when(F.col("doc_id").isin(ids), F.lit(1))
-                ).alias("n_del"),
-            )
-            .filter(F.col("n_del") > 0)
-        )
-        surv_all = None
-        if candidates is not None:
-            # dense layout: the candidate shards are known driver-side
-            # without the tombstone counts, so the survivor snapshot
-            # (and its fingerprint agg, which gates the rebuild) run
-            # CONCURRENTLY with the count job instead of behind it
-            # (guide §2.6). Emptied/unaffected candidate shards carry
-            # zero/unchanged rows and fall out via the drop path / the
-            # fingerprint gate exactly as before. Known cost shift: a
-            # fully-no-op replay (every id already absent) now runs
-            # the snapshot/fp jobs it will discard — wall time is
-            # unchanged (they run concurrent with the count that
-            # discovers the no-op) and the work is bounded by the
-            # candidate shards, but it is no longer a single job.
-            surv_q = scoped.filter(~F.col("doc_id").isin(ids))
-            surv_fut = commit.pool.submit(commit.checkpoint, surv_q)
-            fp_fut = commit.pool.submit(builder._fp_map, surv_q)
-            hit = hit_query.collect()
-            surv_all = surv_fut.result()
-            surv_fp = fp_fut.result()
-        else:
-            hit = hit_query.collect()
-        affected, emptied, rebuild = _tombstone_plan(
-            {int(r["shard"]): (int(r["n"]), int(r["n_del"])) for r in hit}
-        )
+        affected, emptied, rebuild = _tombstone_plan(counts)
         if not affected:
             return nothing
-        if surv_all is not None:
-            survivors = (
-                surv_all.filter(F.col("shard").isin(rebuild))
-                if rebuild
-                else empty_frame(spark, store.schema)
-            )
-            pre_fp = {s: f for s, f in surv_fp.items() if s in rebuild}
-        else:
-            survivors = (
-                commit.checkpoint(
-                    store.filter(F.col("shard").isin(rebuild)).filter(
-                        ~F.col("doc_id").isin(ids)
-                    )
-                )
-                if rebuild
-                else empty_frame(spark, store.schema)
-            )
-            pre_fp = None
         metrics = builder._build_locked(
-            commit,
-            survivors,
-            resume=True,
-            append=True,
-            drop_shards=emptied,
-            precomputed_fp=pre_fp,
+            commit, survivors, resume=True, append=True,
+            drop_shards=emptied, precomputed_fp=fp, spark=spark,
         )
-    return _delete_metrics(metrics, affected, rebuild, emptied)
+    metrics.update(
+        docs_deleted=sum(affected.values()),
+        shards_rebuilt=len(rebuild),
+        shards_dropped=len(emptied),
+    )
+    return metrics
 
 
 def _tombstone_plan(
@@ -1389,15 +1291,117 @@ def _tombstone_plan(
     return affected, emptied, sorted(set(affected) - emptied)
 
 
-def _delete_metrics(
-    metrics: dict, affected: dict[int, int], rebuild: list, emptied: set
-) -> dict:
-    metrics.update(
-        docs_deleted=sum(affected.values()),
-        shards_rebuilt=len(rebuild),
-        shards_dropped=len(emptied),
+def _touched_shards(
+    commit: "_Commit",
+    spark: SparkSession,
+    ids: list[int],
+    assume_dense_shards: bool,
+    rule,
+    fingerprint,
+    drops_hits: bool = False,
+) -> tuple[dict, pa.Table | DataFrame | None, dict | None]:
+    """The read-and-plan half of ``delete_docs`` and ``update_docs``:
+    Lucene's ``updateDocument`` is a delete plus an add over one write
+    path, and here both mutations read the doc-store shards holding
+    ``ids`` through this one function, on the backend the guard picks.
+
+    The candidates are every shard or, with ``assume_dense_shards``,
+    the shards ``doc_id // docs_per_shard`` names. ``rule`` rewrites
+    doc-store rows: an Arrow table on the local backend, a Spark frame
+    on Spark. ``fingerprint`` (``IndexBuilder._fp_map``, or None when
+    the commit rebuilds nothing) fingerprints the rewritten rows.
+
+    -> ``(counts, rows, fp)``: ``counts`` maps each shard holding an id
+    to its (docs, hit docs) and is empty when none does; ``rows`` are
+    those shards' rows after ``rule`` (an Arrow table locally, a
+    checkpointed frame on Spark), less the shards a ``drops_hits``
+    rule empties; ``fp`` their fingerprints when they were computed
+    here, else None (``_build_locked`` computes them).
+    """
+    prior = commit.prior
+    present = set(prior.shards("docs"))
+    dps = int(prior.manifest.get("docs_per_shard") or 0)
+    candidates = None
+    if assume_dense_shards and dps:
+        candidates = sorted({i // dps for i in ids})
+    scope = sorted(
+        present if candidates is None else present & set(candidates)
     )
-    return metrics
+    if not scope:
+        return {}, None, None
+
+    def kept(counts: dict) -> list[int]:
+        return sorted(
+            s for s, (n, hit) in counts.items() if hit < n or not drops_hits
+        )
+
+    if _fits_local(_ledger_docs(prior, scope)):
+        # driver-local backend: the candidate partitions via pyarrow
+        store = prior.table("docs", scope)
+        hit = pc.is_in(store["doc_id"], pa.array(ids, pa.int64()))
+        per = (
+            pd.DataFrame(
+                {
+                    "shard": store["shard"].to_numpy(),
+                    "hit": hit.to_numpy(zero_copy_only=False),
+                }
+            )
+            .groupby("shard")["hit"]
+            .agg(["size", "sum"])
+        )
+        counts = {
+            int(s): (int(r["size"]), int(r["sum"]))
+            for s, r in per.iterrows()
+            if r["sum"]
+        }
+        keep = pa.array(kept(counts), pa.int32())
+        return counts, rule(store.filter(pc.is_in(store["shard"], keep))), None
+    store = prior.read(spark, "docs")
+    scoped = store
+    if candidates is not None:
+        scoped = store.filter(F.col("shard").isin(candidates))
+    # one job answers both questions: docs and hit docs per shard
+    count_query = (
+        scoped.groupBy("shard")
+        .agg(
+            F.count("*").alias("n"),
+            F.count(F.when(F.col("doc_id").isin(ids), F.lit(1))).alias("hit"),
+        )
+        .filter(F.col("hit") > 0)
+    )
+
+    def collect_counts() -> dict[int, tuple[int, int]]:
+        return {
+            int(r["shard"]): (int(r["n"]), int(r["hit"]))
+            for r in count_query.collect()
+        }
+
+    fp = None
+    if candidates is not None:
+        # dense layout: the candidate shards are known without the
+        # counts, so the rewritten rows' checkpoint and fingerprint run
+        # concurrently with the count job (guide §2.6) and are then
+        # narrowed to the shards the counts keep (a no-op replay
+        # discards them, at the count's wall time)
+        rewritten = rule(scoped)
+        ck_fut = commit.pool.submit(commit.checkpoint, rewritten)
+        if fingerprint is not None:
+            fp_fut = commit.pool.submit(fingerprint, rewritten)
+        counts = collect_counts()
+        keep = kept(counts)
+        rows = ck_fut.result().filter(F.col("shard").isin(keep))
+        if fingerprint is not None:
+            fp = {s: f for s, f in fp_fut.result().items() if s in keep}
+    else:
+        counts = collect_counts()
+        keep = kept(counts)
+        if keep:
+            rows = commit.checkpoint(
+                rule(store.filter(F.col("shard").isin(keep)))
+            )
+    if not keep:
+        rows = empty_frame(spark, store.schema)
+    return counts, rows, fp
 
 
 def _fits_local(delta_docs: int) -> bool:
@@ -1420,10 +1424,10 @@ def update_docs(
 ) -> dict:
     """Atomic document update (Solr's atomic update, ``set``
     semantics): per-doc partial field updates re-index ONLY the
-    shards containing the touched docs — the point-mutation
-    counterpart to ``delete_docs``' shard-scoped rebuild (the
-    reference's only answer to a changed record is the scheduled full
-    re-ingest, Indexer.java:83-88).
+    shards containing the touched docs — ``delete_docs``' shard-scoped
+    rebuild with a merge for its row rule, read and planned by the
+    same ``_touched_shards`` (the reference's only answer to a changed
+    record is the scheduled full re-ingest, Indexer.java:83-88).
 
     ``updates`` maps doc_id -> {column: new value} over doc-store
     columns (content and/or stored attributes). A ``None`` value
@@ -1438,20 +1442,15 @@ def update_docs(
     recomputed so the shard fingerprint changes and the resume path
     rebuilds exactly the touched shards (and a replay against an
     already-updated index is a no-op). Updates to OTHER indexed
-    fields (path/lang-style) change the fingerprint too — the shard
-    row hash covers every indexed field's value (ADVICE r5 high: it
-    previously hashed only content_sha256, so a lang-only update
-    reported success while postings and the doc store silently kept
-    the old value). Postings, dictionary partials, df/avgdl, block
-    maxima and the doc store all refresh through the same incremental
-    finalize as any shard rebuild.
+    fields (path/lang-style) change the fingerprint too: the shard
+    row hash covers every indexed field's value. Postings, dictionary
+    partials, df/avgdl, block maxima and the doc store all refresh
+    through the same incremental finalize as any shard rebuild.
 
     Two execution classes, chosen by what the update touches:
 
     - Any INDEXED field (the manifest's analyzer map, e.g.
-      ``content``) -> the touched shards rebuild through the builder
-      (fingerprint changes via the recomputed ``content_sha256``);
-      postings, dictionary, df/avgdl, block maxima all refresh.
+      ``content``) -> the touched shards rebuild through the builder.
     - STORED-ONLY attributes (rank/facet columns) -> the Lucene
       ``updateDocValues`` analog: postings and stats are untouched by
       construction, so ONLY the affected doc-store shard partitions
@@ -1459,13 +1458,8 @@ def update_docs(
       uses. No re-analysis, no finalize — O(touched shards) I/O.
 
     A single call mixing both classes takes the rebuild path for
-    everything (correct, just not minimal).
-
-    Holds the writer lock around the WHOLE read-merge-write sequence
-    in both execution classes (ADVICE r5: the affected-shard scan and
-    the doc-store merge previously ran before the lock, so a
-    concurrent compaction/update could commit in the gap and have its
-    rows clobbered by the stale merged snapshot).
+    everything (correct, just not minimal). Holds the writer lock
+    around the whole read-merge-write sequence.
 
     -> builder metrics + {"docs_updated": n, "shards_rebuilt": n}.
     """
@@ -1474,73 +1468,35 @@ def update_docs(
     if bad:
         raise ValueError(f"cannot update identity columns {bad}")
     ids = sorted({int(i) for i in updates})
+    nothing = {"docs_updated": 0, "shards_rebuilt": 0}
     if not ids:
-        return {"docs_updated": 0, "shards_rebuilt": 0}
+        return nothing
     with _Commit(index_dir) as commit:
+        prior = commit.prior
+        store_paths = prior.shards("docs")
         # an index left with no shard holds no doc to update
-        if not commit.prior.shards("docs"):
-            return {"docs_updated": 0, "shards_rebuilt": 0}
-        return _update_docs_locked(
-            commit, spark, builder, updates, ids, assume_dense_shards
+        if not store_paths:
+            return nothing
+        d0 = store_paths[min(store_paths)]
+        part = next(
+            n for n in sorted(os.listdir(d0)) if n.endswith(".parquet")
         )
-
-
-def _update_docs_locked(
-    commit: "_Commit",
-    spark: SparkSession,
-    builder: "IndexBuilder",
-    updates: dict[int, dict],
-    ids: list[int],
-    assume_dense_shards: bool,
-) -> dict:
-    """Body of ``update_docs``, inside its commit."""
-    prior = commit.prior
-    store_paths = prior.shards("docs")
-    present = set(store_paths)
-    d0 = store_paths[min(present)]
-    part = next(n for n in sorted(os.listdir(d0)) if n.endswith(".parquet"))
-    store_schema = pq.read_schema(f"{d0}/{part}")
-    store_cols = store_schema.names + ["shard"]
-    upd_cols = sorted({c for u in updates.values() for c in u})
-    for c in upd_cols:
-        if c not in store_cols:
-            raise ValueError(
-                f"update column {c!r} is not in the doc store "
-                f"(has: {sorted(store_cols)})"
-            )
-    indexed = set(prior.manifest.get("fields") or {})
-    rebuild_class = bool(set(upd_cols) & indexed)
-    candidates: list[int] | None = None
-    if assume_dense_shards:
-        dps = int(prior.manifest.get("docs_per_shard") or 0)
-        if dps:
-            candidates = sorted({i // dps for i in ids})
-    scope = sorted(
-        present if candidates is None else present & set(candidates)
-    )
-    upd = _cast_updates(spark, updates, ids, upd_cols, store_schema)
-    rehash = "content" in upd_cols and "content_sha256" in store_cols
-    if _fits_local(_ledger_docs(prior, scope)):
-        return _update_docs_local(
-            commit, spark, builder, upd, upd_cols, rehash, scope,
-            rebuild_class,
+        store_schema = pq.read_schema(f"{d0}/{part}")
+        store_cols = store_schema.names + ["shard"]
+        upd_cols = sorted({c for u in updates.values() for c in u})
+        for c in upd_cols:
+            if c not in store_cols:
+                raise ValueError(
+                    f"update column {c!r} is not in the doc store "
+                    f"(has: {sorted(store_cols)})"
+                )
+        rebuild_class = bool(
+            set(upd_cols) & set(prior.manifest.get("fields") or {})
         )
-    store = prior.read(spark, "docs")
-    scoped = store
-    if candidates is not None:
-        scoped = store.filter(F.col("shard").isin(candidates))
-    # one job yields the affected shards AND the updated-doc count
-    # (doc_id is unique in the store, so rows hit == docs updated);
-    # the former shape paid a distinct-collect here plus a semi-join
-    # count after the merge
-    hit_query = (
-        scoped.filter(F.col("doc_id").isin(ids))
-        .groupBy("shard")
-        .agg(F.count("*").alias("n"))
-    )
+        upd = _cast_updates(spark, updates, ids, upd_cols, store_schema)
+        rehash = "content" in upd_cols and "content_sha256" in store_cols
 
-    def _merged_over(rows_df: DataFrame) -> DataFrame:
-        def merge(
+        def merge_batches(
             batches: Iterator[pa.RecordBatch],
         ) -> Iterator[pa.RecordBatch]:
             for b in batches:
@@ -1548,65 +1504,42 @@ def _update_docs_locked(
                     pa.Table.from_batches([b]), upd, upd_cols, rehash
                 ).to_batches()
 
-        return rows_df.mapInArrow(merge, rows_df.schema)
+        def merge(rows):
+            if isinstance(rows, pa.Table):
+                return _merge_updates(rows, upd, upd_cols, rehash)
+            return rows.mapInArrow(merge_batches, rows.schema)
 
-    if candidates is not None:
-        # dense layout: the candidate shards are known without the hit
-        # counts, so the merged snapshot (and, for the rebuild class,
-        # its fingerprint agg) run CONCURRENTLY with the count job
-        # (guide §2.6). Both are then narrowed to the truly affected
-        # shards, keeping metrics and the resume gate byte-identical
-        # (a replayed identical update still skips, shards_built == 0).
-        merged_q = _merged_over(scoped)
-        ck_fut = commit.pool.submit(commit.checkpoint, merged_q)
-        fp_fut = (
-            commit.pool.submit(builder._fp_map, merged_q)
-            if rebuild_class
-            else None
+        counts, merged, fp = _touched_shards(
+            commit, spark, ids, assume_dense_shards, merge,
+            builder._fp_map if rebuild_class else None,
         )
-        hit = hit_query.collect()
-        merged_all = ck_fut.result()
-        fp_all = fp_fut.result() if fp_fut is not None else None
-        affected = sorted(int(r["shard"]) for r in hit)
-        n_updated = int(sum(r["n"] for r in hit))
-        if not affected:
-            return {"docs_updated": 0, "shards_rebuilt": 0}
-        merged = merged_all.filter(F.col("shard").isin(affected))
-        pre_fp = (
-            {s: f for s, f in fp_all.items() if s in affected}
-            if fp_all is not None
-            else None
-        )
-    else:
-        hit = hit_query.collect()
-        affected = sorted(int(r["shard"]) for r in hit)
-        n_updated = int(sum(r["n"] for r in hit))
-        if not affected:
-            return {"docs_updated": 0, "shards_rebuilt": 0}
-        merged = commit.checkpoint(
-            _merged_over(store.filter(F.col("shard").isin(affected)))
-        )
-        pre_fp = None
-    if rebuild_class:
-        metrics = builder._build_locked(
-            commit, merged, resume=True, append=True,
-            precomputed_fp=pre_fp,
-        )
-    else:
-        # stored-only attrs: docvalues-style doc-store partition
-        # rewrite; postings/stats untouched. Shards are independent —
-        # stage them concurrently (guide §2.6); the commit publishes
-        # each partition.
-        def _rewrite(s: int) -> None:
-            rows = merged.filter(F.col("shard") == s).drop("shard")
-            rows.repartition(1).write.parquet(
-                commit.stage(f"docs/shard={s}")
-            )
-
-        list(commit.pool.map(_rewrite, affected))
-        commit.publish += [f"docs/shard={s}" for s in affected]
+        if not counts:
+            return nothing
+        affected = sorted(counts)
         metrics = {}
-    metrics.update(docs_updated=n_updated, shards_rebuilt=len(affected))
+        if rebuild_class:
+            metrics = builder._build_locked(
+                commit, merged, resume=True, append=True,
+                precomputed_fp=fp, spark=spark,
+            )
+        elif isinstance(merged, pa.Table):
+            _stage_shards(commit, "docs", merged)
+        else:
+            # stored-only attrs on Spark: the shards' doc-store
+            # partitions stage concurrently (guide §2.6)
+            def _rewrite(s: int) -> None:
+                rows = merged.filter(F.col("shard") == s).drop("shard")
+                rows.repartition(1).write.parquet(
+                    commit.stage(f"docs/shard={s}")
+                )
+
+            list(commit.pool.map(_rewrite, affected))
+        if not rebuild_class:
+            commit.publish += [f"docs/shard={s}" for s in affected]
+    metrics.update(
+        docs_updated=sum(hit for _n, hit in counts.values()),
+        shards_rebuilt=len(affected),
+    )
     return metrics
 
 
@@ -1680,46 +1613,6 @@ def _merge_updates(
             ),
         )
     return t
-
-
-def _update_docs_local(
-    commit: "_Commit",
-    spark: SparkSession,
-    builder: "IndexBuilder",
-    upd: dict[int, dict],
-    upd_cols: list[str],
-    rehash: bool,
-    scope: list[int],
-    rebuild_class: bool,
-) -> dict:
-    """Driver-local backend of ``update_docs``: the candidate
-    ``docs/shard=S`` partitions are read with pyarrow and merged in the
-    driver by ``_merge_updates``."""
-    nothing = {"docs_updated": 0, "shards_rebuilt": 0}
-    if not scope:
-        return nothing
-    store = commit.prior.table("docs", scope)
-    hit = pc.is_in(store["doc_id"], pa.array(list(upd), pa.int64()))
-    affected = sorted(set(store["shard"].filter(hit).to_pylist()))
-    if not affected:
-        return nothing
-    n_updated = int(pc.sum(hit.cast(pa.int64())).as_py())
-    merged = _merge_updates(
-        store.filter(
-            pc.is_in(store["shard"], pa.array(affected, pa.int32()))
-        ),
-        upd, upd_cols, rehash,
-    )
-    if rebuild_class:
-        metrics = builder._build_locked(
-            commit, merged, resume=True, append=True, spark=spark
-        )
-    else:
-        _stage_shards(commit, "docs", merged)
-        commit.publish += [f"docs/shard={s}" for s in affected]
-        metrics = {}
-    metrics.update(docs_updated=n_updated, shards_rebuilt=len(affected))
-    return metrics
 
 
 def attach_stored_column(

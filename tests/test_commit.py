@@ -1,14 +1,14 @@
 """Writer commits: compute into staging, publish by one manifest
 replace (index_build._Commit, gxdindexer_spark.snapshot).
 
-Invariants: a crash at any step of an incremental build, a delete or
-a compaction, on either commit backend, resumes to exactly the index
-the uncrashed commit leaves, and a crash before the manifest replace
-leaves the ledger and every reader on the whole old snapshot; an
-engine keeps serving the snapshot it opened across every kind of
-commit; a failed commit releases its threads and cached blocks; an
-index an older builder wrote is refused until rebuilt; a commit's
-cleanup never touches a file the builder does not own.
+Invariants: a crash at any step of an incremental build, a delete, a
+content update or a compaction, on either commit backend, resumes to
+exactly the index the uncrashed commit leaves, and a crash before the
+manifest replace leaves the ledger and every reader on the whole old
+snapshot; an engine keeps serving the snapshot it opened across every
+kind of commit; a failed commit releases its threads and cached
+blocks; an index an older builder wrote is refused until rebuilt; a
+commit's cleanup never touches a file the builder does not own.
 """
 
 from __future__ import annotations
@@ -74,12 +74,21 @@ def _grown(corpus, spark):
 def _ops(corpus, spark):
     # deletes: 3 docs in shard 0, 2 in shard 3, every doc of shard 4
     gone = [1, 5, 7, 95, 99] + list(range(4 * DPS, 5 * DPS))
+    # content updates of shards 1 and 3, found without assume_dense_shards
+    # (the delete above takes the dense shape)
+    edits = {
+        35: {"content": "return merged return"},
+        100: {"content": "def getIndexList(): if"},
+    }
     return {
         "build": lambda idx: _builder().build(
             _grown(corpus, spark), idx, resume=True
         ),
         "delete": lambda idx: delete_docs(
             spark, idx, _builder(), gone, assume_dense_shards=True
+        ),
+        "update_content": lambda idx: update_docs(
+            spark, idx, _builder(), edits
         ),
         "compact": lambda idx: compact_index(spark, idx),
     }
@@ -179,14 +188,17 @@ def _crash_at(monkeypatch, step):
     [
         ("build", "local"),
         ("delete", "local"),
+        ("update_content", "local"),
         ("compact", "local"),
         ("build", "spark"),
         ("delete", "spark"),
+        ("update_content", "spark"),
         ("compact", "spark"),
     ],
     ids=[
-        "build", "delete", "compact",
-        "build-spark", "delete-spark", "compact-spark",
+        "build", "delete", "update_content", "compact",
+        "build-spark", "delete-spark", "update_content-spark",
+        "compact-spark",
     ],
 )
 def test_crash_at_each_commit_step_resumes_to_clean_commit(
