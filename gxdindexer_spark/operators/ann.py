@@ -39,12 +39,13 @@ hash-match end to end.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -113,39 +114,18 @@ def _delta_tag(fp: str) -> str:
     return fp.replace(":", "_").replace("-", "m")
 
 
-def _partition_counts(
-    spark: SparkSession, path: str, part_col: str
-) -> dict[str, int]:
+def _partition_counts(path: str, part_col: str) -> dict[str, int]:
     """Per-partition row counts of a partitioned parquet artifact from
     file FOOTERS only (driver-side metadata read, zero Spark jobs —
-    the same class of read as the query engine's ``_count_rows``);
-    falls back to one Spark aggregate for filesystems pyarrow cannot
-    open. Keys are the partition-dir value strings, identical to
-    ``str(row[part_col])`` from the Spark fallback for the integer
-    bucket ids used here."""
-    try:
-        import glob as glob_mod
-
-        import pyarrow.parquet as pq
-
-        if not os.path.isdir(path):
-            raise OSError(f"not a local dir: {path}")
-        out: dict[str, int] = {}
-        for d in glob_mod.glob(os.path.join(path, f"{part_col}=*")):
-            val = os.path.basename(d).split("=", 1)[1]
-            out[val] = sum(
-                pq.ParquetFile(f).metadata.num_rows
-                for f in glob_mod.glob(os.path.join(d, "*.parquet"))
-            )
-        return out
-    except (OSError, pa.ArrowInvalid):  # non-local fs
-        return {
-            str(r[part_col]): int(r["n"])
-            for r in spark.read.parquet(path)
-            .groupBy(part_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+    the same class of read as the query engine's ``_count_rows``).
+    Keys are the partition-dir value strings."""
+    out: dict[str, int] = {}
+    for d in glob.glob(os.path.join(path, f"{part_col}=*")):
+        out[os.path.basename(d).split("=", 1)[1]] = sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for f in glob.glob(os.path.join(d, "*.parquet"))
+        )
+    return out
 
 
 def _art_dir(index_dir: str, meta: dict, art: str) -> str:
@@ -257,8 +237,9 @@ def build_ann_index(
     pointing at them, so a crash mid-build leaves the previous
     committed index fully readable.
     """
+    lock = _WriterLock(index_dir)  # refuses a URL before the makedirs
     os.makedirs(index_dir, exist_ok=True)
-    with _WriterLock(index_dir):
+    with lock:
         return _build_ann_locked(
             emb, index_dir, n_planes, n_centroids, id_col, vec_col,
             resume, kmeans_iters, attr_cols,
@@ -380,11 +361,11 @@ def _build_ann_locked(
         )
         # per-cell occupancy at build time — the baseline the append
         # path's drift metric compares against, read back from the
-        # written parquet's file FOOTERS (driver-side metadata only —
-        # no Spark job; previously one full-artifact aggregate job);
-        # runs inside the pool block so it overlaps the LSH write tail
+        # written parquet's file FOOTERS (driver-side metadata only,
+        # no Spark job); runs inside the pool block so it overlaps
+        # the LSH write tail
         ivf_build_counts = _partition_counts(
-            emb.sparkSession, f"{index_dir}/{ivf_dir}", "ivf_bucket"
+            f"{index_dir}/{ivf_dir}", "ivf_bucket"
         )
         lsh_fut.result()
     meta = {
@@ -761,6 +742,7 @@ class AnnIndex:
     """
 
     def __init__(self, spark: SparkSession, index_dir: str):
+        layout.require_local(index_dir)
         self.spark = spark
         self.index_dir = index_dir
         with open(f"{index_dir}/meta.json") as fh:

@@ -1822,6 +1822,7 @@ class _WriterLock:
     """
 
     def __init__(self, index_dir: str):
+        layout.require_local(index_dir)
         self.path = f"{index_dir}/{layout.LOCK}"
         self._fd: int | None = None
 

@@ -276,6 +276,7 @@ class IndexQueryEngine:
         The engine resolves every artifact path once, here, from the
         committed manifest, so it serves that snapshot until it is
         reopened, whatever commits run meanwhile."""
+        layout.require_local(index_dir)
         self.spark = spark
         self.index_dir = index_dir
         if not os.path.isfile(f"{index_dir}/{layout.MANIFEST}"):
@@ -328,31 +329,16 @@ class IndexQueryEngine:
         self._dict_cache: dict[tuple[str, str], int] | None = None
         if preload_dictionary:
             # footer row counts first (metadata-only), full read only
-            # under the cap — and both through pyarrow, not Spark: the
-            # former count()+collect() cost TWO driver-blocking Spark
-            # jobs (~0.5s of every engine construction); the artifact
-            # is a handful of small local/shared-fs parquet files
-            # (falls back to the Spark path if pyarrow cannot reach
-            # the filesystem)
-            try:
-                n_rows = self._count_rows(snap.path("dictionary"))
-                if n_rows is not None and n_rows <= preload_dictionary:
-                    tbl = self._read_tiny_artifact(
-                        snap.path("dictionary"), ["field", "term", "df"]
-                    )
-                    self._dict_cache = {
-                        (f, t): int(df)
-                        for f, t, df in zip(
-                            tbl["field"], tbl["term"], tbl["df"]
-                        )
-                    }
-            except (OSError, pa.ArrowInvalid):  # non-local fs: Spark path
-                d = self._dictionary
-                if d.count() <= preload_dictionary:
-                    self._dict_cache = {
-                        (r["field"], r["term"]): int(r["df"])
-                        for r in d.collect()
-                    }
+            # under the cap, both through pyarrow: no Spark job at open
+            n_rows = self._count_rows(snap.path("dictionary"))
+            if n_rows is not None and n_rows <= preload_dictionary:
+                tbl = self._read_tiny_artifact(
+                    snap.path("dictionary"), ["field", "term", "df"]
+                )
+                self._dict_cache = {
+                    (f, t): int(df)
+                    for f, t, df in zip(tbl["field"], tbl["term"], tbl["df"])
+                }
         self.weights = {
             f: w for f, w in bm25.field_weights().items() if f in self.fields
         }
@@ -391,16 +377,10 @@ class IndexQueryEngine:
     def _read_tiny_artifact(
         self, path: str, columns: list[str]
     ) -> dict[str, list]:
-        """Columns of a small parquet artifact as python lists —
-        read with pyarrow directly (zero Spark jobs; engine init used
-        to pay one driver-blocking job per artifact), falling back to
-        a Spark collect for filesystems pyarrow cannot open."""
-        try:
-            tbl = pq.read_table(path, columns=columns)
-            return {c: tbl[c].to_pylist() for c in columns}
-        except (OSError, pa.ArrowInvalid):  # non-local fs
-            rows = self.spark.read.parquet(path).select(*columns).collect()
-            return {c: [r[c] for r in rows] for c in columns}
+        """Columns of a small parquet artifact as python lists, read
+        with pyarrow (no Spark job)."""
+        tbl = pq.read_table(path, columns=columns)
+        return {c: tbl[c].to_pylist() for c in columns}
 
     @staticmethod
     def _count_rows(path: str) -> int | None:

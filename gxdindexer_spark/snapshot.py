@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 import numpy as np
@@ -37,6 +38,22 @@ from gxdindexer_spark.session import empty_frame
 MANIFEST = "manifest.json"
 STAGING = ".staging"
 LOCK = "_writer.lock"
+_URL = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:/")
+
+
+def require_local(index_dir: str) -> None:
+    """Refuse an ``index_dir`` with a URL scheme (``file://``,
+    ``hdfs://``, ``s3a://``, ...) before anything touches it. The
+    manifest is read with ``open``, the writer lock is an ``flock`` and
+    a commit installs by ``os.rename``, so an index directory is a
+    local or mounted POSIX path; given a URL, those would act on a
+    relative path under the working directory while Spark wrote to the
+    URL."""
+    if _URL.match(str(index_dir)):
+        raise ValueError(
+            f"index directory {index_dir!r} is a URL; pass it as a local "
+            "or mounted POSIX path"
+        )
 
 
 def replace_json(path: str, obj, tmp: str | None = None) -> None:

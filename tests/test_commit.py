@@ -523,3 +523,35 @@ def test_fresh_build_reads_the_same_through_artifact_dirs(base):
         assert got.sort_by(order).to_pylist() == (
             want.sort_by(order).to_pylist()
         ), art
+
+
+def test_index_dir_with_a_url_scheme_is_refused(
+    corpus, base, spark, tmp_path, monkeypatch
+):
+    """An index directory given as a URL is refused with a ValueError
+    by every writer and reader before anything touches a path: nothing
+    lands under the URL's path, nor under the working directory (where
+    ``open`` and ``os.makedirs`` would read ``file:/...`` as a relative
+    path)."""
+    from gxdindexer_spark.operators import ann
+
+    monkeypatch.chdir(tmp_path)
+    docs = spark.createDataFrame(corpus[corpus["shard"] == 0])
+    for scheme in ("file://", "file:", "hdfs://nn", "s3a://bucket"):
+        url = f"{scheme}{tmp_path}/xidx"
+        for call in (
+            lambda: _builder().build(docs, url, resume=False),
+            lambda: _builder().build(docs, url, append=True),
+            lambda: delete_docs(spark, url, _builder(), [1]),
+            lambda: update_docs(spark, url, _builder(), {1: {"repo": "r"}}),
+            lambda: compact_index(spark, url),
+            lambda: IndexQueryEngine(spark, url),
+            lambda: IndexQueryEngine(spark, f"{scheme}{base}"),
+            lambda: ann.build_ann_index(docs, url),
+            lambda: ann.append_ann_index(docs, url),
+            lambda: ann.compact_ann_index(spark, url),
+            lambda: ann.AnnIndex(spark, url),
+        ):
+            with pytest.raises(ValueError, match="is a URL"):
+                call()
+        assert os.listdir(tmp_path) == [], scheme
