@@ -1516,25 +1516,25 @@ def update_docs(
         if not counts:
             return nothing
         affected = sorted(counts)
-        metrics = {}
         if rebuild_class:
             metrics = builder._build_locked(
                 commit, merged, resume=True, append=True,
                 precomputed_fp=fp, spark=spark,
             )
-        elif isinstance(merged, pa.Table):
-            _stage_shards(commit, "docs", merged)
         else:
-            # stored-only attrs on Spark: the shards' doc-store
-            # partitions stage concurrently (guide §2.6)
-            def _rewrite(s: int) -> None:
-                rows = merged.filter(F.col("shard") == s).drop("shard")
-                rows.repartition(1).write.parquet(
-                    commit.stage(f"docs/shard={s}")
-                )
+            # stored-only attrs: only the doc-store partitions restage
+            metrics = {}
+            if isinstance(merged, pa.Table):
+                _stage_shards(commit, "docs", merged)
+            else:
+                # one write per shard, concurrently (guide §2.6)
+                def _rewrite(s: int) -> None:
+                    rows = merged.filter(F.col("shard") == s).drop("shard")
+                    rows.repartition(1).write.parquet(
+                        commit.stage(f"docs/shard={s}")
+                    )
 
-            list(commit.pool.map(_rewrite, affected))
-        if not rebuild_class:
+                list(commit.pool.map(_rewrite, affected))
             commit.publish += [f"docs/shard={s}" for s in affected]
     metrics.update(
         docs_updated=sum(hit for _n, hit in counts.values()),
