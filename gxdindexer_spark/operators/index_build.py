@@ -1689,6 +1689,7 @@ def backup_index(index_dir: str, dest_dir: str) -> dict:
     copy — the layout is plain parquet + json either way.
 
     -> {"files": n, "bytes": n}."""
+    layout.require_local(dest_dir)
     if os.path.exists(dest_dir) and os.listdir(dest_dir):
         raise ValueError(f"backup destination {dest_dir!r} is not empty")
     with _WriterLock(index_dir):
@@ -1713,6 +1714,8 @@ def restore_index(backup_dir: str, dest_dir: str) -> dict:
     half-merged). The restored directory is immediately queryable and
     writable; it acquires its own fresh writer-lock file on first
     mutation."""
+    layout.require_local(backup_dir)
+    layout.require_local(dest_dir)
     if not os.path.isfile(f"{backup_dir}/{layout.MANIFEST}"):
         raise ValueError(f"{backup_dir!r} is not an index backup")
     if os.path.exists(dest_dir) and os.listdir(dest_dir):

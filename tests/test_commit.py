@@ -24,9 +24,11 @@ from pyspark.sql import functions as F
 from gxdindexer_spark import snapshot
 from gxdindexer_spark.operators.index_build import (
     IndexBuilder,
+    backup_index,
     compact_index,
     delete_docs,
     read_ledger,
+    restore_index,
     update_docs,
 )
 from gxdindexer_spark.operators.query import IndexQueryEngine
@@ -528,8 +530,9 @@ def test_fresh_build_reads_the_same_through_artifact_dirs(base):
 def test_index_dir_with_a_url_scheme_is_refused(
     corpus, base, spark, tmp_path, monkeypatch
 ):
-    """An index directory given as a URL is refused with a ValueError
-    by every writer and reader before anything touches a path: nothing
+    """An index directory (or a backup's source or destination) given
+    as a URL is refused with a ValueError by every writer and reader
+    before anything touches a path: nothing
     lands under the URL's path, nor under the working directory (where
     ``open`` and ``os.makedirs`` would read ``file:/...`` as a relative
     path)."""
@@ -545,6 +548,8 @@ def test_index_dir_with_a_url_scheme_is_refused(
             lambda: delete_docs(spark, url, _builder(), [1]),
             lambda: update_docs(spark, url, _builder(), {1: {"repo": "r"}}),
             lambda: compact_index(spark, url),
+            lambda: backup_index(base, url),
+            lambda: restore_index(base, url),
             lambda: IndexQueryEngine(spark, url),
             lambda: IndexQueryEngine(spark, f"{scheme}{base}"),
             lambda: ann.build_ann_index(docs, url),
