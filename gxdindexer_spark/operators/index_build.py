@@ -72,7 +72,7 @@ import os
 import shutil
 import time
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -1296,8 +1296,8 @@ def _touched_shards(
     spark: SparkSession,
     ids: list[int],
     assume_dense_shards: bool,
-    rule,
-    fingerprint,
+    rule: Callable,
+    fingerprint: Callable | None,
     drops_hits: bool = False,
 ) -> tuple[dict, pa.Table | DataFrame | None, dict | None]:
     """The read-and-plan half of ``delete_docs`` and ``update_docs``:

@@ -532,10 +532,9 @@ def test_index_dir_with_a_url_scheme_is_refused(
 ):
     """An index directory (or a backup's source or destination) given
     as a URL is refused with a ValueError by every writer and reader
-    before anything touches a path: nothing
-    lands under the URL's path, nor under the working directory (where
-    ``open`` and ``os.makedirs`` would read ``file:/...`` as a relative
-    path)."""
+    before anything touches a path: nothing lands under the URL's
+    path, nor under the working directory (where ``open`` and
+    ``os.makedirs`` would read ``file:/...`` as a relative path)."""
     from gxdindexer_spark.operators import ann
 
     monkeypatch.chdir(tmp_path)

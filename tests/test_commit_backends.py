@@ -211,8 +211,9 @@ def _script(corpus, spark):
 def test_backends_leave_identical_indexes(
     corpus, base, spark, tmp_path, monkeypatch
 ):
-    """Each step of an append / delete (emptying a shard) / content
-    update / attr update / empty delta / compaction script, committed
+    """Each step of an append / delete (one emptying a shard) / content
+    update / attr update (each with and without assume_dense_shards) /
+    empty delta / compaction script, committed
     on each backend from the same index, leaves the same rows in every
     artifact, the same ledger, metrics and query results; the local
     backend starts no Spark job for a delete, update or compaction,
