@@ -38,7 +38,6 @@ from gxdindexer_spark.session import empty_frame
 MANIFEST = "manifest.json"
 STAGING = ".staging"
 LOCK = "_writer.lock"
-_URL = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:/")
 
 
 def require_local(index_dir: str) -> None:
@@ -49,7 +48,7 @@ def require_local(index_dir: str) -> None:
     local or mounted POSIX path; given a URL, those would act on a
     relative path under the working directory while Spark wrote to the
     URL."""
-    if _URL.match(str(index_dir)):
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:/", str(index_dir)):
         raise ValueError(
             f"index directory {index_dir!r} is a URL; pass it as a local "
             "or mounted POSIX path"
